@@ -506,8 +506,9 @@ object SparkEntry {
     }),
     "q_sql_fused" -> ((s, dir) => {
       // kernel-call fusion (CollapseHtmlKernelCalls optimizer rule): two
-      // html_* calls over one column rewrite into ONE html_extract_all per
-      // page — Catalyst's subexpression elimination never fires for opaque
+      // html_* calls over one column rewrite into ONE kernel run per page,
+      // an HtmlExtractAll that builds only main_text and title —
+      // Catalyst's subexpression elimination never fires for opaque
       // CodegenFallback kernels, so the rule is the CSE. Results must equal
       // the unfused per-call semantics (the oracle doesn't care how many
       // times the page parsed — FusionSpec asserts the plan shape).

@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.dom.ExtractResult
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType, LongType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** SQL surface for the extraction kernel (SURVEY.md §4.3's deferred option,
   * now implemented): native Catalyst expressions so `spark.sql` users can
@@ -17,11 +18,13 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   SELECT html_text(html)       FROM pages   -- full in-content text
   *   SELECT html_tag_count(html)  FROM pages   -- tag tokens seen
   *
-  * They are CodegenFallback by design: the kernel is one large opaque
-  * function — exactly the case Spark documents for fallback — and the rows
-  * around it stay inside whole-stage codegen. The per-row sink allocation
-  * here is the ergonomic path; the throughput path remains
-  * ExtractJob.extract's mapPartitions with a partition-reused sink.
+  * Every function reads one row of [[HtmlFunctions.fields]]; the two
+  * expression classes below are the only kernel calls. They are
+  * CodegenFallback by design: the kernel is one large opaque function —
+  * exactly the case Spark documents for fallback — and the rows around it
+  * stay inside whole-stage codegen. The per-row sink allocation here is the
+  * ergonomic path; the throughput path remains ExtractJob.extract's
+  * mapPartitions with a partition-reused sink.
   */
 abstract class HtmlKernelExpression extends UnaryExpression
     with CodegenFallback with Serializable {
@@ -30,183 +33,46 @@ abstract class HtmlKernelExpression extends UnaryExpression
     else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY input, got ${child.dataType}")
   override def nullable: Boolean = true
   @transient protected lazy val sink = new graft.dom.ExtractSink
-  protected def ex(bytes: Array[Byte]): graft.dom.ExtractResult =
-    graft.dom.Extractor.extractInto(bytes, sink)
+  protected def ex(input: Any): ExtractResult =
+    graft.dom.Extractor.extractInto(input.asInstanceOf[Array[Byte]], sink)
 }
 
-case class HtmlMainText(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).mainText)
-  override protected def withNewChildInternal(newChild: Expression): HtmlMainText = copy(child = newChild)
-  override def prettyName: String = "html_main_text"
+/** A single html_* call: one kernel run, one field of [[HtmlFunctions.fields]]. */
+case class HtmlField(child: Expression, field: Int) extends HtmlKernelExpression {
+  @transient private lazy val f = HtmlFunctions.fields(field)
+  override def dataType: DataType = f.dataType
+  override protected def nullSafeEval(input: Any): Any = f.get(ex(input))
+  override protected def withNewChildInternal(newChild: Expression): HtmlField = copy(child = newChild)
+  override def prettyName: String = f.sqlName
 }
 
-case class HtmlText(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).text)
-  override protected def withNewChildInternal(newChild: Expression): HtmlText = copy(child = newChild)
-  override def prettyName: String = "html_text"
-}
-
-case class HtmlTitle(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).title)
-  override protected def withNewChildInternal(newChild: Expression): HtmlTitle = copy(child = newChild)
-  override def prettyName: String = "html_title"
-}
-
-case class HtmlLang(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(ex(input.asInstanceOf[Array[Byte]]).declaredLang)
-  override protected def withNewChildInternal(newChild: Expression): HtmlLang = copy(child = newChild)
-  override def prettyName: String = "html_lang"
-}
-
-case class HtmlTagCount(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any =
-    ex(input.asInstanceOf[Array[Byte]]).nTags
-  override protected def withNewChildInternal(newChild: Expression): HtmlTagCount = copy(child = newChild)
-  override def prettyName: String = "html_tag_count"
-}
-
-case class HtmlSpans(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlSpans.spanArrayType
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.spans.map(s => org.apache.spark.sql.catalyst.InternalRow(
-        s.start, s.end, UTF8String.fromString(s.path), s.block, s.link, s.kept)).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlSpans = copy(child = newChild)
-  override def prettyName: String = "html_spans"
-}
-
-object HtmlSpans {
-  import org.apache.spark.sql.types._
-  val spanArrayType: DataType = ArrayType(StructType(Seq(
-    StructField("start", IntegerType, nullable = false),
-    StructField("end", IntegerType, nullable = false),
-    StructField("path", StringType, nullable = false),
-    StructField("block", IntegerType, nullable = false),
-    StructField("link", BooleanType, nullable = false),
-    StructField("kept", BooleanType, nullable = false))), containsNull = false)
-}
-
-case class HtmlLinks(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.links.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlLinks = copy(child = newChild)
-  override def prettyName: String = "html_links"
-}
-
-/** Open Graph pairs as array<struct<prop,content>> — array, not map, so
-  * repeated properties (multiple og:image) and document order survive.
+/** One kernel run building a struct of the listed fields, in list order —
+  * `html_extract_all(h)` (the first seven fields) and the fusion target of
+  * [[CollapseHtmlKernelCalls]] (exactly the fields a projection reads).
   */
-case class HtmlOg(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlOg.ogArrayType
+case class HtmlExtractAll(child: Expression, fields: Seq[Int]) extends HtmlKernelExpression {
+  override lazy val dataType: DataType = StructType(fields.map { i =>
+    val f = HtmlFunctions.fields(i)
+    StructField(f.name, f.dataType, nullable = false)
+  })
+  @transient private lazy val getters = fields.map(HtmlFunctions.fields(_).get).toArray
   override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.ogProps.indices.map(i => org.apache.spark.sql.catalyst.InternalRow(
-        UTF8String.fromString(r.ogProps(i)), UTF8String.fromString(r.ogVals(i)))).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlOg = copy(child = newChild)
-  override def prettyName: String = "html_og"
-}
-
-object HtmlOg {
-  import org.apache.spark.sql.types._
-  val ogArrayType: DataType = ArrayType(StructType(Seq(
-    StructField("prop", StringType, nullable = false),
-    StructField("content", StringType, nullable = false))), containsNull = false)
-}
-
-/** Raw `<script type="application/ld+json">` blocks in document order —
-  * schema.org structured data, ready for `get_json_object`/`from_json`.
-  */
-case class HtmlJsonLd(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.jsonLd.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlJsonLd = copy(child = newChild)
-  override def prettyName: String = "html_jsonld"
-}
-
-case class HtmlErrors(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      r.errors.map(UTF8String.fromString).toArray[Any])
-  }
-  override protected def withNewChildInternal(newChild: Expression): HtmlErrors = copy(child = newChild)
-  override def prettyName: String = "html_errors"
-}
-
-/** Every scalar capture of one kernel run as a single struct — the fusion
-  * target for [[CollapseHtmlKernelCalls]]: `SELECT html_main_text(h),
-  * html_title(h), html_links(h)` naively parses each page three times;
-  * rewritten through this expression the page parses ONCE. (Spans and og
-  * pairs stay standalone expressions — they are rarely combined and their
-  * nested struct types would bloat every fused row.)
-  */
-case class HtmlExtractAll(child: Expression) extends HtmlKernelExpression {
-  override def dataType: DataType = HtmlExtractAll.structType
-  override protected def nullSafeEval(input: Any): Any = {
-    val r = ex(input.asInstanceOf[Array[Byte]])
-    org.apache.spark.sql.catalyst.InternalRow(
-      UTF8String.fromString(r.mainText),
-      UTF8String.fromString(r.text),
-      UTF8String.fromString(r.title),
-      UTF8String.fromString(r.declaredLang),
-      r.nTags,
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        r.links.map(UTF8String.fromString).toArray[Any]),
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        r.errors.map(UTF8String.fromString).toArray[Any]))
+    val r = ex(input)
+    new GenericInternalRow(getters.map(_(r)))
   }
   override protected def withNewChildInternal(newChild: Expression): HtmlExtractAll = copy(child = newChild)
   override def prettyName: String = "html_extract_all"
 }
 
-object HtmlExtractAll {
-  import org.apache.spark.sql.types._
-  val fieldNames: Seq[String] =
-    Seq("main_text", "full_text", "title", "lang", "tag_count", "links", "errors")
-  val structType: StructType = StructType(Seq(
-    StructField("main_text", StringType, nullable = false),
-    StructField("full_text", StringType, nullable = false),
-    StructField("title", StringType, nullable = false),
-    StructField("lang", StringType, nullable = false),
-    StructField("tag_count", LongType, nullable = false),
-    StructField("links", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("errors", ArrayType(StringType, containsNull = false), nullable = false)))
-}
-
 /** Optimizer rule: common-subexpression elimination for the OPAQUE kernel.
   * Catalyst's built-in subexpression elimination never fires for
-  * CodegenFallback expressions, so a projection calling k different html_*
-  * functions on the same column parses every page k times. This rule
-  * rewrites any Project carrying ≥2 fusable kernel calls over one child
-  * into a two-level Project: the inner level runs [[HtmlExtractAll]] once
-  * per page, the outer reads struct fields. CollapseProject will not merge
-  * the levels back — the alias is non-cheap and referenced multiple times,
-  * exactly its no-duplication guard.
+  * CodegenFallback expressions, so a projection calling k html_* functions
+  * on the same column parses every page k times. This rule rewrites any
+  * Project carrying ≥2 kernel calls over one child into a two-level
+  * Project: the inner level runs [[HtmlExtractAll]] once per page over
+  * exactly the fields the calls read, the outer reads struct fields.
+  * CollapseProject will not merge the levels back — the alias is non-cheap
+  * and referenced multiple times, exactly its no-duplication guard.
   *
   * Injected via `GraftExtensions` (config path) or
   * `HtmlFunctions.registerRule` (live-session path, like `register`).
@@ -216,63 +82,85 @@ object CollapseHtmlKernelCalls
   import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
   import org.apache.spark.sql.catalyst.expressions.{Alias, GetStructField, NamedExpression}
 
-  /** Struct slot served by [[HtmlExtractAll]] for each fusable call type. */
-  private def fieldOf(e: Expression): Int = e match {
-    case _: HtmlMainText => 0
-    case _: HtmlText => 1
-    case _: HtmlTitle => 2
-    case _: HtmlLang => 3
-    case _: HtmlTagCount => 4
-    case _: HtmlLinks => 5
-    case _: HtmlErrors => 6
-    case _ => -1
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case p @ Project(projectList, child) =>
-      val calls = projectList.flatMap(_.collect {
-        case k: HtmlKernelExpression if fieldOf(k) >= 0 => k
-      })
+      val calls = projectList.flatMap(_.collect { case k: HtmlField => k })
       // fuse only when one child expression feeds ≥2 kernel calls — a
       // single call is already one parse, and distinct children can't share
       val fusable = calls.groupBy(_.child.canonicalized).filter(_._2.size >= 2)
       if (fusable.isEmpty) p
       else {
-        val aliasFor = fusable.map { case (canon, ks) =>
-          canon -> Alias(HtmlExtractAll(ks.head.child), "_html_all")()
+        val fused = fusable.map { case (canon, ks) =>
+          val fields = ks.map(_.field).distinct.sorted
+          canon -> (fields, Alias(HtmlExtractAll(ks.head.child, fields), "_html_all")())
         }
         val newList = projectList.map(_.transform {
-          case k: HtmlKernelExpression
-              if fieldOf(k) >= 0 && aliasFor.contains(k.child.canonicalized) =>
-            GetStructField(aliasFor(k.child.canonicalized).toAttribute, fieldOf(k),
-              Some(HtmlExtractAll.fieldNames(fieldOf(k))))
+          case k: HtmlField if fused.contains(k.child.canonicalized) =>
+            val (fields, alias) = fused(k.child.canonicalized)
+            GetStructField(alias.toAttribute, fields.indexOf(k.field),
+              Some(HtmlFunctions.fields(k.field).name))
         }.asInstanceOf[NamedExpression])
-        Project(newList, Project(child.output ++ aliasFor.values.toSeq, child))
+        Project(newList, Project(child.output ++ fused.values.map(_._2), child))
       }
   }
 }
 
 object HtmlFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "html_main_text" -> (args => HtmlMainText(args.head)),
-    "html_text" -> (args => HtmlText(args.head)),
-    "html_title" -> (args => HtmlTitle(args.head)),
-    "html_lang" -> (args => HtmlLang(args.head)),
-    "html_tag_count" -> (args => HtmlTagCount(args.head)),
-    "html_spans" -> (args => HtmlSpans(args.head)),
-    "html_errors" -> (args => HtmlErrors(args.head)),
-    "html_links" -> (args => HtmlLinks(args.head)),
-    "html_og" -> (args => HtmlOg(args.head)),
-    "html_jsonld" -> (args => HtmlJsonLd(args.head)),
-    "html_extract_all" -> (args => HtmlExtractAll(args.head))
-  )
+  /** One kernel output: SQL function name, struct field name, Catalyst type
+    * and the getter from the kernel's [[ExtractResult]].
+    */
+  final case class Field(sqlName: String, name: String, dataType: DataType, get: ExtractResult => Any)
+
+  private def str(s: String): UTF8String = UTF8String.fromString(s)
+  private def strs(xs: Seq[String]): GenericArrayData = new GenericArrayData(xs.map(str).toArray[Any])
+  private val stringArray = ArrayType(StringType, containsNull = false)
+
+  private val spanArrayType: DataType = ArrayType(StructType(Seq(
+    StructField("start", IntegerType, nullable = false),
+    StructField("end", IntegerType, nullable = false),
+    StructField("path", StringType, nullable = false),
+    StructField("block", IntegerType, nullable = false),
+    StructField("link", BooleanType, nullable = false),
+    StructField("kept", BooleanType, nullable = false))), containsNull = false)
+
+  /** Open Graph pairs as array<struct<prop,content>> — array, not map, so
+    * repeated properties (multiple og:image) and document order survive.
+    */
+  private val ogArrayType: DataType = ArrayType(StructType(Seq(
+    StructField("prop", StringType, nullable = false),
+    StructField("content", StringType, nullable = false))), containsNull = false)
+
+  /** The kernel's SQL outputs. The first seven, in this order, are
+    * `html_extract_all`'s struct.
+    */
+  val fields: IndexedSeq[Field] = IndexedSeq(
+    Field("html_main_text", "main_text", StringType, r => str(r.mainText)),
+    Field("html_text", "full_text", StringType, r => str(r.text)),
+    Field("html_title", "title", StringType, r => str(r.title)),
+    Field("html_lang", "lang", StringType, r => str(r.declaredLang)),
+    Field("html_tag_count", "tag_count", LongType, _.nTags),
+    Field("html_links", "links", stringArray, r => strs(r.links)),
+    Field("html_errors", "errors", stringArray, r => strs(r.errors)),
+    Field("html_spans", "spans", spanArrayType, r => new GenericArrayData(r.spans.map(s =>
+      InternalRow(s.start, s.end, str(s.path), s.block, s.link, s.kept)).toArray[Any])),
+    Field("html_og", "og", ogArrayType, r => new GenericArrayData(r.ogProps.indices.map(i =>
+      InternalRow(str(r.ogProps(i)), str(r.ogVals(i)))).toArray[Any])),
+    // raw <script type="application/ld+json"> blocks in document order —
+    // schema.org structured data, ready for get_json_object/from_json
+    Field("html_jsonld", "json_ld", stringArray, r => strs(r.jsonLd)))
+
+  private def function(name: String)(build: Expression => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo("graft.functions.HtmlFunctions", name),
+      (args: Seq[Expression]) => build(args.head))
+
+  /** Every html_* function: one per field, plus html_extract_all. */
+  private[functions] val functions =
+    fields.indices.map(i => function(fields(i).sqlName)(HtmlField(_, i))) :+
+      function("html_extract_all")(HtmlExtractAll(_, 0 until 7))
 
   /** Imperative registration — works on any live session (no config needed). */
-  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions.HtmlFunctions", name),
-      builder)
+  def register(spark: SparkSession): Unit = functions.foreach { case (id, info, builder) =>
+    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
   }
 
   /** Live-session injection of the kernel-call fusion rule (idempotent). */
@@ -285,22 +173,7 @@ object HtmlFunctions {
 /** Config-based registration: `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    Seq(
-    ("html_main_text", (args: Seq[Expression]) => HtmlMainText(args.head)),
-    ("html_text", (args: Seq[Expression]) => HtmlText(args.head)),
-    ("html_title", (args: Seq[Expression]) => HtmlTitle(args.head)),
-    ("html_lang", (args: Seq[Expression]) => HtmlLang(args.head)),
-    ("html_tag_count", (args: Seq[Expression]) => HtmlTagCount(args.head)),
-    ("html_spans", (args: Seq[Expression]) => HtmlSpans(args.head)),
-    ("html_errors", (args: Seq[Expression]) => HtmlErrors(args.head)),
-    ("html_links", (args: Seq[Expression]) => HtmlLinks(args.head)),
-    ("html_og", (args: Seq[Expression]) => HtmlOg(args.head)),
-    ("html_jsonld", (args: Seq[Expression]) => HtmlJsonLd(args.head)),
-    ("html_extract_all", (args: Seq[Expression]) => HtmlExtractAll(args.head))
-  ).foreach { case (name, builder) =>
-    ext.injectFunction((FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions.HtmlFunctions", name), builder))
-  }
+    HtmlFunctions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => CollapseHtmlKernelCalls)
   }
 }

@@ -618,7 +618,7 @@ object TextOps {
     * Plan: bigrams are a zero-shuffle posexplode + neighbor concat —
     * everything codegen'd; the obvious `transform(sequence(…), i -> …)`
     * spelling evaluates the lambda INTERPRETED per element and measured
-    * 14× slower (tools/DsirDiag) — higher-order functions never enter
+    * 14× slower — higher-order functions never enter
     * whole-stage codegen. The two bucket tables are ≤ B rows (B=256) built
     * with partial aggregation, then BROADCAST back onto the occurrence
     * stream; the per-doc sum is one doc-keyed partial-agged shuffle. The

@@ -94,16 +94,6 @@ final case class PageRowF(
   */
 object ExtractJob {
 
-  /** Kernel over one page — exactly the single-node oracle (`Extractor`), so
-    * Spark(k partitions) ≡ oracle by construction (tested in SparkJobSpec).
-    */
-  def extractRow(p: PageRow): Extracted = {
-    val r = Extractor.extract(p.html)
-    Extracted(p.url, p.lang, r.mainText, r.text, r.title, r.spans, r.links, r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors,
-      r.spans.length, r.nTokens, r.nTags, r.nErrors, r.truncated,
-      p.html.length.toLong)
-  }
-
   /** Threshold above which a page is considered pathological (size skew). */
   val bigBytes = 262144
 
@@ -223,28 +213,35 @@ object ExtractJob {
         if (p.html == null) {
           // real crawl tables carry null bodies (fetch failures, truncated
           // records): an error row, never an NPE'd task at 100 TB
-          Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq("NULL_HTML"),
-            0, 0L, 0L, 1, truncated = false, 0L)
+          errorRow(p, "NULL_HTML", truncated = false)
         } else if (bytes >= maxTaskBytes) {
           capped += 1
           bytes += p.html.length
-          Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq("TASK_BYTE_CAP"),
-            0, 0L, 0L, 1, truncated = true, p.html.length.toLong)
+          errorRow(p, "TASK_BYTE_CAP", truncated = true)
         } else {
           val r = Extractor.extractInto(p.html, sink)
           bytes += p.html.length
           var i = 0
           while (i < hist.length) { hist(i) += r.stateHits(i); i += 1 }
-          // lean production mode: drop full_text (2x output size; offsets in
-          // spans still index it, and main_text == full_text on pages whose
-          // spans are all kept) — schema stays contract-identical
-          Extracted(p.url, p.lang, r.mainText, if (lean) "" else r.text,
-            r.title, r.spans, r.links, r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors, r.spans.length, r.nTokens, r.nTags,
-            r.nErrors, r.truncated, p.html.length.toLong)
+          row(p, r, lean)
         }
       }
     }
   }
+
+  /** The one place a kernel result becomes an [[Extracted]] row. */
+  private def row(p: PageRow, r: ExtractResult, lean: Boolean): Extracted =
+    // lean production mode: drop full_text (2x output size; offsets in
+    // spans still index it, and main_text == full_text on pages whose
+    // spans are all kept) — schema stays contract-identical
+    Extracted(p.url, p.lang, r.mainText, if (lean) "" else r.text,
+      r.title, r.spans, r.links, r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors, r.spans.length, r.nTokens, r.nTags,
+      r.nErrors, r.truncated, p.html.length.toLong)
+
+  /** A row the kernel never ran on: empty outputs, `code` its only error. */
+  private def errorRow(p: PageRow, code: String, truncated: Boolean): Extracted =
+    Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq(code),
+      0, 0L, 0L, 1, truncated, if (p.html == null) 0L else p.html.length.toLong)
 
   /** Chunked, resumable run: each chunk writes its extracted rows, then its
     * lineage rows — the lineage append is the commit marker. On restart,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.spark.{PageRow, Extracted}
+import graft.spark.{ExtractJob, PageRow}
 
 /** Structured-Streaming surface of the engine. The batch path
   * (ExtractJob + chunk resume) is the production 100 TB story per
@@ -24,39 +24,21 @@ object ExtractStream {
     StructField("lang", StringType)
   ))
 
-  /** Landing-dir parquet stream → extraction → parquet sink. `AvailableNow`
-    * drains the backlog then stops (use `Trigger.ProcessingTime` for a
-    * long-lived job).
+  /** Landing-dir parquet stream → extraction → parquet sink. The transform
+    * is the batch kernel itself, `ExtractJob.extract` (null-html error
+    * rows included). `AvailableNow` drains the backlog then stops (use
+    * `Trigger.ProcessingTime` for a long-lived job).
     */
   def run(spark: SparkSession, inDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
     import spark.implicits._
     val pages = spark.readStream.schema(pageSchema).parquet(inDir).as[PageRow]
-    extractStream(pages)
+    ExtractJob.extract(pages, "stream", spark.sparkContext.defaultParallelism)
       .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
-
-  /** The streaming extraction transform (also used on MemoryStream in tests). */
-  def extractStream(pages: Dataset[PageRow]): Dataset[Extracted] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions { it =>
-      val sink = new graft.dom.ExtractSink
-      it.map { p =>
-        if (p.html == null)
-          Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq("NULL_HTML"),
-            0, 0L, 0L, 1, truncated = false, 0L)
-        else {
-          val r = graft.dom.Extractor.extractInto(p.html, sink)
-          Extracted(p.url, p.lang, r.mainText, r.text, r.title, r.spans, r.links,
-            r.anchors, r.imgSrcs, r.imgAlts, r.ogProps, r.ogVals, r.metaRobots, r.baseHref, r.canonical, r.declaredLang, r.jsonLd, r.errors, r.spans.length, r.nTokens,
-            r.nTags, r.nErrors, r.truncated, p.html.length.toLong)
-        }
-      }
-    }
   }
 
   /** Streaming curation: incremental extraction + quality floor + STREAMING

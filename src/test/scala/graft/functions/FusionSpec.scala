@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** CollapseHtmlKernelCalls invariants: k html_* calls on one column become
   * ONE kernel run (the opaque-kernel CSE Catalyst can't do for
   * CodegenFallback expressions), results are call-for-call identical to the
-  * unfused plan, single calls and distinct columns stay untouched, and the
-  * non-fusable complex captures (spans/og) remain standalone.
+  * unfused plan, single calls and distinct columns stay untouched, and
+  * every html_* field (spans included) fuses.
   */
 class FusionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -84,12 +84,14 @@ class FusionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().forall(r => r.getString(0) == r.getString(2)))
   }
 
-  test("non-fusable complex captures (spans) stay standalone while the rest fuse") {
+  test("spans fuse with the rest") {
     val df = spark.sql(
-      "SELECT html_main_text(html) AS m, html_title(html) AS t, html_spans(html) AS s FROM fusion_pages")
+      "SELECT url, html_main_text(html) AS m, html_title(html) AS t, html_spans(html) AS s FROM fusion_pages")
     val (all, single) = kernelCalls(df)
-    assert(all == 1 && single == 1, s"expected 1 fused + spans standalone, got $all/$single")
-    assert(df.collect().length == 2)
+    assert(all == 1 && single == 0, s"expected 1 fused / 0 single, got $all/$single")
+    val standalone = spark.sql("SELECT url, html_spans(html) AS s FROM fusion_pages")
+    assert(df.select("url", "s").collect().sortBy(_.getString(0)).toSeq ==
+      standalone.collect().sortBy(_.getString(0)).toSeq)
   }
 
   test("fusion rides filters below the project unchanged") {

@@ -30,6 +30,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.createTempDirectory("graftstream").toString
 
   test("streaming extraction drains a landing dir and matches the batch kernel") {
+    val ss = spark
+    import ss.implicits._
     val in = tmp(); val out = tmp(); val ckpt = tmp()
     graft.spark.Pages.synthesize(spark, sfDir).toDF()
       .write.mode("overwrite").parquet(in)
@@ -40,6 +42,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .selectExpr("concat('https://example.com/', lang, '/', source, '/doc', doc_id, '/v0') as url", "text")
     assert(got.join(docs, "url").where(col("main_text") =!= col("text")).count() === 0)
+    // every output column equals the batch kernel's over the same pages
+    val batch = graft.spark.ExtractJob.extract(spark.read.parquet(in).as[graft.spark.PageRow], "t", 4).toDF()
+    val gotCols = got.select(batch.columns.map(col).toSeq: _*)
+    assert(gotCols.exceptAll(batch).count() === 0 && batch.exceptAll(gotCols).count() === 0)
     // restart with same checkpoint: no new input → no duplicate output
     val q2 = ExtractStream.run(spark, in, out, ckpt)
     q2.awaitTermination(120000)
