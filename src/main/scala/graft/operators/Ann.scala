@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-/** Similarity search over the embeddings table (vec_id, embedding FLOAT[64],
-  * label). Two paths:
+/** Similarity search and semantic dedup over the embeddings table
+  * (vec_id, embedding FLOAT[64], label). Search paths, all with the output
+  * (vec_id, rank, nbr_id) ranked by [[cosineTopK]]:
   *
   *   - `bruteForceTopK`: exact cosine top-k via broadcast(query-set) ⋈ corpus.
   *     The dot product is a codegen'd `aggregate(zip_with(...))` — no UDF, no
@@ -18,6 +19,15 @@ import org.apache.spark.sql.expressions.Window
   *     The scale path: shuffle keys are 16-bit buckets, each bucket ~n/65536;
   *     multi-probe (flip one bit) keeps recall up.
   *
+  *   - `ivfTopK`: k-means coarse quantizer, exact cosine re-rank inside the
+  *     `nprobe` nearest clusters ([[probe]]).
+  *
+  *   - `ivfPqTopK`: IVF-PQ in one call — [[AnnIndex]]'s trainer, encoder
+  *     and search over an in-memory code table instead of a persisted one.
+  *
+  * Dedup operators: `semDedup` (k-means clusters, cosine pairs inside
+  * them) and `cosineNearDups` (cosine pairs inside LSH buckets).
+  *
   * Float determinism: embeddings are cast to DOUBLE before any arithmetic and
   * folded left-to-right, matching DuckDB's list_cosine_similarity on
   * DOUBLE[] for the oracle; ranking output carries only integers.
@@ -25,7 +35,7 @@ import org.apache.spark.sql.expressions.Window
 object Ann {
 
   /** Executed-training census: every coarse k-means run ([[ivfTrain]]) and
-    * every codebook k-means run (`smallKmeans`) increments this — specs
+    * every codebook k-means run ([[AnnIndex.trainModel]]) increments this — specs
     * prove the persisted-index query path ([[AnnIndex.query]]) trains
     * NOTHING by asserting it unchanged across query calls.
     */
@@ -37,6 +47,28 @@ object Ann {
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("emb"))
       .withColumn("norm", sqrt(aggregate(transform(col("emb"), x => x * x), lit(0.0d), (a, x) => a + x)))
 
+  /** Inner product of two DOUBLE[] columns, folded left to right. */
+  private[graft] def dot(a: String, b: String): Column =
+    aggregate(zip_with(col(a), col(b), (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+
+  /** Exact cosine top-k over candidate pairs that carry the query side
+    * (qid, qemb, qnorm) and the neighbour side (nbr_id, emb, norm):
+    * (vec_id, rank, nbr_id), cosine descending, ties on the lower nbr_id.
+    */
+  private[operators] def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
+    pairs.select(col("qid"), col("nbr_id"),
+        (dot("qemb", "emb") / (col("qnorm") * col("norm"))).as("sim"))
+      .withColumn("rank", row_number().over(w))
+      .where(col("rank") <= k)
+      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
+      .orderBy("vec_id", "rank")
+  }
+
+  /** Coarse cluster count: `nlist` when set, else √n clamped to [4, 1024]. */
+  private[operators] def nlistFor(nlist: Int, n: Long): Int =
+    if (nlist > 0) nlist else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
+
   /** Exact top-k neighbors (cosine) for `vec_id < nQueries`, output
     * (vec_id, rank, nbr_id) — integer-only for bit-stable comparison.
     */
@@ -44,14 +76,8 @@ object Ann {
     val e = prep(embeddings)
     val q = e.where(col("vec_id") < nQueries)
       .withColumnsRenamed(Map("vec_id" -> "qid", "emb" -> "qemb", "norm" -> "qnorm"))
-    val dot = aggregate(zip_with(col("qemb"), col("emb"), (x, y) => x * y), lit(0.0d), (a, x) => a + x)
-    val sims = broadcast(q).join(e, col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nbr_id"), (dot / (col("qnorm") * col("norm"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
-      .orderBy("vec_id", "rank")
+    cosineTopK(broadcast(q).join(e.withColumnRenamed("vec_id", "nbr_id"),
+      col("nbr_id") =!= col("qid")), k)
   }
 
   /** Bucket-count sizing: 2^bits buckets targeting ~`targetBucket` vectors
@@ -124,14 +150,8 @@ object Ann {
       .withColumnsRenamed(Map("vec_id" -> "qid", "emb" -> "qemb", "norm" -> "qnorm"))
     val q = q0.select(col("qid"), col("qemb"), col("qnorm"),
       explode(array(probes: _*)).as("qbucket")).distinct()
-    val dot = aggregate(zip_with(col("qemb"), col("emb"), (x, y) => x * y), lit(0.0d), (a, x) => a + x)
-    val sims = q.join(e, col("qbucket") === col("bucket") && col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nbr_id"), (dot / (col("qnorm") * col("norm"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
-      .orderBy("vec_id", "rank")
+    cosineTopK(q.join(e.withColumnRenamed("vec_id", "nbr_id"),
+      col("qbucket") === col("bucket") && col("nbr_id") =!= col("qid")), k)
   }
 
   /** One IVF-assigned vector: id, coarse cluster, vector, norm (public —
@@ -151,6 +171,24 @@ object Ann {
       c += 1
     }
     best
+  }
+
+  /** The `np` nearest centroids of `v` by squared euclidean distance,
+    * nearest first, ties on the lower cluster id — the one probe ranking
+    * behind ivfTopK, semDedup and [[AnnIndex]]'s search and admission.
+    */
+  private[operators] def probe(cs: Array[Array[Double]], v: Array[Double], np: Int): Array[Int] = {
+    val ds = new Array[(Double, Int)](cs.length)
+    var c = 0
+    while (c < cs.length) {
+      val cv = cs(c)
+      var d = 0.0; var i = 0
+      while (i < v.length) { val t = v(i) - cv(i); d += t * t; i += 1 }
+      ds(c) = (d, c)
+      c += 1
+    }
+    scala.util.Sorting.stableSort(ds)
+    Array.tabulate(math.min(np, ds.length))(r => ds(r)._2)
   }
 
   /** Deterministic k-means coarse-quantizer training (init = the `nlist`
@@ -220,20 +258,6 @@ object Ann {
     centroids
   }
 
-  /** IVF assignment: one narrow map over the corpus against broadcast
-    * centroids (train separately — possibly on a sample — via ivfTrain).
-    */
-  def ivfAssign(embeddings: DataFrame, nlist: Int, iters: Int = 3,
-      trainFraction: Double = 1.0): Dataset[IvfVec] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val centroids = ivfTrain(embeddings, nlist, iters, trainFraction)
-    val bc = spark.sparkContext.broadcast(centroids)
-    prep(embeddings).select(col("vec_id"), col("emb"), col("norm"))
-      .as[(Long, Array[Double], Double)]
-      .map { case (id, v, norm) => IvfVec(id, nearest(bc.value, v), v, norm) }
-  }
-
   /** IVF approximate top-k: probe the `nprobe` nearest coarse clusters per
     * query, exact cosine re-rank inside them. The scale path for corpora
     * where hyperplane LSH recall is poor: clusters follow the actual data
@@ -248,66 +272,17 @@ object Ann {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val n = if (nHint > 0) nHint else embeddings.count()
-    val nl = if (nlist > 0) nlist
-    else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
-    val centroids = ivfTrain(embeddings, nl, iters, trainFraction)
+    val centroids = ivfTrain(embeddings, nlistFor(nlist, n), iters, trainFraction)
     val bcC = spark.sparkContext.broadcast(centroids)
     val assigned = prep(embeddings).select(col("vec_id"), col("emb"), col("norm"))
       .as[(Long, Array[Double], Double)]
       .map { case (id, v, norm) => IvfVec(id, nearest(bcC.value, v), v, norm) }
     val np = nprobe
     val q = assigned.filter(_.vec_id < nQueries)
-      .flatMap { v =>
-        val cs = bcC.value
-        val ds = new Array[(Int, Double)](cs.length)
-        var c = 0
-        while (c < cs.length) {
-          val cv = cs(c)
-          var d = 0.0; var i = 0
-          while (i < v.emb.length) { val t = v.emb(i) - cv(i); d += t * t; i += 1 }
-          ds(c) = (c, d)
-          c += 1
-        }
-        ds.sortBy(_._2).take(np).iterator.map(p => (v.vec_id, v.emb, v.norm, p._1))
-      }
+      .flatMap(v => probe(bcC.value, v.emb, np).iterator.map(c => (v.vec_id, v.emb, v.norm, c)))
       .toDF("qid", "qemb", "qnorm", "cluster")
-    val dot = aggregate(zip_with(col("qemb"), col("emb"), (x, y) => x * y), lit(0.0d), (a, x) => a + x)
-    val sims = broadcast(q).join(assigned.toDF(), Seq("cluster"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id").as("nbr_id"), (dot / (col("qnorm") * col("norm"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
-      .orderBy("vec_id", "rank")
-  }
-
-  /** Driver-side Lloyd k-means over a small collected sample — the PQ
-    * codebook trainer (per-subspace data is sampleN × dsub doubles — KBs).
-    * Deterministic: init = the first `k` rows in input order, fixed
-    * iterations, ties to the lower centroid index.
-    */
-  private[operators] def smallKmeans(rows: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
-    trainRuns.incrementAndGet()
-    var cents = rows.take(k).map(_.clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.ofDim[Double](cents.length, rows(0).length)
-      val counts = new Array[Long](cents.length)
-      rows.foreach { v =>
-        val c = nearest(cents, v)
-        var i = 0
-        while (i < v.length) { sums(c)(i) += v(i); i += 1 }
-        counts(c) += 1
-      }
-      cents = cents.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old
-        else { val m = new Array[Double](old.length); var i = 0
-          while (i < m.length) { m(i) = sums(c)(i) / counts(c); i += 1 }; m }
-      }
-      it += 1
-    }
-    cents
+    cosineTopK(broadcast(q).join(assigned.toDF().withColumnRenamed("vec_id", "nbr_id"),
+      Seq("cluster")).where(col("nbr_id") =!= col("qid")), k)
   }
 
   /** IVF-PQ approximate top-k (Jégou et al. 2011) — the MEMORY-scale ANN
@@ -330,109 +305,22 @@ object Ann {
     * end-to-end (sample init, fixed iterations, id tie-breaks); recall is
     * floor-tested like lshTopK/ivfTopK, not equality-tested. Output
     * matches bruteForceTopK: (vec_id, rank, nbr_id).
+    *
+    * Training, encoding and search are [[AnnIndex]]'s: with the same
+    * parameters this returns the rows of [[AnnIndex.build]] +
+    * [[AnnIndex.query]], keeping the code table in memory instead of the
+    * catalog.
     */
   def ivfPqTopK(embeddings: DataFrame, nQueries: Int = 20, k: Int = 10,
       nlist: Int = 0, nprobe: Int = 4, m: Int = 8, ksub: Int = 16,
       iters: Int = 3, refine: Int = 4, nHint: Long = 0L): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val n = if (nHint > 0) nHint else embeddings.count()
-    val nl = if (nlist > 0) nlist
-    else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
-    // unit-normalize, then IVF-train on the normalized corpus (the column
-    // keeps the raw-input name so prep/ivfTrain compose)
-    val unit = prep(embeddings)
-      .selectExpr("vec_id", "transform(emb, x -> x / norm) AS embedding")
-    val centroids = ivfTrain(unit, nl, iters)
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val dim = centroids(0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    // codebooks from a deterministic sample's residuals (lowest vec_ids —
-    // KBs on the driver, the Lloyd-style legitimate small state)
-    val sample = unit.orderBy("vec_id").limit(2048)
-      .as[(Long, Array[Double])].collect()
-    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      val sub = sample.map { case (_, v) =>
-        val cs = bcC.value(nearest(bcC.value, v))
-        Array.tabulate(dsub)(i => v(j * dsub + i) - cs(j * dsub + i))
-      }
-      smallKmeans(sub, math.min(ksub, sub.length), iters)
-    }
-    val bcB = spark.sparkContext.broadcast(codebooks)
+    val unit = AnnIndex.unitVectors(embeddings)
+    val model = AnnIndex.trainModel(unit, n, nlist, m, ksub, iters)
     // the COMPRESSED corpus: (vec_id, cluster, m code bytes) — full vectors
     // are dropped here; only the refine join ever sees them again
-    val encoded = unit.as[(Long, Array[Double])].map { case (id, v) =>
-      val cs = bcC.value
-      val c = nearest(cs, v)
-      val cv = cs(c)
-      val codes = new Array[Byte](m)
-      var j = 0
-      while (j < m) {
-        val r = Array.tabulate(dsub)(i => v(j * dsub + i) - cv(j * dsub + i))
-        codes(j) = nearest(bcB.value(j), r).toByte
-        j += 1
-      }
-      (id, c, codes)
-    }.toDF("vec_id", "cluster", "codes")
-    // queries keep their vectors (tiny side) and fan out over nprobe clusters
-    val np = nprobe
-    val q = unit.where(col("vec_id") < nQueries)
-      .as[(Long, Array[Double])].flatMap { case (id, v) =>
-        val cs = bcC.value
-        val ds = Array.tabulate(cs.length) { c =>
-          var d = 0.0; var i = 0
-          while (i < v.length) { val t = v(i) - cs(c)(i); d += t * t; i += 1 }
-          (d, c)
-        }
-        scala.util.Sorting.stableSort(ds)
-        Iterator.range(0, math.min(np, ds.length)).map(r => (id, v, ds(r)._2))
-      }.toDF("qid", "qemb", "qcluster")
-    // ADC scoring: per (query, probe-cluster) the lookup table is m×ksub
-    // residual distances; each candidate costs m table lookups — the full
-    // vector is never read
-    val scored = broadcast(q).join(encoded, col("qcluster") === col("cluster"))
-      .where(col("vec_id") =!= col("qid"))
-      .as[(Long, Array[Double], Int, Long, Int, Array[Byte])]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        val books = bcB.value
-        val ds = if (books.isEmpty) 0 else books(0)(0).length
-        it.map { case (qid, qv, qc, id, _, codes) =>
-          val cv = cs(qc)
-          var dist = 0.0
-          var j = 0
-          while (j < codes.length) {
-            val cw = books(j)(codes(j) & 0xff)
-            var i = 0
-            while (i < ds) {
-              val t = (qv(j * ds + i) - cv(j * ds + i)) - cw(i)
-              dist += t * t
-              i += 1
-            }
-            j += 1
-          }
-          (qid, id, dist)
-        }
-      }.toDF("qid", "nbr_id", "adc")
-    val wS = Window.partitionBy("qid").orderBy(asc("adc"), asc("nbr_id"))
-    val shortlist = scored.withColumn("srank", row_number().over(wS))
-      .where(col("srank") <= k * refine)
-      .select("qid", "nbr_id")
-    // exact refine: ONE id-keyed join fetches the shortlist's true vectors
-    val e = prep(embeddings)
-    val qFull = e.where(col("vec_id") < nQueries)
-      .withColumnsRenamed(Map("vec_id" -> "qid", "emb" -> "qemb2", "norm" -> "qnorm"))
-    val dot = aggregate(zip_with(col("qemb2"), col("emb"), (x, y) => x * y), lit(0.0d), (a, x) => a + x)
-    val exact = shortlist
-      .join(e.withColumnRenamed("vec_id", "nbr_id"), Seq("nbr_id"))
-      .join(broadcast(qFull), Seq("qid"))
-      .select(col("qid"), col("nbr_id"), (dot / (col("qnorm") * col("norm"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
-      .orderBy("vec_id", "rank")
+    val encoded = AnnIndex.encodeDf(unit, model)
+    AnnIndex.search(embeddings, model, nQueries, k, nprobe, refine)(_ => encoded)
   }
 
   /** SemDeDup (Abbas et al. 2023): semantic deduplication — k-means the
@@ -467,8 +355,7 @@ object Ann {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val n = if (nHint > 0) nHint else embeddings.count()
-    val nl = if (nlist > 0) nlist
-    else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
+    val nl = nlistFor(nlist, n)
     val np = math.max(1, math.min(nProbe, nl))
     val centroids = ivfTrain(embeddings, nl, iters)
     val bcC = spark.sparkContext.broadcast(centroids)
@@ -478,19 +365,7 @@ object Ann {
     val probed = prep(embeddings).select(col("vec_id"), col("emb"), col("norm"))
       .as[(Long, Array[Double], Double)]
       .flatMap { case (id, v, norm) =>
-        val cs = bcC.value
-        val ds = new Array[(Double, Int)](cs.length)
-        var c = 0
-        while (c < cs.length) {
-          val cv = cs(c)
-          var d = 0.0; var i = 0
-          while (i < v.length) { val t = v(i) - cv(i); d += t * t; i += 1 }
-          ds(c) = (d, c) // ties break on cluster id — fully deterministic
-          c += 1
-        }
-        scala.util.Sorting.stableSort(ds)
-        Iterator.range(0, math.min(np, ds.length))
-          .map(r => (id, ds(r)._2, r, v, norm))
+        probe(bcC.value, v, np).iterator.zipWithIndex.map { case (c, r) => (id, c, r, v, norm) }
       }
       .toDF("vec_id", "cluster", "rankc", "emb", "norm")
       .localCheckpoint()
@@ -501,9 +376,8 @@ object Ann {
       col("emb").as("emb_a"), col("norm").as("norm_a"))
     val b = c.select(col("cluster"), col("vec_id").as("id_b"),
       col("emb").as("emb_b"), col("norm").as("norm_b"))
-    val dot = aggregate(zip_with(col("emb_a"), col("emb_b"), (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
     val losers = a.join(b, Seq("cluster")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), (dot / (col("norm_a") * col("norm_b"))).as("cos"))
+      .select(col("id_a"), col("id_b"), (dot("emb_a", "emb_b") / (col("norm_a") * col("norm_b"))).as("cos"))
       .where(col("cos") >= thr)
       .select(col("id_b").as("vec_id")).distinct()
     probed.where(col("rankc") === 0).select("vec_id", "cluster")
@@ -534,9 +408,8 @@ object Ann {
     val c = e.join(small, Seq("bucket"))
     val a = c.withColumnsRenamed(Map("vec_id" -> "id_a", "emb" -> "emb_a", "norm" -> "norm_a"))
     val b = c.withColumnsRenamed(Map("vec_id" -> "id_b", "emb" -> "emb_b", "norm" -> "norm_b"))
-    val dot = aggregate(zip_with(col("emb_a"), col("emb_b"), (x, y) => x * y), lit(0.0d), (a2, x) => a2 + x)
     a.join(b, Seq("bucket")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), (dot / (col("norm_a") * col("norm_b"))).as("cos"))
+      .select(col("id_a"), col("id_b"), (dot("emb_a", "emb_b") / (col("norm_a") * col("norm_b"))).as("cos"))
       .where(col("cos") >= thr)
       .select("id_a", "id_b")
       .orderBy("id_a", "id_b")

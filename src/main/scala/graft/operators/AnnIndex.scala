@@ -5,13 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.spark.{ParquetSnapshotCatalog, IdentityTransform}
 
-/** PERSISTED IVF-PQ index artifacts — FAISS's train/add/search split
-  * (Jégou et al. 2011; the faiss `IndexIVFPQ` + `IndexRefineFlat` layout)
-  * re-expressed as catalog tables, so the index is built ONCE and every
-  * query reads it without training anything:
+/** The one IVF-PQ implementation (Jégou et al. 2011; the faiss
+  * `IndexIVFPQ` + `IndexRefineFlat` layout): [[trainModel]] trains,
+  * [[encodeDf]] encodes, [[probeDf]] probes, [[adc]] scores and [[search]]
+  * refines. [[Ann.ivfPqTopK]] runs them in one call over an in-memory code
+  * table; `IncrementalIngest.appendSemDeduped` admits drops with them.
   *
-  *   - `build` trains the coarse quantizer + PQ codebooks exactly like
-  *     [[Ann.ivfPqTopK]] and commits TWO catalog tables:
+  * The rest of this object is FAISS's train/add/search split re-expressed
+  * as catalog tables, so the index is built ONCE and every query reads it
+  * without training anything:
+  *
+  *   - `build` trains the coarse quantizer + PQ codebooks and commits TWO
+  *     catalog tables:
   *     `<table>__model` (centroids + codebooks — KBs, the driver-state
   *     part of the index) and `<table>` (vec_id, cluster, codes — the
   *     compressed corpus, 8 B/vector), the latter partitioned by
@@ -38,6 +43,8 @@ object AnnIndex {
 
   private val ClusterWidth = 5
 
+  /** A cluster id as stored in every code table and probed by every
+    * search — the one format both sides must share. */
   private def pad(c: Int): String = s"%0${ClusterWidth}d".format(c)
 
   // ------------------------------------------------------------------
@@ -168,9 +175,8 @@ object AnnIndex {
   }
 
   /** Train + encode + commit the index artifacts. Returns the index
-    * table's snapshot id. Parameters mirror [[Ann.ivfPqTopK]] (same
-    * training discipline: deterministic sample init, fixed Lloyd rounds,
-    * id tie-breaks) so recall matches the in-call path.
+    * table's snapshot id. Parameters and defaults mirror
+    * [[Ann.ivfPqTopK]], which returns the same rows as this + [[query]].
     */
   def build(embeddings: DataFrame, cat: ParquetSnapshotCatalog, table: String,
       nlist: Int = 0, m: Int = 8, ksub: Int = 16, iters: Int = 3,
@@ -180,11 +186,15 @@ object AnnIndex {
     val unit = unitVectors(embeddings)
     val model = trainModel(unit, n, nlist, m, ksub, iters, opq)
     commitModel(spark, cat, s"${table}__model", model)
-    // the compressed corpus, cluster-partitioned for probe pruning
-    cat.commitPartitioned(encodeDf(unit, model), table,
-      IdentityTransform("cluster"),
-      nFiles = math.max(4, math.min(model.centroids.length, 64)))
+    commitCodes(cat, encodeDf(unit, model), table, model)
   }
+
+  /** Commit a code table (vec_id, cluster, codes), cluster-partitioned for
+    * probe pruning. Returns its snapshot id. */
+  private[graft] def commitCodes(cat: ParquetSnapshotCatalog, codes: DataFrame,
+      table: String, model: PqModel): Long =
+    cat.commitPartitioned(codes, table, IdentityTransform("cluster"),
+      nFiles = math.max(4, math.min(model.centroids.length, 64)))
 
   /** The frozen index model: coarse centroids, PQ codebooks, optional OPQ
     * rotation (rows = reordered principal directions; applied to residuals
@@ -201,16 +211,17 @@ object AnnIndex {
       .selectExpr("vec_id", "transform(emb, x -> x / norm) AS embedding")
 
   /** Train coarse centroids + PQ codebooks on UNIT vectors — the only
-    * training entry ([[Ann.trainRuns]]-counted). Deterministic: sample
-    * init (lowest vec_ids), fixed Lloyd rounds, id tie-breaks.
+    * IVF-PQ training entry: one coarse and `m` codebook k-means runs, each
+    * [[Ann.trainRuns]]-counted. Deterministic: sample init (lowest
+    * vec_ids), fixed Lloyd rounds, id tie-breaks. Empty input fails with
+    * an IllegalArgumentException.
     */
   private[graft] def trainModel(unit: DataFrame, n: Long, nlist: Int,
       m: Int, ksub: Int, iters: Int, opq: Boolean = false): PqModel = {
     val spark = unit.sparkSession
     import spark.implicits._
-    val nl = if (nlist > 0) nlist
-    else math.max(4, math.min(1024, math.sqrt(n.toDouble).toInt))
-    val centroids = Ann.ivfTrain(unit, nl, iters)
+    val centroids = Ann.ivfTrain(unit, Ann.nlistFor(nlist, n), iters)
+    require(centroids.nonEmpty, "trainModel: the input is empty, there is nothing to train on")
     val dim = centroids(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
@@ -223,15 +234,40 @@ object AnnIndex {
       Array.tabulate(dim)(i => v(i) - cs(i))
     }
     val rotation = if (opq) Some(opqRotation(resids, m)) else None
-    val rotated = rotation match {
-      case Some(r) => resids.map(rotate(r, _))
-      case None => resids
-    }
+    val rotated = rotation.fold(resids)(r => resids.map(rotate(r, _)))
     val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
       val sub = rotated.map(r => Array.tabulate(dsub)(i => r(j * dsub + i)))
-      Ann.smallKmeans(sub, math.min(ksub, sub.length), iters)
+      smallKmeans(sub, math.min(ksub, sub.length), iters)
     }
     PqModel(centroids, codebooks, rotation)
+  }
+
+  /** Driver-side Lloyd k-means over a small collected sample — the PQ
+    * codebook trainer (per-subspace data is sampleN × dsub doubles — KBs).
+    * Deterministic: init = the first `k` rows in input order, fixed
+    * iterations, ties to the lower centroid index.
+    */
+  private def smallKmeans(rows: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
+    Ann.trainRuns.incrementAndGet()
+    var cents = rows.take(k).map(_.clone())
+    var it = 0
+    while (it < iters) {
+      val sums = Array.ofDim[Double](cents.length, rows(0).length)
+      val counts = new Array[Long](cents.length)
+      rows.foreach { v =>
+        val c = Ann.nearest(cents, v)
+        var i = 0
+        while (i < v.length) { sums(c)(i) += v(i); i += 1 }
+        counts(c) += 1
+      }
+      cents = cents.zipWithIndex.map { case (old, c) =>
+        if (counts(c) == 0) old
+        else { val m = new Array[Double](old.length); var i = 0
+          while (i < m.length) { m(i) = sums(c)(i) / counts(c); i += 1 }; m }
+      }
+      it += 1
+    }
+    cents
   }
 
   /** Model table: centroids (kind 'c', i = cluster) + codebooks (kind 'b',
@@ -264,15 +300,18 @@ object AnnIndex {
     }.toDF("vec_id", "cluster", "codes")
   }
 
+  /** v − cv in the model's frame (rotated under OPQ — R is orthogonal, so
+    * euclidean ADC is exact in either frame). */
+  private def residual(model: PqModel, v: Array[Double], cv: Array[Double]): Array[Double] = {
+    val r0 = Array.tabulate(cv.length)(i => v(i) - cv(i))
+    model.rotation.fold(r0)(rotate(_, r0))
+  }
+
   private def encodeCodes(v: Array[Double], cv: Array[Double],
       model: PqModel): Array[Byte] = {
     val books = model.codebooks
     val dsub = cv.length / books.length
-    val resid0 = Array.tabulate(cv.length)(i => v(i) - cv(i))
-    val resid = model.rotation match {
-      case Some(r) => rotate(r, resid0)
-      case None => resid0
-    }
+    val resid = residual(model, v, cv)
     val codes = new Array[Byte](books.length)
     var j = 0
     while (j < books.length) {
@@ -281,6 +320,85 @@ object AnnIndex {
       j += 1
     }
     codes
+  }
+
+  /** Asymmetric distance between unit query `qv` and the vector coded as
+    * `codes` in `cluster`: the query residual against each subspace's
+    * codeword, squared and summed — the full vector is never read. */
+  private def adc(model: PqModel, qv: Array[Double], cluster: Int,
+      codes: Array[Byte]): Double = {
+    val books = model.codebooks
+    val cv = model.centroids(cluster)
+    val dsub = cv.length / books.length
+    val rq = residual(model, qv, cv)
+    var dist = 0.0
+    var j = 0
+    while (j < codes.length) {
+      val cw = books(j)(codes(j) & 0xff)
+      var i = 0
+      while (i < dsub) {
+        val t = rq(j * dsub + i) - cw(i)
+        dist += t * t
+        i += 1
+      }
+      j += 1
+    }
+    dist
+  }
+
+  /** (qid, qemb, qcluster): each UNIT query vector (vec_id, embedding)
+    * fanned out over its `nprobe` nearest centroids, keyed like the code
+    * tables' cluster column. */
+  private[graft] def probeDf(unit: DataFrame, model: PqModel, nprobe: Int): DataFrame = {
+    val spark = unit.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model.centroids)
+    unit.as[(Long, Array[Double])]
+      .flatMap { case (id, v) => Ann.probe(bc.value, v, nprobe).iterator.map(c => (id, v, pad(c))) }
+      .toDF("qid", "qemb", "qcluster")
+  }
+
+  /** (qid, nbr_id, adc) for probe rows joined to code rows:
+    * (qid, qemb, qcluster, nbr_id, codes). */
+  private[graft] def scoreAdc(pairs: DataFrame, model: PqModel): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model)
+    pairs.select("qid", "qemb", "qcluster", "nbr_id", "codes")
+      .as[(Long, Array[Double], String, Long, Array[Byte])]
+      .map { case (qid, qv, qc, id, codes) => (qid, id, adc(bc.value, qv, qc.toInt, codes)) }
+      .toDF("qid", "nbr_id", "adc")
+  }
+
+  /** IVF-PQ search for the `vec_id < nQueries` rows of `embeddings`:
+    * probe, ADC-score the probed clusters' code rows (`candidates` of the
+    * sorted probe keys), keep a `refine`×k shortlist, then exact-refine it
+    * with ONE id-keyed join against `embeddings`. Trains nothing. */
+  private[operators] def search(embeddings: DataFrame, model: PqModel, nQueries: Int,
+      k: Int, nprobe: Int, refine: Int)(candidates: Seq[String] => DataFrame): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    val probes = probeDf(unitVectors(embeddings).where(col("vec_id") < nQueries), model, nprobe)
+      .localCheckpoint() // consumed twice: probe-set collect + the ADC join
+    val probed = probes.select("qcluster").distinct()
+      .as[String].collect().sorted.toSeq
+    // the query side is nQueries×nprobe rows — pin the broadcast so the
+    // candidate scan streams against it instead of shuffling by cluster
+    val scored = scoreAdc(broadcast(probes)
+      .join(candidates(probed).withColumnRenamed("vec_id", "nbr_id"),
+        col("qcluster") === col("cluster"))
+      .where(col("nbr_id") =!= col("qid")), model)
+    val wS = Window.partitionBy("qid").orderBy(asc("adc"), asc("nbr_id"))
+    val shortlist = scored.withColumn("srank", row_number().over(wS))
+      .where(col("srank") <= k * refine)
+      .select("qid", "nbr_id")
+    // exact refine: ONE id-keyed join fetches the shortlist's true vectors
+    val e = Ann.prep(embeddings)
+    val qFull = e.where(col("vec_id") < nQueries)
+      .withColumnsRenamed(Map("vec_id" -> "qid", "emb" -> "qemb", "norm" -> "qnorm"))
+    Ann.cosineTopK(shortlist
+      .join(e.withColumnRenamed("vec_id", "nbr_id"), Seq("nbr_id"))
+      .join(broadcast(qFull), Seq("qid")), k)
   }
 
   /** The frozen model back from the catalog. */
@@ -372,81 +490,8 @@ object AnnIndex {
       nQueries: Int = 20, k: Int = 10, nprobe: Int = 4,
       refine: Int = 4): DataFrame = {
     val spark = embeddings.sparkSession
-    import spark.implicits._
-    val model = loadModel(spark, cat, table)
-    val bcM = spark.sparkContext.broadcast(model)
-    val np = nprobe
-    // queries keep their unit vectors (tiny side) and pick probe clusters
-    val unitQ = Ann.prep(embeddings).where(col("vec_id") < nQueries)
-      .selectExpr("vec_id", "transform(emb, x -> x / norm) AS uemb")
-      .as[(Long, Array[Double])]
-      .flatMap { case (id, v) =>
-        val cs = bcM.value.centroids
-        val ds = Array.tabulate(cs.length) { c =>
-          var d = 0.0; var i = 0
-          while (i < v.length) { val t = v(i) - cs(c)(i); d += t * t; i += 1 }
-          (d, c)
-        }
-        scala.util.Sorting.stableSort(ds)
-        Iterator.range(0, math.min(np, ds.length)).map(r => (id, v, pad(ds(r)._2)))
-      }.toDF("qid", "qemb", "qcluster")
-      .localCheckpoint() // consumed twice: probe-set collect + the ADC join
     // ONE pruned scan over exactly the probed clusters' files
-    val probed = unitQ.select("qcluster").distinct()
-      .as[String].collect().sorted.toSeq
-    val candidates = cat.readPartitionIn(spark, table, probed)
-    // the query side is nQueries×nprobe rows — pin the broadcast so the
-    // candidate scan streams against it instead of shuffling by cluster
-    val scored = broadcast(unitQ).join(candidates, col("qcluster") === col("cluster"))
-      .where(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("qemb"), col("qcluster"), col("vec_id"), col("codes"))
-      .as[(Long, Array[Double], String, Long, Array[Byte])]
-      .mapPartitions { it =>
-        val m = bcM.value
-        val cs = m.centroids
-        val books = m.codebooks
-        val ds = if (books.isEmpty) 0 else books(0)(0).length
-        // per-row query residual in the model's frame (rotated under OPQ —
-        // R is orthogonal, so euclidean ADC is exact in either frame)
-        it.map { case (qid, qv, qc, id, codes) =>
-          val cv = cs(qc.toInt)
-          val r0 = Array.tabulate(cv.length)(i => qv(i) - cv(i))
-          val rq = m.rotation match {
-            case Some(r) => rotate(r, r0)
-            case None => r0
-          }
-          var dist = 0.0
-          var j = 0
-          while (j < codes.length) {
-            val cw = books(j)(codes(j) & 0xff)
-            var i = 0
-            while (i < ds) {
-              val t = rq(j * ds + i) - cw(i)
-              dist += t * t
-              i += 1
-            }
-            j += 1
-          }
-          (qid, id, dist)
-        }
-      }.toDF("qid", "nbr_id", "adc")
-    val wS = Window.partitionBy("qid").orderBy(asc("adc"), asc("nbr_id"))
-    val shortlist = scored.withColumn("srank", row_number().over(wS))
-      .where(col("srank") <= k * refine)
-      .select("qid", "nbr_id")
-    // exact refine: ONE id-keyed join fetches the shortlist's true vectors
-    val e = Ann.prep(embeddings)
-    val qFull = e.where(col("vec_id") < nQueries)
-      .withColumnsRenamed(Map("vec_id" -> "qid", "emb" -> "qemb2", "norm" -> "qnorm"))
-    val dot = aggregate(zip_with(col("qemb2"), col("emb"), (x, y) => x * y), lit(0.0d), (a, x) => a + x)
-    val exact = shortlist
-      .join(e.withColumnRenamed("vec_id", "nbr_id"), Seq("nbr_id"))
-      .join(broadcast(qFull), Seq("qid"))
-      .select(col("qid"), col("nbr_id"), (dot / (col("qnorm") * col("norm"))).as("sim"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim"), asc("nbr_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("rank"), col("nbr_id"))
-      .orderBy("vec_id", "rank")
+    search(embeddings, loadModel(spark, cat, table), nQueries, k, nprobe, refine)(
+      cat.readPartitionIn(spark, table, _))
   }
 }

@@ -239,7 +239,7 @@ object IncrementalIngest {
       nlist: Int = 0, adcMargin: Double = 1.0,
       maxCluster: Int = 4096, opq: Boolean = false): (Long, Long) = {
     import spark.implicits._
-    import graft.operators.AnnIndex
+    import graft.operators.{Ann, AnnIndex}
     val semTable = table + "__semantic"
     val modelTable = table + "__semantic__model"
     // within-drop: exact-vector dedup, first arrival (min vec_id) keeps —
@@ -251,88 +251,46 @@ object IncrementalIngest {
       .drop("digest")
     val survivors = cat.currentSnapshot(table) match {
       case None =>
+        // an empty first drop commits nothing; the next drop trains
         val n = inDrop.count()
-        val model = AnnIndex.trainModel(
-          AnnIndex.unitVectors(inDrop), n, nlist, 8, 16, 3, opq)
-        AnnIndex.commitModel(spark, cat, modelTable, model) // model FIRST
+        if (n > 0) AnnIndex.commitModel(spark, cat, modelTable, // model FIRST
+          AnnIndex.trainModel(AnnIndex.unitVectors(inDrop), n, nlist, 8, 16, 3, opq))
         inDrop
       case Some(_) =>
         repairSemanticIfBehind(spark, cat, table)
         val model = AnnIndex.loadModelTable(spark, cat, modelTable)
-        val bcM = spark.sparkContext.broadcast(model)
-        val bcC = spark.sparkContext.broadcast(model.centroids)
         val np = math.max(1, math.min(nprobe, model.centroids.length))
         val floor = 2.0 * (1.0 - thr) + adcMargin
         val unit = AnnIndex.unitVectors(inDrop).localCheckpoint() // probes + refine
-        val probes = unit.as[(Long, Array[Double])].flatMap { case (id, v) =>
-          val cs = bcC.value
-          val ds = Array.tabulate(cs.length) { c =>
-            var d = 0.0; var i = 0
-            while (i < v.length) { val t = v(i) - cs(c)(i); d += t * t; i += 1 }
-            (d, c)
-          }
-          scala.util.Sorting.stableSort(ds)
-          Iterator.range(0, np).map(r => (id, v, "%05d".format(ds(r)._2)))
-        }.toDF("qid", "qemb", "qcluster").localCheckpoint()
+        val probes = AnnIndex.probeDf(unit, model, np).localCheckpoint()
         val probedClusters = probes.select("qcluster").distinct()
           .as[String].collect().sorted.toSeq
-        // companion read pruned to the probed clusters; capped per cluster
-        val comp = cat.readPartitionIn(spark, semTable, probedClusters)
-        val okClusters = comp.groupBy("cluster").agg(count(lit(1)).as("__cn"))
-          .where(col("__cn") <= maxCluster).select("cluster")
-        val shortlist = probes
-          .join(comp.join(okClusters, Seq("cluster")),
-            col("qcluster") === col("cluster"))
-          .select(col("qid"), col("qemb"), col("qcluster"),
-            col("vec_id").as("__tid"), col("codes"))
-          .as[(Long, Array[Double], String, Long, Array[Byte])]
-          .mapPartitions { it =>
-            val m = bcM.value
-            val cs = m.centroids
-            val bks = m.codebooks
-            val ds = if (bks.isEmpty) 0 else bks(0)(0).length
-            // query residual in the MODEL's frame — rotated when the
-            // companion model carries OPQ, exactly like AnnIndex.query
-            // (codes are rotated at encode; an unrotated compare here
-            // would score garbage distances)
-            it.flatMap { case (qid, qv, qc, tid, codes) =>
-              val cv = cs(qc.toInt)
-              val r0 = Array.tabulate(cv.length)(i => qv(i) - cv(i))
-              val rq = m.rotation match {
-                case Some(r) => graft.operators.AnnIndex.rotate(r, r0)
-                case None => r0
-              }
-              var dist = 0.0
-              var j = 0
-              while (j < codes.length) {
-                val cw = bks(j)(codes(j) & 0xff)
-                var i = 0
-                while (i < ds) {
-                  val t = rq(j * ds + i) - cw(i)
-                  dist += t * t
-                  i += 1
-                }
-                j += 1
-              }
-              if (dist <= floor) Iterator.single((qid, tid)) else Iterator.empty
-            }
-          }.toDF("qid", "__tid").distinct()
-        // exact refine on survivors only: the shortlist broadcasts into
-        // the committed-vector fetch (table streams, O(survivors) rows
-        // come back), and that SMALL result broadcasts into the drop-side
-        // join — the DROP itself is never a broadcast side (a real crawl
-        // drop is TBs; only shortlist-sized relations ride broadcasts)
-        val committed = AnnIndex.unitVectors(cat.read(spark, table))
-          .withColumnsRenamed(Map("vec_id" -> "__tid", "embedding" -> "temb"))
-        val qUnit = unit.withColumnsRenamed(Map("vec_id" -> "qid", "embedding" -> "qemb2"))
-        val cos = aggregate(zip_with(col("qemb2"), col("temb"), (x, y) => x * y),
-          lit(0.0d), (a, x) => a + x)
-        val withVecs = broadcast(shortlist).join(committed, Seq("__tid"))
-        val rejected = broadcast(withVecs)
-          .join(qUnit, Seq("qid"))
-          .where(cos >= thr)
-          .select(col("qid").as("vec_id")).distinct()
-        inDrop.join(rejected, Seq("vec_id"), "left_anti")
+        if (probedClusters.isEmpty) inDrop // an empty drop: nothing to reject
+        else {
+          // companion read pruned to the probed clusters; capped per cluster
+          val comp = cat.readPartitionIn(spark, semTable, probedClusters)
+          val okClusters = comp.groupBy("cluster").agg(count(lit(1)).as("__cn"))
+            .where(col("__cn") <= maxCluster).select("cluster")
+          val shortlist = AnnIndex.scoreAdc(probes
+              .join(comp.join(okClusters, Seq("cluster")).withColumnRenamed("vec_id", "nbr_id"),
+                col("qcluster") === col("cluster")), model)
+            .where(col("adc") <= floor)
+            .select(col("qid"), col("nbr_id").as("__tid")).distinct()
+          // exact refine on survivors only: the shortlist broadcasts into
+          // the committed-vector fetch (table streams, O(survivors) rows
+          // come back), and that SMALL result broadcasts into the drop-side
+          // join — the DROP itself is never a broadcast side (a real crawl
+          // drop is TBs; only shortlist-sized relations ride broadcasts)
+          val committed = AnnIndex.unitVectors(cat.read(spark, table))
+            .withColumnsRenamed(Map("vec_id" -> "__tid", "embedding" -> "temb"))
+          val qUnit = unit.withColumnsRenamed(Map("vec_id" -> "qid", "embedding" -> "qemb2"))
+          val withVecs = broadcast(shortlist).join(committed, Seq("__tid"))
+          val rejected = broadcast(withVecs)
+            .join(qUnit, Seq("qid"))
+            .where(Ann.dot("qemb2", "temb") >= thr)
+            .select(col("qid").as("vec_id")).distinct()
+          inDrop.join(rejected, Seq("vec_id"), "left_anti")
+        }
     }
     val staged = survivors.persist()
     val appended = staged.count()
@@ -343,8 +301,7 @@ object IncrementalIngest {
         val model = AnnIndex.loadModelTable(spark, cat, modelTable)
         val codes = AnnIndex.encodeDf(AnnIndex.unitVectors(staged), model)
         if (cat.currentSnapshot(semTable).isEmpty)
-          cat.commitPartitioned(codes, semTable, IdentityTransform("cluster"),
-            nFiles = math.max(4, math.min(model.centroids.length, 64)))
+          AnnIndex.commitCodes(cat, codes, semTable, model)
         else cat.appendPartitioned(codes, semTable, nFiles = 4)
         s
       }
@@ -366,10 +323,9 @@ object IncrementalIngest {
       .map(_ => cat.read(spark, semTable).count()).getOrElse(0L)
     if (semRows < tableRows) {
       val model = AnnIndex.loadModelTable(spark, cat, table + "__semantic__model")
-      cat.commitPartitioned(
+      AnnIndex.commitCodes(cat,
         AnnIndex.encodeDf(AnnIndex.unitVectors(cat.read(spark, table)), model),
-        semTable, IdentityTransform("cluster"),
-        nFiles = math.max(4, math.min(model.centroids.length, 64)))
+        semTable, model)
     }
   }
 

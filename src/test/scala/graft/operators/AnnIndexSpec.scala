@@ -38,15 +38,25 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("nbr_id"))).toSet
 
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
+    df.select("vec_id", "rank", "nbr_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+
   test("index query matches the in-call path's recall; the query path trains NOTHING") {
     val cat = new graft.spark.ParquetSnapshotCatalog(tmp())
     AnnIndex.build(emb, cat, "ann")
     val exact = pairs(Ann.bruteForceTopK(emb))
-    val incall = pairs(Ann.ivfPqTopK(emb))
+    val incallRows = ranked(Ann.ivfPqTopK(emb))
+    val incall = incallRows.map { case (q, _, nb) => (q, nb) }.toSet
     val incallRecall = exact.count(incall.contains).toDouble / exact.size
 
     val before = Ann.trainRuns.get()
-    val viaIndex = pairs(AnnIndex.query(emb, cat, "ann"))
+    val indexRows = ranked(AnnIndex.query(emb, cat, "ann"))
+    // same defaults, same model, same search: the in-call path and the
+    // persisted index give identical (vec_id, rank, nbr_id) rows
+    assert(indexRows.nonEmpty && indexRows == incallRows,
+      s"in-call and index rows differ: ${incallRows.diff(indexRows).take(5)} vs ${indexRows.diff(incallRows).take(5)}")
+    val viaIndex = indexRows.map { case (q, _, nb) => (q, nb) }.toSet
     val indexRecall = exact.count(viaIndex.contains).toDouble / exact.size
     assert(indexRecall >= 0.8 * incallRecall && indexRecall >= 0.5,
       s"index recall $indexRecall vs in-call $incallRecall")
@@ -57,6 +67,18 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // deterministic: a second read-only query run is bit-identical
     assert(pairs(AnnIndex.query(emb, cat, "ann")) == viaIndex)
     assert(Ann.trainRuns.get() == before)
+  }
+
+  test("training on empty input fails with a clear IllegalArgumentException") {
+    val empty = emb.where("vec_id < 0")
+    val unitErr = intercept[IllegalArgumentException] {
+      AnnIndex.trainModel(AnnIndex.unitVectors(empty), 0L, 0, 8, 16, 3)
+    }
+    assert(unitErr.getMessage.contains("input is empty"), unitErr.getMessage)
+    val cat = new graft.spark.ParquetSnapshotCatalog(tmp())
+    val buildErr = intercept[IllegalArgumentException](AnnIndex.build(empty, cat, "ann"))
+    assert(buildErr.getMessage.contains("input is empty"), buildErr.getMessage)
+    assert(cat.currentSnapshot("ann__model").isEmpty && cat.currentSnapshot("ann").isEmpty)
   }
 
   test("append encodes with the FROZEN model: planted twin found, zero retrain, model bytes untouched") {

@@ -197,6 +197,26 @@ class IncrementalIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vids(cat, "v") == (0L until 40L).toSet + 301L)
   }
 
+  test("semantic ingest: an empty first drop commits nothing; the next drop trains as usual") {
+    val (cat, _) = freshCat("semempty")
+    val empty = vdf((0L, vec(0L))).where("vec_id < 0")
+    assert(IncrementalIngest.appendSemDeduped(spark, cat, "v", empty) == (0L, 0L))
+    Seq("v", "v__semantic", "v__semantic__model").foreach { t =>
+      assert(cat.currentSnapshot(t).isEmpty, s"an empty drop committed $t")
+    }
+    val before = graft.operators.Ann.trainRuns.get()
+    val (_, n1) = IncrementalIngest.appendSemDeduped(spark, cat, "v",
+      vdf((0L until 40L).map(i => (i, vec(i))): _*))
+    assert(n1 == 40)
+    assert(graft.operators.Ann.trainRuns.get() > before, "the first non-empty drop trains")
+    assert(cat.currentSnapshot("v__semantic__model").isDefined)
+    assert(cat.read(spark, "v__semantic").count() == 40L)
+    // a later empty drop admits nothing and leaves every table as it was
+    val snap = cat.currentSnapshot("v").get
+    assert(IncrementalIngest.appendSemDeduped(spark, cat, "v", empty) == (snap, 0L))
+    assert(vids(cat, "v") == (0L until 40L).toSet)
+  }
+
   test("semantic crash repair: companion lag rebuilt with the frozen model, twins still rejected") {
     val (cat, _) = freshCat("semcrash")
     IncrementalIngest.appendSemDeduped(spark, cat, "v",
