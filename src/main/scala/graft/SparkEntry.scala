@@ -20,6 +20,26 @@ object SparkEntry {
   private def embeddings(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
+  /** `path` as an empty directory: whatever an earlier run left there is
+    * deleted first. */
+  private def freshDir(path: String): String = {
+    import java.nio.file.{Files, Paths}
+    val p = Paths.get(path)
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally walk.close()
+    }
+    Files.createDirectories(p)
+    path
+  }
+
+  /** A query's private scratch root, `<tmpdir>/graft_<tag>_<hash of dir>`,
+    * emptied — one root per query and input directory, so re-runs start
+    * clean. */
+  private def scratchRoot(tag: String, dir: String): String =
+    freshDir(s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_${dir.hashCode.toHexString}")
+
   /** DuckDB CTE chain replaying `k` BPE merge iterations (w0 = the word-
     * frequency table as interpunct symbol strings; each stage re-counts
     * weighted adjacent pairs, argmaxes (c desc, a, b), and applies the
@@ -689,12 +709,7 @@ object SparkEntry {
       // cross-drop check anti-joins the 16-byte digest COMPANION table
       // (never re-reads page text); drops land as Iceberg-style fast-
       // appends (metadata-only on existing files).
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_incr_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("incr", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir)
       graft.spark.IncrementalIngest.appendDeduped(s, cat, "pages",
@@ -711,12 +726,7 @@ object SparkEntry {
       // its genuinely-new odd docs admitted. The md5-based 60-bit component
       // hashes make the WHOLE admission decision (shingles → signatures →
       // band condition → >=12/16 floor) DuckDB-replayable bit-for-bit.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_incnear_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("incnear", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir)
       graft.spark.IncrementalIngest.appendNearDeduped(s, cat, "pages",
@@ -747,12 +757,7 @@ object SparkEntry {
       // rejects cosine >= 0.95 twins. Float k-means → rows-only driver
       // check like q_semdedup; planted-twin kill + crash repair + zero
       // retrain are spec-pinned in IncrementalIngestSpec.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_incsem_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("incsem", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val e = embeddings(s, dir).select("vec_id", "embedding")
       graft.spark.IncrementalIngest.appendSemDeduped(s, cat, "vecs",
@@ -834,12 +839,7 @@ object SparkEntry {
       // clusters' files, zero k-means runs (spec-asserted via the
       // Ann.trainRuns census in AnnIndexSpec). Approximate by design →
       // rows-only driver check like the other ANN queries.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_annidx_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("annidx", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val emb = embeddings(s, dir)
       graft.operators.AnnIndex.build(emb, cat, "ann", nHint = embCount(s, dir))
@@ -1195,12 +1195,7 @@ object SparkEntry {
       // sidecars; "distinct texts across all drops" is then a 2 KB
       // sidecar read, and HLL's duplicate-insensitive union means the
       // oracle just replays the registers over the concatenated stream
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_hllinc_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("hllinc", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).select("doc_id", "text")
       cat.appendWithHll(d.where("doc_id % 2 = 0"), "t", "text")
@@ -1214,12 +1209,7 @@ object SparkEntry {
       // parquet part files + ONE metadata-only job commit (the same atomic
       // snapshot every other write path produces) — and the read is the
       // plain catalog read over both halves
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_catwrite_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("catwrite", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "md5(text) AS text_md5")
       cat.commit(d.where("doc_id % 2 = 0"), "t")
@@ -1232,13 +1222,8 @@ object SparkEntry {
       // the CC WET layout end-to-end: extracted text lands as conversion
       // records (gzip members, tmp/rename commit) and a text-only consumer
       // streams it back without ever touching html archives
-      import java.nio.file.{Files, Paths}
       import s.implicits._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_wet_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("wet", dir)
       val recs = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
         "doc_id", "text").as[(String, Long, String)]
@@ -1256,13 +1241,8 @@ object SparkEntry {
       // as gzip members, streams back, and the payload parses with Spark's
       // NATIVE from_json (codegen'd, no UDF) — a link-graph build that
       // never re-touches html archives
-      import java.nio.file.{Files, Paths}
       import s.implicits._
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_wat_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("wat", dir)
       val n = s.sparkContext.defaultParallelism
       val recs = ExtractJob.extract(Pages.synthesizeLinkPages(s, dir), "wat", n)
         .map(e => graft.sources.Warc.WarcRec(e.url, 1700000000000L,
@@ -1287,12 +1267,7 @@ object SparkEntry {
       // with a CDX sidecar (member-exact offsets), and "fetch THIS url's
       // capture" filters the index then seeks + inflates ONE gzip member
       // per hit (digest-verified) — O(record) per lookup, never O(archive)
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_cdx_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("cdx", dir)
       import s.implicits._
       val recs = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -1321,12 +1296,7 @@ object SparkEntry {
       // revisit records pointing at the deterministic original (min
       // (ts, url) per payload digest), originals as full responses; the
       // response reader sees exactly the distinct payloads
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_revisit_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("revisit", dir)
       import s.implicits._
       val base = docs(s, dir).selectExpr("doc_id", "text").collect()
       val recs = base.map(r => graft.sources.Warc.WarcRec(
@@ -1352,12 +1322,7 @@ object SparkEntry {
       // REQUIRED in-query: 5 revisit rows fetch their original's member by
       // ranged read — record-digest verified, url == orig_url, fetched
       // payload md5 == payload_digest.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_cdxrv_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("cdxrv", dir)
       import s.implicits._
       val base = docs(s, dir).selectExpr("doc_id", "text").collect()
       val recs = base.map(r => graft.sources.Warc.WarcRec(
@@ -1392,12 +1357,7 @@ object SparkEntry {
       // index rows fetch their records by ranged read, digest-verified,
       // urls matching — then the oracle replays every (surt, host,
       // registrable_domain) derivation closed-form
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_ccidx_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("ccidx", dir)
       import s.implicits._
       val recs = docs(s, dir).selectExpr(
         "concat('https://', CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END, lang, '.Example.com/', source, '/doc', doc_id) AS url",
@@ -1424,12 +1384,7 @@ object SparkEntry {
       // (tombstone keyed on the old column resolves through the rename
       // history); the second drop writes the NEW name — the read folds
       // both generations under the current schema, zero data rewritten
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_schevo_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("schevo", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir)
       cat.commit(d.where("doc_id % 2 = 0").selectExpr("doc_id", "text AS body"), "t")
@@ -1446,12 +1401,7 @@ object SparkEntry {
       // (zero delete refs left — asserted) and rewrites the transform
       // sidecar, so post-compaction point lookups still prune (asserted)
       // and still answer exactly
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_csort_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("csort", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -1470,7 +1420,7 @@ object SparkEntry {
         "post-compaction pruning did not engage")
       val targets = d.where("doc_id % 50 = 7 AND doc_id < 500").select("url")
         .collect().map(_.getString(0)).sorted
-      targets.map(u => cat.readPartitionEq(s, "t", u)).reduce(_.unionByName(_))
+      cat.scan(s, "t").where(col("url").isin(targets: _*))
     }),
     "q_bloom_lookup" -> ((s, dir) => {
       // per-file BLOOM sidecars: point lookups on a NON-clustered column
@@ -1478,12 +1428,7 @@ object SparkEntry {
       // drops each paying one bloom pass over its own files; lookups for
       // the %50==9 urls plus two never-crawled urls (which prune to ZERO
       // candidate files — asserted) union to the plain equality filter
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_bloom_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("bloom", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -1498,8 +1443,7 @@ object SparkEntry {
         require(cat.pruneFilesByBloom("t", "url", g).isEmpty,
           s"absent key $g should prune every file")
       }
-      (targets ++ ghosts).map(u => cat.readBloomLookup(s, "t", "url", u))
-        .reduce(_.unionByName(_))
+      cat.scan(s, "t").where(col("url").isin(targets ++ ghosts: _*))
     }),
     "q_zorder" -> ((s, dir) => {
       // Z-ORDER clustering (Delta OPTIMIZE ZORDER shape): one Morton-key
@@ -1509,22 +1453,15 @@ object SparkEntry {
       // opens a fraction of the files (the prune-proof-by-deletion and the
       // sorted-contrast live in ZOrderSpec). The probes' union is the
       // plain two-filter SQL — pruning is semantically invisible.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_zorder_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("zorder", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val e = s.read.parquet(s"$dir/events.parquet")
         .selectExpr("event_id", "user_id", "event_type")
       cat.commit(e, "t")
       cat.compactZOrder(s, "t", Seq("event_id", "user_id"), nFiles = 16)
-      val byEvent = cat.readPruned(s, "t", "event_id", "100", "250")
-        .where("event_id BETWEEN 100 AND 250")
+      val byEvent = cat.scan(s, "t").where("event_id BETWEEN 100 AND 250")
         .selectExpr("'event_id' AS probe", "event_id", "user_id", "event_type")
-      val byUser = cat.readPruned(s, "t", "user_id", "40", "45")
-        .where("user_id BETWEEN 40 AND 45")
+      val byUser = cat.scan(s, "t").where("user_id BETWEEN 40 AND 45")
         .selectExpr("'user_id' AS probe", "event_id", "user_id", "event_type")
       byEvent.unionByName(byUser)
     }),
@@ -1537,11 +1474,7 @@ object SparkEntry {
       // spec's stats is conservatively kept by that spec, never wrongly
       // dropped). The prune proof requires the intersection strictly
       // tighter than the current-spec-only keep-set AND the full file set.
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_specevo_${dir.hashCode.toHexString}"
-      val rootP = java.nio.file.Paths.get(root)
-      if (java.nio.file.Files.exists(rootP))
-        java.nio.file.Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
+      val root = scratchRoot("specevo", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).select("doc_id", "lang")
       val oldSpec = graft.spark.IdentityTransform("lang")
@@ -1558,7 +1491,8 @@ object SparkEntry {
       val kept = byOld intersect byNew
       require(kept.size < byNew.size && kept.size < all.size,
         s"q_spec_evolution: old-era pruning did not engage (${kept.size}/${byNew.size}/${all.size})")
-      cat.readPartitionEq(s, "t", target).select("doc_id", "lang")
+      cat.scan(s, "t").where(col("lang") === target)
+        .select("doc_id", "lang")
     }),
     "q_wap" -> ((s, dir) => {
       // WRITE-AUDIT-PUBLISH: the odd docs stage on a branch (invisible to
@@ -1566,12 +1500,7 @@ object SparkEntry {
       // the branch head (row count + no null/empty texts), and the passing
       // audit publishes via fast-forward — one atomic pointer swap, zero
       // data movement. The published table is simply the corpus.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_wap_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("wap", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "text")
       cat.commit(d.where("doc_id % 2 = 0"), "t")
@@ -1593,12 +1522,7 @@ object SparkEntry {
       // that only exist in the staged drop — must not swallow the freshly
       // published rows: the pick takes the NEW add order in the
       // delete-sequence rule (the re-append-after-takedown rule).
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_pick_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("pick", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "text")
       cat.commit(d.where("doc_id % 3 = 0"), "t")
@@ -1624,12 +1548,7 @@ object SparkEntry {
       // schema never grows a partition column. The lookup set (doc_id % 50
       // = 7) spans both drops; the prune-proof (deleting the non-kept
       // files) lives in PartitioningSpec.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_hidpart_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("hidpart", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -1639,7 +1558,7 @@ object SparkEntry {
       cat.appendPartitioned(d.where("doc_id % 2 = 1"), "t")
       val targets = d.where("doc_id % 50 = 7 AND doc_id < 500").select("url")
         .collect().map(_.getString(0)).sorted
-      targets.map(u => cat.readPartitionEq(s, "t", u)).reduce(_.unionByName(_))
+      cat.scan(s, "t").where(col("url").isin(targets: _*))
     }),
     "q_catalog_source" -> ((s, dir) => {
       // the catalog as a STREAMING SOURCE (DSv2 micro-batch read, offsets =
@@ -1650,14 +1569,9 @@ object SparkEntry {
       // takedown applied by the sequence rule (delete snap > file add
       // snap). The union of everything emitted is closed-form: all evens
       // (emitted before the takedown existed) plus the surviving odds.
-      import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.streaming.Trigger
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_catsource_${dir.hashCode.toHexString}"
-      val cp = root + "_cp"
-      Seq(root, cp).map(Paths.get(_)).filter(Files.exists(_)).foreach { p =>
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => Files.delete(q))
-      }
+      val root = scratchRoot("catsource", dir)
+      val cp = freshDir(root + "_cp")
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).select("doc_id", "text")
       val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
@@ -1688,12 +1602,7 @@ object SparkEntry {
       // commits, batch 1 first CRASHES mid-append (orphan data dir, no
       // manifest) and is then re-delivered, batch 0 is re-delivered after
       // success — the table must hold every row exactly once
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_catstream_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("catstream", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "md5(text) AS text_md5")
       cat.appendBatch(d.where("doc_id % 2 = 0"), "t", 0L)
@@ -1712,12 +1621,7 @@ object SparkEntry {
       // join. Time travel to the pre-delete snapshot stays complete and
       // compaction materializes tombstones — both spec-pinned in
       // CatalogR4Spec; the oracle here is the anti-filter itself.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_takedown_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("takedown", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id, '/v0') AS url",
@@ -1740,12 +1644,7 @@ object SparkEntry {
       // final aggregate from scratch — bit-equality is the whole
       // self-maintainability claim. O(delta)-read proof-by-deletion and
       // the rebuild fallbacks are MaterializedViewSpec's.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_mv_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("mv", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val base = docs(s, dir).selectExpr(
         "doc_id", "lang", "CAST(length(text) AS BIGINT) AS chars")
@@ -1770,12 +1669,7 @@ object SparkEntry {
       // arithmetic), which equals the maintained merge bit-for-bit
       // PRECISELY because registers are mergeable. Both refreshes are
       // REQUIRED incremental in-query.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_mvd_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("mvd", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val base = docs(s, dir).select("doc_id", "lang", "source")
       cat.commit(base.where("doc_id % 3 = 0"), "src")
@@ -1796,12 +1690,7 @@ object SparkEntry {
       // proven by DELETING every data file before the query (the group-by
       // twin of q_sql_agg / q_stats_agg).
       import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlgagg_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlgagg", dir)
       s.conf.set("spark.sql.catalog.ggrp", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.ggrp.root", root)
       docs(s, dir).select("doc_id", "lang").createOrReplaceTempView("ggrp_src")
@@ -1829,12 +1718,7 @@ object SparkEntry {
       // plans one partition per data file (required in-query), unset
       // restores conf-driven coalescing. The returned rows are the final
       // SHOW TBLPROPERTIES — closed-form.
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlprops_${dir.hashCode.toHexString}"
-      val rootP = java.nio.file.Paths.get(root)
-      if (java.nio.file.Files.exists(rootP))
-        java.nio.file.Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-      java.nio.file.Files.createDirectories(rootP)
+      val root = scratchRoot("sqlprops", dir)
       s.conf.set("spark.sql.catalog.gpr", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gpr.root", root)
       docs(s, dir).select("doc_id", "lang").createOrReplaceTempView("gpr_src")
@@ -1872,13 +1756,7 @@ object SparkEntry {
       // DELETE, CALL compact (materializes the tombstones), CALL tag, a
       // junk insert, CALL rollback to the tag's snapshot — the final read
       // replays closed-form.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlcall_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlcall", dir)
       s.conf.set("spark.sql.catalog.gcall", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gcall.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gcall_src")
@@ -1903,13 +1781,7 @@ object SparkEntry {
       // opened-files counter). Three drops with pinned file counts
       // (REPARTITION(1) per insert) + a metadata-only DELETE + a tag make
       // every row closed-form.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlmeta_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlmeta", dir)
       s.conf.set("spark.sql.catalog.gmeta", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gmeta.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gmeta_src")
@@ -1947,12 +1819,7 @@ object SparkEntry {
       // from the stats sidecars via the scan's SupportsPushDownAggregates
       // (zero-data-access proven by deletion — the SQL twin of q_stats_agg)
       import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlagg_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlagg", dir)
       s.conf.set("spark.sql.catalog.gsqa", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gsqa.root", root)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
@@ -1970,13 +1837,7 @@ object SparkEntry {
       // — every statement metadata-only except the inserted bytes — then a
       // SELECT through the connector's pruned per-file readers applying
       // both tombstone kinds.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlcat_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlcat", dir)
       s.conf.set("spark.sql.catalog.gsql_q", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gsql_q.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gsql_src")
@@ -1995,12 +1856,7 @@ object SparkEntry {
       // composes through recursive expansion. The final SELECT runs both
       // expansions over the connector's pruned per-file readers.
       import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlvw_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlvw", dir)
       s.conf.set("spark.sql.catalog.gvw", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gvw.root", root)
       docs(s, dir).select("doc_id", "text", "lang").createOrReplaceTempView("gvw_src")
@@ -2027,13 +1883,7 @@ object SparkEntry {
       // data rewritten at any update size, the Iceberg position-delta
       // shape. Read back through the connector's per-file readers applying
       // the tombstones.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlupd_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlupd", dir)
       s.conf.set("spark.sql.catalog.gupd", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gupd.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gupd_src")
@@ -2046,13 +1896,7 @@ object SparkEntry {
       // UPDATE (positional tombstone + replacement row), unmatched source
       // rows INSERT — all three actions land in ONE atomic snapshot. Target
       // = the even docs; source = the multiples of 3 re-captured as ' v2'.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlmrg_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlmrg", dir)
       s.conf.set("spark.sql.catalog.gmrg", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gmrg.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gmrg_src")
@@ -2076,13 +1920,8 @@ object SparkEntry {
       // the table. REQUIRED in-query: the dynamic-pruning expression in
       // the plan AND an opened-files bound (a pruned file is never
       // opened); rows are oracle-checked.
-      import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.functions.{broadcast, col}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_rtf_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("rtf", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir)
       cat.commitWithStats(
@@ -2091,10 +1930,8 @@ object SparkEntry {
       cat.commit(d.selectExpr("doc_id",
         "CAST(CASE WHEN doc_id % 97 = 3 AND doc_id < 250 THEN 1 ELSE 0 END AS INT) AS keep"),
         "dim")
-      def rd(t: String) = s.read.format("graft-catalog")
-        .option("root", root).option("table", t).load()
-      val j = rd("fact")
-        .join(broadcast(rd("dim").where("keep = 1")), "doc_id")
+      val j = cat.scan(s, "fact")
+        .join(broadcast(cat.scan(s, "dim").where("keep = 1")), "doc_id")
         .select("doc_id", "text_md5")
       val plan = j.queryExecution.executedPlan.toString
       require(plan.toLowerCase.contains("dynamicpruning"),
@@ -2120,11 +1957,7 @@ object SparkEntry {
       // kept bulk (add-order-preserving manifest surgery) AND stay
       // materialized in the merged rows — the oracle checks both at once.
       import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_csm_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("csm", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "lang", "md5(text) AS text_md5")
       cat.commit(d.where("doc_id % 20 >= 5").coalesce(1), "t") // bulk ~75%
@@ -2156,21 +1989,14 @@ object SparkEntry {
       // missed optimization). REQUIRED in-query: opened files < the
       // table's files; rows oracle-checked, pruning never load-bearing
       // (Spark re-applies the row filter).
-      import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.functions.col
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_pfx_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("pfx", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr(
         "concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
         "doc_id")
       cat.commitWithStats(d.repartitionByRange(8, col("url")), "t", Seq("url"))
-      val rd = s.read.format("graft-catalog")
-        .option("root", root).option("table", "t").load()
-        .where("url LIKE 'https://example.com/de/%'")
+      val rd = cat.scan(s, "t").where("url LIKE 'https://example.com/de/%'")
       val total = cat.filesWithAddOrder("t", cat.currentSnapshot("t").get).size
       val before = graft.sources.CatalogPartitionReader.opened.get()
       val out = rd.collect()
@@ -2188,13 +2014,7 @@ object SparkEntry {
       // with ZERO exchange (storage-partitioned join), REQUIRED in-query
       // under pinned SPJ flags; rows are oracle-checked. The whole layout
       // — DDL, writes, SPJ — with no Scala.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlpart_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlpart", dir)
       val s2 = s.newSession()
       s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
@@ -2227,13 +2047,7 @@ object SparkEntry {
       // survive both overwrites identically (the 100 TB is never
       // rewritten), and the metadata-only COUNT(*) still answers after
       // (kept stats sidecars carried forward).
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlow_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlow", dir)
       val s2 = s.newSession()
       s2.conf.set("spark.sql.catalog.gow", classOf[graft.sources.GraftCatalog].getName)
       s2.conf.set("spark.sql.catalog.gow.root", root)
@@ -2275,13 +2089,7 @@ object SparkEntry {
       // same-bucketed tables join with ZERO exchange, REQUIRED in-query.
       // The bucket hash is the repo-standard md5 nibble idiom, so the
       // layout itself is oracle-replayable.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqlbkt_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqlbkt", dir)
       val s2 = s.newSession()
       s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
@@ -2311,13 +2119,7 @@ object SparkEntry {
       // session-tz-rendered day per file; a week-windowed scan opens only
       // the window's files — REQUIRED in-query via the opened-files
       // counter against the transform candidate set.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_sqldays_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("sqldays", dir)
       s.conf.set("spark.sql.catalog.gdys", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gdys.root", root)
       s.read.parquet(s"$dir/events.parquet").selectExpr("event_id", "ts", "user_id")
@@ -2353,12 +2155,7 @@ object SparkEntry {
       // never happens. The zero-exchange shape is REQUIRED in-query (a
       // cloned session pins the SPJ flags and disables broadcast so the
       // plan cannot silently fall back); rows are oracle-checked.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_spj_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("spj", dir)
       val s2 = s.newSession()
       s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
@@ -2375,9 +2172,7 @@ object SparkEntry {
           org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.length(
             org.apache.spark.sql.functions.col("text"))).as("lang_bytes")),
         "b", graft.spark.IdentityTransform("lang"))
-      def rd(t: String) = s2.read.format("graft-catalog")
-        .option("root", root).option("table", t).load()
-      val j = rd("a").join(rd("b"), "lang")
+      val j = cat.scan(s2, "a").join(cat.scan(s2, "b"), "lang")
         .select("doc_id", "lang", "text_md5", "lang_docs", "lang_bytes")
       val nEx = j.queryExecution.executedPlan.toString
         .linesIterator.count(_.contains("Exchange"))
@@ -2394,12 +2189,7 @@ object SparkEntry {
       // semantics proven in-query: rows matching the predicate re-appended
       // AFTER the delete land in new files a positional tombstone cannot
       // name, so they all survive.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_takedownpos_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("takedownpos", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).select("doc_id", "text")
       cat.commit(d.where("doc_id % 2 = 0"), "t")
@@ -2421,13 +2211,7 @@ object SparkEntry {
       // TSV tombstones and a non-empty vector index post-rewrite; rows
       // INSERTed after the rewrite land in files the vector cannot name,
       // so they all survive (the sequence rule, DV edition).
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_dvrw_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      Files.createDirectories(rootP)
+      val root = scratchRoot("dvrw", dir)
       s.conf.set("spark.sql.catalog.gdv", classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.gdv.root", root)
       docs(s, dir).select("doc_id", "text").createOrReplaceTempView("gdv_src")
@@ -2454,11 +2238,7 @@ object SparkEntry {
       // drops, the post-delete re-adds of the same keys survive. The
       // require pins the consolidation shape (2 merged refs + 1 tombstone).
       import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_rwm_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("rwm", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "md5(text) AS text_md5",
         "md5(concat(text, ' v2')) AS text_md5_v2")
@@ -2485,12 +2265,7 @@ object SparkEntry {
       // read ONLY the rows added in (A, B] — O(delta) metadata planning via
       // the two-level manifest diff, O(drop) data read; the 100 TB shape of
       // "process only the new crawl drop" for every downstream consumer
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_incscan_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("incscan", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id", "md5(text) AS text_md5")
       val s1 = cat.commit(d.where("doc_id % 3 != 2"), "t")
@@ -2502,12 +2277,7 @@ object SparkEntry {
       // their url — an equality-delete tombstone for the incoming keys
       // (metadata-only) plus a fast-append the sequence-aware delete rule
       // keeps alive; zero of the existing table rewritten
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_upsert_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("upsert", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       def shaped(df: DataFrame, ts: Int, suffix: String) = df.selectExpr(
         s"concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -2524,12 +2294,7 @@ object SparkEntry {
       // captures as op='insert' alongside a later plain append; a mirror at
       // s1 applying deletes-then-inserts converges to s3. The insert side is
       // O(delta) planning; the delete side never reads the window's appends.
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_changelog_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("changelog", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       def shaped(df: DataFrame, ts: Int, suffix: String) = df.selectExpr(
         s"concat('https://example.com/', lang, '/', source, '/doc', doc_id) AS url",
@@ -2648,12 +2413,7 @@ object SparkEntry {
       // changelog window, and the digest companion rejects the replays —
       // the curated table holds every gate-passing doc exactly once under
       // its original id (at-least-once processing + idempotent sink)
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_inccur_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("inccur", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).select("doc_id", "text")
       cat.append(d.where("doc_id % 2 = 0"), "raw")
@@ -2670,12 +2430,7 @@ object SparkEntry {
       // counts across ALL drops is then a KB sidecar read — zero data files
       // opened; histogram counts ADD exactly, so the oracle replays the
       // bucket collapse over the whole corpus
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_ddinc_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("ddinc", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       val d = docs(s, dir).selectExpr("doc_id",
         s"greatest(CAST(1 AS BIGINT), ${TextOps.tokensExpr}) AS v")
@@ -2720,12 +2475,7 @@ object SparkEntry {
       // min/max/count(*) from the manifest sidecar alone — ZERO data files
       // opened (CatalogSpec proves it by deleting the data first). The
       // 100 TB shape of "SELECT min(ts), max(ts), count(*)".
-      import java.nio.file.{Files, Paths}
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_statsagg_${dir.hashCode.toHexString}"
-      val rootP = Paths.get(root)
-      if (Files.exists(rootP))
-        Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+      val root = scratchRoot("statsagg", dir)
       val cat = new graft.spark.ParquetSnapshotCatalog(root)
       cat.commitWithStats(
         docs(s, dir).select("doc_id", "n_chars").repartitionByRange(8, col("doc_id")),

@@ -26,8 +26,8 @@ import graft.spark.{ParquetSnapshotCatalog, IdentityTransform}
   *     and appends them cluster-clustered; the sidecar carries their
   *     pruning bounds like any other drop.
   *   - `query` reads the model (one tiny collect), probes the `nprobe`
-  *     nearest clusters per query THROUGH partition pruning
-  *     (`readPartitionIn` — one scan opening only probed clusters' files),
+  *     nearest clusters per query THROUGH partition pruning (one
+  *     `cluster IN (...)` scan opening only the probed clusters' files),
   *     ADC-scores the candidates, and exact-refines a `refine`×k shortlist
   *     with ONE id-keyed join against the raw embeddings. No k-means runs:
   *     [[Ann.trainRuns]] is spec-asserted unchanged across query calls.
@@ -492,6 +492,6 @@ object AnnIndex {
     val spark = embeddings.sparkSession
     // ONE pruned scan over exactly the probed clusters' files
     search(embeddings, loadModel(spark, cat, table), nQueries, k, nprobe, refine)(
-      cat.readPartitionIn(spark, table, _))
+      probed => cat.scan(spark, table).where(col("cluster").isin(probed: _*)))
   }
 }

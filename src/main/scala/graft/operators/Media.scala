@@ -323,17 +323,31 @@ object Media {
       (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
     def be64(i: Int): Long = (be32(i) << 32) | be32(i + 4)
     def fourcc(i: Int) = new String(b, i + 4, 4, "US-ASCII")
+    // the box whose header starts at `i` inside [i, end): (payload start,
+    // box end clamped to `end`), per ISO 14496-12 §4.2 — size 1 means a
+    // 64-bit largesize follows the type, size 0 means the box runs to
+    // `end`; None for the invalid sizes 2..7 or a cut largesize header
+    def box(i: Long, end: Long): Option[(Long, Long)] = be32(i.toInt) match {
+      case 0L => Some((i + 8, end))
+      case 1L =>
+        if (i + 16 > end) None
+        else {
+          val size = be64(i.toInt + 8) // negative past 2^63: invalid too
+          if (size < 16) None else Some((i + 16, i + math.min(size, end - i)))
+        }
+      case size if size < 8 => None
+      case size => Some((i + 8, i + math.min(size, end - i)))
+    }
     if (b.length < 16 || fourcc(0) != "ftyp") return None
-    // walk top-level boxes to moov — LONG cursor: a crafted 32-bit box
-    // size must not wrap negative and loop/index out of bounds in a task
+    // walk top-level boxes to moov — LONG cursor: a crafted box size must
+    // not wrap negative and loop/index out of bounds in a task
     var i = 0L
     var moov = -1
     var moovEnd = -1
     while (i + 8 <= b.length && moov < 0) {
-      val size = be32(i.toInt)
-      if (size < 8) return None
-      if (fourcc(i.toInt) == "moov") { moov = (i + 8).toInt; moovEnd = math.min(b.length.toLong, i + size).toInt }
-      i += size
+      val (body, end) = box(i, b.length).getOrElse(return None)
+      if (fourcc(i.toInt) == "moov") { moov = body.toInt; moovEnd = end.toInt }
+      i = end
     }
     if (moov < 0) return None
     var timescale = 0L
@@ -343,15 +357,14 @@ object Media {
     def walk(from: Int, to: Int): Unit = {
       var j = from.toLong
       while (j + 8 <= to) {
-        val size = be32(j.toInt)
-        if (size < 8) return
+        val (body, end) = box(j, to).getOrElse(return)
         val t = fourcc(j.toInt)
-        val p = (j + 8).toInt
+        val p = body.toInt
         t match {
           case "mvhd" if p + 4 <= to =>
             if (u8(p) == 1) { if (p + 32 <= to) { timescale = be32(p + 20); duration = be64(p + 24) } }
             else if (p + 20 <= to) { timescale = be32(p + 12); duration = be32(p + 16) }
-          case "trak" => walk(p, math.min(to.toLong, j + size).toInt)
+          case "trak" => walk(p, end.toInt)
           case "tkhd" if w == 0 =>
             val (wo, ho) = if (u8(p) == 1) (88, 92) else (76, 80)
             if (p + ho + 4 <= to) {
@@ -361,7 +374,7 @@ object Media {
             }
           case _ => ()
         }
-        j += size
+        j = end
       }
     }
     walk(moov, moovEnd)

@@ -305,11 +305,8 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
       case LessThanOrEqual(_, v) => v != null && CatalogScan.literalOk(v)
       // LIKE 'prefix%' — the url-slice access pattern on a url-sorted table
       case StringStartsWith(_, p) => p != null && p.nonEmpty
-      // planning-time IN: union of per-value equality prunes, capped so the
-      // driver-side sidecar consultation stays cheap (the runtime-filter
-      // path's 256-value precedent, tighter here — per value it reads
-      // zone + bloom + partition stats)
-      case In(_, vs) => vs != null && vs.nonEmpty && vs.length <= 64 &&
+      // planning-time IN: union of per-value equality prunes, capped
+      case In(_, vs) => vs != null && vs.nonEmpty && vs.length <= CatalogScan.MaxInValues &&
         vs.forall(v => v != null && CatalogScan.literalOk(v))
       // boolean composition: Or prunes iff BOTH branches do (union);
       // And prunes if EITHER does (intersection / one-sided)
@@ -391,6 +388,14 @@ object CatalogScan {
     else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
   }
 
+  /** Largest planning-time IN list the scan prunes with: per value the
+    * driver reads zone, bloom and every spec era's partition stats, so the
+    * cap keeps that work bounded; it covers an IVF probe list (nQueries ×
+    * nprobe clusters, at most Ann's largest nlist of 1024). A longer list
+    * scans every file — never a wrong answer.
+    */
+  private[sources] val MaxInValues = 1024
+
   private[sources] def literalOk(v: Any): Boolean = v match {
     case _: String | _: Long | _: Int | _: java.lang.Long | _: java.lang.Integer |
          _: Double | _: java.lang.Double | _: java.sql.Timestamp | _: java.time.Instant => true
@@ -407,6 +412,7 @@ object CatalogScan {
         .withZone(java.time.ZoneId.of(
           org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
         .format(t)
+    case t: java.sql.Timestamp => lit(t.toInstant)
     case other => other.toString
   }
 
@@ -461,7 +467,10 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
                         asOf: Option[Long] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeV2Filtering {
-  private def cat = new ParquetSnapshotCatalog(root)
+  // one catalog handle per scan: a fresh one per metadata read would build
+  // a Hadoop Configuration and FileSystem instance each time, several
+  // times the cost of the pruning itself
+  @transient private lazy val cat = new ParquetSnapshotCatalog(root)
 
   // ------------------------------------------------------------------
   // RUNTIME file pruning (Iceberg's dynamic file filtering shape): Spark's
@@ -500,21 +509,24 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     }
   }
 
-  /** The per-value equality candidate set — zone maps ∩ blooms ∩ the
-    * partition transform, each conservative on missing stats (shared by the
-    * planning-time EqualTo path and the runtime IN path).
+  /** The one equality pruner: the files of `snap` that may hold `c = v`
+    * for SOME `v` in `lits` (a file serves an IN iff it serves one of its
+    * values). Per value, zone maps ∩ bloom sidecars ∩ the partition
+    * transform under EVERY spec era on `c` — current and retired: each era's
+    * files prune by the bounds of the spec they were written under, and a
+    * file lacking a spec's stats is kept by that spec. Every structure is
+    * conservative on missing metadata. Shared by the planning-time
+    * EqualTo/IN path and the runtime IN path.
     */
-  private def eqCandidates(snap: Long, allFiles: Seq[String],
-                           c: String, lit: String): Set[String] = {
-    val z = cat.pruneFilesAt(table, snap, c, lit, lit).toSet
-    val b = cat.pruneFilesByBloom(table, c, lit).toSet
-    val p = cat.partitionSpec(table) match {
-      case Some(spec) if spec.col == c =>
-        val t = spec.literal(lit)
-        cat.pruneFilesAt(table, snap, spec.statName, t, t).toSet
-      case _ => allFiles.toSet
-    }
-    z & b & p
+  private def eqCandidates(snap: Long, c: String, lits: Seq[String]): Set[String] = {
+    val specs = cat.specsForCol(table, c)
+    lits.map { v =>
+      specs.foldLeft(cat.pruneFilesAt(table, snap, c, v, v).toSet &
+          cat.pruneFilesByBloomAt(table, snap, c, v).toSet) { (keep, spec) =>
+        val t = spec.literal(v)
+        keep & cat.pruneFilesAt(table, snap, spec.statName, t, t).toSet
+      }
+    }.foldLeft(Set.empty[String])(_ | _)
   }
 
   private def externalize(v: Any): Option[String] = v match {
@@ -540,8 +552,7 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
           // sidecar consultation stays cheap driver work — a huge runtime IN
           // (low-selectivity build side) skips pruning, conservatively
           if (lits.length == vals.length && lits.length <= 256) {
-            val all = batchFiles.map(_._1)
-            val cand = lits.foldLeft(Set.empty[String])(_ | eqCandidates(batchSnap, all, c, _))
+            val cand = eqCandidates(batchSnap, c, lits)
             runtimeKeep = Some(runtimeKeep.fold(cand)(_ & cand))
             if (cat.partitionSpec(table).exists(s => s.col == c &&
                 s.isInstanceOf[graft.spark.IdentityTransform]))
@@ -654,8 +665,8 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
       val snapO = asOf.orElse(cat.currentSnapshot(table))
       snapO match {
         case None => (0L, None)
-        case Some(snap) =>
-          val files = pruneByFilters(cat.filesWithAddOrder(table, snap), snap).map(_._1)
+        case Some(_) =>
+          val files = batchFiles.map(_._1) // pruned once, pinned with the batch
           val conf = new org.apache.hadoop.conf.Configuration()
           val sz = files.map { f =>
             val p = new Path(f)
@@ -683,37 +694,24 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     s"GraftCatalogScan(root=$root, table=$table, columns=${required.fieldNames.mkString(",")}" +
       (if (pushed.nonEmpty) s", prunedBy=${pushed.mkString(";")}" else "") + ")"
 
-  /** File pruning from the pushed filters: every applicable metadata
-    * structure is consulted and the candidate sets INTERSECT — zone maps
-    * (range + equality), bloom sidecars (equality), and the partition
-    * transform (equality always; range only when order-preserving). A file
-    * without stats is conservatively kept by each pruner, and Spark
+  /** File pruning from the pushed filters — the one place a predicate
+    * becomes a file set: every applicable metadata structure is consulted
+    * and the candidate sets INTERSECT — zone maps (range + equality), bloom
+    * sidecars (equality), and the partition transform of every spec era on
+    * the column (equality always; range only for order-preserving eras). A
+    * file without stats is conservatively kept by each pruner, and Spark
     * re-applies the row-level filter on top.
     */
   private[sources] def pruneByFilters(files: Seq[(String, Long)], snap: Long): Seq[(String, Long)] = {
     import org.apache.spark.sql.sources._
     import CatalogScan.lit
     var keep = files.map(_._1).toSet
-    def eqSet(c: String, v: Any): Set[String] = {
-      val z = cat.pruneFilesAt(table, snap, c, lit(v), lit(v)).toSet
-      val b = cat.pruneFilesByBloom(table, c, lit(v)).toSet
-      val p = cat.partitionSpec(table) match {
-        case Some(spec) if spec.col == c =>
-          val t = spec.literal(lit(v))
-          cat.pruneFilesAt(table, snap, spec.statName, t, t).toSet
-        case _ => files.map(_._1).toSet
-      }
-      z & b & p
-    }
     // recursive candidate set: And = intersection, Or = union (a file can
     // serve an Or iff it can serve SOME branch — both branches must be
     // answerable, else the whole Or is conservatively unanswerable)
     def cand(f: Filter): Option[Set[String]] = f match {
-      case EqualTo(c, v) => Some(eqSet(c, v))
-      case In(c, vs) =>
-        // a file can serve the IN iff it can serve SOME value: union of
-        // the per-value equality candidate sets
-        Some(vs.map(v => eqSet(c, v)).reduce(_ | _))
+      case EqualTo(c, v) => Some(eqCandidates(snap, c, Seq(lit(v))))
+      case In(c, vs) => Some(eqCandidates(snap, c, vs.toSeq.map(lit)))
       case StringStartsWith(c, p) =>
         // matches occupy [p, nextPrefix(p)] under STRING ordering; the
         // byte-wise-pinned pruner refuses the numeric/timestamp compare
@@ -722,12 +720,12 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
         // transform pruning is deliberately skipped: a truncated prefix
         // re-enters tier ambiguity, and zone maps already carry the
         // sorted-table case this pushdown exists for.
-        Some(cat.pruneFilesAtBoundsRaw(table, snap, c,
-          Some(p), CatalogScan.nextPrefix(p)).toSet)
-      case GreaterThan(c, v) => Some(rangePrune(snap, c, Some(lit(v)), None, files))
-      case GreaterThanOrEqual(c, v) => Some(rangePrune(snap, c, Some(lit(v)), None, files))
-      case LessThan(c, v) => Some(rangePrune(snap, c, None, Some(lit(v)), files))
-      case LessThanOrEqual(c, v) => Some(rangePrune(snap, c, None, Some(lit(v)), files))
+        Some(cat.pruneFilesAtBounds(table, snap, c,
+          Some(p), CatalogScan.nextPrefix(p), stringOrder = true).toSet)
+      case GreaterThan(c, v) => Some(rangePrune(snap, c, Some(lit(v)), None))
+      case GreaterThanOrEqual(c, v) => Some(rangePrune(snap, c, Some(lit(v)), None))
+      case LessThan(c, v) => Some(rangePrune(snap, c, None, Some(lit(v))))
+      case LessThanOrEqual(c, v) => Some(rangePrune(snap, c, None, Some(lit(v))))
       case Or(l, r) => for (a <- cand(l); b <- cand(r)) yield a | b
       case And(l, r) => (cand(l), cand(r)) match {
         case (Some(a), Some(b)) => Some(a & b)
@@ -739,17 +737,18 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     files.filter(p => keep(p._1))
   }
 
-  private def rangePrune(snap: Long, c: String, lo: Option[String], hi: Option[String],
-                         files: Seq[(String, Long)]): Set[String] = {
-    val z = cat.pruneFilesAtBounds(table, snap, c, lo, hi).toSet
-    val p = cat.partitionSpec(table) match {
-      case Some(spec) if spec.col == c && spec.orderPreserving =>
-        cat.pruneFilesAtBounds(table, snap, spec.statName,
+  /** Range pruning: zone maps ∩ the transform bounds of every
+    * ORDER-PRESERVING spec era on `c` (days/truncate/identity map a value
+    * range into a transform range; a bucket era cannot range-prune, so its
+    * files are kept).
+    */
+  private def rangePrune(snap: Long, c: String, lo: Option[String],
+                         hi: Option[String]): Set[String] =
+    cat.specsForCol(table, c).filter(_.orderPreserving)
+      .foldLeft(cat.pruneFilesAtBounds(table, snap, c, lo, hi).toSet) { (keep, spec) =>
+        keep & cat.pruneFilesAtBounds(table, snap, spec.statName,
           lo.map(spec.literal), hi.map(spec.literal)).toSet
-      case _ => files.map(_._1).toSet
-    }
-    z & p
-  }
+      }
 
   /** Attach the sequence-rule-applicable deletes to each planned file and
     * validate that every delete column is readable by this scan (present in

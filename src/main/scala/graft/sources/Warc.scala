@@ -63,6 +63,21 @@ object Warc {
     */
   val maxRecordBytes: Int = 256 << 20
 
+  /** A record body of `len` declared bytes: read when within
+    * [[maxRecordBytes]], else skipped WITHOUT materializing it, the stream
+    * kept aligned on the next record (None). A truncated body reads short.
+    */
+  private def readBody(bin: java.io.InputStream, len: Long): Option[Array[Byte]] =
+    if (len <= maxRecordBytes) Some(bin.readNBytes(len.toInt))
+    else {
+      var left = len
+      while (left > 0) {
+        val n = bin.skip(left)
+        if (n <= 0) left = 0 else left -= n
+      }
+      None
+    }
+
   /** One serialized record: url, timestamp, and the record block (HTTP
     * response block or raw body). Public — Dataset encoder payload.
     */
@@ -366,7 +381,7 @@ object Warc {
             var refers: String = null
             var refersDate = 0L
             var digest: String = null
-            var len = -1
+            var len = -1L
             var h = line()
             while (h != null && h.nonEmpty) {
               val i = h.indexOf(':')
@@ -381,17 +396,17 @@ object Warc {
                   case "WARC-Refers-To-Date" => refersDate = math.max(parseTs(v), 0L)
                   case "WARC-Payload-Digest" =>
                     digest = if (v.startsWith("md5:")) v.substring(4) else v
-                  case "Content-Length" => len = v.toIntOption.getOrElse(-1)
+                  case "Content-Length" => len = v.toLongOption.getOrElse(-1L)
                   case _ => ()
                 }
               }
               h = line()
             }
-            if (len >= 0) {
-              bin.readNBytes(len) // skip body (empty for our revisits)
-              if (typ == "revisit" && url != null && refers != null && date >= 0)
-                return (url, date, refers, refersDate, if (digest == null) "" else digest)
-            }
+            // the body is dropped (empty for our revisits); an oversized
+            // declaration skips the record
+            if (len >= 0 && readBody(bin, len).isDefined &&
+                typ == "revisit" && url != null && refers != null && date >= 0)
+              return (url, date, refers, refersDate, if (digest == null) "" else digest)
           }
           l0 = line()
         }
@@ -562,7 +577,7 @@ object Warc {
           var typ: String = null
           var url: String = null
           var date: String = null
-          var len = -1
+          var len = -1L
           var h = line()
           while (h != null && h.nonEmpty) {
             val i = h.indexOf(':')
@@ -573,16 +588,18 @@ object Warc {
                 case "WARC-Type" => typ = v
                 case "WARC-Target-URI" => url = v
                 case "WARC-Date" => date = v
-                // malformed length → skip the record, never kill the task
-                case "Content-Length" => len = v.toIntOption.getOrElse(-1)
+                // malformed length → skip the record, never kill the task;
+                // a length past Int.MaxValue is legal and takes the
+                // oversize skip below
+                case "Content-Length" => len = v.toLongOption.getOrElse(-1L)
                 case _ => ()
               }
             }
             h = line()
           }
-          if (len >= 0 && len <= maxRecordBytes) {
-            val block = bin.readNBytes(len)
-            if (block.length == len && (typ == null || typ == wantType) && url != null) {
+          if (len >= 0) readBody(bin, len) match {
+            case Some(block) if block.length == len &&
+                (typ == null || typ == wantType) && url != null =>
               // conversion records carry plain text — no HTTP envelope
               val (raw, charset) =
                 if (wantType == "response") stripHttpHeadersCs(block) else (block, null)
@@ -597,15 +614,9 @@ object Warc {
                      catch { case _: Exception => -1L }
               if (tsMs >= 0)
                 return PageRow(url, new java.sql.Timestamp(tsMs), body, null, null)
-            }
-          } else if (len > maxRecordBytes) {
-            // oversized declaration (zip-bomb / corrupt length): skip the
-            // body WITHOUT materializing it, stay stream-aligned
-            var left = len.toLong
-            while (left > 0) {
-              val n = bin.skip(left)
-              if (n <= 0) { left = 0 } else left -= n
-            }
+            // an oversized declaration (zip-bomb / corrupt length) was
+            // skipped unread; a truncated or unwanted record drops
+            case _ => ()
           }
         }
         l0 = line()

@@ -207,7 +207,7 @@ object IncrementalIngest {
   // centroid/codebook model trained on the FIRST drop
   // (`<table>__semantic__model`). Admission per drop vector:
   //   1. multi-probe its `nprobe` nearest committed centroids — the
-  //      companion read prunes to those clusters' files (readPartitionIn);
+  //      companion read prunes to those clusters' files (one IN scan);
   //   2. ADC floor: keep candidates whose asymmetric PQ distance is
   //      within 2·(1−thr)+adcMargin (unit vectors: ‖a−b‖² = 2−2·cos, so
   //      the floor is the cosine threshold plus a quantization-error
@@ -268,7 +268,7 @@ object IncrementalIngest {
         if (probedClusters.isEmpty) inDrop // an empty drop: nothing to reject
         else {
           // companion read pruned to the probed clusters; capped per cluster
-          val comp = cat.readPartitionIn(spark, semTable, probedClusters)
+          val comp = cat.scan(spark, semTable).where(col("cluster").isin(probedClusters: _*))
           val okClusters = comp.groupBy("cluster").agg(count(lit(1)).as("__cn"))
             .where(col("__cn") <= maxCluster).select("cluster")
           val shortlist = AnnIndex.scoreAdc(probes

@@ -337,6 +337,17 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     readSnapshot(spark, table, snap)
   }
 
+  /** The table's current snapshot as the `graft-catalog` DSv2 relation —
+    * the one pruned-read path. Equality, `IN`, range and prefix filters
+    * written over it push down to [[graft.sources.CatalogScan]], which
+    * opens only the files that zone maps, bloom sidecars and every
+    * partition-spec era on the column cannot rule out; Spark re-applies
+    * the filter row-level and pending deletes of both kinds apply. Atomic
+    * column types only (the DSv2 row reader refuses nested columns).
+    */
+  def scan(spark: SparkSession, table: String): DataFrame =
+    spark.read.format("graft-catalog").option("root", root).option("table", table).load()
+
   /** Write `df` into `dataDir` and return the sorted parquet file list —
     * the shared first half of every data-writing commit path.
     */
@@ -1110,7 +1121,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * applicable deletes are always a suffix of the snapshot's delete list,
     * so the union is bounded by the DELETE count (small; compaction
     * materializes them away), never the manifest count. `only` restricts to
-    * a pruned file subset (readPruned / readIncremental).
+    * a pruned file subset (readIncremental, the changelog's pre-images).
     */
   // ------------------------------------------------------------------
   // Schema evolution beyond ADD: RENAME and DROP as metadata-only ops
@@ -2117,11 +2128,11 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * pruning metadata of the spec they were written under (their stats
     * rows carry the OLD spec's statName), new appends cluster and stat
     * under the new spec, and the read path prunes each era's files by its
-    * own spec ([[readPartitionEq]]/[[readPartitionRange]] intersect the
-    * per-spec keep-sets — a per-file "prunable by ANY era's bounds" OR,
-    * since a file without a given spec's stats is conservatively kept by
-    * that spec). Surfaces that REQUIRE a single pinned layout (storage-
-    * partitioned joins, the metadata group census) refuse automatically on
+    * own spec (the DSv2 scan's pruner intersects the per-spec keep-sets —
+    * a per-file "prunable by ANY era's bounds" OR, since a file without a
+    * given spec's stats is conservatively kept by that spec). Surfaces
+    * that REQUIRE a single pinned layout (storage-partitioned joins, the
+    * metadata group census) refuse automatically on
     * a mixed table — old files lack the new statName, so
     * [[partitionValuesAt]] answers None — and come back after
     * [[compactSorted]] rewrites every file under the current spec. At
@@ -2146,7 +2157,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   /** Current + retired specs filtering on `column` — the specs whose
     * per-era bounds a point/range read on that column may prune with.
     */
-  private def specsForCol(table: String, column: String): Seq[PartTransform] =
+  private[graft] def specsForCol(table: String, column: String): Seq[PartTransform] =
     (partitionSpec(table).toSeq ++ specHistory(table)).filter(_.col == column)
 
   /** Initial partitioned write: cluster rows into `nFiles` outputs by the
@@ -2351,96 +2362,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     snap
   }
 
-  /** Point lookup through the hidden partitioning: transform the literal
-    * exactly as the writers transformed the rows, open only the files whose
-    * transform bounds cover it, and apply the REAL equality predicate on
-    * top (pruning is never load-bearing — a file without stats is
-    * conservatively kept and re-filtered). At 100 TB with bucket(n) this is
-    * the "find one url among 10^12" read: ~1/n of the files opened, zero
-    * index structures maintained.
-    */
-  def readPartitionEq(spark: SparkSession, table: String, value: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val spec = partitionSpec(table).getOrElse(throw new IllegalStateException(
-      s"table '$table' has no partition spec"))
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
-    // each era's files prune under the spec they were written with: a file
-    // lacking a spec's stats is conservatively kept by that spec, so the
-    // keep-set INTERSECTION prunes every era by its own bounds
-    val kept = specsForCol(table, spec.col).map { s =>
-      val t = s.literal(value)
-      pruneFilesAt(table, snap, s.statName, t, t).toSet
-    }.reduce(_ intersect _)
-    val pruned = readWithDeletes(spark, table, snap, Some(kept))
-    // literal cast to the COLUMN's type (never the column to string — that
-    // would defeat parquet pushdown and mis-compare timestamp literals)
-    val dt = pruned.schema(spec.col).dataType
-    pruned.where(col(spec.col) === org.apache.spark.sql.functions.lit(value).cast(dt))
-  }
-
-  /** Multi-point lookup through the hidden partitioning: ONE scan whose
-    * keep-set is the UNION of each value's per-era pruned set, with the
-    * real membership predicate applied on top. This is the IVF probe read
-    * (open only the probed clusters' files in a single scan node) — a
-    * union of per-value [[readPartitionEq]] branches would re-plan the
-    * table once per value.
-    */
-  def readPartitionIn(spark: SparkSession, table: String, values: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(values.nonEmpty, s"readPartitionIn on '$table': empty value set")
-    val spec = partitionSpec(table).getOrElse(throw new IllegalStateException(
-      s"table '$table' has no partition spec"))
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
-    val kept = values.map { value =>
-      specsForCol(table, spec.col).map { s =>
-        val t = s.literal(value)
-        pruneFilesAt(table, snap, s.statName, t, t).toSet
-      }.reduce(_ intersect _)
-    }.reduce(_ union _)
-    val pruned = readWithDeletes(spark, table, snap, Some(kept))
-    val dt = pruned.schema(spec.col).dataType
-    // literals cast to the COLUMN's type (same contract as readPartitionEq)
-    val pred = values.map(v =>
-      col(spec.col) === org.apache.spark.sql.functions.lit(v).cast(dt))
-      .reduce(_ || _)
-    pruned.where(pred)
-  }
-
-  /** Range scan through an ORDER-PRESERVING transform (days/truncate/
-    * identity): `[lo, hi]` on the raw column prunes on
-    * `[transform(lo), transform(hi)]` — the warc_ts-windowed read. Bucket
-    * transforms refuse loudly (hashing destroys order).
-    */
-  def readPartitionRange(spark: SparkSession, table: String,
-                         lo: String, hi: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val spec = partitionSpec(table).getOrElse(throw new IllegalStateException(
-      s"table '$table' has no partition spec"))
-    require(spec.orderPreserving,
-      s"partition transform ${spec.render} is not order-preserving — range pruning " +
-      "through a hash bucket would silently drop files; use readPartitionEq")
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
-    // range pruning per era, order-preserving retired specs only (a retired
-    // bucket spec cannot range-prune — its files are kept conservatively)
-    val kept = specsForCol(table, spec.col).filter(_.orderPreserving).map { s =>
-      pruneFilesAt(table, snap, s.statName, s.literal(lo), s.literal(hi)).toSet
-    }.reduce(_ intersect _)
-    val pruned = readWithDeletes(spark, table, snap, Some(kept))
-    val dt = pruned.schema(spec.col).dataType
-    // ISO-'T' timestamp literals normalize for the cast; other types pass
-    // through verbatim (a string column may legitimately contain 'T')
-    def norm(v: String) = dt match {
-      case org.apache.spark.sql.types.TimestampType => v.replace('T', ' ')
-      case _ => v
-    }
-    val l = org.apache.spark.sql.functions.lit(norm(lo)).cast(dt)
-    val h = org.apache.spark.sql.functions.lit(norm(hi)).cast(dt)
-    pruned.where(col(spec.col).between(l, h))
-  }
-
   /** Comparator tier for stringified stats bounds: exact longs, then exact
     * doubles, then parsed TIMESTAMPs, then byte-wise strings. Shared by
     * [[statsAgg]] and [[pruneFiles]] — a DOUBLE column must never fall back
@@ -2570,9 +2491,19 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * DSv2 scan's pushed `<`/`>` ranges need; an unbounded side must NOT be
     * faked with a sentinel string (it would force the byte-wise compare
     * tier and mis-prune numeric columns).
+    *
+    * `stringOrder` pins the comparison to the byte-wise string tier — for
+    * bounds that are substrings of column values rather than values (a
+    * `LIKE 'prefix%'` range): a prefix like `'123'` can accidentally parse
+    * at a numeric tier where comparing it against string-ordered stats
+    * would OVER-prune (a wrong answer, not a missed optimization). Only
+    * sound for columns whose stats were written under string ordering —
+    * i.e. string columns, which is what `StringStartsWith` guarantees at
+    * the call site.
     */
   def pruneFilesAtBounds(table: String, snap: Long, column: String,
-                         lo: Option[String], hi: Option[String]): Seq[String] = {
+                         lo: Option[String], hi: Option[String],
+                         stringOrder: Boolean = false): Seq[String] = {
     val all = manifestFiles(table, snap)
     val lines = statsLinesAt(table, snap)
     if (lines.isEmpty) return all
@@ -2581,49 +2512,12 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
         f -> ((unescStat(mn), unescStat(mx))) }.toMap
     def overlaps(mnO: Option[String], mxO: Option[String]): Boolean = (mnO, mxO) match {
       case (Some(mn), Some(mx)) =>
-        val cmp = statCmp(Seq(mn, mx) ++ lo ++ hi)
+        val cmp: (String, String) => Int =
+          if (stringOrder) _ compareTo _ else statCmp(Seq(mn, mx) ++ lo ++ hi)
         lo.forall(l => cmp(mx, l) >= 0) && hi.forall(h => cmp(mn, h) <= 0)
       case _ => true // all-null stats: conservatively keep
     }
     all.filter(f => stats.get(f).forall { case (mn, mx) => overlaps(mn, mx) })
-  }
-
-  /** [[pruneFilesAtBounds]] with the comparison PINNED to the byte-wise
-    * string tier — for bounds that are substrings of column values rather
-    * than values (a `LIKE 'prefix%'` range): a prefix like `'123'` or
-    * `'https'`-less fragments can accidentally parse at a numeric tier
-    * where comparing it against string-ordered stats would OVER-prune
-    * (a wrong answer, not a missed optimization). Only sound for columns
-    * whose stats were written under string ordering — i.e. string columns,
-    * which is what `StringStartsWith` guarantees at the call site.
-    */
-  def pruneFilesAtBoundsRaw(table: String, snap: Long, column: String,
-                            lo: Option[String], hi: Option[String]): Seq[String] = {
-    val all = manifestFiles(table, snap)
-    val lines = statsLinesAt(table, snap)
-    if (lines.isEmpty) return all
-    val stats = lines
-      .collect { case Array(f, c, mn, mx) if c == column =>
-        f -> ((unescStat(mn), unescStat(mx))) }.toMap
-    def overlaps(mnO: Option[String], mxO: Option[String]): Boolean = (mnO, mxO) match {
-      case (Some(mn), Some(mx)) =>
-        lo.forall(l => mx.compareTo(l) >= 0) && hi.forall(h => mn.compareTo(h) <= 0)
-      case _ => true // all-null stats: conservatively keep
-    }
-    all.filter(f => stats.get(f).forall { case (mn, mx) => overlaps(mn, mx) })
-  }
-
-  /** Ranged read through the zone maps: only overlapping files are opened;
-    * the caller still applies (and Spark pushes down) the actual predicate.
-    * Pending equality deletes are applied on top — pruning never resurrects
-    * a taken-down row.
-    */
-  def readPruned(spark: SparkSession, table: String, column: String,
-                 lo: String, hi: String): DataFrame = {
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
-    readWithDeletes(spark, table, snap,
-      Some(pruneFiles(table, column, lo, hi).toSet))
   }
 
   /** Append a crawl drop AND roll the table's cumulative HyperLogLog
@@ -2727,9 +2621,15 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * the value's bits are set in its filter (or it has no filter —
     * conservative, pruning is never load-bearing).
     */
-  def pruneFilesByBloom(table: String, col: String, value: String): Seq[String] = {
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
+  def pruneFilesByBloom(table: String, col: String, value: String): Seq[String] =
+    pruneFilesByBloomAt(table, currentSnapshot(table).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot for $table")), col, value)
+
+  /** [[pruneFilesByBloom]] against an explicit snapshot — a `VERSION AS OF`
+    * scan must test the files and filters of ITS snapshot, not CURRENT's.
+    */
+  def pruneFilesByBloomAt(table: String, snap: Long, col: String,
+                          value: String): Seq[String] = {
     val all = manifestFiles(table, snap)
     val lines = bloomLinesAt(table, snap, col)
     if (lines.isEmpty) return all
@@ -2741,18 +2641,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
         bloomIdxLiteral(value, bits).forall(i => (bs(i >> 3) & (1 << (i & 7))) != 0)
       }
     }
-  }
-
-  /** Point lookup through the bloom sidecars, real equality applied on top
-    * (false positives re-filter; deletes apply as always). */
-  def readBloomLookup(spark: SparkSession, table: String, col: String,
-                      value: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val snap = currentSnapshot(table).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot for $table"))
-    val pruned = readWithDeletes(spark, table, snap,
-      Some(pruneFilesByBloom(table, col, value).toSet))
-    pruned.where(c(col) === lit(value).cast(pruned.schema(col).dataType))
   }
 
   def appendWithHll(df: DataFrame, table: String, col: String): Long = {

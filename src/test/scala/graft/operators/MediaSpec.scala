@@ -150,6 +150,29 @@ class MediaSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Media.videoHeader(noTkhd) == None)
   }
 
+  test("video: a largesize (size 1) mdat before moov and a to-the-end (size 0) moov decode") {
+    val m = Media.mp4Header(320, 240, 4500L, v1 = false)
+    val ftypLen = java.nio.ByteBuffer.wrap(m, 0, 4).getInt
+    val (ftyp, moov) = m.splitAt(ftypLen)
+    val payload = Array.fill[Byte](40)(7)
+    val mdat = java.nio.ByteBuffer.allocate(16).putInt(1).put("mdat".getBytes("US-ASCII"))
+      .putLong(16L + payload.length).array() ++ payload
+    assert(Media.videoHeader(ftyp ++ mdat ++ moov) == Some(("mp4", 320, 240, 4500L)))
+    // size 0: the last box extends to the end of the buffer
+    val moov0 = moov.clone()
+    java.nio.ByteBuffer.wrap(moov0).putInt(0)
+    assert(Media.videoHeader(ftyp ++ mdat ++ moov0) == Some(("mp4", 320, 240, 4500L)))
+    // sizes 2..7 stay corrupt; a largesize below its own 16-byte header too
+    Seq(2, 7).foreach { sz =>
+      val bad = mdat.clone()
+      java.nio.ByteBuffer.wrap(bad).putInt(sz)
+      assert(Media.videoHeader(ftyp ++ bad ++ moov) == None)
+    }
+    val small = mdat.clone()
+    java.nio.ByteBuffer.wrap(small, 8, 8).putLong(15L)
+    assert(Media.videoHeader(ftyp ++ small ++ moov) == None)
+  }
+
   test("adversarial sizes: crafted 32-bit chunk/box lengths cannot wrap the cursor or throw") {
     // WAV whose chunk size is 0x7FFFFFF0 (positive as an Int, but adding
     // it wraps an Int cursor negative → out-of-bounds index in a task)

@@ -123,11 +123,13 @@ class PrefixPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
       rd(root, "t").where("k IN ('k0003', 'k0397')").collect())
     assert(rows.map(_.getLong(1)).toSet == Set(3L, 397L))
     assert(op < total, s"opened $op of $total")
-    // 65 values exceed the pushdown cap: conservative full scan, same rows
-    val inList = (0 until 65).map(i => f"'k$i%04d'").mkString(",")
+    // one value past the pushdown cap: conservative full scan, same rows —
+    // every value sits in k0003's file, so a pruned list would open ~1 file
+    val inList = (0 to CatalogScan.MaxInValues)
+      .map(i => if (i == 0) "'k0003'" else f"'k0003-$i%04d'").mkString(",")
     val (rows2, op2) = opened(
       rd(root, "t").where(s"k IN ($inList)").collect())
-    assert(rows2.map(_.getLong(1)).toSet == (0L until 65L).toSet)
+    assert(rows2.map(_.getLong(1)).toSet == Set(3L))
     assert(op2 == total, s"expected full scan, opened $op2 of $total")
   }
 

@@ -64,9 +64,9 @@ class SqlDaysSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 24 && opened <= cand, s"opened $opened, candidates $cand of $total")
   }
 
-  test("readPartitionRange over the SQL-written layout answers the window") {
-    val rows = cat.readPartitionRange(spark, "e", "2026-03-01 00:00:00", "2026-03-01 23:59:59")
-      .collect()
+  test("a day-ranged catalog scan over the SQL-written layout answers the window") {
+    val rows = cat.scan(spark, "e")
+      .where("ts BETWEEN '2026-03-01 00:00:00' AND '2026-03-01 23:59:59'").collect()
     assert(rows.length == 24)
   }
 
@@ -82,9 +82,12 @@ class SqlDaysSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vals = cat.partitionValuesAt("z", cat.currentSnapshot("z").get)
     assert(vals.get.map(_._2.get).toSet == Set("2026-03-01", "2026-03-02"),
       s"pins must render in the session zone: ${vals.get}")
-    // and the same-session read prunes consistently
-    val n = s2.sql("SELECT count(*) FROM gd2.z WHERE ts = timestamp'2026-03-01 23:00:00'")
-      .collect()(0).getLong(0)
-    assert(n == 1)
+    // and the same-session read prunes consistently — the pushed literal
+    // renders in the session zone too: 11:00 UTC+14 is the prior day in UTC
+    Seq("2026-03-01 23:00:00", "2026-03-02 11:00:00").foreach { ts =>
+      val n = s2.sql(s"SELECT count(*) FROM gd2.z WHERE ts = timestamp'$ts'")
+        .collect()(0).getLong(0)
+      assert(n == 1, s"ts = $ts")
+    }
   }
 }

@@ -158,6 +158,68 @@ class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows2.map(_.url).headOption.contains("https://ok/1"))
   }
 
+  test("Content-Length past Int.MaxValue takes the oversize skip; a fake header in its body never surfaces") {
+    val good = Warc.record("https://ok/1", 1000L, "first".getBytes)
+    // a legal 3 GB declaration whose truncated body carries a WARC header:
+    // parsed as an Int it used to be unreadable, and the line scan then
+    // emitted the embedded record as if it were real
+    val fake = ("WARC/1.0\r\nWARC-Type: response\r\n" +
+      "WARC-Target-URI: https://fake/embedded\r\n" +
+      "WARC-Date: 2026-01-01T00:00:00Z\r\n" +
+      "Content-Length: 4\r\n\r\nfake\r\n\r\n").getBytes
+    val huge = ("WARC/1.0\r\nWARC-Type: response\r\n" +
+      "WARC-Target-URI: https://big/capture\r\n" +
+      "WARC-Date: 2026-01-01T00:00:00Z\r\n" +
+      "Content-Length: 3000000000\r\n\r\n").getBytes ++
+      ("captured payload bytes\r\n" * 20).getBytes ++ fake
+    assert(Warc.parse(good ++ huge).map(_.url).toVector == Vector("https://ok/1"))
+  }
+
+  test("an oversized revisit body is skipped unread; the revisits around it survive") {
+    def revisit(url: String, len: Long): Array[Byte] =
+      ("WARC/1.0\r\nWARC-Type: revisit\r\n" +
+        s"WARC-Target-URI: $url\r\nWARC-Date: 2026-01-01T00:00:00Z\r\n" +
+        "WARC-Refers-To-Target-URI: https://orig/a\r\n" +
+        "WARC-Payload-Digest: md5:00ff\r\n" +
+        s"Content-Length: $len\r\n\r\n").getBytes
+    val bodyLen = Warc.maxRecordBytes.toLong + 1
+    val head = revisit("https://ok/before", 0) ++ "\r\n\r\n".getBytes ++
+      revisit("https://evil/huge", bodyLen)
+    val tail = "\r\n\r\n".getBytes ++ revisit("https://ok/after", 0) ++ "\r\n\r\n".getBytes
+    // serves the declared body for real (zeros), counting the bytes handed
+    // out by read; skip moves past them without producing any
+    final class CountingStream extends java.io.InputStream {
+      private val total = head.length + bodyLen + tail.length
+      private var pos = 0L
+      var readBytes = 0L
+      private def at(p: Long): Int =
+        if (p < head.length) head(p.toInt) & 0xff
+        else if (p < head.length + bodyLen) 0
+        else tail((p - head.length - bodyLen).toInt) & 0xff
+      override def read(): Int =
+        if (pos >= total) -1 else { readBytes += 1; pos += 1; at(pos - 1) }
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        if (len == 0) 0
+        else if (pos >= total) -1
+        else {
+          val n = math.min(len.toLong, total - pos).toInt
+          var i = 0
+          while (i < n) { b(off + i) = at(pos + i).toByte; i += 1 }
+          pos += n; readBytes += n
+          n
+        }
+      override def skip(n: Long): Long = {
+        val k = math.max(0L, math.min(n, total - pos))
+        pos += k
+        k
+      }
+    }
+    val in = new CountingStream
+    val urls = Warc.parseRevisitStream(in).map(_._1).toVector
+    assert(urls == Vector("https://ok/before", "https://ok/after"))
+    assert(in.readBytes < (4L << 20), s"read ${in.readBytes} bytes of a skipped body")
+  }
+
   test("gzip member writer: one deflater, members independently decompressable") {
     val bos = new java.io.ByteArrayOutputStream()
     val w = new Warc.GzipMemberWriter(bos)

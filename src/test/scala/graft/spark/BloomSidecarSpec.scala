@@ -2,7 +2,9 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
 
 /** Per-file Bloom-filter sidecars: point lookups on a NON-clustered column
@@ -31,6 +33,17 @@ class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.getAbsolutePath
   }
 
+  /** `url = value` through the DSv2 scan, asserting the read opened no
+    * more data files than the bloom sidecars keep for `value`. */
+  private def urlEq(cat: ParquetSnapshotCatalog, value: String): Array[Row] = {
+    val keep = cat.pruneFilesByBloom("t", "url", value)
+    val before = CatalogPartitionReader.opened.get()
+    val rows = cat.scan(spark, "t").where(col("url") === value).collect()
+    val opened = CatalogPartitionReader.opened.get() - before
+    assert(opened <= keep.size, s"url = $value opened $opened files, bloom keeps ${keep.size}")
+    rows
+  }
+
   private def urls(from: Int, until: Int) = {
     val ss = spark; import ss.implicits._
     (from until until).map(i => (s"https://example.com/doc$i", i.toLong)).toDF("url", "v")
@@ -47,11 +60,11 @@ class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kept = cat.pruneFilesByBloom("t", "url", target)
     assert(kept.size < all.size, s"bloom kept ${kept.size} of ${all.size}")
 
-    val hit = cat.readBloomLookup(spark, "t", "url", target).collect()
+    val hit = urlEq(cat, target)
     assert(hit.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((target, 123L)))
 
     all.filterNot(kept.toSet).foreach(f => Files.delete(java.nio.file.Paths.get(f)))
-    val hit2 = cat.readBloomLookup(spark, "t", "url", target).collect()
+    val hit2 = urlEq(cat, target)
     assert(hit2.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((target, 123L)))
   }
 
@@ -61,7 +74,7 @@ class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
     cat.commitWithBloom(urls(0, 400), "t", "url", bits = 8192)
     val kept = cat.pruneFilesByBloom("t", "url", "https://example.com/never-crawled")
     assert(kept.isEmpty, s"expected zero candidate files, got ${kept.size}")
-    assert(cat.readBloomLookup(spark, "t", "url", "https://example.com/never-crawled").count() == 0)
+    assert(urlEq(cat, "https://example.com/never-crawled").isEmpty)
   }
 
   test("appendWithBloom carries filters forward: lookups from both drops, each drop pays only its files") {
@@ -72,11 +85,24 @@ class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     Seq(("https://example.com/doc42", 42L), ("https://example.com/doc357", 357L)).foreach {
       case (u, v) =>
-        val got = cat.readBloomLookup(spark, "t", "url", u).collect()
+        val got = urlEq(cat, u)
         assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((u, v)))
         val all = cat.filesWithAddOrder("t", cat.currentSnapshot("t").get).map(_._1)
         assert(cat.pruneFilesByBloom("t", "url", u).size < all.size)
     }
+  }
+
+  test("time travel past a compaction: the equality pruner tests the pinned snapshot's blooms") {
+    val root = tmp()
+    val cat = new ParquetSnapshotCatalog(root)
+    val old = cat.commitWithBloom(urls(0, 100), "t", "url", bits = 8192)
+    cat.compact(spark, "t") // CURRENT: new files, no bloom sidecar
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.gb", classOf[graft.sources.GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gb.root", root)
+    val n = s.sql(s"SELECT count(*) FROM gb.t VERSION AS OF $old " +
+      "WHERE url = 'https://example.com/doc5'").collect()(0).getLong(0)
+    assert(n == 1)
   }
 
   test("no sidecar → conservative keep; takedowns apply through the bloom-pruned read") {
@@ -90,7 +116,7 @@ class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cat2 = new ParquetSnapshotCatalog(root2)
     cat2.commitWithBloom(urls(0, 100), "t", "url", bits = 8192)
     cat2.deleteWhere("t", "url", Seq("https://example.com/doc5"))
-    assert(cat2.readBloomLookup(spark, "t", "url", "https://example.com/doc5").count() == 0)
-    assert(cat2.readBloomLookup(spark, "t", "url", "https://example.com/doc6").count() == 1)
+    assert(urlEq(cat2, "https://example.com/doc5").isEmpty)
+    assert(urlEq(cat2, "https://example.com/doc6").length == 1)
   }
 }

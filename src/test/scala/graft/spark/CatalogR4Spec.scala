@@ -173,11 +173,9 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     cat.commitWithStats(df, "t", Seq("score"))
     val hit = cat.pruneFiles("t", "score", "10.0", "10.2")
     assert(hit.nonEmpty, "the [9.5,10.5] file must survive pruning")
-    val rows = cat.readPruned(spark, "t", "score", "10.0", "10.2")
-      .where(col("score") >= 10.0 && col("score") <= 10.2)
+    val rows = cat.scan(spark, "t").where(col("score") >= 10.0 && col("score") <= 10.2)
     assert(rows.count() === 0) // no rows in-range, but the FILE had to be kept
-    val wide = cat.readPruned(spark, "t", "score", "9.0", "11.0")
-      .where(col("score") >= 9.0 && col("score") <= 11.0)
+    val wide = cat.scan(spark, "t").where(col("score") >= 9.0 && col("score") <= 11.0)
     assert(wide.collect().map(_.getDouble(0)).sorted === Array(9.5, 10.5))
     // long bounds still prune exactly (regression guard for the long tier)
     val ints = (1 to 100).map(_.toLong).toDF("v").repartition(4)
@@ -206,8 +204,8 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     // and prune exactly with canonical bounds too: only the jan-2 file
     val jan2 = cat.pruneFiles("t", "warc_ts", "2026-01-02 00:00:00", "2026-01-02 23:00:00")
     assert(jan2.size === 1)
-    val got = cat.readPruned(spark, "t", "warc_ts", "2026-01-02 00:00:00", "2026-01-02 23:00:00")
-      .where(col("warc_ts") >= "2026-01-02 00:00:00")
+    val got = cat.scan(spark, "t")
+      .where(col("warc_ts").between("2026-01-02 00:00:00", "2026-01-02 23:00:00"))
     assert(got.count() === 2)
     // metadata-only min/max/count over the TIMESTAMP column matches the scan
     val (mn, mx, n) = cat.statsAgg("t", "warc_ts").get
@@ -237,9 +235,9 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     // appending after a delete keeps the tombstones in force
     cat.append(Seq(("https://example.com/new1", "t")).toDF("url", "text"), "t")
     assert(cat.read(spark, "t").count() === 98)
-    // readPruned never resurrects taken-down rows (no stats sidecar here →
-    // all files kept, deletes still applied)
-    assert(cat.readPruned(spark, "t", "url", "a", "z").count() === 98)
+    // a pruned read never resurrects taken-down rows (no stats sidecar
+    // here → all files kept, deletes still applied)
+    assert(cat.scan(spark, "t").where(col("url").between("a", "z")).count() === 98)
     // compaction materializes: rewritten snapshot carries no tombstones and
     // byte-identical surviving rows
     val preCompact = cat.read(spark, "t").as[(String, String)].collect().sortBy(_._1)

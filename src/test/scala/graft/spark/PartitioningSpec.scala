@@ -2,7 +2,9 @@ package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -32,6 +34,20 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = Files.createTempDirectory("graftpart").toFile
     d.deleteOnExit()
     d.getAbsolutePath
+  }
+
+  /** `url = value` through the DSv2 scan, asserting the read opened no
+    * more data files than the partition transform's keep-set for `value`
+    * at the current snapshot. */
+  private def urlEq(cat: ParquetSnapshotCatalog, table: String, value: String): Array[Row] = {
+    val spec = cat.partitionSpec(table).get
+    val t = spec.literal(value)
+    val keep = cat.pruneFilesAt(table, cat.currentSnapshot(table).get, spec.statName, t, t)
+    val before = CatalogPartitionReader.opened.get()
+    val rows = cat.scan(spark, table).where(col("url") === value).collect()
+    val opened = CatalogPartitionReader.opened.get() - before
+    assert(opened <= keep.size, s"url = $value opened $opened files, keep-set ${keep.size}")
+    rows
   }
 
   test("transform algebra: render/parse round-trips; bucket literal matches the Spark expression") {
@@ -64,7 +80,7 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val urls = (0 until 300).map(i => s"https://example.com/doc$i")
     val df = urls.zipWithIndex.map { case (u, i) => (u, i.toLong) }.toDF("url", "v")
     cat.commitPartitioned(df, "t16", BucketTransform(16, "url"), nFiles = 3)
-    val missing = urls.filter(u => cat.readPartitionEq(spark, "t16", u).count() != 1L)
+    val missing = urls.filter(u => urlEq(cat, "t16", u).length != 1)
     assert(missing.isEmpty, s"mis-pruned lookups: ${missing.take(5)} (${missing.size} total)")
     // padded literal matches the padded Spark expression bit-for-bit
     val b = BucketTransform(16, "url")
@@ -92,13 +108,13 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kept = cat.pruneFiles("t", spec.statName, tv, tv)
     assert(kept.size < all.size, s"pruning kept ${kept.size} of ${all.size}")
 
-    val hit = cat.readPartitionEq(spark, "t", target).collect()
+    val hit = urlEq(cat, "t", target)
     assert(hit.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((target, 123L)))
 
     // prune PROOF: physically delete every non-kept file; the lookup still
     // answers bit-exactly, so it never needed them
     all.filterNot(kept.toSet).foreach(f => Files.delete(java.nio.file.Paths.get(f)))
-    val hit2 = cat.readPartitionEq(spark, "t", target).collect()
+    val hit2 = urlEq(cat, "t", target)
     assert(hit2.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((target, 123L)))
   }
 
@@ -114,7 +130,7 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one url from each drop
     Seq(("https://example.com/doc42", 42L), ("https://example.com/doc357", 357L)).foreach {
       case (u, v) =>
-        val got = cat.readPartitionEq(spark, "t", u).collect()
+        val got = urlEq(cat, "t", u)
         assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq((u, v)))
     }
     // pruning still engages after the append (sidecar complete for both drops)
@@ -156,7 +172,7 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!java.nio.file.Files.exists(dir.resolve(s"v${snaps.last}.stats.tsv")))
     // the merged chain still answers exactly across all 10 drops
     Seq(7L, 142L, 375L).foreach { v =>
-      val got = cat.readPartitionEq(spark, "t", s"https://example.com/doc$v").collect()
+      val got = urlEq(cat, "t", s"https://example.com/doc$v")
       assert(got.map(r => (r.getString(0), r.getLong(1))).toSeq ==
         Seq((s"https://example.com/doc$v", v)))
     }
@@ -181,7 +197,8 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"CAST(id + ${d * 100} AS BIGINT) AS v FROM range(20)").mkString(" UNION ALL "))
     cat.commitPartitioned(df, "t", DaysTransform("warc_ts"), nFiles = 8)
 
-    val got = cat.readPartitionRange(spark, "t", "2024-03-03T00:00:00", "2024-03-03T23:59:59")
+    val day = "warc_ts BETWEEN '2024-03-03T00:00:00' AND '2024-03-03T23:59:59'"
+    val got = cat.scan(spark, "t").where(day)
     assert(got.count() == 20)
     assert(got.selectExpr("min(v)", "max(v)").collect().head.toSeq == Seq(300L, 319L))
 
@@ -191,22 +208,27 @@ class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kept = cat.pruneFiles("t", spec.statName, "2024-03-03", "2024-03-03")
     assert(kept.size < all.size)
     all.filterNot(kept.toSet).foreach(f => Files.delete(java.nio.file.Paths.get(f)))
-    assert(cat.readPartitionRange(spark, "t", "2024-03-03T00:00:00", "2024-03-03T23:59:59").count() == 20)
+    val before = CatalogPartitionReader.opened.get()
+    assert(cat.scan(spark, "t").where(day).count() == 20)
+    assert(CatalogPartitionReader.opened.get() - before <= kept.size)
   }
 
-  test("bucket range scan refuses; equality through a takedown applies the tombstones") {
+  test("bucket range scan keeps every file; equality through a takedown applies the tombstones") {
     val root = tmp()
     val cat = new ParquetSnapshotCatalog(root)
     val ss = spark; import ss.implicits._
-    cat.commitPartitioned((0 until 50).map(i => (s"u$i", i.toLong)).toDF("url", "v"),
+    val urls = (0 until 50).map(i => s"u$i")
+    cat.commitPartitioned(urls.zipWithIndex.map { case (u, i) => (u, i.toLong) }.toDF("url", "v"),
       "t", BucketTransform(4, "url"))
-    val ex = intercept[IllegalArgumentException] {
-      cat.readPartitionRange(spark, "t", "u1", "u2")
-    }
-    assert(ex.getMessage.contains("not order-preserving"))
+    // hashing destroys order: a range on the bucketed column cannot prune
+    // through the transform, so no file is dropped and every in-range row
+    // comes back
+    val inRange = cat.scan(spark, "t").where("url BETWEEN 'u1' AND 'u2'")
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(inRange == urls.filter(u => u >= "u1" && u <= "u2").sorted)
 
     cat.deleteWhere("t", "url", Seq("u7"))
-    assert(cat.readPartitionEq(spark, "t", "u7").count() == 0)
-    assert(cat.readPartitionEq(spark, "t", "u8").count() == 1)
+    assert(urlEq(cat, "t", "u7").isEmpty)
+    assert(urlEq(cat, "t", "u8").length == 1)
   }
 }

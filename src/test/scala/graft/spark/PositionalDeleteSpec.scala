@@ -185,12 +185,12 @@ class PositionalDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(keys.toSeq == Seq(("id", "5")))
   }
 
-  test("pruned reads apply positional deletes (readPruned path)") {
+  test("pruned scans apply positional deletes") {
     val root = tmp()
     val cat = new ParquetSnapshotCatalog(root)
     cat.commitWithStats(docs(30).repartition(3), "t", Seq("id"))
     cat.deleteMatching(spark, "t", "id = 10 OR id = 20")
-    val got = cat.readPruned(spark, "t", "id", "5", "25")
+    val got = cat.scan(spark, "t").where("id BETWEEN 5 AND 25")
       .select("id").collect().map(_.getLong(0)).toSet
     assert(!got.contains(10L) && !got.contains(20L))
     assert(got.contains(15L))

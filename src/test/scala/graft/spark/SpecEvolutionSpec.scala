@@ -3,6 +3,8 @@ package graft.spark
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
 
 /** PARTITION SPEC EVOLUTION: changing the table's transform is a
@@ -58,11 +60,14 @@ class SpecEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stats on them), and vice versa — the intersection is strictly tighter
     assert(kept.size < byNew.size, s"old-spec bounds pruned nothing: $kept vs $byNew")
     assert(kept.size < all.size)
-    val rows = cat.readPartitionEq(spark, "t", "ab").collect()
+    val before = CatalogPartitionReader.opened.get()
+    val rows = cat.scan(spark, "t").where(col("lang") === "ab").collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq ==
       (0 until 400).filter(_ % 4 == 1).map(_.toLong))
-    // the read opened exactly the intersection: era-1 'ab' pins + era-2 'a' files
     assert(rows.map(_.getString(1)).toSet == Set("ab"))
+    // the read opened at most the intersection: era-1 'ab' pins + era-2 'a' files
+    val opened = CatalogPartitionReader.opened.get() - before
+    assert(opened <= kept.size, s"opened $opened files, keep-set ${kept.size}")
   }
 
   test("mixed layout refuses pinned-only surfaces; census falls back correct") {
@@ -80,8 +85,11 @@ class SpecEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = cat.filesWithAddOrder("t", snap).map(_._1).toSet
     val byNew = cat.pruneFilesAt("t", snap, newSpec.statName, "a", "a").toSet
     assert(byNew.size < all.size, "post-compact truncate bounds prune nothing")
-    val rows = cat.readPartitionEq(spark, "t", "ba").collect()
+    val byNewBa = cat.pruneFilesAt("t", snap, newSpec.statName, "b", "b")
+    val before = CatalogPartitionReader.opened.get()
+    val rows = cat.scan(spark, "t").where(col("lang") === "ba").collect()
     assert(rows.length == 100 && rows.map(_.getString(1)).toSet == Set("ba"))
+    assert(CatalogPartitionReader.opened.get() - before <= byNewBa.size)
   }
 
   test("CALL evolve_spec parses a quoted comma arg; CALL zorder rewrites") {
