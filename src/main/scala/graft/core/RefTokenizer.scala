@@ -44,9 +44,11 @@ final class RefTokenizer(
     specMode: Boolean = false,
     maxStepsIn: Long = -1L,
     inputLenIn: Int = -1,
-    binput: Array[Byte] = null
+    binput: Array[Byte] = null,
+    bufs: TokenizerBuffers = new TokenizerBuffers
 ) {
   import St._
+  import RefTokenizer._
 
   /** Pure-ASCII byte mode: when `binput` is non-null (guaranteed all bytes
     * 0x00-0x7f by the caller), the kernel reads the raw bytes — no 4×
@@ -70,25 +72,36 @@ final class RefTokenizer(
   private var returnStack: Array[Int] = new Array[Int](16)
   private var returnTop: Int = 0
 
+  bufs.clear()
+
   // AttributeBuilder (tokenizer/token.v:98-102): V strings.Builder.str() is
-  // read-and-clear — load-bearing for Q1.
-  private var attrNameB = new java.lang.StringBuilder
-  private var attrValueB = new java.lang.StringBuilder
+  // read-and-clear — load-bearing for Q1. Caller-owned (see TokenizerBuffers).
+  private val attrNameB = bufs.attrName
+  private val attrValueB = bufs.attrValue
 
   // scratch builder `bldr` — codepoint-level so astral char refs round-trip
-  private var bldr = new IntBuf
+  private val bldr = new IntBuf
 
-  // curr_token modeled as an immutable value replaced on write-back, exactly
-  // like V value semantics — the no-write-back bugs (Q7, Q9, …) fall out free.
-  private sealed trait Cur
-  private case object CurEofInit extends Cur // initial `EOFToken{}` (tokenizer/tokenizer.v:117)
-  private final case class CurTag(isStart: Boolean, name: String, selfClosing: Boolean, attrs: Vector[(String, String)]) extends Cur
-  private final case class CurComment(data: Vector[Int]) extends Cur
-  private final case class CurDoctype(name: String, publicId: String, systemId: String, forceQuirks: Boolean) extends Cur
+  // curr_token (tokenizer/tokenizer.v:117): the comment and doctype variants
+  // are immutable values replaced on write-back, exactly like V value
+  // semantics — the no-write-back bugs (Q7, Q9, …) fall out free.
   private var currToken: Cur = CurEofInit
 
-  // open_tags: pushed only at tag_name '>' for start tags, never popped (Q3)
-  private val openTags = scala.collection.mutable.ArrayBuffer.empty[String]
+  // The TagToken variant is one mutable register, live while `currToken eq
+  // CurTag`. Every tag edit in the reference writes its copy straight back,
+  // so editing in place is the same value; the one no-write-back site (the
+  // self-closing copy, V :1600-1602) emits with selfClosing = true and
+  // leaves the register's flag false. The name is `tagName` plus the
+  // case-folded characters still in `bufs.tagName`, resolved against
+  // TagNames when first read; attributes sit in `bufs` and become one
+  // Vector per emit.
+  private var tagIsStart = false
+  private var tagName = ""
+  private val tagNameTail = bufs.tagName
+
+  // open_tags: pushed only at tag_name '>' for start tags, never popped
+  // (Q3), and read only at its top — so only the last push is kept
+  private var lastOpenTag: String = null
 
   // extract-mode: spec "appropriate end tag" anchor + raw-state switching
   private var lastStartTag: String = ""
@@ -234,6 +247,15 @@ final class RefTokenizer(
     else { cursor += 1; if (byteMode) binput(cursor - 1).toInt else input(cursor - 1) }
   }
 
+  /** Byte-mode input viewed as chars (ASCII bytes are their chars). */
+  private val asciiInput: CharSequence =
+    if (!byteMode) null
+    else new CharSequence {
+      def length: Int = inLen
+      def charAt(i: Int): Char = binput(i).toChar
+      def subSequence(from: Int, until: Int): CharSequence = new String(binput, from, until - from, "US-ASCII")
+    }
+
   /** peek_codepoint: -1 on overrun (callers map it per V `or` blocks). */
   @inline private def peek(offset: Int): Int =
     if (cursor + offset >= inLen) -1
@@ -275,7 +297,8 @@ final class RefTokenizer(
       i += Character.charCount(cp)
     }
   }
-  @inline private def pushCps(a: Array[Int]): Unit = { var i = 0; while (i < a.length) { sink.char(a(i)); i += 1 } }
+  /** Emit the scratch builder's codepoints (the caller clears it). */
+  @inline private def pushBldr(): Unit = { var i = 0; while (i < bldr.length) { sink.char(bldr(i)); i += 1 } }
   @inline private def parseError(code: String): Unit = sink.parseError(code)
 
   private def cpsToString(v: Vector[Int]): String = {
@@ -290,23 +313,49 @@ final class RefTokenizer(
     */
   private def pushCur(): Unit = currToken match {
     case CurEofInit => sink.eof(Tok.EofGenericName, Tok.EofGenericMsg)
-    case t: CurTag => emitTag(t)
+    case CurTag => emitTag(selfClosing = false)
     case c: CurComment => sink.comment(cpsToString(c.data))
     case d: CurDoctype => sink.doctype(d.name, d.publicId, d.systemId, d.forceQuirks)
   }
 
-  private def emitTag(t: CurTag): Unit = {
-    sink.tag(t.isStart, t.name, t.selfClosing, t.attrs)
-    if (specMode && t.isStart) lastStartTag = t.name
+  /** Emit the tag register (`selfClosing` = true only for the pushed copy). */
+  private def emitTag(selfClosing: Boolean): Unit = {
+    val name = tagNameNow()
+    sink.tag(tagIsStart, name, selfClosing, bufs.attrs())
+    if (specMode && tagIsStart) lastStartTag = name
   }
 
-  /** extract-mode tree feedback: state entered after emitting a start tag.
-    * WHATWG §13.2.6 "switch the tokenizer"; absent from the reference (its
-    * `run` pins entry to .data, tokenizer/tokenizer.v:336). SPEC-FIX.
+  /** Install an empty tag register (tag_open / end_tag_open entries). */
+  @inline private def newTag(isStart: Boolean): Unit = {
+    currToken = CurTag
+    tagIsStart = isStart
+    tagName = ""
+    tagNameTail.setLength(0)
+    bufs.clearAttrs()
+  }
+
+  /** The register's name: pending folded characters are resolved once —
+    * a known element name is the table's own string.
     */
-  private def dataTarget(t: CurTag): Int =
-    if (!specMode || !t.isStart || t.selfClosing) Data
-    else t.name match {
+  private def tagNameNow(): String = {
+    if (tagNameTail.length > 0) {
+      if (tagName.isEmpty) {
+        val known = TagNames.lookup(tagNameTail)
+        tagName = if (known != null) known else tagNameTail.toString
+      } else tagName = tagName + tagNameTail
+      tagNameTail.setLength(0)
+    }
+    tagName
+  }
+
+  /** extract-mode tree feedback: state entered after emitting the register
+    * (not self-closing) as a start tag. WHATWG §13.2.6 "switch the
+    * tokenizer"; absent from the reference (its `run` pins entry to .data,
+    * tokenizer/tokenizer.v:336). SPEC-FIX.
+    */
+  private def dataTarget(): Int =
+    if (!specMode || !tagIsStart) Data
+    else tagNameNow() match {
       case "script" => ScriptData
       case "style" | "xmp" | "iframe" | "noembed" | "noframes" => Rawtext
       case "title" | "textarea" => Rcdata
@@ -315,10 +364,8 @@ final class RefTokenizer(
     }
 
   // ---- typed casts (V `as`) -------------------------------------------------
-  @inline private def asTag: CurTag = currToken match {
-    case t: CurTag => t
-    case _ => throw new VCastPanic("TagToken")
-  }
+  @inline private def asTag(): Unit = if (currToken ne CurTag) throw new VCastPanic("TagToken")
+  @inline private def asTagName(): String = { asTag(); tagNameNow() }
   @inline private def asComment: CurComment = currToken match {
     case c: CurComment => c
     case _ => throw new VCastPanic("CommentToken")
@@ -354,11 +401,11 @@ final class RefTokenizer(
     * state; builder is read-and-cleared.
     */
   private def flushCodepoints(): Unit = {
-    val buf = bldr.take()
     if (isAttrReturn(peekReturn)) {
       var i = 0
-      while (i < buf.length) { attrValueB.appendCodePoint(buf(i)); i += 1 }
-    } else pushCps(buf)
+      while (i < bldr.length) { attrValueB.appendCodePoint(bldr(i)); i += 1 }
+    } else pushBldr()
+    bldr.clear()
   }
 
   /** V `t.curr_attr.name.str()` — read-and-clear. */
@@ -375,8 +422,8 @@ final class RefTokenizer(
     * :1552-1557).
     */
   private def flushAttrIntoTag(): Unit = {
-    val t = asTag
-    currToken = t.copy(attrs = t.attrs :+ ((takeAttrName(), takeAttrValue())))
+    asTag()
+    bufs.addAttr(takeAttrName(), takeAttrValue())
   }
 
   /** is_appropriate (token.v:30-45): fidelity compares against the top of the
@@ -386,7 +433,7 @@ final class RefTokenizer(
     */
   private def isAppropriate(endTagName: String): Boolean =
     if (specMode) lastStartTag == endTagName
-    else openTags.nonEmpty && openTags.last == endTagName
+    else lastOpenTag != null && lastOpenTag == endTagName
 
   // ===========================================================================
   // Handlers. Each is a line-faithful transcription of the corresponding
@@ -501,7 +548,7 @@ final class RefTokenizer(
     currChar = c
     if (c == '!') { goto(MarkupDeclarationOpen); return }
     if (c == '/') { goto(EndTagOpen); return }
-    if (isAlpha(c)) { currToken = CurTag(isStart = true, "", selfClosing = false, Vector.empty); gotoR(TagName); return }
+    if (isAlpha(c)) { newTag(isStart = true); gotoR(TagName); return }
     if (c == '?') { parseError("unexpected_question_mark_instead_of_tag_name"); gotoR(BogusComment); return }
     parseError("invalid_first_character_of_tag_name")
     pushRune('<')
@@ -518,7 +565,7 @@ final class RefTokenizer(
       return
     }
     currChar = c
-    if (isAlpha(c)) { currToken = CurTag(isStart = false, "", selfClosing = false, Vector.empty); gotoR(TagName); return }
+    if (isAlpha(c)) { newTag(isStart = false); gotoR(TagName); return }
     if (c == '>') { parseError("missing_end_tag_name"); goto(Data); return }
     parseError("invalid_first_character_of_tag_name")
     currToken = CurComment(Vector.empty)
@@ -527,35 +574,34 @@ final class RefTokenizer(
 
   /** 13.2.5.8 (:543-585) — the ONLY open_tags push site (:564-567, Q3).
     * Ordinary name chars batched (each per-char iteration of the reference
-    * appends + writes back; one accumulated write-back is observably
-    * identical — nothing reads curr_token between those iterations).
+    * appends + writes back; one accumulated append is observably identical —
+    * nothing reads curr_token between those iterations). The run's folded
+    * chars go to the register's pending name, resolved once when read.
     */
   private def stTagName(): Unit = {
     var c = nextCp()
     if (c > 0 && c != '/' && c != '>' && !isWs(c)) {
-      val sb = new java.lang.StringBuilder(8)
       var n = 0
       while (c > 0 && c != '/' && c != '>' && !isWs(c)) {
-        sb.appendCodePoint(toLower(c)); currChar = c; n += 1; c = nextCp()
+        tagNameTail.appendCodePoint(toLower(c)); currChar = c; n += 1; c = nextCp()
       }
       steps += n; stateHits(TagName) += n
-      val t = asTag
-      currToken = t.copy(name = t.name + sb)
+      asTag()
     }
     if (c < 0) { parseError("eof_in_tag"); sink.eof(Tok.EofInTagName, Tok.EofInTagMsg); return }
     currChar = c
     if (isWs(c)) { goto(BeforeAttrName); return }
     if (c == '/') { goto(SelfClosingStartTag); return }
     if (c == '>') {
-      val t = asTag
-      emitTag(t)
-      if (t.isStart) openTags += t.name
-      goto(dataTarget(t))
+      asTag()
+      emitTag(selfClosing = false)
+      if (tagIsStart) lastOpenTag = tagName
+      goto(dataTarget())
       return
     }
     // c == 0
     parseError("unexpected_null_character")
-    val t = asTag; currToken = t.copy(name = t.name + "�")
+    asTag(); tagNameTail.append('\ufffd')
     goto(TagName)
   }
 
@@ -564,7 +610,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushRune('<'); gotoR(Rcdata); return }
     currChar = c
-    if (c == '/') { bldr = new IntBuf; goto(RcdataEndTagOpen); return }
+    if (c == '/') { bldr.clear(); goto(RcdataEndTagOpen); return }
     pushRune('<')
     gotoR(Rcdata)
   }
@@ -578,7 +624,7 @@ final class RefTokenizer(
     if (c < 0) { pushString("</"); gotoR(Rcdata); return }
     currChar = c
     if (isAlpha(c)) {
-      currToken = CurTag(isStart = false, "", selfClosing = false, Vector.empty)
+      newTag(isStart = false)
       if (!specMode) pending = (() => { pushRune('<'); pushRune('/'); gotoR(Rcdata) }) :: pending
       gotoR(RcdataEndTagName)
       return
@@ -591,18 +637,18 @@ final class RefTokenizer(
   private def endTagNameCommon(selfSt: Int, backSt: Int, emitOn: Int, alphaFallsOff: Boolean): Unit = {
     // shared shape of 13.2.5.11/.14/.17 (:626-680, :722-776, :823-876)
     val c = nextCp()
-    def anythingElse(): Unit = { pushString("</"); pushCps(bldr.take()); gotoR(backSt) }
+    def anythingElse(): Unit = { pushString("</"); pushBldr(); bldr.clear(); gotoR(backSt) }
     if (c < 0) { anythingElse(); return }
     currChar = c
-    if (isWs(c)) { if (isAppropriate(asTag.name)) goto(BeforeAttrName) else anythingElse(); return }
-    if (c == '/') { if (isAppropriate(asTag.name)) goto(SelfClosingStartTag) else anythingElse(); return }
+    if (isWs(c)) { if (isAppropriate(asTagName())) goto(BeforeAttrName) else anythingElse(); return }
+    if (c == '/') { if (isAppropriate(asTagName())) goto(SelfClosingStartTag) else anythingElse(); return }
     if (c == emitOn) {
-      if (isAppropriate(asTag.name)) { pushCur(); goto(Data) } else anythingElse()
+      if (isAppropriate(asTagName())) { pushCur(); goto(Data) } else anythingElse()
       return
     }
     if (isAlpha(c)) {
-      val t = asTag
-      currToken = t.copy(name = t.name + toLower(c).toChar) // alpha-only: ASCII by construction
+      asTag()
+      tagNameTail.append(toLower(c).toChar) // alpha-only: ASCII by construction
       bldr.add(c)
       if (!alphaFallsOff) goto(selfSt) // else: plain return → run restarts .data (Q15b)
       return
@@ -618,7 +664,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushRune('<'); gotoR(Rawtext); return }
     currChar = c
-    if (c == '/') { bldr = new IntBuf; goto(RawtextEndTagOpen); return }
+    if (c == '/') { bldr.clear(); goto(RawtextEndTagOpen); return }
     pushRune('<')
     gotoR(Rawtext)
   }
@@ -628,7 +674,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushString("</"); gotoR(Rawtext); return }
     currChar = c
-    if (isAlpha(c)) { currToken = CurTag(isStart = false, "", selfClosing = false, Vector.empty); gotoR(RawtextEndTagName); return }
+    if (isAlpha(c)) { newTag(isStart = false); gotoR(RawtextEndTagName); return }
     pushString("</")
     gotoR(Rawtext)
   }
@@ -641,7 +687,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushRune('<'); gotoR(ScriptData); return }
     currChar = c
-    if (c == '/') { bldr = new IntBuf; goto(ScriptDataEndTagOpen); return }
+    if (c == '/') { bldr.clear(); goto(ScriptDataEndTagOpen); return }
     if (c == '!') { pushString("<!"); goto(ScriptDataEscapeStart); return }
     pushRune('<')
     gotoR(ScriptData)
@@ -652,7 +698,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushString("</"); gotoR(ScriptData); return }
     currChar = c
-    if (isAlpha(c)) { currToken = CurTag(isStart = false, "", selfClosing = false, Vector.empty); gotoR(ScriptDataEndTagName); return }
+    if (isAlpha(c)) { newTag(isStart = false); gotoR(ScriptDataEndTagName); return }
     pushString("</")
     gotoR(ScriptData)
   }
@@ -729,8 +775,8 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushRune('<'); gotoR(ScriptDataEscaped); return }
     currChar = c
-    if (c == '/') { bldr = new IntBuf; goto(ScriptDataEscapedEndTagOpen); return }
-    if (isAlpha(c)) { bldr = new IntBuf; pushRune('<'); goto(ScriptDataDoubleEscapeStart); return }
+    if (c == '/') { bldr.clear(); goto(ScriptDataEscapedEndTagOpen); return }
+    if (isAlpha(c)) { bldr.clear(); pushRune('<'); goto(ScriptDataDoubleEscapeStart); return }
     pushRune('<')
     gotoR(ScriptDataEscaped)
   }
@@ -740,7 +786,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { pushString("</"); gotoR(ScriptDataEscaped); return }
     currChar = c
-    if (isAlpha(c)) { currToken = CurTag(isStart = false, "", selfClosing = false, Vector.empty); gotoR(ScriptDataEscapedEndTagName); return }
+    if (isAlpha(c)) { newTag(isStart = false); gotoR(ScriptDataEscapedEndTagName); return }
     pushString("</")
     gotoR(ScriptDataEscaped)
   }
@@ -819,7 +865,7 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { gotoR(ScriptDataDoubleEscaped); return }
     currChar = c
-    if (c == '/') { bldr = new IntBuf; pushRune('/'); goto(ScriptDataDoubleEscapeEnd); return }
+    if (c == '/') { bldr.clear(); pushRune('/'); goto(ScriptDataDoubleEscapeEnd); return }
     gotoR(ScriptDataDoubleEscaped)
   }
 
@@ -910,7 +956,7 @@ final class RefTokenizer(
     if (isWs(c)) { goto(AfterAttrName); return }
     if (c == '/') { specFlushPendingAttr(); goto(SelfClosingStartTag); return }
     if (c == '=') { goto(BeforeAttrValue); return }
-    if (c == '>') { specFlushPendingAttr(); val t = asTag; emitTag(t); goto(dataTarget(t)); return }
+    if (c == '>') { specFlushPendingAttr(); asTag(); emitTag(selfClosing = false); goto(dataTarget()); return }
     specFlushPendingAttr()
     newAttrBuilder()
     gotoR(AttrName)
@@ -927,7 +973,7 @@ final class RefTokenizer(
     if (c == '>') {
       parseError("missing_attr_value")
       specFlushPendingAttr() // spec keeps `<a x=>`'s attr with value ""
-      val t = asTag; emitTag(t); goto(dataTarget(t)); return
+      asTag(); emitTag(selfClosing = false); goto(dataTarget()); return
     }
     gotoR(AttrValueUnquoted)
   }
@@ -936,9 +982,12 @@ final class RefTokenizer(
   private def attrValueQuoted(quote: Int, self: Int): Unit = {
     var c = nextCp()
     if (c > 0 && c != quote && c != '&') {
-      var n = 0
-      while (c > 0 && c != quote && c != '&') { attrValueB.appendCodePoint(c); currChar = c; n += 1; c = nextCp() }
-      steps += n; stateHits(self) += n
+      val start = cursor - 1
+      while (c > 0 && c != quote && c != '&') { currChar = c; c = nextCp() }
+      val end = if (c < 0) cursor else cursor - 1
+      if (byteMode) attrValueB.append(asciiInput, start, end) // one bulk append (4-64 KB blobs)
+      else { var i = start; while (i < end) { attrValueB.appendCodePoint(input(i)); i += 1 } }
+      steps += end - start; stateHits(self) += end - start
     }
     if (c < 0) { parseError("eof_in_tag"); sink.eof(Tok.EofInTagName, Tok.EofInTagMsg); return }
     currChar = c
@@ -964,7 +1013,7 @@ final class RefTokenizer(
     currChar = c
     if (isWs(c)) { goto(BeforeAttrName); return }
     if (c == '&') { gotoRet(CharReference, AttrValueUnquoted); return }
-    if (c == '>') { val t = asTag; emitTag(t); goto(dataTarget(t)); return }
+    if (c == '>') { asTag(); emitTag(selfClosing = false); goto(dataTarget()); return }
     if (c == 0) { parseError("unexpected_null_character"); attrValueB.appendCodePoint(0xfffd); goto(AttrValueUnquoted); return }
     if (c == '"' || c == '\'' || c == '<' || c == '=' || c == '`') {
       parseError("unexpected_char_in_unquoted_attr_value")
@@ -986,7 +1035,7 @@ final class RefTokenizer(
     currChar = c
     if (isWs(c)) { goto(BeforeAttrName); return }
     if (c == '/') { goto(SelfClosingStartTag); return }
-    if (c == '>') { val t = asTag; emitTag(t); goto(dataTarget(t)); return }
+    if (c == '>') { asTag(); emitTag(selfClosing = false); goto(dataTarget()); return }
     parseError("missing_whitespace_between_attr")
     gotoR(BeforeAttrName)
   }
@@ -997,8 +1046,8 @@ final class RefTokenizer(
     if (c < 0) { parseError("eof_in_tag"); sink.eof(Tok.EofInTagName, Tok.EofInTagMsg); return }
     currChar = c
     if (c == '>') {
-      val t = asTag.copy(selfClosing = true) // pushed copy; curr_token not written back (as in V :1600-1602)
-      emitTag(t)
+      asTag()
+      emitTag(selfClosing = true) // pushed copy; curr_token not written back (as in V :1600-1602)
       goto(Data)
       return
     }
@@ -1572,7 +1621,7 @@ final class RefTokenizer(
     * cursor re-exposes the `&` forever. Budget-guarded.
     */
   private def stCharReference(): Unit = {
-    bldr = new IntBuf
+    bldr.clear()
     bldr.add('&')
     val c = nextCp()
     if (c < 0) { flushCodepoints(); doReturnState(true); return }
@@ -1623,7 +1672,7 @@ final class RefTokenizer(
         doReturnState(false)
       } else {
         if (last != ';') parseError("missing_semicolon_after_char_reference")
-        bldr = new IntBuf
+        bldr.clear()
         bldr.addAll(CharRef.lookup(refS)) // replacement overwrites the raw text
         flushCodepoints()
         doReturnState(false)
@@ -1730,7 +1779,7 @@ final class RefTokenizer(
       val remapped = RefTokenizer.c1Remap(cr)
       if (remapped != 0) charRefCode = remapped
     }
-    bldr = new IntBuf
+    bldr.clear()
     // V writes rune(char_ref_code) blindly; an Int-overflowed/negative code
     // would be an invalid rune — emit U+FFFD and flag instead of crashing.
     if (charRefCode < 0 || charRefCode > 0x10ffff || (charRefCode >= 0xd800 && charRefCode <= 0xdfff)) {
@@ -1743,6 +1792,12 @@ final class RefTokenizer(
 }
 
 object RefTokenizer {
+  private sealed trait Cur
+  private case object CurEofInit extends Cur // initial `EOFToken{}` (tokenizer/tokenizer.v:117)
+  private case object CurTag extends Cur // the tag register (RefTokenizer.tagIsStart, …)
+  private final case class CurComment(data: Vector[Int]) extends Cur
+  private final case class CurDoctype(name: String, publicId: String, systemId: String, forceQuirks: Boolean) extends Cur
+
   /** windows-1252 C1 remap (tokenizer/tokenizer.v:2940-2953); 0 = absent. */
   private val c1Remap: Array[Int] = {
     val a = new Array[Int](0xa0)
@@ -1845,6 +1900,8 @@ final class IntBuf {
   def addAll(xs: Array[Int]): Unit = { var i = 0; while (i < xs.length) { add(xs(i)); i += 1 } }
   /** read-and-clear, like V strings.Builder.str() (load-bearing for Q1). */
   def take(): Array[Int] = { val r = java.util.Arrays.copyOf(a, n); n = 0; r }
+  @inline def apply(i: Int): Int = a(i)
+  def clear(): Unit = n = 0
   def length: Int = n
   def contentEquals(s: String): Boolean = {
     if (n != s.length) return false
@@ -1852,4 +1909,46 @@ final class IntBuf {
     while (i < n) { if (a(i) != s.charAt(i)) return false; i += 1 }
     true
   }
+}
+
+/** The tokenizer's growable buffers, owned by the caller so they keep their
+  * capacity from page to page: the attribute name and value builders (V's
+  * `curr_attr`), the tag register's pending name characters and its
+  * attribute list. `ExtractSink` holds one per partition, so a 64 KB
+  * attribute blob grows the value builder once per partition, not once per
+  * page. A tokenizer clears them when it starts.
+  */
+final class TokenizerBuffers {
+  val attrName = new java.lang.StringBuilder
+  val attrValue = new java.lang.StringBuilder
+  val tagName = new java.lang.StringBuilder
+  private var keys = new Array[String](8)
+  private var vals = new Array[String](8)
+  private var nAttrs = 0
+
+  def clear(): Unit = {
+    attrName.setLength(0); attrValue.setLength(0); tagName.setLength(0)
+    java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null) // drop the last page's blob values
+    nAttrs = 0
+  }
+
+  def clearAttrs(): Unit = nAttrs = 0
+
+  def addAttr(k: String, v: String): Unit = {
+    if (nAttrs == keys.length) {
+      keys = java.util.Arrays.copyOf(keys, nAttrs * 2)
+      vals = java.util.Arrays.copyOf(vals, nAttrs * 2)
+    }
+    keys(nAttrs) = k; vals(nAttrs) = v; nAttrs += 1
+  }
+
+  /** The attribute list as the token's immutable vector, in document order. */
+  def attrs(): Vector[(String, String)] =
+    if (nAttrs == 0) Vector.empty
+    else {
+      val a = new Array[(String, String)](nAttrs)
+      var i = 0
+      while (i < nAttrs) { a(i) = (keys(i), vals(i)); i += 1 }
+      Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(a))
+    }
 }

@@ -173,11 +173,18 @@ object ExtractConfig {
   final val FSpecial = 1 << 18
   final val FTableSection = 1 << 19 // row/section/cell/caption family (clears to table context)
 
-  /** name → OR of all flag/scope bits; names absent from every set → 0. */
+  /** name → OR of all flag/scope bits; names absent from every set → 0.
+    * Keyed by the TagNames strings the tokenizer emits, so a known tag's
+    * lookup is an identity hit; every name here must be in that table.
+    */
   val flagTable: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](128)
     def add(s: Iterable[String], bit: Int): Unit =
-      s.foreach(n => m.merge(n, Integer.valueOf(bit), (a, b) => Integer.valueOf(a.intValue | b.intValue)))
+      s.foreach { n =>
+        val k = TagNames.lookup(n)
+        require(k != null, s"$n is not in TagNames")
+        m.merge(k, Integer.valueOf(bit), (a, b) => Integer.valueOf(a.intValue | b.intValue))
+      }
     add(blacklist, FBlacklist); add(voids, FVoid); add(blocks, FBlock)
     add(closesP, FClosesP); add(formatting, FFormatting); add(fosterSet, FFoster)
     add(tableParts, FTablePart); add(headOnly, FHeadOnly); add(fmtMarkerSet, FMarker)
@@ -370,6 +377,9 @@ final class ExtractSink extends TokenSink {
   val arena = new Arena
   private var root = arena.add("#root", -1)
 
+  /** the tokenizer's builders, kept across this sink's pages (see Extractor) */
+  val tokenizerBuffers = new TokenizerBuffers
+
   // open-element stack (parallel arrays)
   private val stkNode = new IntVec(64); stkNode += root
   private val stkName = ArrayBuffer("#root")
@@ -484,7 +494,6 @@ final class ExtractSink extends TokenSink {
     mdProp.clear(); mdType.clear(); mdVal.clear(); mdScope.clear()
     pendingMdProp = null; pendingMdScope = false; pendingMdType = null; pendingMdVal = null
     spStart.clear(); spEnd.clear(); spText.clear(); spBlock.clear(); spLink.clear(); spLinkIdx.clear()
-    pathMemo.clear()
     runStart = -1; runBlock = root; runLink = false; runLinkIdx = -1; runAnchor = root; runFosterRef = -1
     nTokens = 0L; nTags = 0L
     errors.clear()
@@ -505,17 +514,11 @@ final class ExtractSink extends TokenSink {
     runFosterRef = -1
   }
 
-  // element id → "/html/body/..." prefix from the FINAL arena tree, memoized
-  // per document (spans in the same element share one walk)
-  private val pathMemo = new java.util.HashMap[Integer, String]
-
-  private def pathPrefix(e: Int): String = {
-    if (e <= 0) return "" // #root
-    val cached = pathMemo.get(e)
-    if (cached != null) return cached
-    val s = pathPrefix(arena.parent(e)) + "/" + arena.name(e)
-    pathMemo.put(e, s)
-    s
+  /** Last open-stack index holding `name` (-1 when absent). */
+  private def stackIndexOf(name: String): Int = {
+    var i = stkName.length - 1
+    while (i >= 0 && stkName(i) != name) i -= 1
+    i
   }
 
   private def blockUpTo(topIdx: Int): Int = {
@@ -552,7 +555,7 @@ final class ExtractSink extends TokenSink {
       // before the table in sibling order
       runFosterRef = -1
       if ((stkFlags(top) & FFoster) != 0) {
-        val ti = stkName.lastIndexOf("table")
+        val ti = stackIndexOf("table")
         if (ti > 0) {
           runFosterRef = stkNode(ti)
           runAnchor = arena.parent(runFosterRef)
@@ -797,7 +800,7 @@ final class ExtractSink extends TokenSink {
   private def ensureBody(): Unit = {
     ensureHtml()
     if (bodyIdx < 0) {
-      val h = stkName.lastIndexOf("head")
+      val h = stackIndexOf("head")
       if (h > 0) popTo(h) // implied </head>
       bodyIdx = pushOpen("body", htmlIdx, flagsOf("body"))
     }
@@ -1024,7 +1027,7 @@ final class ExtractSink extends TokenSink {
     if (name == "body") { ensureBody(); return }
     if ((f & FHeadOnly) != 0) {
       // metadata content: into the (implied) head before body, in place after
-      if (bodyIdx < 0 && stkName.lastIndexOf("head") <= 0) ensureHead()
+      if (bodyIdx < 0 && stackIndexOf("head") <= 0) ensureHead()
       else ensureHtml()
     } else {
       if (bodyIdx < 0) ensureBody()
@@ -1117,7 +1120,7 @@ final class ExtractSink extends TokenSink {
     var fosterRef = -1
     val par =
       if ((stkFlags(top) & FFoster) != 0 && (f & FTablePart) == 0) {
-        val ti = stkName.lastIndexOf("table")
+        val ti = stackIndexOf("table")
         if (ti > 0) { fosterRef = stkNode(ti); arena.parent(fosterRef) } else stkNode(top)
       } else stkNode(top)
     if (!selfClosing && (f & FVoid) == 0) {
@@ -1322,16 +1325,31 @@ final class ExtractSink extends TokenSink {
   override def eof(name: String, msg: String): Unit = { nTokens += 1; closeRun() }
   override def parseError(code: String): Unit = errors += code
 
-  // density-scoring scratch, reused across rows (cleared per result())
-  private val densTotal = new java.util.HashMap[Integer, Int](32)
-  private val densLink = new java.util.HashMap[Integer, Int](32)
+  // result() scratch indexed by arena id, reused across rows and cleared
+  // over the page's arena size: per-block text and link-text totals for the
+  // density score, and each span parent's path
+  private var densTotal = new Array[Int](64)
+  private var densLink = new Array[Int](64)
+  private var pathOf = new Array[String](64)
+  private val pathIds = new IntVec(64)
+  private val pathB = new java.lang.StringBuilder(256)
 
   /** Span path from the FINAL tree: the text node's (possibly adopted)
-    * parent chain plus that parent's arena id.
+    * parent chain, `/name` per element from the root down, plus that
+    * parent's arena id. Built once per distinct parent per document.
     */
   private def spanPath(tid: Int): String = {
     val par = arena.parent(tid)
-    pathPrefix(par) + "#" + par
+    if (par >= 0 && pathOf(par) != null) return pathOf(par)
+    pathIds.clear()
+    var e = par
+    while (e > 0) { pathIds += e; e = arena.parent(e) } // stops at #root (0)
+    pathB.setLength(0)
+    var i = pathIds.length - 1
+    while (i >= 0) { pathB.append('/').append(arena.name(pathIds(i))); i -= 1 }
+    val s = pathB.append('#').append(par).toString
+    if (par >= 0) pathOf(par) = s
+    s
   }
 
   /** Finalize: text-density scoring per block → mainText. */
@@ -1339,19 +1357,25 @@ final class ExtractSink extends TokenSink {
     closeRun()
     val full = text.toString
     val nSpans = spStart.length
-    // per-block totals (reused maps — no per-row allocation)
-    densTotal.clear(); densLink.clear()
+    val nNodes = arena.size
+    if (densTotal.length < nNodes) {
+      val cap = math.max(nNodes, densTotal.length * 2)
+      densTotal = new Array[Int](cap); densLink = new Array[Int](cap); pathOf = new Array[String](cap)
+    } else {
+      java.util.Arrays.fill(densTotal, 0, nNodes, 0); java.util.Arrays.fill(densLink, 0, nNodes, 0)
+      java.util.Arrays.fill(pathOf.asInstanceOf[Array[AnyRef]], 0, nNodes, null)
+    }
+    // per-block totals
     var si = 0
     while (si < nSpans) {
       val n = spEnd(si) - spStart(si)
-      densTotal.merge(spBlock(si), n, (a, b) => a + b)
-      if (spLink(si)) densLink.merge(spBlock(si), n, (a, b) => a + b)
+      densTotal(spBlock(si)) += n
+      if (spLink(si)) densLink(spBlock(si)) += n
       si += 1
     }
     def keepBlock(b: Int): Boolean = {
-      val t = densTotal.getOrDefault(b, 0)
-      val l = densLink.getOrDefault(b, 0)
-      t >= minBlockTextLen && l.toDouble <= maxLinkDensity * t
+      val t = densTotal(b)
+      t >= minBlockTextLen && densLink(b).toDouble <= maxLinkDensity * t
     }
     var allKept = true
     si = 0
@@ -1812,14 +1836,7 @@ object Extractor {
     */
   def extractCpsInto(cps: Array[Int], sink: ExtractSink): ExtractResult = {
     sink.reset()
-    val tk = new RefTokenizer(cps, sink, specMode = true)
-    var truncated = false
-    try tk.run()
-    catch {
-      case _: StepBudgetExceeded => truncated = true; sink.errors += "STEP_BUDGET_EXCEEDED"
-      case _: VCastPanic => truncated = true; sink.errors += "V_CAST_PANIC"
-    }
-    sink.result(truncated, tk.stateHits)
+    runGuarded(new RefTokenizer(cps, sink, specMode = true, bufs = sink.tokenizerBuffers), sink)
   }
 
   /** Reusable variant of `extract` for per-partition loops: both the decode
@@ -1846,7 +1863,7 @@ object Extractor {
     while (i < html.length && html(i) >= 0) i += 1
     if (i == html.length) {
       sink.reset()
-      runGuarded(new RefTokenizer(null, sink, specMode = true, binput = html), sink)
+      runGuarded(new RefTokenizer(null, sink, specMode = true, binput = html, bufs = sink.tokenizerBuffers), sink)
     } else {
       if (sink.decodeBuf.length < html.length)
         sink.decodeBuf = new Array[Int](math.max(html.length, sink.decodeBuf.length * 2))
@@ -1860,7 +1877,8 @@ object Extractor {
         else extractCpsInto(RefTokenizer.decodeUtf8(html), sink)
       } else {
         sink.reset()
-        runGuarded(new RefTokenizer(sink.decodeBuf, sink, specMode = true, inputLenIn = n), sink)
+        runGuarded(new RefTokenizer(sink.decodeBuf, sink, specMode = true, inputLenIn = n,
+          bufs = sink.tokenizerBuffers), sink)
       }
     }
   }

@@ -75,16 +75,12 @@ final case class PageRowF(
     input_file: String
 )
 
-/** The extraction pipeline: scan → skew-isolating repartition →
-  * mapPartitions(tokenizer+DOM kernel) → extracted rows ‖ lineage rows.
+/** The extraction pipeline: scan → mapPartitions(tokenizer+DOM kernel) →
+  * extracted rows ‖ lineage rows.
   *
   * Scale design (the 100 TB / 10^12-doc story, tested at local[32]):
   *   - The kernel is a single typed mapPartitions: O(bytes) per page, zero
   *     driver involvement, no collect anywhere.
-  *   - Size-skew isolation: pages above `bigBytes` are routed to their own
-  *     partition set so a handful of megabyte pages can never straggle a
-  *     partition of normal pages (explicit salting by xxhash64(url) within
-  *     each class). This mirrors salted repartitioning at cluster scale.
   *   - Lineage rows ride a CollectionAccumulator (one tiny row per partition,
   *     O(partitions) driver memory, not O(rows)) and are appended to a
   *     parquet metrics table after each chunk commit.
@@ -94,24 +90,14 @@ final case class PageRowF(
   */
 object ExtractJob {
 
-  /** Threshold above which a page is considered pathological (size skew). */
-  val bigBytes = 262144
-
-  /** Extraction kernel over the pages Dataset.
-    *
-    * Default path (`salted = false`) is a NARROW map: extraction is per-row,
-    * so no shuffle of the html corpus is ever justified — parallelism comes
-    * from input splits (`spark.sql.files.maxPartitionBytes` at a real table;
-    * the pre-partitioned synthesis here), and this is what makes the job
-    * scale linearly with executors. Per-row cost outliers are bounded by the
-    * tokenizer step budget, so a pathological page costs O(64·bytes) at
-    * worst, not unbounded time.
-    *
-    * `salted = true` adds the explicit size-isolating salted repartition
-    * (big pages ≥ bigBytes get their own partition set, both classes spread
-    * by xxhash64(url)) — for inputs whose splits are pathologically skewed
-    * (e.g. a few files full of megabyte pages). It costs a full shuffle of
-    * the corpus; at 100 TB you only pay that when split-level skew is real.
+  /** Extraction kernel over the pages Dataset: a NARROW map. Extraction is
+    * per-row, so no shuffle of the html corpus is ever justified —
+    * parallelism comes from input splits (`spark.sql.files.maxPartitionBytes`
+    * at a real table; the pre-partitioned synthesis here), and this is what
+    * makes the job scale linearly with executors. Per-row cost outliers are
+    * bounded by the tokenizer step budget, so a pathological page costs
+    * O(64·bytes) at worst, not unbounded time. `numPartitions` does not
+    * repartition: the pages' own partitioning is kept.
     */
   def extract(
       pages: Dataset[PageRow],
@@ -119,24 +105,12 @@ object ExtractJob {
       numPartitions: Int,
       lineage: CollectionAccumulator[LineageRow] = null,
       chunk: Int = 0,
-      salted: Boolean = false,
       maxTaskBytes: Long = Long.MaxValue,
       lean: Boolean = false
   ): Dataset[Extracted] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val bigParts = math.max(numPartitions / 8, 1)
-    val normParts = math.max(numPartitions - bigParts, 1)
-    // Size-class spreading is BEST-EFFORT: repartition applies HashPartitioning
-    // to this expression, so the two classes can still hash-collide into the
-    // same physical partition. Big pages concentrate into ~bigParts distinct
-    // expression values (vs normParts for normal pages), which spreads each
-    // class; hard physical isolation would need an RDD identity Partitioner
-    // and is not worth leaving the Dataset API for.
-    val part = when(length($"html") >= bigBytes, pmod(xxhash64($"url"), lit(bigParts)))
-      .otherwise(lit(bigParts) + pmod(xxhash64($"url"), lit(normParts)))
-    val routed = if (salted) pages.repartition(numPartitions, part).as[PageRow] else pages
-    routed.mapPartitions(it =>
+    pages.mapPartitions(it =>
       kernelIterator(it, () => "", runId, lineage, chunk, maxTaskBytes, lean))
   }
 
