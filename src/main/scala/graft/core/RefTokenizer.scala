@@ -72,20 +72,28 @@ final class RefTokenizer(
   private var returnStack: Array[Int] = new Array[Int](16)
   private var returnTop: Int = 0
 
-  bufs.clear()
+  bufs.reset(binput)
 
   // AttributeBuilder (tokenizer/token.v:98-102): V strings.Builder.str() is
   // read-and-clear — load-bearing for Q1. Caller-owned (see TokenizerBuffers).
   private val attrNameB = bufs.attrName
-  private val attrValueB = bufs.attrValue
 
   // scratch builder `bldr` — codepoint-level so astral char refs round-trip
   private val bldr = new IntBuf
 
-  // curr_token (tokenizer/tokenizer.v:117): the comment and doctype variants
-  // are immutable values replaced on write-back, exactly like V value
-  // semantics — the no-write-back bugs (Q7, Q9, …) fall out free.
+  // a doctype name or id run, collected for one write-back (doctypeRun)
+  private val docRun = bufs.doctype
+
+  // curr_token (tokenizer/tokenizer.v:117): the doctype variant is an
+  // immutable value replaced on write-back, exactly like V value semantics —
+  // the no-write-back bugs (Q9, …) fall out free.
   private var currToken: Cur = CurEofInit
+
+  // The CommentToken variant is one register, live while `currToken eq
+  // CurComment`: every comment edit in the reference writes its copy
+  // straight back, and the no-write-back sites (Q7a-c) append nothing, so
+  // appending in place is the same value.
+  private val commentData = bufs.comment
 
   // The TagToken variant is one mutable register, live while `currToken eq
   // CurTag`. Every tag edit in the reference writes its copy straight back,
@@ -93,10 +101,11 @@ final class RefTokenizer(
   // self-closing copy, V :1600-1602) emits with selfClosing = true and
   // leaves the register's flag false. The name is `tagName` plus the
   // case-folded characters still in `bufs.tagName`, resolved against
-  // TagNames when first read; attributes sit in `bufs` and become one
-  // Vector per emit.
+  // TagNames (to `tagId`) when first read; attributes sit in `bufs.attrs`,
+  // which the sink reads in place.
   private var tagIsStart = false
   private var tagName = ""
+  private var tagId = -1
   private val tagNameTail = bufs.tagName
 
   // open_tags: pushed only at tag_name '>' for start tags, never popped
@@ -247,15 +256,6 @@ final class RefTokenizer(
     else { cursor += 1; if (byteMode) binput(cursor - 1).toInt else input(cursor - 1) }
   }
 
-  /** Byte-mode input viewed as chars (ASCII bytes are their chars). */
-  private val asciiInput: CharSequence =
-    if (!byteMode) null
-    else new CharSequence {
-      def length: Int = inLen
-      def charAt(i: Int): Char = binput(i).toChar
-      def subSequence(from: Int, until: Int): CharSequence = new String(binput, from, until - from, "US-ASCII")
-    }
-
   /** peek_codepoint: -1 on overrun (callers map it per V `or` blocks). */
   @inline private def peek(offset: Int): Int =
     if (cursor + offset >= inLen) -1
@@ -301,12 +301,6 @@ final class RefTokenizer(
   @inline private def pushBldr(): Unit = { var i = 0; while (i < bldr.length) { sink.char(bldr(i)); i += 1 } }
   @inline private def parseError(code: String): Unit = sink.parseError(code)
 
-  private def cpsToString(v: Vector[Int]): String = {
-    val sb = new java.lang.StringBuilder(v.length)
-    v.foreach(sb.appendCodePoint)
-    sb.toString
-  }
-
   /** push_token for the generic `t.push_token(t.curr_token)` sites — no cast
     * in V, so ANY current variant can be emitted (e.g. the initial EOFToken
     * via `<?>`; see QuirkSpec).
@@ -314,14 +308,14 @@ final class RefTokenizer(
   private def pushCur(): Unit = currToken match {
     case CurEofInit => sink.eof(Tok.EofGenericName, Tok.EofGenericMsg)
     case CurTag => emitTag(selfClosing = false)
-    case c: CurComment => sink.comment(cpsToString(c.data))
+    case CurComment => sink.comment(commentData.mkString)
     case d: CurDoctype => sink.doctype(d.name, d.publicId, d.systemId, d.forceQuirks)
   }
 
   /** Emit the tag register (`selfClosing` = true only for the pushed copy). */
   private def emitTag(selfClosing: Boolean): Unit = {
     val name = tagNameNow()
-    sink.tag(tagIsStart, name, selfClosing, bufs.attrs())
+    sink.tagView(tagIsStart, tagId, name, selfClosing, bufs.attrs)
     if (specMode && tagIsStart) lastStartTag = name
   }
 
@@ -330,19 +324,19 @@ final class RefTokenizer(
     currToken = CurTag
     tagIsStart = isStart
     tagName = ""
+    tagId = -1
     tagNameTail.setLength(0)
-    bufs.clearAttrs()
+    bufs.attrs.clear()
   }
 
   /** The register's name: pending folded characters are resolved once —
-    * a known element name is the table's own string.
+    * a known element name is the table's own string, with its id.
     */
   private def tagNameNow(): String = {
     if (tagNameTail.length > 0) {
-      if (tagName.isEmpty) {
-        val known = TagNames.lookup(tagNameTail)
-        tagName = if (known != null) known else tagNameTail.toString
-      } else tagName = tagName + tagNameTail
+      val full: CharSequence = if (tagName.isEmpty) tagNameTail else tagName + tagNameTail
+      tagId = TagNames.id(full)
+      tagName = if (tagId >= 0) TagNames.name(tagId) else full.toString
       tagNameTail.setLength(0)
     }
     tagName
@@ -355,21 +349,16 @@ final class RefTokenizer(
     */
   private def dataTarget(): Int =
     if (!specMode || !tagIsStart) Data
-    else tagNameNow() match {
-      case "script" => ScriptData
-      case "style" | "xmp" | "iframe" | "noembed" | "noframes" => Rawtext
-      case "title" | "textarea" => Rcdata
-      case "plaintext" => Plaintext
-      case _ => Data
-    }
+    else { tagNameNow(); if (tagId < 0) Data else dataTargetOf(tagId) }
 
   // ---- typed casts (V `as`) -------------------------------------------------
   @inline private def asTag(): Unit = if (currToken ne CurTag) throw new VCastPanic("TagToken")
   @inline private def asTagName(): String = { asTag(); tagNameNow() }
-  @inline private def asComment: CurComment = currToken match {
-    case c: CurComment => c
-    case _ => throw new VCastPanic("CommentToken")
-  }
+  @inline private def asComment(): Unit = if (currToken ne CurComment) throw new VCastPanic("CommentToken")
+  /** Install an empty comment register. */
+  @inline private def newComment(): Unit = { currToken = CurComment; commentData.clear() }
+  /** `tok.data << cp` with the write-back. */
+  @inline private def commentAdd(cp: Int): Unit = { asComment(); commentData.add(cp) }
   @inline private def asDoctype: CurDoctype = currToken match {
     case d: CurDoctype => d
     case _ => throw new VCastPanic("DoctypeToken")
@@ -403,19 +392,16 @@ final class RefTokenizer(
   private def flushCodepoints(): Unit = {
     if (isAttrReturn(peekReturn)) {
       var i = 0
-      while (i < bldr.length) { attrValueB.appendCodePoint(bldr(i)); i += 1 }
+      while (i < bldr.length) { bufs.valueAppend(bldr(i)); i += 1 }
     } else pushBldr()
     bldr.clear()
   }
 
-  /** V `t.curr_attr.name.str()` — read-and-clear. */
-  @inline private def takeAttrName(): String = { val s = attrNameB.toString; attrNameB.setLength(0); s }
-  @inline private def takeAttrValue(): String = { val s = attrValueB.toString; attrValueB.setLength(0); s }
   /** V `t.curr_attr = AttributeBuilder{}` — fresh empty builders; clearing
-    * the existing ones is observably identical (take() already read-clears)
-    * and avoids 2 allocations per attribute.
+    * the existing ones is observably identical (the flush already
+    * read-clears) and avoids 2 allocations per attribute.
     */
-  @inline private def newAttrBuilder(): Unit = { attrNameB.setLength(0); attrValueB.setLength(0) }
+  @inline private def newAttrBuilder(): Unit = { attrNameB.setLength(0); bufs.valueClear() }
 
   /** Flush the built attribute into the tag (attr_value_unquoted entry,
     * tokenizer/tokenizer.v:1499-1504 = Q1; after_attr_value_quoted entry,
@@ -423,7 +409,7 @@ final class RefTokenizer(
     */
   private def flushAttrIntoTag(): Unit = {
     asTag()
-    bufs.addAttr(takeAttrName(), takeAttrValue())
+    bufs.flushAttr()
   }
 
   /** is_appropriate (token.v:30-45): fidelity compares against the top of the
@@ -568,7 +554,7 @@ final class RefTokenizer(
     if (isAlpha(c)) { newTag(isStart = false); gotoR(TagName); return }
     if (c == '>') { parseError("missing_end_tag_name"); goto(Data); return }
     parseError("invalid_first_character_of_tag_name")
-    currToken = CurComment(Vector.empty)
+    newComment()
     gotoR(BogusComment)
   }
 
@@ -985,8 +971,8 @@ final class RefTokenizer(
       val start = cursor - 1
       while (c > 0 && c != quote && c != '&') { currChar = c; c = nextCp() }
       val end = if (c < 0) cursor else cursor - 1
-      if (byteMode) attrValueB.append(asciiInput, start, end) // one bulk append (4-64 KB blobs)
-      else { var i = start; while (i < end) { attrValueB.appendCodePoint(input(i)); i += 1 } }
+      // byte mode: a value that is this one run is never copied (4-64 KB blobs)
+      if (byteMode) bufs.valueAppendRun(start, end) else bufs.valueAppend(input, start, end)
       steps += end - start; stateHits(self) += end - start
     }
     if (c < 0) { parseError("eof_in_tag"); sink.eof(Tok.EofInTagName, Tok.EofInTagMsg); return }
@@ -994,7 +980,7 @@ final class RefTokenizer(
     if (c == quote) { goto(AfterAttrValueQuoted); return }
     if (c == '&') { gotoRet(CharReference, self); return }
     // c == 0
-    parseError("unexpected_null_character"); attrValueB.appendCodePoint(0xfffd); goto(self)
+    parseError("unexpected_null_character"); bufs.valueAppend(0xfffd); goto(self)
   }
 
   /** 13.2.5.36 (:1434-1463) */
@@ -1014,14 +1000,14 @@ final class RefTokenizer(
     if (isWs(c)) { goto(BeforeAttrName); return }
     if (c == '&') { gotoRet(CharReference, AttrValueUnquoted); return }
     if (c == '>') { asTag(); emitTag(selfClosing = false); goto(dataTarget()); return }
-    if (c == 0) { parseError("unexpected_null_character"); attrValueB.appendCodePoint(0xfffd); goto(AttrValueUnquoted); return }
+    if (c == 0) { parseError("unexpected_null_character"); bufs.valueAppend(0xfffd); goto(AttrValueUnquoted); return }
     if (c == '"' || c == '\'' || c == '<' || c == '=' || c == '`') {
       parseError("unexpected_char_in_unquoted_attr_value")
-      attrValueB.appendCodePoint(c)
+      bufs.valueAppend(c)
       goto(AttrValueUnquoted)
       return
     }
-    attrValueB.appendCodePoint(c)
+    bufs.valueAppend(c)
     goto(AttrValueUnquoted)
   }
 
@@ -1067,12 +1053,11 @@ final class RefTokenizer(
     if (c == '>') { pushCur(); goto(Data); return }
     if (c == 0) {
       parseError("unexpected_null_character")
-      val t = asComment; currToken = t.copy(data = t.data :+ 0xfffd)
+      commentAdd(0xfffd)
       if (specMode) goto(BogusComment)
       return
     }
-    val t = asComment
-    currToken = t.copy(data = t.data :+ c)
+    commentAdd(c)
     if (specMode) goto(BogusComment)
   }
 
@@ -1081,7 +1066,7 @@ final class RefTokenizer(
     * here; `[CDATA[` always takes the bogus-comment path (`if false`, :1668).
     */
   private def stMarkupDeclarationOpen(): Unit = {
-    if (lookAhead("--")) { currToken = CurComment(Vector.empty); goto(CommentStart); return }
+    if (lookAhead("--")) { newComment(); goto(CommentStart); return }
     if (lookAhead("DOCTYPE", caseSensitive = false)) { goto(Doctype); return }
     // SPEC-FIX (extract mode only): inside foreign content (svg/math) the
     // tree builder admits real CDATA sections (§13.2.5.42 "if the adjusted
@@ -1093,12 +1078,12 @@ final class RefTokenizer(
     }
     if (lookAhead("[CDATA[")) {
       parseError("cdata_in_html_content")
-      currToken = CurComment("[CDATA[".toVector.map(_.toInt))
+      newComment(); "[CDATA[".foreach(commentData.add(_))
       goto(BogusComment)
       return
     }
     parseError("incorrectly_opened_comment")
-    currToken = CurComment(Vector.empty)
+    newComment()
     gotoR(BogusComment)
   }
 
@@ -1119,8 +1104,7 @@ final class RefTokenizer(
     currChar = c
     if (c == '-') { goto(Comment); return }
     if (c == '>') { parseError("abrupt_closing_of_empty_comment"); pushCur(); goto(Data); return }
-    val t = asComment
-    currToken = t.copy(data = t.data :+ '-'.toInt)
+    commentAdd('-'.toInt)
     gotoR(Comment)
   }
 
@@ -1133,29 +1117,26 @@ final class RefTokenizer(
     var c = nextCp()
     if (specMode && c > 0 && c != '<' && c != '-') {
       // spec-mode self-loop batched; one accumulated write-back
-      val buf = new IntBuf
       var n = 0
-      while (c > 0 && c != '<' && c != '-') { buf.add(c); currChar = c; n += 1; c = nextCp() }
+      while (c > 0 && c != '<' && c != '-') { commentData.add(c); currChar = c; n += 1; c = nextCp() }
       steps += n; stateHits(Comment) += n
-      val t = asComment
-      currToken = t.copy(data = t.data ++ buf.take())
+      asComment() // after the run, as the reference's write-back
     }
     if (c < 0) { parseError("eof_in_comment"); pushCur(); sink.eof(Tok.EofInCommentName, Tok.EofInCommentMsg); return }
     currChar = c
     if (c == '<') {
-      val t = asComment; currToken = t.copy(data = t.data :+ c)
+      commentAdd(c)
       goto(CommentLtSign)
       return
     }
     if (c == '-') { goto(CommentEndDash); return }
     if (c == 0) {
       parseError("unexpected_null_character")
-      val t = asComment; currToken = t.copy(data = t.data :+ 0xfffd)
+      commentAdd(0xfffd)
       if (specMode) goto(Comment)
       return
     }
-    val t = asComment
-    currToken = t.copy(data = t.data :+ c)
+    commentAdd(c)
     if (specMode) goto(Comment)
   }
 
@@ -1164,8 +1145,8 @@ final class RefTokenizer(
     val c = nextCp()
     if (c < 0) { gotoR(Comment); return }
     currChar = c
-    if (c == '!') { val t = asComment; currToken = t.copy(data = t.data :+ c); goto(CommentLtSignBang); return }
-    if (c == '<') { val t = asComment; currToken = t.copy(data = t.data :+ c); goto(CommentLtSign); return }
+    if (c == '!') { commentAdd(c); goto(CommentLtSignBang); return }
+    if (c == '<') { commentAdd(c); goto(CommentLtSign); return }
     gotoR(Comment)
   }
 
@@ -1216,7 +1197,7 @@ final class RefTokenizer(
     currChar = c
     if (c == '>') { pushCur(); goto(Data); return }
     if (c == '!') { goto(CommentEndBang); return }
-    if (c == '-') { val t = asComment; currToken = t.copy(data = t.data :+ '-'.toInt); goto(CommentEnd); return }
+    if (c == '-') { commentAdd('-'.toInt); goto(CommentEnd); return }
     // Q7b: `tok.data << '--'` lost (:1900-1902)
     gotoR(Comment)
   }
@@ -1227,8 +1208,7 @@ final class RefTokenizer(
     if (c < 0) { parseError("eof_in_comment"); pushCur(); sink.eof(Tok.EofInCommentName, Tok.EofInCommentMsg); return }
     currChar = c
     if (c == '-') {
-      val t = asComment
-      currToken = t.copy(data = t.data ++ Vector('-'.toInt, '-'.toInt, '!'.toInt))
+      commentAdd('-'); commentData.add('-'); commentData.add('!')
       goto(CommentEndDash)
       return
     }
@@ -1285,11 +1265,32 @@ final class RefTokenizer(
     goto(DoctypeName)
   }
 
+  /** Doctype self-loop batching (the name and the quoted ids): the reference
+    * appends one char per handler invocation and writes the copy back, and
+    * nothing reads curr_token in between, so a run of ordinary chars (NUL
+    * → U+FFFD with its parse error, in order) is collected into `docRun`
+    * for one write-back; steps and hits are credited per char. `quote` < 0
+    * means the name, which whitespace ends. Returns the char that ended the
+    * run (-1 at EOF), handled by the caller in this same invocation.
+    */
+  private def doctypeRun(self: Int, quote: Int): Int = {
+    var c = nextCp()
+    var n = 0
+    while (c >= 0 && c != '>' && (if (quote < 0) !isWs(c) else c != quote)) {
+      if (c == 0) { parseError("unexpected_null_character"); docRun.append('\ufffd') }
+      else docRun.appendCodePoint(c)
+      currChar = c; n += 1; c = nextCp()
+    }
+    steps += n; stateHits(self) += n
+    c
+  }
+
   /** 13.2.5.55 (:2002-2039) — Q10: EOF reports unexpected_null_character;
-    * Q12: chars appended un-lowercased.
+    * Q12: chars appended un-lowercased. Self-loop batched ([[doctypeRun]]).
     */
   private def stDoctypeName(): Unit = {
-    val c = nextCp()
+    val c = doctypeRun(DoctypeName, -1)
+    if (docRun.length > 0) { val d = asDoctype; currToken = d.copy(name = d.name + docRun); docRun.setLength(0) }
     if (c < 0) {
       parseError("unexpected_null_character") // Q10
       val d = asDoctype
@@ -1299,16 +1300,7 @@ final class RefTokenizer(
     }
     currChar = c
     if (isWs(c)) { goto(AfterDoctypeName); return }
-    if (c == '>') { pushCur(); goto(Data); return }
-    if (c == 0) {
-      parseError("unexpected_null_character")
-      val d = asDoctype; currToken = d.copy(name = d.name + "�")
-      goto(DoctypeName)
-      return
-    }
-    val d = asDoctype
-    currToken = d.copy(name = d.name + new String(Character.toChars(c))) // Q12
-    goto(DoctypeName)
+    pushCur(); goto(Data) // c == '>'
   }
 
   /** 13.2.5.56 (:2042-2080) — NOTE: a char is consumed BEFORE the PUBLIC /
@@ -1403,10 +1395,14 @@ final class RefTokenizer(
   }
 
   /** 13.2.5.59/.60 (:2187-2272) — EOF path ALSO switches to .data afterwards
-    * (:2197, :2241): a second, generic EOF token is emitted.
+    * (:2197, :2241): a second, generic EOF token is emitted. Self-loop
+    * batched ([[doctypeRun]]).
     */
   private def stDoctypePublicIdentifierQuoted(quote: Int): Unit = {
-    val c = nextCp()
+    val c = doctypeRun(if (quote == '"') DoctypePublicIdentifierDblQuoted else DoctypePublicIdentifierSglQuoted, quote)
+    if (docRun.length > 0) {
+      val d = asDoctype; currToken = d.copy(publicId = d.publicId + docRun); docRun.setLength(0)
+    }
     if (c < 0) {
       doctypeEofQuirksPush()
       goto(Data) // double-EOF quirk
@@ -1414,22 +1410,10 @@ final class RefTokenizer(
     }
     currChar = c
     if (c == quote) { goto(AfterDoctypePublicIdentifier); return }
-    if (c == 0) {
-      parseError("unexpected_null_character")
-      val d = asDoctype; currToken = d.copy(publicId = d.publicId + "�")
-      goto(if (quote == '"') DoctypePublicIdentifierDblQuoted else DoctypePublicIdentifierSglQuoted)
-      return
-    }
-    if (c == '>') {
-      parseError("abrupt_doctype_public_identifier")
-      val d = asDoctype
-      sink.doctype(d.name, d.publicId, d.systemId, forceQuirks = true)
-      goto(Data)
-      return
-    }
+    parseError("abrupt_doctype_public_identifier") // c == '>'
     val d = asDoctype
-    currToken = d.copy(publicId = d.publicId + new String(Character.toChars(c)))
-    goto(if (quote == '"') DoctypePublicIdentifierDblQuoted else DoctypePublicIdentifierSglQuoted)
+    sink.doctype(d.name, d.publicId, d.systemId, forceQuirks = true)
+    goto(Data)
   }
 
   /** 13.2.5.61 (:2275-2319) — Q9: quote branches set system_id='' on a copy
@@ -1530,28 +1514,21 @@ final class RefTokenizer(
     gotoR(BogusDoctype)
   }
 
-  /** 13.2.5.65/.66 (:2474-2557) — no double-EOF here (unlike public id). */
+  /** 13.2.5.65/.66 (:2474-2557) — no double-EOF here (unlike public id).
+    * Self-loop batched ([[doctypeRun]]).
+    */
   private def stDoctypeSystemIdentifierQuoted(quote: Int): Unit = {
-    val c = nextCp()
+    val c = doctypeRun(if (quote == '"') DoctypeSystemIdentifierDblQuoted else DoctypeSystemIdentifierSglQuoted, quote)
+    if (docRun.length > 0) {
+      val d = asDoctype; currToken = d.copy(systemId = d.systemId + docRun); docRun.setLength(0)
+    }
     if (c < 0) { doctypeEofQuirksPush(); return }
     currChar = c
     if (c == quote) { goto(AfterDoctypeSystemIdentifier); return }
-    if (c == 0) {
-      parseError("unexpected_null_character")
-      val d = asDoctype; currToken = d.copy(systemId = d.systemId + "�")
-      goto(if (quote == '"') DoctypeSystemIdentifierDblQuoted else DoctypeSystemIdentifierSglQuoted)
-      return
-    }
-    if (c == '>') {
-      parseError("abrupt_doctype_system_identifier")
-      val d = asDoctype
-      sink.doctype(d.name, d.publicId, d.systemId, forceQuirks = true)
-      goto(Data)
-      return
-    }
+    parseError("abrupt_doctype_system_identifier") // c == '>'
     val d = asDoctype
-    currToken = d.copy(systemId = d.systemId + new String(Character.toChars(c)))
-    goto(if (quote == '"') DoctypeSystemIdentifierDblQuoted else DoctypeSystemIdentifierSglQuoted)
+    sink.doctype(d.name, d.publicId, d.systemId, forceQuirks = true)
+    goto(Data)
   }
 
   /** 13.2.5.67 (:2560-2586) — else path sets NO quirks flag (unlike spec). */
@@ -1689,7 +1666,7 @@ final class RefTokenizer(
     if (c < 0) { doReturnState(true); return }
     currChar = c
     if (isAlnum(c)) {
-      if (isAttrReturn(peekReturn)) attrValueB.appendCodePoint(c) else pushRune(c)
+      if (isAttrReturn(peekReturn)) bufs.valueAppend(c) else pushRune(c)
       goto(AmbiguousAmpersand)
       return
     }
@@ -1795,8 +1772,19 @@ object RefTokenizer {
   private sealed trait Cur
   private case object CurEofInit extends Cur // initial `EOFToken{}` (tokenizer/tokenizer.v:117)
   private case object CurTag extends Cur // the tag register (RefTokenizer.tagIsStart, …)
-  private final case class CurComment(data: Vector[Int]) extends Cur
+  private case object CurComment extends Cur // the comment register (RefTokenizer.commentData)
   private final case class CurDoctype(name: String, publicId: String, systemId: String, forceQuirks: Boolean) extends Cur
+
+  /** Extract-mode state after each known start tag (Data when absent). */
+  private val dataTargetOf: Array[Int] = {
+    val a = Array.fill(TagNames.size)(St.Data)
+    a(TagNames.Script) = St.ScriptData
+    Seq(TagNames.Style, TagNames.Xmp, TagNames.Iframe, TagNames.Noembed, TagNames.Noframes)
+      .foreach(a(_) = St.Rawtext)
+    a(TagNames.Title) = St.Rcdata; a(TagNames.Textarea) = St.Rcdata
+    a(TagNames.Plaintext) = St.Plaintext
+    a
+  }
 
   /** windows-1252 C1 remap (tokenizer/tokenizer.v:2940-2953); 0 = absent. */
   private val c1Remap: Array[Int] = {
@@ -1888,7 +1876,7 @@ object RefTokenizer {
   }
 }
 
-/** Growable int buffer with V-Builder read-and-clear semantics. */
+/** Growable codepoint buffer (the scratch builder, the comment register). */
 final class IntBuf {
   private var a: Array[Int] = new Array[Int](16)
   private var n: Int = 0
@@ -1898,8 +1886,8 @@ final class IntBuf {
     n += 1
   }
   def addAll(xs: Array[Int]): Unit = { var i = 0; while (i < xs.length) { add(xs(i)); i += 1 } }
-  /** read-and-clear, like V strings.Builder.str() (load-bearing for Q1). */
-  def take(): Array[Int] = { val r = java.util.Arrays.copyOf(a, n); n = 0; r }
+  /** The codepoints as a string. */
+  def mkString: String = new String(a, 0, n)
   @inline def apply(i: Int): Int = a(i)
   def clear(): Unit = n = 0
   def length: Int = n
@@ -1912,43 +1900,70 @@ final class IntBuf {
 }
 
 /** The tokenizer's growable buffers, owned by the caller so they keep their
-  * capacity from page to page: the attribute name and value builders (V's
+  * capacity from page to page: the current attribute's name and value (V's
   * `curr_attr`), the tag register's pending name characters and its
-  * attribute list. `ExtractSink` holds one per partition, so a 64 KB
-  * attribute blob grows the value builder once per partition, not once per
-  * page. A tokenizer clears them when it starts.
+  * attribute list, the comment register's data and the doctype run
+  * builder. `ExtractSink` holds one per partition, so a long attribute
+  * value grows the value builder once per partition, not once per page. A
+  * tokenizer resets them when it starts.
   */
 final class TokenizerBuffers {
   val attrName = new java.lang.StringBuilder
-  val attrValue = new java.lang.StringBuilder
   val tagName = new java.lang.StringBuilder
-  private var keys = new Array[String](8)
-  private var vals = new Array[String](8)
-  private var nAttrs = 0
+  val attrs = new Attrs
+  val comment = new IntBuf
+  val doctype = new java.lang.StringBuilder
+  // the current attribute's value: the builder, or (byte mode, builder
+  // empty) one input run [runFrom, runFrom + runLen) not copied yet
+  private val value = new java.lang.StringBuilder
+  private var runFrom = -1
+  private var runLen = 0
+  private var input: Array[Byte] = null
 
-  def clear(): Unit = {
-    attrName.setLength(0); attrValue.setLength(0); tagName.setLength(0)
-    java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null) // drop the last page's blob values
-    nAttrs = 0
+  /** Starts a page over `in` (the byte-mode input, or null). */
+  def reset(in: Array[Byte]): Unit = {
+    attrName.setLength(0); tagName.setLength(0); valueClear(); comment.clear(); doctype.setLength(0)
+    input = in
+    attrs.reset(in)
   }
 
-  def clearAttrs(): Unit = nAttrs = 0
+  def valueClear(): Unit = { value.setLength(0); runFrom = -1 }
 
-  def addAttr(k: String, v: String): Unit = {
-    if (nAttrs == keys.length) {
-      keys = java.util.Arrays.copyOf(keys, nAttrs * 2)
-      vals = java.util.Arrays.copyOf(vals, nAttrs * 2)
-    }
-    keys(nAttrs) = k; vals(nAttrs) = v; nAttrs += 1
+  /** Copies a pending run into the builder before anything else is added. */
+  private def spill(): Unit = if (runFrom >= 0) {
+    var i = runFrom
+    while (i < runFrom + runLen) { value.append(input(i).toChar); i += 1 }
+    runFrom = -1
   }
 
-  /** The attribute list as the token's immutable vector, in document order. */
-  def attrs(): Vector[(String, String)] =
-    if (nAttrs == 0) Vector.empty
+  def valueAppend(cp: Int): Unit = { spill(); value.appendCodePoint(cp) }
+
+  def valueAppend(cps: Array[Int], from: Int, until: Int): Unit = {
+    spill()
+    var i = from
+    while (i < until) { value.appendCodePoint(cps(i)); i += 1 }
+  }
+
+  /** Byte mode: the input run [from, until) joins the value, as a pending
+    * run when it is the whole value so far.
+    */
+  def valueAppendRun(from: Int, until: Int): Unit =
+    if (runFrom < 0 && value.length == 0) { runFrom = from; runLen = until - from }
     else {
-      val a = new Array[(String, String)](nAttrs)
-      var i = 0
-      while (i < nAttrs) { a(i) = (keys(i), vals(i)); i += 1 }
-      Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(a))
+      spill()
+      var i = from
+      while (i < until) { value.append(input(i).toChar); i += 1 }
     }
+
+  /** V `t.curr_attr.name.str()` / `.value.str()`, both read-and-clear: the
+    * current attribute joins the list and the builders are empty again.
+    */
+  def flushAttr(): Unit = {
+    val id = AttrNames.id(attrName)
+    val name = if (id >= 0) AttrNames.name(id) else attrName.toString
+    attrName.setLength(0)
+    if (runFrom >= 0) attrs.addRun(id, name, runFrom, runLen)
+    else attrs.add(id, name, value.toString)
+    valueClear()
+  }
 }

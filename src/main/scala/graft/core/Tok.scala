@@ -82,6 +82,13 @@ trait TokenSink {
     while (i < until) { char(src(i).toInt); i += 1 }
   }
   def tag(isStart: Boolean, name: String, selfClosing: Boolean, attrs: Vector[(String, String)]): Unit
+  /** The tokenizer's tag delivery: `id` is the name's [[TagNames]] id (-1
+    * for an unknown name) and `attrs` a view of the tag's attributes that
+    * is reused from tag to tag, so it is valid only during the call. The
+    * default materializes the attributes for [[tag]].
+    */
+  def tagView(isStart: Boolean, id: Int, name: String, selfClosing: Boolean, attrs: Attrs): Unit =
+    tag(isStart, name, selfClosing, attrs.toVector)
   /** Extract-mode tree feedback: true while the insertion point is inside
     * foreign content (svg/math), where `<![CDATA[` opens a real CDATA
     * section (WHATWG §13.2.5.42) instead of a bogus comment. Fidelity mode
@@ -137,4 +144,74 @@ final class FidelityCountSink extends TokenSink {
   def doctype(name: String, publicId: String, systemId: String, forceQuirks: Boolean): Unit = ()
   def eof(name: String, msg: String): Unit = ()
   def parseError(code: String): Unit = ()
+}
+
+/** A tag's attributes in document order, as a sink reads them: `length`,
+  * `nameId(i)` (the [[AttrNames]] id, -1 for an unknown name), `name(i)`
+  * and `value(i)`. One instance is reused from tag to tag. In byte mode a
+  * value that is one run of the input stays an offset and a length until
+  * `value(i)` first reads it, so an attribute no sink reads is never copied.
+  */
+final class Attrs {
+  private var ids = new Array[Int](8)
+  private var names = new Array[String](8)
+  private var vals = new Array[String](8)
+  private var offs = new Array[Int](8)
+  private var lens = new Array[Int](8)
+  private var input: Array[Byte] = null // ASCII bytes the runs index into
+  private var n = 0
+
+  def length: Int = n
+  def nameId(i: Int): Int = ids(i)
+  def name(i: Int): String = names(i)
+  def value(i: Int): String = {
+    if (vals(i) == null) vals(i) = new String(input, offs(i), lens(i), java.nio.charset.StandardCharsets.ISO_8859_1)
+    vals(i)
+  }
+
+  def toVector: Vector[(String, String)] =
+    if (n == 0) Vector.empty
+    else {
+      val a = new Array[(String, String)](n)
+      var i = 0
+      while (i < n) { a(i) = (names(i), value(i)); i += 1 }
+      Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(a))
+    }
+
+  /** Replaces the list with `v`'s pairs (the `tag(…, Vector)` bridge). */
+  def set(v: Vector[(String, String)]): Unit = {
+    clear()
+    v.foreach { case (k, x) => add(AttrNames.id(k), k, x) }
+  }
+
+  private[core] def clear(): Unit = n = 0
+
+  /** Starts a page: drops the last page's values (a blob may be 64 KB) and
+    * takes the input that runs index into.
+    */
+  private[core] def reset(in: Array[Byte]): Unit = {
+    java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
+    input = in
+    n = 0
+  }
+
+  private def slot(id: Int, name: String): Int = {
+    if (n == ids.length) {
+      ids = java.util.Arrays.copyOf(ids, n * 2); names = java.util.Arrays.copyOf(names, n * 2)
+      vals = java.util.Arrays.copyOf(vals, n * 2); offs = java.util.Arrays.copyOf(offs, n * 2)
+      lens = java.util.Arrays.copyOf(lens, n * 2)
+    }
+    ids(n) = id; names(n) = name; n += 1
+    n - 1
+  }
+
+  private[core] def add(id: Int, name: String, value: String): Unit = {
+    val i = slot(id, name) // may grow `vals`
+    vals(i) = value
+  }
+
+  private[core] def addRun(id: Int, name: String, off: Int, len: Int): Unit = {
+    val i = slot(id, name)
+    vals(i) = null; offs(i) = off; lens(i) = len
+  }
 }

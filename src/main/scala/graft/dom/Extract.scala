@@ -151,7 +151,7 @@ object ExtractConfig {
   val minBlockTextLen = 8
   val maxLinkDensity = 0.5
 
-  // ---- per-name bit flags (the per-tag hot path does ONE hash lookup) -----
+  // ---- per-name bit flags (the per-tag hot path does ONE array read) ------
   final val FBlacklist = 1 << 0
   final val FVoid = 1 << 1
   final val FBlock = 1 << 2
@@ -173,17 +173,16 @@ object ExtractConfig {
   final val FSpecial = 1 << 18
   final val FTableSection = 1 << 19 // row/section/cell/caption family (clears to table context)
 
-  /** name → OR of all flag/scope bits; names absent from every set → 0.
-    * Keyed by the TagNames strings the tokenizer emits, so a known tag's
-    * lookup is an identity hit; every name here must be in that table.
+  /** TagNames id → OR of all flag/scope bits; names absent from every set
+    * → 0. Every name in the sets must be in TagNames (checked at class init).
     */
-  val flagTable: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](128)
+  val flagTable: Array[Int] = {
+    val m = new Array[Int](TagNames.size)
     def add(s: Iterable[String], bit: Int): Unit =
       s.foreach { n =>
-        val k = TagNames.lookup(n)
-        require(k != null, s"$n is not in TagNames")
-        m.merge(k, Integer.valueOf(bit), (a, b) => Integer.valueOf(a.intValue | b.intValue))
+        val k = TagNames.id(n)
+        require(k >= 0, s"$n is not in TagNames")
+        m(k) |= bit
       }
     add(blacklist, FBlacklist); add(voids, FVoid); add(blocks, FBlock)
     add(closesP, FClosesP); add(formatting, FFormatting); add(fosterSet, FFoster)
@@ -198,9 +197,22 @@ object ExtractConfig {
     m
   }
 
-  @inline def flagsOf(name: String): Int = {
-    val v = flagTable.get(name)
-    if (v == null) 0 else v.intValue
+  /** Flag bits of a TagNames id; an unknown name (-1) has none. */
+  @inline def flagsOf(id: Int): Int = if (id < 0) 0 else flagTable(id)
+
+  /** The WHATWG microdata value-ATTRIBUTE rule per element (TagNames id →
+    * AttrNames id; -1 = the property value is the element's text content).
+    */
+  val mdValueAttr: Array[Int] = {
+    val m = Array.fill(TagNames.size)(-1)
+    def set(attr: Int, tags: String*): Unit = tags.foreach(t => m(TagNames.id(t)) = attr)
+    set(AttrNames.Content, "meta")
+    set(AttrNames.Href, "a", "area", "link")
+    set(AttrNames.Src, "img", "audio", "video", "embed", "iframe", "source", "track")
+    set(AttrNames.Data, "object")
+    set(AttrNames.Value, "data")
+    set(AttrNames.Datetime, "time") // absent datetime → text content (spec)
+    m
   }
 }
 
@@ -345,6 +357,90 @@ final class IntVec(initial: Int = 16) {
   def dropRightInPlace(k: Int): Unit = n -= k
 }
 
+/** The tree builder's stack of open elements: parallel arrays of arena
+  * node, TagNames id (-1 for an unknown name), name and ExtractConfig flag
+  * bits, plus the number of open entries per known id. With the counts,
+  * "is no X open" is O(1), so the scope scans a start tag makes (an open
+  * `p` to close, an open `table` to foster into) do not walk a deep stack.
+  */
+final class OpenStack {
+  private[this] var node = new Array[Int](64)
+  private[this] var ids = new Array[Int](64)
+  private[this] var names = new Array[String](64)
+  private[this] var flag = new Array[Int](64)
+  private[this] val open = new Array[Int](TagNames.size)
+  private[this] var n = 0
+
+  def length: Int = n
+  def top: Int = n - 1
+  def nodeAt(i: Int): Int = node(i)
+  def idAt(i: Int): Int = ids(i)
+  def nameAt(i: Int): String = names(i)
+  def flagsAt(i: Int): Int = flag(i)
+  def setNode(i: Int, v: Int): Unit = node(i) = v
+  def isOpen(id: Int): Boolean = open(id) > 0
+
+  def clear(): Unit = {
+    java.util.Arrays.fill(open, 0)
+    java.util.Arrays.fill(names.asInstanceOf[Array[AnyRef]], 0, n, null)
+    n = 0
+  }
+
+  def push(nd: Int, id: Int, name: String, f: Int): Unit = insert(n, nd, id, name, f)
+
+  def insert(i: Int, nd: Int, id: Int, name: String, f: Int): Unit = {
+    if (n == node.length) {
+      node = java.util.Arrays.copyOf(node, n * 2); ids = java.util.Arrays.copyOf(ids, n * 2)
+      names = java.util.Arrays.copyOf(names, n * 2); flag = java.util.Arrays.copyOf(flag, n * 2)
+    }
+    if (i < n) {
+      System.arraycopy(node, i, node, i + 1, n - i); System.arraycopy(ids, i, ids, i + 1, n - i)
+      System.arraycopy(names, i, names, i + 1, n - i); System.arraycopy(flag, i, flag, i + 1, n - i)
+    }
+    node(i) = nd; ids(i) = id; names(i) = name; flag(i) = f
+    if (id >= 0) open(id) += 1
+    n += 1
+  }
+
+  /** Removes entry `i`; the top (a pop) just shrinks the length. */
+  def removeAt(i: Int): Unit = {
+    if (ids(i) >= 0) open(ids(i)) -= 1
+    val k = n - i - 1
+    if (k > 0) {
+      System.arraycopy(node, i + 1, node, i, k); System.arraycopy(ids, i + 1, ids, i, k)
+      System.arraycopy(names, i + 1, names, i, k); System.arraycopy(flag, i + 1, flag, i, k)
+    }
+    n -= 1
+    names(n) = null
+  }
+
+  @inline private def holds(i: Int, id: Int, name: String): Boolean =
+    if (id >= 0) ids(i) == id else ids(i) < 0 && names(i) == name
+
+  /** Last index above the root holding the element (`id`, or `name` when
+    * the id is -1), scanning down but never past an entry with a `stopMask`
+    * flag (§13.2.4.2 "has an element in scope"); -1 when out of scope.
+    */
+  def lastIndexWithin(id: Int, name: String, stopMask: Int): Int = {
+    if (id >= 0 && open(id) == 0) return -1
+    var i = n - 1
+    while (i > 0) {
+      if (holds(i, id, name)) return i
+      if ((flag(i) & stopMask) != 0) return -1
+      i -= 1
+    }
+    -1
+  }
+
+  /** Last index holding the known element `id` (-1 when none is open). */
+  def lastIndexOf(id: Int): Int = {
+    if (open(id) == 0) return -1
+    var i = n - 1
+    while (i >= 0 && ids(i) != id) i -= 1
+    i
+  }
+}
+
 /** Boolean sibling of IntVec (span link flags, active-formatting open bits). */
 final class BoolVec(initial: Int = 16) {
   private[this] var a = new Array[Boolean](initial)
@@ -380,10 +476,10 @@ final class ExtractSink extends TokenSink {
   /** the tokenizer's builders, kept across this sink's pages (see Extractor) */
   val tokenizerBuffers = new TokenizerBuffers
 
-  // open-element stack (parallel arrays)
-  private val stkNode = new IntVec(64); stkNode += root
-  private val stkName = ArrayBuffer("#root")
-  private val stkFlags = new IntVec(64); stkFlags += 0 // ExtractConfig flag bits per entry
+  private val T = TagNames
+  private val A = AttrNames
+
+  private val stk = new OpenStack; stk.push(root, -1, "#root", 0)
   private var skipDepth = 0 // >0 → inside blacklisted subtree
   private var dropNl = false // spec: newline right after <pre>/<listing>/<textarea> is ignored
   private var linkDepth = 0
@@ -395,11 +491,11 @@ final class ExtractSink extends TokenSink {
   private var headIdx = -1
   private var bodyIdx = -1
 
-  // active formatting elements (§13.2.4.3): name + currently-open flag +
-  // arena node (the adoption agency's entry identity); markers record list
-  // length at table/td/caption entry so reconstruction never crosses a cell
-  // boundary
-  private val activeFmt = ArrayBuffer.empty[String]
+  // active formatting elements (§13.2.4.3): TagNames id + currently-open
+  // flag + arena node (the adoption agency's entry identity); markers record
+  // list length at table/td/caption entry so reconstruction never crosses a
+  // cell boundary
+  private val activeFmt = new IntVec
   private val activeFmtOpen = new BoolVec
   private val activeFmtNode = new IntVec
   // outLinks index of an `a` entry's source link (-1 otherwise). Rides the
@@ -480,9 +576,7 @@ final class ExtractSink extends TokenSink {
   def reset(): Unit = {
     arena.clear()
     root = arena.add("#root", -1)
-    stkNode.clear(); stkNode += root
-    stkName.clear(); stkName += "#root"
-    stkFlags.clear(); stkFlags += 0
+    stk.clear(); stk.push(root, -1, "#root", 0)
     skipDepth = 0; linkDepth = 0; blockTop = root; foreignDepth = 0; dropNl = false
     htmlIdx = -1; headIdx = -1; bodyIdx = -1
     activeFmt.clear(); activeFmtOpen.clear(); activeFmtNode.clear(); activeFmtLink.clear(); fmtMarkers.clear()
@@ -514,17 +608,10 @@ final class ExtractSink extends TokenSink {
     runFosterRef = -1
   }
 
-  /** Last open-stack index holding `name` (-1 when absent). */
-  private def stackIndexOf(name: String): Int = {
-    var i = stkName.length - 1
-    while (i >= 0 && stkName(i) != name) i -= 1
-    i
-  }
-
   private def blockUpTo(topIdx: Int): Int = {
     var i = topIdx
-    while (i > 0 && (stkFlags(i) & FBlock) == 0) i -= 1
-    stkNode(i)
+    while (i > 0 && (stk.flagsAt(i) & FBlock) == 0) i -= 1
+    stk.nodeAt(i)
   }
 
   /** outLinks index of the innermost open `a` (via its AFL entry), -1 when
@@ -532,10 +619,11 @@ final class ExtractSink extends TokenSink {
     * stack-removal fallback left an a outside the AFL).
     */
   private def currentLinkIdx(): Int = {
-    var i = stkName.length - 1
+    if (!stk.isOpen(T.A)) return -1
+    var i = stk.top
     while (i > 0) {
-      if (stkName(i) == "a") {
-        val af = aflIdxOfNode(stkNode(i))
+      if (stk.idAt(i) == T.A) {
+        val af = aflIdxOfNode(stk.nodeAt(i))
         return if (af >= 0) activeFmtLink(af) else -1
       }
       i -= 1
@@ -545,7 +633,7 @@ final class ExtractSink extends TokenSink {
 
   private def startRunIfNeeded(): Unit = {
     if (runStart < 0) {
-      val top = stkName.length - 1
+      val top = stk.top
       runStart = text.length
       runLink = linkDepth > 0
       runLinkIdx = if (runLink) currentLinkIdx() else -1 // O(depth) only inside links
@@ -554,17 +642,17 @@ final class ExtractSink extends TokenSink {
       // the run's text node hangs under the table's arena parent, linked
       // before the table in sibling order
       runFosterRef = -1
-      if ((stkFlags(top) & FFoster) != 0) {
-        val ti = stackIndexOf("table")
+      if ((stk.flagsAt(top) & FFoster) != 0) {
+        val ti = stk.lastIndexOf(T.Table)
         if (ti > 0) {
-          runFosterRef = stkNode(ti)
+          runFosterRef = stk.nodeAt(ti)
           runAnchor = arena.parent(runFosterRef)
           runBlock = blockUpTo(ti - 1)
           return
         }
       }
       runBlock = blockTop
-      runAnchor = stkNode(top)
+      runAnchor = stk.nodeAt(top)
     }
   }
 
@@ -579,10 +667,10 @@ final class ExtractSink extends TokenSink {
       // non-ws text while the insertion point is the head itself implies
       // </head> (§ "in head": anything else → pop head, reprocess); text
       // nested in title/style/script stays where it is
-      if (stkName(stkName.length - 1) == "head" || skipDepth == 0) ensureBody()
+      if (stk.idAt(stk.top) == T.Head || skipDepth == 0) ensureBody()
     }
     if (skipDepth > 0) return false
-    if (runStart < 0 && (stkFlags(stkFlags.length - 1) & FFoster) == 0)
+    if (runStart < 0 && (stk.flagsAt(stk.top) & FFoster) == 0)
       reconstructFmt()
     true
   }
@@ -657,41 +745,38 @@ final class ExtractSink extends TokenSink {
   private def isWsCp(cp: Int): Boolean =
     cp == ' ' || cp == '\t' || cp == '\n' || cp == '\r' || cp == 0x0c
 
-  private def recomputeBlockTop(): Unit = {
-    var i = stkFlags.length - 1
-    while (i > 0 && (stkFlags(i) & FBlock) == 0) i -= 1
-    blockTop = stkNode(i)
-  }
+  private def recomputeBlockTop(): Unit = blockTop = blockUpTo(stk.top)
 
-  /** Push an element onto the open stack (arena node already created);
-    * `f` = flagsOf(name), computed once by the caller. `before` ≥ 0 =
-    * foster insertion point: link before that sibling instead of appending.
+  /** Push a known element onto the open stack (its canonical name). */
+  private def pushOpen(tid: Int, par: Int): Int = pushOpen(tid, T.name(tid), par, flagsOf(tid))
+
+  /** Push an element onto the open stack and into the arena; `f` =
+    * flagsOf(tid), computed once by the caller. `before` ≥ 0 = foster
+    * insertion point: link before that sibling instead of appending.
     */
-  private def pushOpen(name: String, par: Int, f: Int, before: Int = -1): Int = {
+  private def pushOpen(tid: Int, name: String, par: Int, f: Int, before: Int = -1): Int = {
     val id = if (before >= 0) arena.addBefore(name, par, before) else arena.add(name, par)
-    stkNode += id
-    stkName += name
-    stkFlags += f
+    stk.push(id, tid, name, f)
     if ((f & FBlacklist) != 0) skipDepth += 1
-    if ((f & FFormatting) != 0 && name == "a") linkDepth += 1
-    if (name == "svg" || name == "math") foreignDepth += 1
+    if (tid == T.A) linkDepth += 1
+    if (tid == T.Svg || tid == T.Math) foreignDepth += 1
     if ((f & FBlock) != 0) blockTop = id
     if ((f & FMarker) != 0) fmtMarkers += activeFmt.length
-    if (!titleDone && name == "title") inTitle = true
+    if (!titleDone && tid == T.Title) inTitle = true
     id
   }
 
   private def popTo(idx: Int): Unit = {
     // pop stack entries above and including idx
-    var i = stkName.length - 1
+    var i = stk.top
     while (i >= idx) {
-      val nm = stkName(i)
-      val f = stkFlags(i)
+      val tid = stk.idAt(i)
+      val f = stk.flagsAt(i)
       if ((f & FBlacklist) != 0) skipDepth -= 1
-      if ((f & FFormatting) != 0 && nm == "a") linkDepth -= 1
-      if (nm == "svg" || nm == "math") foreignDepth -= 1
-      if (inTitle && nm == "title") { inTitle = false; titleDone = true }
-      if (inLd && nm == "script") flushLd()
+      if (tid == T.A) linkDepth -= 1
+      if (tid == T.Svg || tid == T.Math) foreignDepth -= 1
+      if (inTitle && tid == T.Title) { inTitle = false; titleDone = true }
+      if (inLd && tid == T.Script) flushLd()
       if ((f & FMarker) != 0 && fmtMarkers.nonEmpty) {
         // clear active formatting up to the marker (§ "clear ... to last marker")
         val m = fmtMarkers.remove(fmtMarkers.length - 1)
@@ -704,30 +789,18 @@ final class ExtractSink extends TokenSink {
         var j = activeFmt.length - 1
         var done = false
         while (j >= 0 && !done) {
-          if (activeFmt(j) == nm && activeFmtOpen(j)) { activeFmtOpen(j) = false; done = true }
+          if (activeFmt(j) == tid && activeFmtOpen(j)) { activeFmtOpen(j) = false; done = true }
           j -= 1
         }
       }
-      stkName.remove(i)
-      stkNode.remove(i)
-      stkFlags.remove(i)
+      stk.removeAt(i)
       i -= 1
     }
     recomputeBlockTop()
   }
 
-  /** Last stack index holding `name`, scanning down but never past a scope
-    * boundary (§13.2.4.2 "has an element in scope"); -1 when out of scope.
-    */
-  private def lastIndexWithin(name: String, stopMask: Int): Int = {
-    var i = stkName.length - 1
-    while (i > 0) {
-      if (stkName(i) == name) return i
-      if ((stkFlags(i) & stopMask) != 0) return -1
-      i -= 1
-    }
-    -1
-  }
+  /** Last stack index holding the known element `tid` in `stopMask` scope. */
+  @inline private def lastIndexWithin(tid: Int, stopMask: Int): Int = stk.lastIndexWithin(tid, null, stopMask)
 
   /** Re-open implicitly-closed active formatting elements at the current
     * insertion point (§13.2.4.3 "reconstruct"), never crossing the last
@@ -739,8 +812,7 @@ final class ExtractSink extends TokenSink {
     var i = start
     while (i < activeFmt.length) {
       if (!activeFmtOpen(i)) {
-        val nm = activeFmt(i)
-        val id = pushOpen(nm, stkNode(stkNode.length - 1), flagsOf(nm))
+        val id = pushOpen(activeFmt(i), stk.nodeAt(stk.top))
         activeFmtOpen(i) = true
         activeFmtNode(i) = id // the re-opened element is a NEW node
       }
@@ -752,23 +824,14 @@ final class ExtractSink extends TokenSink {
     activeFmt.remove(i); activeFmtOpen.remove(i); activeFmtNode.remove(i); activeFmtLink.remove(i)
   }
 
-  private def removeLastFmtEntry(name: String): Unit = {
-    val start = if (fmtMarkers.isEmpty) 0 else fmtMarkers(fmtMarkers.length - 1)
-    var i = activeFmt.length - 1
-    while (i >= start) {
-      if (activeFmt(i) == name) { removeFmtAt(i); return }
-      i -= 1
-    }
-  }
-
-  /** Last active-formatting entry with `name` between the end of the list
+  /** Last active-formatting entry for `tid` between the end of the list
     * and the last marker (§13.2.6.4.7 step 4), or -1.
     */
-  private def lastFmtIdx(name: String): Int = {
+  private def lastFmtIdx(tid: Int): Int = {
     val start = if (fmtMarkers.isEmpty) 0 else fmtMarkers(fmtMarkers.length - 1)
     var i = activeFmt.length - 1
     while (i >= start) {
-      if (activeFmt(i) == name) return i
+      if (activeFmt(i) == tid) return i
       i -= 1
     }
     -1
@@ -781,62 +844,70 @@ final class ExtractSink extends TokenSink {
   }
 
   private def stackIdxOfNode(id: Int): Int = {
-    var i = stkNode.length - 1
-    while (i > 0 && stkNode(i) != id) i -= 1
+    var i = stk.top
+    while (i > 0 && stk.nodeAt(i) != id) i -= 1
     i
   }
 
   // ---- implied document structure (§13.2.6.4.1-4.6) -----------------------
 
   private def ensureHtml(): Unit =
-    if (htmlIdx < 0) htmlIdx = pushOpen("html", root, flagsOf("html"))
+    if (htmlIdx < 0) htmlIdx = pushOpen(T.Html, root)
 
   private def ensureHead(): Unit = {
     ensureHtml()
-    if (headIdx < 0 && bodyIdx < 0)
-      headIdx = pushOpen("head", stkNode(stkNode.length - 1), flagsOf("head"))
+    if (headIdx < 0 && bodyIdx < 0) headIdx = pushOpen(T.Head, stk.nodeAt(stk.top))
   }
 
   private def ensureBody(): Unit = {
     ensureHtml()
     if (bodyIdx < 0) {
-      val h = stackIndexOf("head")
+      val h = stk.lastIndexOf(T.Head)
       if (h > 0) popTo(h) // implied </head>
-      bodyIdx = pushOpen("body", htmlIdx, flagsOf("body"))
+      bodyIdx = pushOpen(T.Body, htmlIdx)
     }
   }
 
+  /** Bridge for callers holding a token vector: the same tree-builder path
+    * as the tokenizer's [[tagView]].
+    */
   override def tag(isStart: Boolean, name: String, selfClosing: Boolean, attrs: Vector[(String, String)]): Unit = {
+    vecAttrs.set(attrs)
+    val tid = T.id(name)
+    tagView(isStart, tid, if (tid >= 0) T.name(tid) else name, selfClosing, vecAttrs)
+  }
+  private val vecAttrs = new Attrs
+
+  /** Index of the first attribute with AttrNames id `k`, or -1. */
+  private def attrIdx(attrs: Attrs, k: Int): Int = {
+    var i = 0
+    while (i < attrs.length) { if (attrs.nameId(i) == k) return i; i += 1 }
+    -1
+  }
+
+  override def tagView(isStart: Boolean, tid: Int, name: String, selfClosing: Boolean, attrs: Attrs): Unit = {
     nTokens += 1
     nTags += 1
     closeRun()
     if (isStart) {
       // outlink capture (document-level link graph — boilerplate links
       // included by design; the density heuristics judge TEXT, the graph
-      // wants every edge). One name check per start tag; attrs are already
-      // materialized by the tokenizer.
-      if (name == "a") {
+      // wants every edge). One id check per start tag; only the captured
+      // attributes' values are read.
+      if (tid == T.A) {
         pendingLinkIdx = -1
-        var i = 0
-        while (i < attrs.length && pendingLinkIdx < 0) {
-          if (attrs(i)._1 == "href") { outLinks += attrs(i)._2; pendingLinkIdx = outLinks.length - 1 }
-          i += 1
-        }
-      } else if (name == "img" && attrs.nonEmpty) {
+        val i = attrIdx(attrs, A.Href)
+        if (i >= 0) { outLinks += attrs.value(i); pendingLinkIdx = outLinks.length - 1 }
+      } else if (tid == T.Img && attrs.length > 0) {
         // image capture: (src, alt) pairs ride the output row — the
         // caption-pair source an image-text corpus build joins on. src-less
         // imgs (lazy-load placeholders) are skipped.
-        var src: String = null
-        var alt: String = null
-        var i = 0
-        while (i < attrs.length) {
-          val k = attrs(i)._1
-          if (k == "src") { if (src == null) src = attrs(i)._2 }
-          else if (k == "alt" && alt == null) alt = attrs(i)._2
-          i += 1
+        val src = attrIdx(attrs, A.Src)
+        if (src >= 0) {
+          val alt = attrIdx(attrs, A.Alt)
+          imgSrcs += attrs.value(src); imgAlts += (if (alt < 0) "" else attrs.value(alt))
         }
-        if (src != null) { imgSrcs += src; imgAlts += (if (alt == null) "" else alt) }
-      } else if (name == "html" && declaredLang.isEmpty && attrs.nonEmpty) {
+      } else if (tid == T.Html && declaredLang.isEmpty && attrs.length > 0) {
         // <html lang=...>: the declared document language. First html tag
         // CARRYING lang wins — the spec merges missing attributes from
         // later <html> tags onto the root, so a lang-less first tag still
@@ -844,109 +915,82 @@ final class ExtractSink extends TokenSink {
         // → ASCII-lowercased.
         var i = 0
         while (i < attrs.length && declaredLang.isEmpty) {
-          if (attrs(i)._1 == "lang" && attrs(i)._2.nonEmpty)
-            declaredLang = attrs(i)._2.toLowerCase(java.util.Locale.ROOT)
+          if (attrs.nameId(i) == A.Lang && attrs.value(i).nonEmpty)
+            declaredLang = attrs.value(i).toLowerCase(java.util.Locale.ROOT)
           i += 1
         }
-      } else if (name == "base" && baseHref.isEmpty && attrs.nonEmpty) {
+      } else if (tid == T.Base && baseHref.isEmpty && attrs.length > 0) {
         // <base href>: the document's link-resolution base; first wins
-        var i = 0
-        var done = false
-        while (i < attrs.length && !done) {
-          if (attrs(i)._1 == "href") { baseHref = attrs(i)._2; done = true }
-          i += 1
-        }
-      } else if (name == "link" && canonicalHref.isEmpty && attrs.nonEmpty) {
+        val i = attrIdx(attrs, A.Href)
+        if (i >= 0) baseHref = attrs.value(i)
+      } else if (tid == T.Link && canonicalHref.isEmpty && attrs.length > 0) {
         // <link rel=canonical href>: the page's self-declared duplicate-
         // cluster key. rel is a space-separated token list ("alternate
         // canonical" counts), matched case-insensitively; first wins.
-        var rel: String = null
-        var href: String = null
-        var i = 0
-        while (i < attrs.length) {
-          val k = attrs(i)._1
-          if (k == "rel" && rel == null) rel = attrs(i)._2
-          else if (k == "href" && href == null) href = attrs(i)._2
-          i += 1
-        }
-        if (rel != null && href != null && hasLinkToken(rel, "canonical"))
-          canonicalHref = href
-      } else if (name == "script" && attrs.nonEmpty) {
+        val rel = attrIdx(attrs, A.Rel)
+        val href = attrIdx(attrs, A.Href)
+        if (rel >= 0 && href >= 0 && hasLinkToken(attrs.value(rel), "canonical"))
+          canonicalHref = attrs.value(href)
+      } else if (tid == T.Script && attrs.length > 0) {
         // <script type="application/ld+json">: schema.org structured data.
         // MIME match is essence-only (parameters after ';' ignored, ASCII
         // case-insensitive, surrounding whitespace trimmed) — the rule
         // browsers and search crawlers apply to the type attribute.
-        var i = 0
-        var ty: String = null
-        while (i < attrs.length && ty == null) {
-          if (attrs(i)._1 == "type") ty = attrs(i)._2
-          i += 1
-        }
-        if (ty != null && isLdJsonMime(ty)) { inLd = true; ldBuf.setLength(0) }
-      } else if (name == "meta" && attrs.nonEmpty) {
+        val ty = attrIdx(attrs, A.Type)
+        if (ty >= 0 && isLdJsonMime(attrs.value(ty))) { inLd = true; ldBuf.setLength(0) }
+      } else if (tid == T.Meta && attrs.length > 0) {
         // <meta name=robots content=...>: corpora respect noindex; first
         // wins. <meta property="og:*" content=...>: Open Graph pairs (the
         // og:image/og:title caption+preview metadata) accumulate in
         // document order — sites legitimately repeat og:image.
-        var nm: String = null
-        var prop: String = null
-        var ct: String = null
-        attrs.foreach { case (k, v) =>
-          if (k == "name" && nm == null) nm = v
-          else if (k == "property" && prop == null) prop = v
-          else if (k == "content" && ct == null) ct = v
-        }
-        if (ct != null) {
-          if (metaRobots.isEmpty && nm != null && nm.equalsIgnoreCase("robots")) metaRobots = ct
+        val ct = attrIdx(attrs, A.Content)
+        if (ct >= 0) {
+          val nm = attrIdx(attrs, A.Name)
+          if (metaRobots.isEmpty && nm >= 0 && attrs.value(nm).equalsIgnoreCase("robots"))
+            metaRobots = attrs.value(ct)
           // og:* plus the article:* namespace (OpenGraph's structured
           // article properties — article:published_time is the standard
           // publication-date channel real pages declare); cheap first-char
           // gate before paying the lowercase
+          val pi = attrIdx(attrs, A.Property)
+          val prop = if (pi >= 0) attrs.value(pi) else null
           if (prop != null && prop.length > 3) {
             val c0 = prop.charAt(0)
             if (c0 == 'o' || c0 == 'O' || c0 == 'a' || c0 == 'A') {
               val pl = prop.toLowerCase(java.util.Locale.ROOT)
               if (pl.startsWith("og:") || pl.startsWith("article:")) {
                 ogProps += pl
-                ogVals += ct
+                ogVals += attrs.value(ct)
               }
             }
           }
         }
       }
-      // microdata scan: one startsWith("item") test per attribute keeps the
-      // non-microdata hot path at a few branches; the value attribute is
-      // resolved here while attrs are in hand (text-content values resolve
-      // at walk time in collectMicrodata)
+      // microdata scan: one id test per attribute keeps the non-microdata
+      // hot path at a few branches; the value attribute is resolved here
+      // while attrs are in hand (text-content values resolve at walk time
+      // in collectMicrodata)
       pendingMdProp = null; pendingMdScope = false; pendingMdType = null; pendingMdVal = null
-      if (attrs.nonEmpty) {
+      if (attrs.length > 0) {
         var mi = 0
         while (mi < attrs.length) {
-          val k = attrs(mi)._1
-          if (k.length >= 8 && k.startsWith("item")) {
-            if (k == "itemprop") { if (pendingMdProp == null) pendingMdProp = attrs(mi)._2 }
-            else if (k == "itemscope") pendingMdScope = true
-            else if (k == "itemtype") { if (pendingMdType == null) pendingMdType = attrs(mi)._2 }
-          }
+          val k = attrs.nameId(mi)
+          if (k == A.Itemprop) { if (pendingMdProp == null) pendingMdProp = attrs.value(mi) }
+          else if (k == A.Itemscope) pendingMdScope = true
+          else if (k == A.Itemtype) { if (pendingMdType == null) pendingMdType = attrs.value(mi) }
           mi += 1
         }
-        if (pendingMdProp != null || pendingMdScope) {
-          val va = mdValueAttrOf(name)
-          if (va != null) {
-            var vi = 0
-            while (vi < attrs.length && pendingMdVal == null) {
-              if (attrs(vi)._1 == va) pendingMdVal = attrs(vi)._2
-              vi += 1
-            }
-          }
+        if ((pendingMdProp != null || pendingMdScope) && tid >= 0 && mdValueAttr(tid) >= 0) {
+          val vi = attrIdx(attrs, mdValueAttr(tid))
+          if (vi >= 0) pendingMdVal = attrs.value(vi)
         }
       }
-      startTag(name, selfClosing)
+      startTag(tid, name, selfClosing)
       // spec (13.2.6.4.7): a newline IMMEDIATELY after these start tags is
       // ignored — next-token-only, so every other token clears the flag
-      dropNl = name == "pre" || name == "listing" || name == "textarea"
+      dropNl = tid == T.Pre || tid == T.Listing || tid == T.Textarea
     } else {
-      endTag(name)
+      endTag(tid, name)
       dropNl = false
     }
   }
@@ -984,18 +1028,6 @@ final class ExtractSink extends TokenSink {
     b - a == t.length && ty.regionMatches(true, a, t, 0, t.length)
   }
 
-  /** The WHATWG microdata value-ATTRIBUTE rule per element name (null =
-    * the property value is the element's text content). */
-  private def mdValueAttrOf(name: String): String = name match {
-    case "meta" => "content"
-    case "a" | "area" | "link" => "href"
-    case "img" | "audio" | "video" | "embed" | "iframe" | "source" | "track" => "src"
-    case "object" => "data"
-    case "data" => "value"
-    case "time" => "datetime" // absent datetime → text content (spec)
-    case _ => null
-  }
-
   /** Consume the pending microdata scan into the side maps for the arena
     * node the current start tag just created. */
   private def recordMd(id: Int): Unit = {
@@ -1019,15 +1051,15 @@ final class ExtractSink extends TokenSink {
     inLd = false
   }
 
-  private def startTag(name: String, selfClosing: Boolean): Unit = {
-    val f = flagsOf(name) // the ONE name-hash of the per-tag hot path
+  private def startTag(tid: Int, name: String, selfClosing: Boolean): Unit = {
+    val f = flagsOf(tid) // the ONE table read of the per-tag hot path
     // document-structure elements: adopt the first, ignore repeats
-    if (name == "html") { if (htmlIdx < 0) htmlIdx = pushOpen("html", root, f); return }
-    if (name == "head") { ensureHtml(); if (headIdx < 0 && bodyIdx < 0) headIdx = pushOpen("head", stkNode(stkNode.length - 1), f); return }
-    if (name == "body") { ensureBody(); return }
+    if (tid == T.Html) { ensureHtml(); return }
+    if (tid == T.Head) { ensureHead(); return }
+    if (tid == T.Body) { ensureBody(); return }
     if ((f & FHeadOnly) != 0) {
       // metadata content: into the (implied) head before body, in place after
-      if (bodyIdx < 0 && stackIndexOf("head") <= 0) ensureHead()
+      if (bodyIdx < 0 && stk.lastIndexOf(T.Head) <= 0) ensureHead()
       else ensureHtml()
     } else {
       if (bodyIdx < 0) ensureBody()
@@ -1035,14 +1067,11 @@ final class ExtractSink extends TokenSink {
     // §"in body" <a> start: an a already active after the last marker runs
     // the adoption agency before the new one opens — links become siblings,
     // never nested (link farms would otherwise stack reconstructed a's)
-    if (name == "a") {
-      val start = if (fmtMarkers.isEmpty) 0 else fmtMarkers(fmtMarkers.length - 1)
-      var i = activeFmt.length - 1
-      var prior = -1
-      while (i >= start && prior < 0) { if (activeFmt(i) == "a") prior = i; i -= 1 }
+    if (tid == T.A) {
+      val prior = lastFmtIdx(T.A)
       if (prior >= 0) {
         val priorNode = activeFmtNode(prior)
-        adoptionAgency("a")
+        adoptionAgency(T.A)
         // spec step 2: if the agency left the entry behind, remove it from
         // both the AFL and the stack explicitly
         val p2 = aflIdxOfNode(priorNode)
@@ -1054,22 +1083,22 @@ final class ExtractSink extends TokenSink {
     // §"in body" <nobr>: a nobr already in scope runs the adoption agency
     // before the new one opens (the sibling-not-nested rule, stack-scope
     // flavored — the anchor rule above tests the AFL instead)
-    if (name == "nobr" && lastIndexWithin("nobr", SDefault) > 0)
-      adoptionAgency("nobr")
+    if (tid == T.Nobr && lastIndexWithin(T.Nobr, SDefault) > 0)
+      adoptionAgency(T.Nobr)
     // implied end tags (§13.2.6.4.7/4.9): a new block closes an open <p>;
     // li/tr/td/sections close their predecessor within their scope
     if ((f & FClosesP) != 0) {
-      val i = lastIndexWithin("p", SP)
+      val i = lastIndexWithin(T.P, SP)
       if (i > 0) popTo(i)
-      if (name == "li") {
-        val j = lastIndexWithin("li", SLi)
+      if (tid == T.Li) {
+        val j = lastIndexWithin(T.Li, SLi)
         if (j > 0) popTo(j)
-      } else if (name == "dd" || name == "dt") {
-        val j = math.max(lastIndexWithin("dd", SDl), lastIndexWithin("dt", SDl))
+      } else if (tid == T.Dd || tid == T.Dt) {
+        val j = math.max(lastIndexWithin(T.Dd, SDl), lastIndexWithin(T.Dt, SDl))
         if (j > 0) popTo(j)
-      } else if (name == "table" && (stkFlags(stkFlags.length - 1) & FFoster) != 0) {
+      } else if (tid == T.Table && (stk.flagsAt(stk.top) & FFoster) != 0) {
         // a table start inside a table closes the outer one (§ "in table")
-        val j = lastIndexWithin("table", STableEnd)
+        val j = lastIndexWithin(T.Table, STableEnd)
         if (j > 0) popTo(j)
       } else if (isHeadingName(name)) {
         // §"in body" h1–h6 start: if the CURRENT node is a heading, pop it
@@ -1077,8 +1106,8 @@ final class ExtractSink extends TokenSink {
         // `<h1>a<h2>b` yields siblings. Spec-exact: only the current node is
         // tested; an open formatting element in between keeps the outer
         // heading open.
-        if (isHeadingName(stkName(stkName.length - 1)))
-          popTo(stkName.length - 1)
+        if (isHeadingName(stk.nameAt(stk.top)))
+          popTo(stk.top)
       }
     } else if ((f & FTablePart) != 0) {
       // §13.2.6.4.9/4.13/4.14 "clear the stack back to a table/body/row
@@ -1089,26 +1118,26 @@ final class ExtractSink extends TokenSink {
       // popTo marks popped formatting for reconstruction, so `<table><b>x
       // <tr><td>c` renders c un-bolded in the cell and re-bolds text after
       // </table> — the browser shape.
-      if ((f & FTableSection) != 0 && lastIndexWithin("table", STableEnd) > 0) {
-        val isCell = name == "td" || name == "th"
-        val isRow = name == "tr"
-        def isStop(nm: String): Boolean =
-          nm == "table" || nm == "template" || nm == "html" || nm == "#root" ||
-            ((isCell || isRow) && (nm == "tbody" || nm == "thead" || nm == "tfoot")) ||
-            (isCell && nm == "tr")
-        var top = stkName.length - 1
-        while (top > 0 && !isStop(stkName(top))) top -= 1
-        if (top < stkName.length - 1) popTo(top + 1)
+      if ((f & FTableSection) != 0 && lastIndexWithin(T.Table, STableEnd) > 0) {
+        val isCell = tid == T.Td || tid == T.Th
+        val isRow = tid == T.Tr
+        def isStop(t: Int): Boolean =
+          t == T.Table || t == T.Template || t == T.Html ||
+            ((isCell || isRow) && (t == T.Tbody || t == T.Thead || t == T.Tfoot)) ||
+            (isCell && t == T.Tr)
+        var top = stk.top
+        while (top > 0 && !isStop(stk.idAt(top))) top -= 1
+        if (top < stk.top) popTo(top + 1)
       }
-      if (name == "tr") {
-        val i = lastIndexWithin("tr", STr)
+      if (tid == T.Tr) {
+        val i = lastIndexWithin(T.Tr, STr)
         if (i > 0) popTo(i)
-      } else if (name == "td" || name == "th") {
-        val i = math.max(lastIndexWithin("td", SCell), lastIndexWithin("th", SCell))
+      } else if (tid == T.Td || tid == T.Th) {
+        val i = math.max(lastIndexWithin(T.Td, SCell), lastIndexWithin(T.Th, SCell))
         if (i > 0) popTo(i)
-      } else if (name == "tbody" || name == "thead" || name == "tfoot") {
-        val i = math.max(lastIndexWithin("tbody", STr),
-          math.max(lastIndexWithin("thead", STr), lastIndexWithin("tfoot", STr)))
+      } else if (tid == T.Tbody || tid == T.Thead || tid == T.Tfoot) {
+        val i = math.max(lastIndexWithin(T.Tbody, STr),
+          math.max(lastIndexWithin(T.Thead, STr), lastIndexWithin(T.Tfoot, STr)))
         if (i > 0) popTo(i)
       }
     }
@@ -1116,15 +1145,15 @@ final class ExtractSink extends TokenSink {
     // table/section/row: the arena node hangs under the table's arena
     // parent, linked BEFORE the table in sibling order (§13.2.6.4.9),
     // while staying on the open stack above it
-    val top = stkName.length - 1
+    val top = stk.top
     var fosterRef = -1
     val par =
-      if ((stkFlags(top) & FFoster) != 0 && (f & FTablePart) == 0) {
-        val ti = stackIndexOf("table")
-        if (ti > 0) { fosterRef = stkNode(ti); arena.parent(fosterRef) } else stkNode(top)
-      } else stkNode(top)
+      if ((stk.flagsAt(top) & FFoster) != 0 && (f & FTablePart) == 0) {
+        val ti = stk.lastIndexOf(T.Table)
+        if (ti > 0) { fosterRef = stk.nodeAt(ti); arena.parent(fosterRef) } else stk.nodeAt(top)
+      } else stk.nodeAt(top)
     if (!selfClosing && (f & FVoid) == 0) {
-      val id = pushOpen(name, par, f, fosterRef)
+      val id = pushOpen(tid, name, par, f, fosterRef)
       recordMd(id)
       if ((f & FFormatting) != 0) {
         // Noah's Ark clause (§13.2.4.3): at most 3 same-name entries between
@@ -1137,12 +1166,12 @@ final class ExtractSink extends TokenSink {
         var earliest = -1
         var i = activeFmt.length - 1
         while (i >= start) {
-          if (activeFmt(i) == name) { cnt += 1; earliest = i }
+          if (activeFmt(i) == tid) { cnt += 1; earliest = i }
           i -= 1
         }
         if (cnt >= 3) removeFmtAt(earliest)
-        activeFmt += name; activeFmtOpen += true; activeFmtNode += id
-        activeFmtLink += (if (name == "a") pendingLinkIdx else -1)
+        activeFmt += tid; activeFmtOpen += true; activeFmtNode += id
+        activeFmtLink += (if (tid == T.A) pendingLinkIdx else -1)
       }
     } else {
       // void/self-closing: arena node only (fostered ones before the table)
@@ -1152,11 +1181,11 @@ final class ExtractSink extends TokenSink {
     }
   }
 
-  private def endTag(name: String): Unit = {
-    if (name == "body" || name == "html") return // trailing text re-enters body
-    val f = flagsOf(name)
-    if ((f & FFormatting) != 0) { adoptionAgency(name); return }
-    val i = lastIndexWithin(name, endScopeMask(name))
+  private def endTag(tid: Int, name: String): Unit = {
+    if (tid == T.Body || tid == T.Html) return // trailing text re-enters body
+    val f = flagsOf(tid)
+    if ((f & FFormatting) != 0) { adoptionAgency(tid); return }
+    val i = stk.lastIndexWithin(tid, name, endScopeMask(tid))
     if (i > 0) popTo(i) // out-of-scope / unmatched end tags ignored
   }
 
@@ -1164,22 +1193,22 @@ final class ExtractSink extends TokenSink {
     * bookkeeping as popTo — the adoption agency's mid-stack surgery.
     */
   private def removeStackAt(i: Int): Unit = {
-    val fl = stkFlags(i); val nm = stkName(i)
+    val fl = stk.flagsAt(i); val tid = stk.idAt(i)
     if ((fl & FBlacklist) != 0) skipDepth -= 1
-    if ((fl & FFormatting) != 0 && nm == "a") linkDepth -= 1
-    if (nm == "svg" || nm == "math") foreignDepth -= 1
-    if (inTitle && nm == "title") { inTitle = false; titleDone = true }
-    if (inLd && nm == "script") flushLd()
-    stkName.remove(i); stkNode.remove(i); stkFlags.remove(i)
+    if (tid == T.A) linkDepth -= 1
+    if (tid == T.Svg || tid == T.Math) foreignDepth -= 1
+    if (inTitle && tid == T.Title) { inTitle = false; titleDone = true }
+    if (inLd && tid == T.Script) flushLd()
+    stk.removeAt(i)
   }
 
   /** True when the stack entry at `idx` is in default scope (§13.2.4.2): no
     * scope-stop element sits above it.
     */
   private def inScopeAt(idx: Int): Boolean = {
-    var i = stkName.length - 1
+    var i = stk.top
     while (i > idx) {
-      if ((stkFlags(i) & SDefault) != 0) return false
+      if ((stk.flagsAt(i) & SDefault) != 0) return false
       i -= 1
     }
     true
@@ -1193,10 +1222,10 @@ final class ExtractSink extends TokenSink {
     * and span paths (materialized from the final arena) match browser tree
     * shapes on misnested-formatting pages.
     */
-  private def adoptionAgency(subject: String): Unit = {
+  private def adoptionAgency(subject: Int): Unit = {
     // step 2: current node is the subject and not in the AFL → pop it, done
-    val top0 = stkName.length - 1
-    if (top0 > 0 && stkName(top0) == subject && aflIdxOfNode(stkNode(top0)) < 0) {
+    val top0 = stk.top
+    if (top0 > 0 && stk.idAt(top0) == subject && aflIdxOfNode(stk.nodeAt(top0)) < 0) {
       popTo(top0)
       return
     }
@@ -1218,8 +1247,8 @@ final class ExtractSink extends TokenSink {
       // furthest block: topmost SPECIAL element below the formatting element
       var fb = -1
       var i = sIdx + 1
-      while (i < stkName.length && fb < 0) {
-        if ((stkFlags(i) & FSpecial) != 0) fb = i
+      while (i < stk.length && fb < 0) {
+        if ((stk.flagsAt(i) & FSpecial) != 0) fb = i
         i += 1
       }
       if (fb < 0) {
@@ -1229,18 +1258,18 @@ final class ExtractSink extends TokenSink {
         removeFmtAt(aflIdx)
         return
       }
-      val fbNode = stkNode(fb)
+      val fbNode = stk.nodeAt(fb)
       // foster-parenting common ancestor: the chain re-homes under the
       // table's arena parent, linked before the table (§ step 13 uses the
       // "appropriate place ... with foster parenting")
       var caFosterRef = -1
       val commonAncestor =
-        if ((stkFlags(sIdx - 1) & FFoster) != 0) {
+        if ((stk.flagsAt(sIdx - 1) & FFoster) != 0) {
           var ti = sIdx - 1
-          while (ti > 0 && stkName(ti) != "table") ti -= 1
-          if (ti > 0) { caFosterRef = stkNode(ti); arena.parent(caFosterRef) }
-          else stkNode(sIdx - 1)
-        } else stkNode(sIdx - 1)
+          while (ti > 0 && stk.idAt(ti) != T.Table) ti -= 1
+          if (ti > 0) { caFosterRef = stk.nodeAt(ti); arena.parent(caFosterRef) }
+          else stk.nodeAt(sIdx - 1)
+        } else stk.nodeAt(sIdx - 1)
       var bookmark = aflIdx
       // inner loop: walk up from the furthest block toward the formatting
       // element, cloning intervening active-formatting elements (≤3) and
@@ -1254,7 +1283,7 @@ final class ExtractSink extends TokenSink {
         nodeIdx -= 1
         if (nodeIdx == sIdx) brk = true
         else {
-          val nId = stkNode(nodeIdx)
+          val nId = stk.nodeAt(nodeIdx)
           var aIdx = aflIdxOfNode(nId)
           if (inner > 3 && aIdx >= 0) {
             removeFmtAt(aIdx)
@@ -1266,9 +1295,9 @@ final class ExtractSink extends TokenSink {
           } else {
             // clone: replaces the node in both the stack and the AFL; the
             // chain built so far is re-parented under the clone
-            val cloneId = arena.add(stkName(nodeIdx), -1)
+            val cloneId = arena.add(stk.nameAt(nodeIdx), -1)
             activeFmtNode(aIdx) = cloneId
-            stkNode(nodeIdx) = cloneId
+            stk.setNode(nodeIdx, cloneId)
             if (lastNode == fbNode) bookmark = aIdx + 1
             arena.moveTo(lastNode, cloneId)
             lastNode = cloneId
@@ -1279,7 +1308,7 @@ final class ExtractSink extends TokenSink {
       // element around the furthest block's existing children
       if (caFosterRef >= 0) arena.moveBefore(lastNode, commonAncestor, caFosterRef)
       else arena.moveTo(lastNode, commonAncestor)
-      val cloneFmt = arena.add(subject, -1)
+      val cloneFmt = arena.add(T.name(subject), -1)
       arena.moveChildren(fbNode, cloneFmt)
       arena.appendChild(fbNode, cloneFmt)
       // step 14: AFL — formatting entry out, clone entry in at the bookmark
@@ -1295,11 +1324,9 @@ final class ExtractSink extends TokenSink {
       // step 15: stack — formatting element out, clone immediately below
       // the furthest block
       removeStackAt(stackIdxOfNode(fmtNode))
-      if (subject == "a") linkDepth += 1 // re-balance removeStackAt's decrement
+      if (subject == T.A) linkDepth += 1 // re-balance removeStackAt's decrement
       val fbIdx = stackIdxOfNode(fbNode)
-      stkName.insert(fbIdx + 1, subject)
-      stkNode.insert(fbIdx + 1, cloneFmt)
-      stkFlags.insert(fbIdx + 1, flagsOf(subject))
+      stk.insert(fbIdx + 1, cloneFmt, subject, T.name(subject), flagsOf(subject))
       recomputeBlockTop()
       // outer loop continues: the next round finds the clone; with no
       // special element below it, the no-furthest-block case pops it
@@ -1311,12 +1338,12 @@ final class ExtractSink extends TokenSink {
     * table's end), list items add their list containers, everything else
     * the default scope.
     */
-  private def endScopeMask(name: String): Int = name match {
-    case "table" => STableEnd
-    case "tbody" | "thead" | "tfoot" | "tr" | "td" | "th" | "caption" => STablePart
-    case "li" | "dd" | "dt" => SList
-    case _ => SDefault
-  }
+  private def endScopeMask(tid: Int): Int =
+    if (tid == T.Table) STableEnd
+    else if (tid == T.Tbody || tid == T.Thead || tid == T.Tfoot || tid == T.Tr || tid == T.Td || tid == T.Th ||
+      tid == T.Caption) STablePart
+    else if (tid == T.Li || tid == T.Dd || tid == T.Dt) SList
+    else SDefault
 
   override def comment(data: String): Unit = { nTokens += 1; closeRun(); dropNl = false } // elided
   override def doctype(name: String, publicId: String, systemId: String, forceQuirks: Boolean): Unit = {

@@ -1,5 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -9,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** DataSourceV2 WARC reader: `spark.read.format("warc").load(dir)`.
@@ -26,6 +30,12 @@ import scala.jdk.CollectionConverters._
   * Column pruning is pushed into the reader: a query that only needs `url`
   * never copies the html payload into rows. Charset normalization (see
   * [[CharsetSniff]]) rides [[Warc.parseStream]] as always.
+  *
+  * The scan builder captures the session's Hadoop configuration once (its
+  * `spark.hadoop.*` settings and the read options included) and broadcasts
+  * it: the file listing and every reader open files through it, instead of
+  * building a default `Configuration` (which loads the Hadoop resource
+  * files) per file.
   *
   * Registered via META-INF/services so `format("warc")` resolves by short
   * name.
@@ -48,13 +58,22 @@ object WarcSource {
     StructField("html", BinaryType, nullable = false)
   ))
 
+  /** The session's Hadoop configuration with `options` applied, broadcast
+    * once per scan to the file listing and the readers.
+    */
+  def hadoopConf(options: CaseInsensitiveStringMap): Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConfWithOptions(options.asCaseSensitiveMap.asScala.toMap)
+    spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+  }
+
   /** The .warc / .warc.gz files under `dir` (sorted — deterministic
     * partition order).
     */
-  def listFiles(dir: String): Array[String] = {
+  def listFiles(dir: String, conf: Configuration): Array[String] = {
     import org.apache.hadoop.fs.Path
     val p = new Path(dir)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(conf)
     fs.listStatus(p).iterator
       .map(_.getPath)
       .filter { f =>
@@ -73,28 +92,30 @@ final class WarcTable(pathOpt: Option[String]) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val dir = Option(options.get("path")).orElse(pathOpt)
       .getOrElse(throw new IllegalArgumentException("warc source needs a path"))
-    new WarcScanBuilder(dir)
+    new WarcScanBuilder(dir, WarcSource.hadoopConf(options))
   }
 }
 
-final class WarcScanBuilder(dir: String) extends ScanBuilder with SupportsPushDownRequiredColumns {
+final class WarcScanBuilder(dir: String, conf: Broadcast[SerializableConfiguration])
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = WarcSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def build(): Scan = new WarcScan(dir, required)
+  override def build(): Scan = new WarcScan(dir, required, conf)
 }
 
 final case class WarcFilePartition(file: String) extends InputPartition
 
-final class WarcScan(dir: String, required: StructType) extends Scan with Batch {
+final class WarcScan(dir: String, required: StructType, conf: Broadcast[SerializableConfiguration])
+    extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String = s"WarcScan(dir=$dir, columns=${required.fieldNames.mkString(",")})"
   override def planInputPartitions(): Array[InputPartition] =
-    WarcSource.listFiles(dir).map(WarcFilePartition.apply)
+    WarcSource.listFiles(dir, conf.value.value).map(WarcFilePartition.apply)
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(required)
+    new WarcReaderFactory(required, conf)
   override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream =
-    new WarcMicroBatchStream(dir, required)
+    new WarcMicroBatchStream(dir, required, conf)
 }
 
 /** Offset = high-water mark over the sorted archive-file paths. The crawl
@@ -110,12 +131,12 @@ final case class WarcOffset(lastFile: String) extends streaming.Offset {
   * with exactly-once via the streaming checkpoint, same streaming reader
   * (and charset normalization) as the batch path.
   */
-final class WarcMicroBatchStream(dir: String, required: StructType)
+final class WarcMicroBatchStream(dir: String, required: StructType, conf: Broadcast[SerializableConfiguration])
     extends streaming.MicroBatchStream with streaming.SupportsTriggerAvailableNow {
   private var availableNowTarget: WarcOffset = _
 
   private def currentLatest(): WarcOffset =
-    WarcOffset(WarcSource.listFiles(dir).lastOption.getOrElse(""))
+    WarcOffset(WarcSource.listFiles(dir, conf.value.value).lastOption.getOrElse(""))
 
   override def prepareForTriggerAvailableNow(): Unit = availableNowTarget = currentLatest()
   override def latestOffset(): streaming.Offset =
@@ -130,29 +151,30 @@ final class WarcMicroBatchStream(dir: String, required: StructType)
   override def planInputPartitions(start: streaming.Offset, end: streaming.Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[WarcOffset].lastFile
     val e = end.asInstanceOf[WarcOffset].lastFile
-    WarcSource.listFiles(dir)
+    WarcSource.listFiles(dir, conf.value.value)
       .filter(f => f > s && f <= e)
       .map(WarcFilePartition.apply)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = new WarcReaderFactory(required)
+  override def createReaderFactory(): PartitionReaderFactory = new WarcReaderFactory(required, conf)
   override def commit(end: streaming.Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-final class WarcReaderFactory(required: StructType) extends PartitionReaderFactory {
+final class WarcReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new WarcPartitionReader(partition.asInstanceOf[WarcFilePartition].file, required)
+    new WarcPartitionReader(partition.asInstanceOf[WarcFilePartition].file, required, conf.value.value)
 }
 
 /** Streams one archive file; O(record) executor memory. */
-final class WarcPartitionReader(file: String, required: StructType)
+final class WarcPartitionReader(file: String, required: StructType, conf: Configuration)
     extends PartitionReader[InternalRow] {
   import org.apache.hadoop.fs.Path
 
   private val raw = {
     val p = new Path(file)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
+    p.getFileSystem(conf).open(p)
   }
   private val it = Warc.parseStream(Warc.decompress(raw)) // magic-sniffed gzip/zstd/plain
   private var cur: graft.spark.PageRow = _
