@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,7 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 import graft.spark.ParquetSnapshotCatalog
@@ -50,15 +54,17 @@ import graft.spark.ParquetSnapshotCatalog
   *     not one giant one.
   *
   * Scale shape at 100 TB: planning is driver-side O(delta) manifest I/O per
-  * batch; each data file is one input partition streamed through a plain
-  * parquet reader with COLUMN PRUNING pushed down (a query that only needs
-  * `url` never decodes the html pages), and per-file equality deletes ride
-  * the partition as broadcast-sized key sets (takedown-sized by
-  * construction — they are the contents of delete FILES).
+  * batch; each data file is one input partition decoded by Spark's
+  * vectorized parquet reader with COLUMN PRUNING pushed down (a query that
+  * only needs `url` never decodes the html pages), and per-file equality
+  * deletes ride the partition as broadcast-sized key sets (takedown-sized
+  * by construction — they are the contents of delete FILES), applied to
+  * each decoded batch with the file's positional tombstones and deletion
+  * vector ([[CatalogPartitionReader]]).
   *
   * The same scan doubles as a batch read (`spark.read.format(...)`) of the
-  * current snapshot through the identical delete-applying reader, which is
-  * what the parity spec pins against `catalog.read`.
+  * current snapshot through the identical reader, which is what the parity
+  * specs pin against `catalog.read`.
   */
 class CatalogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-catalog"
@@ -71,9 +77,9 @@ class CatalogSource extends TableProvider with DataSourceRegister {
       s"graft-catalog source: table '$table' under '$root' has no committed snapshot"))
     // the authoritative read path's schema — rename history applied and
     // ADD-column evolution unioned by name (a first-footer-only inference
-    // would miss columns the first file predates); driver-side planning
-    // only, no data read
-    scala.util.Try(cat.read(SparkSession.active, table).schema).getOrElse {
+    // would miss columns the first file predates) — folded from the data
+    // files' footers, no scan planned
+    scala.util.Try(cat.schemaAt(SparkSession.active, table, snap)).getOrElse {
       val files = cat.filesWithAddOrder(table, snap).map(_._1).sorted
       // fallback: one footer, driver-side — walk the list so a missing
       // first file (mid-maintenance) degrades gracefully
@@ -113,8 +119,8 @@ object CatalogSource {
     (root, table)
   }
 
-  /** Delete keys match `CAST(column AS STRING)`; the non-Spark reader can
-    * replay that cast faithfully only for these types (they are what
+  /** Delete keys match `CAST(column AS STRING)`; the scan's reader replays
+    * that cast faithfully only for these types (they are what
     * takedown/upsert key on: urls, digests, ids).
     */
   private[sources] def deletableType(dt: DataType): Boolean = dt match {
@@ -164,6 +170,7 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
   private var required: StructType = tableSchema
   private var pushed: Array[Filter] = Array.empty
   private var pushedAgg: Option[(StructType, Array[Array[Any]])] = None
+  private lazy val cat = new ParquetSnapshotCatalog(root)
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
 
   /** Global MIN/MAX/COUNT(*) answered from the stats sidecars — zero data
@@ -182,7 +189,6 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
     import org.apache.spark.sql.connector.expressions.NamedReference
     if (asOf.nonEmpty || pushed.nonEmpty) return None
     if (agg.groupByExpressions().nonEmpty) return tryPushGroupAgg(agg)
-    val cat = new ParquetSnapshotCatalog(root)
     if (cat.currentSnapshot(table).isEmpty) return None
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
@@ -255,7 +261,6 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
     // the distinct partition values are metadata too
     val aggs = agg.aggregateExpressions().toSeq
     if (!aggs.forall(_.isInstanceOf[CountStar])) return None
-    val cat = new ParquetSnapshotCatalog(root)
     if (!cat.partitionSpec(table).exists(s =>
         s.col == col && s.isInstanceOf[graft.spark.IdentityTransform])) return None
     val field = tableSchema.fields.find(_.name == col).getOrElse(return None)
@@ -369,7 +374,7 @@ final case class CatalogFilePartition(file: String,
   * `FilePartition` behavior for the connector): a streaming-append table
   * accumulates many sub-target files between compactions, and one task per
   * tiny file is pure scheduling overhead at 100 TB. Each file keeps its own
-  * delete state; readers chain per-file (row and columnar alike).
+  * delete state; the reader chains per file.
   */
 final case class CatalogFileGroupPartition(files: Seq[CatalogFilePartition])
     extends InputPartition
@@ -425,7 +430,7 @@ object CatalogScan {
     * untouched. Driver cost: one `getFileStatus` per file (the same listing
     * [[CatalogScan.estimateStatistics]] already pays).
     */
-  private[sources] def binPack(parts: Array[InputPartition],
+  private[sources] def binPack(parts: Array[InputPartition], hconf: Configuration,
                                targetOverride: Option[Long] = None): Array[InputPartition] = {
     if (parts.length <= 1) return parts
     val (confBytes, openCost) = scala.util.Try {
@@ -439,7 +444,6 @@ object CatalogScan {
     // per-TABLE split override (the read.split.target-size TBLPROPERTY,
     // Iceberg's table-level read knob) beats the session-wide conf
     val maxBytes = targetOverride.getOrElse(confBytes)
-    val hconf = new org.apache.hadoop.conf.Configuration()
     val sized = parts.map { p =>
       val f = p.asInstanceOf[CatalogFilePartition]
       val hp = new org.apache.hadoop.fs.Path(f.file)
@@ -471,6 +475,9 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
   // a Hadoop Configuration and FileSystem instance each time, several
   // times the cost of the pruning itself
   @transient private lazy val cat = new ParquetSnapshotCatalog(root)
+  // the session's Hadoop conf, captured once: planning's file sizes and
+  // every task's data-file and deletion-vector opens go through it
+  @transient private lazy val hadoopConf = SessionHadoopConf.broadcast(SparkSession.active)
 
   // ------------------------------------------------------------------
   // RUNTIME file pruning (Iceberg's dynamic file filtering shape): Spark's
@@ -667,7 +674,7 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
         case None => (0L, None)
         case Some(_) =>
           val files = batchFiles.map(_._1) // pruned once, pinned with the batch
-          val conf = new org.apache.hadoop.conf.Configuration()
+          val conf = hadoopConf.value.value
           val sz = files.map { f =>
             val p = new Path(f)
             scala.util.Try(p.getFileSystem(conf).getFileStatus(p).getLen).getOrElse(0L)
@@ -752,7 +759,8 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
 
   /** Attach the sequence-rule-applicable deletes to each planned file and
     * validate that every delete column is readable by this scan (present in
-    * the table schema at a CAST-replayable type).
+    * the table schema at a CAST-replayable type). A tombstone names its
+    * column as of the delete; it is resolved to the current name here.
     */
   private[sources] def withDeletes(files: Seq[(String, Long)],
                                    snap: Long): Array[InputPartition] = {
@@ -790,13 +798,15 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
       }
     val dvByFile: Map[String, (String, Long, Int)] =
       dvIdx.map(e => e.file -> ((e.dvPath, e.offset, e.length))).toMap
+    val renames = cat.renameHistory(table)
     val deletes = cat.equalityDeletes(table, snap)
+      .map { case (s, c, keys) => (s, cat.currentName(renames)(c), keys) }
     deletes.map(_._2).distinct.foreach { c =>
       val f = tableSchema.fields.find(_.name == c).getOrElse(throw new IllegalStateException(
         s"graft-catalog source: delete column '$c' not in table schema"))
       require(CatalogSource.deletableType(f.dataType),
         s"graft-catalog source: delete column '$c' has type ${f.dataType.simpleString}; " +
-        "only string/long/int delete keys are replayable by the streaming reader")
+        "only string/long/int delete keys are replayable by the scan's reader")
     }
     files.sortBy(_._1).map { case (f, addSnap) =>
       val norm = cat.normFile(f)
@@ -848,7 +858,7 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
           case Some(keep) => batchFiles.filter(f => keep(f._1))
           case None => batchFiles
         }
-        CatalogScan.binPack(withDeletes(files, batchSnap), splitOverride)
+        planFiles(files, batchSnap)
     }
   }
 
@@ -859,42 +869,17 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
   private[sources] lazy val splitOverride: Option[Long] =
     cat.getMeta(table, "prop.read.split.target-size").flatMap(_.toLongOption)
 
-  /** Columnar (vectorized) reads iff snapshot-immutable facts allow them:
-    * no key grouping (SPJ partitions chain files), no delete tombstone of
-    * either kind at the pinned snapshot, no rename to resolve, no
-    * synthesized metadata column, and every required type the vectorized
-    * reader handles. Facts are per-SNAPSHOT metadata (immutable once
-    * committed), so the flag cannot be invalidated between planning and
-    * execution; runtime filters only REMOVE files. Anything else falls back
-    * to the row reader — never a wrong answer, just the slower path.
-    */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val columnarOk = scala.util.Try {
-      def vectorizable(dt: DataType): Boolean = dt match {
-        case StringType | BinaryType | LongType | IntegerType | DateType |
-             DoubleType | FloatType | BooleanType | TimestampType => true
-        case _ => false
-      }
-      required.nonEmpty &&
-        !required.fieldNames.exists(n => n == "_file" || n == "_pos") &&
-        cat.renameHistory(table).isEmpty &&
-        cat.equalityDeletes(table, batchSnap).isEmpty &&
-        // cheap positional check: TSV pairs are takedown-sized, and the DV
-        // INDEX answers emptiness without touching a bitmap byte
-        cat.positionalTsvPairs(table, batchSnap).isEmpty &&
-        cat.deletionVectorIndex(table, batchSnap).isEmpty &&
-        required.fields.forall(f => vectorizable(f.dataType))
-    }.getOrElse(false)
-    new CatalogReaderFactory(required, cat.renameHistory(table), columnarOk)
-  }
+  /** Every partition reads columnar ([[CatalogReaderFactory]]), so Spark
+    * need not plan the partitions to know it. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 
-  /** The row-based factory for STREAMING reads: a window's delete state is
-    * not knowable when the stream's factory is created, so the columnar
-    * flag could go stale mid-stream — streaming always rides the
-    * delete-applying row reader.
-    */
-  private[sources] def rowReaderFactory(): PartitionReaderFactory =
-    new CatalogReaderFactory(required, cat.renameHistory(table))
+  override def createReaderFactory(): PartitionReaderFactory =
+    new CatalogReaderFactory(required, tableSchema, cat.renameHistory(table), hadoopConf)
+
+  /** Planned files with their deletes, bin-packed — shared by the batch
+    * read and the micro-batch stream. */
+  private[sources] def planFiles(files: Seq[(String, Long)], snap: Long): Array[InputPartition] =
+    CatalogScan.binPack(withDeletes(files, snap), hadoopConf.value.value, splitOverride)
 
   override def toMicroBatchStream(checkpointLocation: String): streaming.MicroBatchStream = {
     require(asOf.isEmpty,
@@ -911,7 +896,7 @@ final case class CatalogOffset(snap: Long) extends streaming.Offset {
 final class CatalogMicroBatchStream(scan: CatalogScan, root: String, table: String,
                                     maxSnaps: Int, startSnap: Long)
     extends streaming.MicroBatchStream with streaming.SupportsTriggerAvailableNow {
-  private def cat = new ParquetSnapshotCatalog(root)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
   private var availableNowTarget: Long = -1L
 
   private def currentLatest(): Long =
@@ -943,10 +928,10 @@ final class CatalogMicroBatchStream(scan: CatalogScan, root: String, table: Stri
       else cat.incrementalFilesWithAddOrder(table, s, e)       // O(delta) window
     // pushed filters prune the window's files too (sidecars permitting);
     // small streamed drops bin-pack like batch partitions
-    CatalogScan.binPack(scan.withDeletes(scan.pruneByFilters(files, e), e), scan.splitOverride)
+    scan.planFiles(scan.pruneByFilters(files, e), e)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = scan.rowReaderFactory()
+  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
   override def commit(end: streaming.Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -985,7 +970,7 @@ final class CatalogWriteBuilder(schema: StructType, root: String, table: String)
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite
     with org.apache.spark.sql.connector.write.SupportsOverwriteV2 {
   private var mode: CatalogWriteMode = CatalogWriteMode.Append
-  private def cat = new ParquetSnapshotCatalog(root)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
 
   /** `INSERT OVERWRITE` (static, no partition clause) /
     * `df.write.mode("overwrite")`: the job commit becomes a REPLACE
@@ -1091,6 +1076,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     extends Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
 
   // ------------------------------------------------------------------
   // Write DISTRIBUTION + ORDERING (Iceberg's write-clustered shape): a
@@ -1122,7 +1108,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     */
   private lazy val sortOrderCols: Seq[String] =
     if (spec.nonEmpty) Nil
-    else new ParquetSnapshotCatalog(root).getMeta(table, "prop.write.sort-order")
+    else cat.getMeta(table, "prop.write.sort-order")
       .toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
 
   private def sortOrderSorts: Array[org.apache.spark.sql.connector.expressions.SortOrder] =
@@ -1151,7 +1137,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       new CatalogWriterFactory(schema, root, table, stagingId, spec,
         org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, sortOrderCols,
-        new ParquetSnapshotCatalog(root).getMeta(table, "prop.write.target-file-size")
+        cat.getMeta(table, "prop.write.target-file-size")
           .flatMap(_.toLongOption))
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       // per-file row counts ride the commit messages for free — recorded as
@@ -1180,20 +1166,17 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
           // empty-the-table operation)
           require(files.nonEmpty,
             s"graft-catalog: refusing empty INSERT OVERWRITE of '$table'")
-          new ParquetSnapshotCatalog(root).commitFilesWithCounts(files, table, statLines)
+          cat.commitFilesWithCounts(files, table, statLines)
         case CatalogWriteMode.DynamicPartitions =>
           // zero new rows touch zero partitions: dynamic overwrite of
           // nothing is a no-op, not a truncate
-          if (files.nonEmpty)
-            new ParquetSnapshotCatalog(root)
-              .overwritePartitionValues(files, table, statLines, None)
+          if (files.nonEmpty) cat.overwritePartitionValues(files, table, statLines, None)
         case CatalogWriteMode.Partitions(values) =>
           // empty files still CLEAR the named partitions (static contract)
-          new ParquetSnapshotCatalog(root)
-            .overwritePartitionValues(files, table, statLines, Some(values))
+          cat.overwritePartitionValues(files, table, statLines, Some(values))
         case CatalogWriteMode.Append =>
           if (files.nonEmpty)
-            new ParquetSnapshotCatalog(root).appendFilesWithCounts(files, table, statLines)
+            cat.appendFilesWithCounts(files, table, statLines)
       }
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1210,7 +1193,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
       val files = messages.map(_.asInstanceOf[CatalogCommitMessage].file).toSeq.sorted
       if (files.nonEmpty &&
-          !new ParquetSnapshotCatalog(root).appendFilesAsBatch(files, table, epochId))
+          !cat.appendFilesAsBatch(files, table, epochId))
         CatalogWrite.deleteAll(messages) // replayed epoch: drop the duplicate outputs
     }
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
@@ -1263,8 +1246,8 @@ final class CatalogStreamingWriterFactory(schema: StructType, root: String, tabl
 
 /** The shared parquet-hadoop row writer: schema mapping + record
   * serialization for one part file (atomic column types, timestamps as
-  * INT64 micros — both Spark's reader and the connector's own read path
-  * handle them), used by the append/overwrite writer and the row-level
+  * INT64 micros, which Spark's parquet reader — the connector's too —
+  * reads), used by the append/overwrite writer and the row-level
   * (delta) writer alike.
   */
 private[sources] object PqRow {
@@ -1571,6 +1554,7 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
                             root: String, table: String)
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
   override def description(): String = s"GraftCatalogDeltaWrite(table=$table)"
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite =
@@ -1585,7 +1569,7 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
         val touched = ms.flatMap(_.touched).distinct
         // a statement matching zero rows commits nothing (no empty snapshot)
         if (dels.nonEmpty || datas.nonEmpty)
-          new ParquetSnapshotCatalog(root).commitRowDelta(table, dels, touched, datas)
+          cat.commitRowDelta(table, dels, touched, datas)
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit = {
         import org.apache.hadoop.fs.Path
@@ -1693,405 +1677,296 @@ final case class CatalogKeyGroupPartition(files: Seq[CatalogFilePartition], keyV
   override def partitionKey(): InternalRow = new GenericInternalRow(Array(keyVal))
 }
 
-final class CatalogReaderFactory(required: StructType,
-                                 renames: Seq[(String, String)] = Nil,
-                                 columnarOk: Boolean = false)
+/** The scan's one reader factory: every partition reads columnar. File
+  * partitions — alone, bin-packed or key-grouped — chain one
+  * [[CatalogPartitionReader]] per file; a row-count partition emits
+  * zero-column batches.
+  */
+final class CatalogReaderFactory(required: StructType, tableSchema: StructType,
+                                 renames: Seq[(String, String)],
+                                 conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
-
-  /** Columnar reads are an ALL-OR-NOTHING per-scan property (Spark refuses
-    * mixed row/columnar partitions), so the decision is the factory-level
-    * flag the scan computed from snapshot-immutable facts — never
-    * per-partition state.
-    */
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnarOk
-
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    def one(p: CatalogFilePartition): CatalogVectorReader = {
-      require(p.deletes.isEmpty && p.posDeletes.isEmpty && p.dv.isEmpty,
-        s"graft-catalog: columnar read planned for a delete-carrying file ${p.file}")
-      new CatalogVectorReader(p.file, required)
-    }
-    def chained(files: Seq[CatalogFilePartition])
-        : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-      new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-        private val it = files.iterator
-        private var cur: CatalogVectorReader = _
-        override def next(): Boolean = {
-          while (true) {
-            if (cur == null) {
-              if (!it.hasNext) return false
-              cur = one(it.next())
-            }
-            if (cur.next()) return true
-            cur.close(); cur = null
-          }
-          false
-        }
-        override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = cur.get()
-        override def close(): Unit = if (cur != null) cur.close()
-      }
-    partition match {
-      case p: CatalogFilePartition => one(p)
-      case g: CatalogFileGroupPartition => chained(g.files)
-      case g: CatalogKeyGroupPartition => chained(g.files)
-      case other => throw new IllegalStateException(
-        s"graft-catalog: columnar read of non-file partition $other")
-    }
-  }
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft-catalog partitions read columnar")
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     partition match {
-      case CatalogRowCountPartition(n) => new PartitionReader[InternalRow] {
+      case CatalogRowCountPartition(n) => new PartitionReader[ColumnarBatch] {
         private var left = n
-        private val empty = new GenericInternalRow(0)
-        override def next(): Boolean = if (left > 0) { left -= 1; true } else false
-        override def get(): InternalRow = empty
+        private var batch: ColumnarBatch = _
+        override def next(): Boolean = left > 0 && {
+          val k = math.min(left, CatalogPartitionReader.BatchRows.toLong).toInt
+          batch = new ColumnarBatch(Array.empty[ColumnVector], k)
+          left -= k
+          true
+        }
+        override def get(): ColumnarBatch = batch
         override def close(): Unit = ()
       }
-      case p: CatalogFilePartition =>
-        new CatalogPartitionReader(p.file, required, p.deletes, p.posDeletes, renames, p.dv)
-      case g: CatalogKeyGroupPartition => chain(g.files)
+      case p: CatalogFilePartition => chain(Seq(p))
       case g: CatalogFileGroupPartition => chain(g.files)
+      case g: CatalogKeyGroupPartition => chain(g.files)
     }
 
-  /** Sequential per-file chain — shared by key-grouped (SPJ) and bin-packed
-    * partitions; each file keeps its own delete state and `_pos` ordinals.
+  /** Sequential per-file chain; each file keeps its own delete state and
+    * `_pos` ordinals.
     */
-  private def chain(files: Seq[CatalogFilePartition]): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
+  private def chain(files: Seq[CatalogFilePartition]): PartitionReader[ColumnarBatch] =
+    new PartitionReader[ColumnarBatch] {
       private val it = files.iterator
       private var cur: CatalogPartitionReader = _
       override def next(): Boolean = {
         while (true) {
           if (cur == null) {
             if (!it.hasNext) return false
-            val p = it.next()
-            cur = new CatalogPartitionReader(p.file, required, p.deletes, p.posDeletes, renames, p.dv)
+            cur = new CatalogPartitionReader(it.next(), required, tableSchema, renames,
+              conf.value.value)
           }
           if (cur.next()) return true
           cur.close(); cur = null
         }
         false
       }
-      override def get(): InternalRow = cur.get()
+      override def get(): ColumnarBatch = cur.get()
       override def close(): Unit = if (cur != null) cur.close()
     }
 }
 
-/** Streams one parquet data file through parquet-hadoop's record reader
-  * with the projection pushed down (only required ∪ delete-key columns are
-  * decoded), applying the partition's equality deletes row-by-row — the
-  * executor-side half of Iceberg's delete-file application. Supports the
-  * atomic column types the catalog's page/document tables use (string,
-  * binary, long, int, double, float, boolean, timestamp INT96/INT64, date);
-  * nested/decimal columns fail loudly with the column name.
-  */
 object CatalogPartitionReader {
   /** Data files actually OPENED by this JVM's readers — the observable the
     * runtime-filter and metadata-only specs assert on (a pruned file must
     * never be opened; a metadata-answered query must open zero).
     */
   val opened = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Rows per decoded batch (Spark's `columnarReaderBatchSize` default). */
+  private[sources] val BatchRows = 4096
 }
 
-/** The COLUMNAR fast path: Spark's own `VectorizedParquetRecordReader`
-  * (the engine's production parquet reader — batched column decoding into
-  * `ColumnarBatch`, the same machinery `spark.read.parquet` runs) driving a
-  * DSv2 columnar partition. Planned only when the snapshot carries no
-  * deletes, no renames and no metadata columns — exactly the Iceberg rule
-  * (vectorize clean scans, fall back to the row reader when row-level
-  * semantics must apply). Schema evolution still works: the requested
-  * schema rides the conf (`ParquetReadSupport` clips by name; a column the
-  * file predates reads as a null vector).
+/** Reads one data file through Spark's `VectorizedParquetRecordReader` —
+  * the engine's own parquet decoder, nested columns included — and applies
+  * the file's deletes to each decoded batch, as Iceberg's vectorized read
+  * does:
+  *   - a column resolves to this file's physical name by replaying the
+  *     rename chain over the footer's fields; a column the file predates
+  *     (ADD-column evolution) reads as nulls;
+  *   - the decoded columns are the required ones plus the equality-delete
+  *     keys, so a pruned scan still sees the keys it must match;
+  *   - a running ordinal counts the file's physical rows, so positional
+  *     tombstones, the deletion vector and `_pos` all name the row
+  *     `_metadata.row_index` names, whatever was deleted before it;
+  *   - a batch with no deleted row passes through as decoded; otherwise its
+  *     vectors are remapped to the surviving rows ([[RowIdRemap]]);
+  *   - `_file` is a constant vector and `_pos` a long vector, unless the
+  *     file has a physical column of that name (a data column wins).
   */
-final class CatalogVectorReader(file: String, required: StructType)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+final class CatalogPartitionReader(p: CatalogFilePartition, required: StructType,
+                                   tableSchema: StructType, renames: Seq[(String, String)],
+                                   baseConf: Configuration)
+    extends PartitionReader[ColumnarBatch] {
   CatalogPartitionReader.opened.incrementAndGet()
+  import CatalogPartitionReader.BatchRows
+  import org.apache.hadoop.fs.Path
   import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
   import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
-
-  private val conf = new org.apache.hadoop.conf.Configuration()
-  conf.set("org.apache.spark.sql.parquet.row.requested_schema", required.json)
-  conf.set("parquet.read.support.class",
-    "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
-  // the schema converter / read support read these SQLConf keys from the
-  // Hadoop conf WITHOUT defaults (Spark's own scan pre-seeds them the same
-  // way); values = Spark's defaults for the session shapes this engine runs
-  conf.set("spark.sql.parquet.binaryAsString", "false")
-  conf.set("spark.sql.parquet.int96AsTimestamp", "true")
-  conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-  conf.set("spark.sql.parquet.fieldId.read.enabled", "false")
-  conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-  conf.set("spark.sql.caseSensitive", "false")
-  conf.set("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID)
-  private val reader =
-    new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false, /*capacity=*/ 4096)
-  // the base reader casts to the OLD-API split type (which extends the new)
-  private val split = new org.apache.hadoop.mapred.FileSplit(
-    new org.apache.hadoop.fs.Path(file), 0, Long.MaxValue, null: Array[String])
-  reader.initialize(split, new TaskAttemptContextImpl(conf,
-    new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0)))
-  reader.initBatch(new StructType(), new GenericInternalRow(0))
-  reader.enableReturningBatches()
-
-  override def next(): Boolean = reader.nextBatch()
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    reader.getCurrentValue.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch]
-  override def close(): Unit = reader.close()
-}
-
-final class CatalogPartitionReader(file: String, required: StructType,
-                                   deletes: Seq[(String, Seq[String])],
-                                   posDeletes: Seq[Long] = Nil,
-                                   renames: Seq[(String, String)] = Nil,
-                                   dv: Option[(String, Long, Int)] = None)
-    extends PartitionReader[InternalRow] {
-  CatalogPartitionReader.opened.incrementAndGet()
+  import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.hadoop.ParquetFileReader
   import org.apache.parquet.hadoop.util.HadoopInputFile
-  import org.apache.parquet.io.ColumnIOFactory
-  import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
-  import org.apache.parquet.schema.{MessageType, PrimitiveType, LogicalTypeAnnotation}
-  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 
-  private val conf = new org.apache.hadoop.conf.Configuration()
-  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
+  private val path = new Path(p.file)
+  // the requested schema is per file, so the session's conf is copied, never
+  // rebuilt from the Hadoop resource files
+  private val conf = new Configuration(baseConf)
+  private val input = HadoopInputFile.fromPath(path, conf)
+  private val stream = input.newStream()
+  private val footer =
+    ParquetFileReader.readFooter(input, HadoopReadOptions.builder(conf, path).build(), stream)
 
-  /** CURRENT-name → this file's physical field name, computed by replaying
-    * the rename chain over the file's own fields — the per-file equivalent
-    * of the catalog read path's `applyRenames` fold (the coalesce case
-    * there is a merged-GROUP artifact; a single file never carries both
-    * spellings of one column). A current name absent from the map is a
-    * column this file predates (ADD-column evolution) — emitted as NULL,
-    * matching `unionByName(allowMissingColumns)`.
-    */
+  /** CURRENT name → this file's physical name. */
   private val physicalOf: Map[String, String] = {
     var cur: Map[String, String] = // physical -> current spelling
-      (0 until fileSchema.getFieldCount)
-        .map(i => fileSchema.getFieldName(i)).map(f => f -> f).toMap
+      footer.getFileMetaData.getSchema.getFields.asScala.map(f => f.getName -> f.getName).toMap
     renames.foreach { case (o, n) =>
       if (!cur.values.exists(_ == n))
-        cur = cur.map { case (p, c) => (p, if (c == o) n else c) }
+        cur = cur.map { case (ph, c) => (ph, if (c == o) n else c) }
     }
     cur.map(_.swap)
   }
 
-  // projection = required columns ∪ delete-key columns (a pruned scan must
-  // still decode the key column to apply the tombstones), resolved to the
-  // file's physical names; columns the file predates simply don't project
-  private val delCols = deletes.map(_._1).distinct
-  private val projNames0 = (required.fieldNames.toSeq ++ delCols).distinct
-    .flatMap(physicalOf.get).distinct
-  // a pure-metadata projection (`SELECT _file, _pos`, a row-level DELETE's
-  // scan) still needs one decoded column to drive record iteration
-  private val projNames =
-    if (projNames0.nonEmpty) projNames0 else Seq(fileSchema.getFieldName(0))
+  private val keys: Map[String, Set[String]] = p.deletes.groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
+  // the decoded columns, by current name: required ∪ delete keys, those
+  // this file has
+  private val decoded: Seq[StructField] =
+    (required.fields.toSeq ++ keys.keys.toSeq.sorted.flatMap(c => tableSchema.find(_.name == c)))
+      .filter(f => physicalOf.contains(f.name)).distinctBy(_.name)
+  private val slot: Map[String, Int] = decoded.map(_.name).zipWithIndex.toMap
 
-  // `_file`/`_pos` are SYNTHESIZED by the reader (SupportsMetadataColumns),
-  // never decoded; a physical column of the same name wins, matching the
-  // connector's metadata-conflict rule
-  private val metaKind: Array[Int] = required.fields.map { f =>
-    if (physicalOf.contains(f.name)) 0
-    else f.name match { case "_file" => 1; case "_pos" => 2; case _ => 0 }
-  }
-  private val fileUtf8 = UTF8String.fromString(file)
-  private val projection = new MessageType(fileSchema.getName,
-    projNames.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))): _*)
-  reader.setRequestedSchema(projection)
+  conf.set("org.apache.spark.sql.parquet.row.requested_schema",
+    StructType(decoded.map(f => f.copy(name = physicalOf(f.name)))).json)
+  conf.set("parquet.read.support.class",
+    "org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport")
+  // the schema converter / read support read these SQLConf keys from the
+  // Hadoop conf WITHOUT defaults (Spark's own scan pre-seeds them the same
+  // way); a session that sets one keeps its value
+  Seq("spark.sql.parquet.binaryAsString" -> "false",
+    "spark.sql.parquet.int96AsTimestamp" -> "true",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+    "spark.sql.parquet.fieldId.read.enabled" -> "false",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true",
+    "spark.sql.caseSensitive" -> "false",
+    "spark.sql.session.timeZone" -> java.util.TimeZone.getDefault.getID)
+    .foreach { case (k, v) => conf.setIfUnset(k, v) }
+  private val reader =
+    new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", /*useOffHeap=*/ false, BatchRows)
+  // the base reader casts to the OLD-API split type (which extends the new);
+  // the footer read above is handed over, not read twice
+  reader.initialize(new org.apache.hadoop.mapred.FileSplit(path, 0, Long.MaxValue, null: Array[String]),
+    new TaskAttemptContextImpl(conf, new TaskAttemptID(new TaskID(new JobID(), TaskType.MAP, 0), 0)),
+    Some(input), Some(stream), Some(footer))
+  reader.initBatch(new StructType(), new GenericInternalRow(0))
+  reader.enableReturningBatches()
 
-  // a delete key column the file predates can never match (the row's key is
-  // NULL under the anti-join) — skip it for this file
-  private val delSets: Seq[(Int, Set[String])] = deletes.flatMap { case (c, keys) =>
-    physicalOf.get(c).map(p => (projection.getFieldIndex(p), keys.toSet))
+  // per output column: its decoded slot, or -1 for a reader-made vector
+  private val slotOf: Array[Int] = required.fields.map(f => slot.getOrElse(f.name, -1))
+  private val made: Array[ColumnVector] = required.fields.map { f =>
+    if (slot.contains(f.name)) null
+    else f.name match {
+      case "_file" =>
+        val v = new ConstantColumnVector(BatchRows, StringType)
+        v.setUtf8String(UTF8String.fromString(p.file))
+        v
+      case "_pos" => new OnHeapColumnVector(BatchRows, LongType)
+      case _ =>
+        val v = new ConstantColumnVector(BatchRows, f.dataType)
+        v.setNull()
+        v
+    }
   }
-  // output field -> (projection index, parquet primitive); None = the file
-  // predates this column (always NULL)
-  private val outFields: Array[Option[(Int, PrimitiveType, DataType)]] =
-    required.fields.map { f =>
-      physicalOf.get(f.name).map { p =>
-        val idx = projection.getFieldIndex(p)
-        val t = projection.getType(idx)
-        require(t.isPrimitive, s"graft-catalog reader: column '${f.name}' is nested " +
-          "(group type); only atomic columns are supported")
-        (idx, t.asPrimitiveType(), f.dataType)
+  private val pos: OnHeapColumnVector = made.collectFirst { case v: OnHeapColumnVector => v }.orNull
+
+  /** `CAST(column AS STRING) IN keys` over the decoded key vector
+    * (string/long/int, gated at planning). A key column the file predates
+    * is NULL in every row and never matches (anti-join semantics).
+    */
+  private val keyTests: Seq[(ColumnarBatch, Int) => Boolean] = keys.toSeq.flatMap { case (c, ks) =>
+    slot.get(c).map { i =>
+      def canonical(k: String): Option[Long] = k.toLongOption.filter(_.toString == k)
+      tableSchema(c).dataType match {
+        case StringType =>
+          val s = ks.map(UTF8String.fromString)
+          (b: ColumnarBatch, r: Int) => !b.column(i).isNullAt(r) && s(b.column(i).getUTF8String(r))
+        case LongType =>
+          val s = ks.flatMap(canonical)
+          (b: ColumnarBatch, r: Int) => !b.column(i).isNullAt(r) && s(b.column(i).getLong(r))
+        case IntegerType =>
+          val s = ks.flatMap(canonical)
+          (b: ColumnarBatch, r: Int) => !b.column(i).isNullAt(r) && s(b.column(i).getInt(r).toLong)
+        case other => throw new IllegalStateException(s"undeletable key type $other")
       }
     }
-
-  // positional tombstones for THIS file: the running record count below is
-  // exactly `_metadata.row_index` (row groups stream in file order)
-  private val posSet: Set[Long] = posDeletes.toSet
+  }
+  private val posDeletes: Array[Long] = p.posDeletes.toArray // sorted at planning
+  private var posAt = 0
   // THIS file's deletion vector, range-read once per task from the
-  // snapshot's dv blob — the O(bitmap) task cost that replaces O(deleted
-  // rows) driver planning
-  private val dvBitmap: org.roaringbitmap.RoaringBitmap =
-    dv.map { case (p, off, len) => graft.spark.DeletionVectors.load(p, off, len) }.orNull
-  private def dvDeleted(ord: Long): Boolean =
-    dvBitmap != null && ord <= Int.MaxValue && dvBitmap.contains(ord.toInt)
-  private var ordinal: Long = -1L
+  // snapshot's dv blob; walked in step with the batches
+  private val dv: org.roaringbitmap.PeekableIntIterator = p.dv.map { case (f, off, len) =>
+    graft.spark.DeletionVectors.load(f, off, len, conf).getIntIterator
+  }.orNull
 
-  /** Direct-to-typed-slots record materialization — the per-row
-    * `SimpleGroup` (one object + per-field list + boxed value each) that the
-    * example `GroupRecordConverter` allocates is the read path's dominant
-    * garbage at scale, so values land straight in one long slot (fixed-width
-    * types, floating bits raw) or one ref slot (byte[] for BINARY/INT96)
-    * per projected field; dictionary-encoded binary pages decode each
-    * dictionary entry ONCE and share the byte[] across rows (immutable —
-    * output wraps, never mutates).
-    */
-  private final class Slots extends RecordMaterializer[InternalRow] {
-    val n = projection.getFieldCount
-    val longs = new Array[Long](n)
-    val refs = new Array[AnyRef](n)
-    val nulls = new Array[Boolean](n)
-    private val marker: InternalRow = new GenericInternalRow(0)
-    private val root: GroupConverter = new GroupConverter {
-      private val convs: Array[Converter] = Array.tabulate(n) { i =>
-        import PrimitiveType.PrimitiveTypeName._
-        projection.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case BINARY | FIXED_LEN_BYTE_ARRAY | INT96 => new PrimitiveConverter {
-            private var dict: Array[Array[Byte]] = _
-            override def addBinary(b: Binary): Unit = { refs(i) = b.getBytes; nulls(i) = false }
-            override def hasDictionarySupport: Boolean = true
-            override def setDictionary(d: org.apache.parquet.column.Dictionary): Unit =
-              dict = Array.tabulate(d.getMaxId + 1)(k => d.decodeToBinary(k).getBytes)
-            override def addValueFromDictionary(id: Int): Unit = {
-              refs(i) = dict(id); nulls(i) = false
-            }
-          }
-          case INT64 => new PrimitiveConverter {
-            override def addLong(v: Long): Unit = { longs(i) = v; nulls(i) = false }
-          }
-          case INT32 => new PrimitiveConverter {
-            override def addInt(v: Int): Unit = { longs(i) = v; nulls(i) = false }
-          }
-          case DOUBLE => new PrimitiveConverter {
-            override def addDouble(v: Double): Unit = {
-              longs(i) = java.lang.Double.doubleToRawLongBits(v); nulls(i) = false
-            }
-          }
-          case FLOAT => new PrimitiveConverter {
-            override def addFloat(v: Float): Unit = {
-              longs(i) = java.lang.Float.floatToRawIntBits(v).toLong; nulls(i) = false
-            }
-          }
-          case BOOLEAN => new PrimitiveConverter {
-            override def addBoolean(v: Boolean): Unit = {
-              longs(i) = if (v) 1L else 0L; nulls(i) = false
-            }
-          }
-          case other => throw new IllegalStateException(
-            s"graft-catalog reader: unsupported parquet primitive $other in $file")
-        }
-      }
-      override def getConverter(i: Int): Converter = convs(i)
-      override def start(): Unit = java.util.Arrays.fill(nulls, true)
-      override def end(): Unit = ()
+  private var first = 0L // physical ordinal of the current batch's first row
+  private val dead = new Array[Boolean](BatchRows)
+  private var batch: ColumnarBatch = _
+
+  /** The batch's surviving row ids, or null when no row is deleted. */
+  private def survivors(b: ColumnarBatch, n: Int): Array[Int] = {
+    java.util.Arrays.fill(dead, 0, n, false)
+    var any = false
+    def kill(ord: Long): Unit = if (ord >= first) { dead((ord - first).toInt) = true; any = true }
+    val end = first + n
+    while (posAt < posDeletes.length && posDeletes(posAt) < end) {
+      kill(posDeletes(posAt)); posAt += 1
     }
-    override def getRootConverter: GroupConverter = root
-    override def getCurrentRecord: InternalRow = marker
-  }
-
-  private val slots = new Slots
-  private var recordReader: org.apache.parquet.io.RecordReader[InternalRow] = _
-  private var rowsLeft: Long = 0L
-
-  private def nextRowGroup(): Boolean = {
-    val pages = reader.readNextRowGroup()
-    if (pages == null) false
+    while (dv != null && dv.hasNext && Integer.toUnsignedLong(dv.peekNext()) < end)
+      kill(Integer.toUnsignedLong(dv.next()))
+    if (keyTests.nonEmpty) {
+      var r = 0
+      while (r < n) {
+        if (!dead(r) && keyTests.exists(_(b, r))) { dead(r) = true; any = true }
+        r += 1
+      }
+    }
+    if (!any) null
     else {
-      val columnIO = new ColumnIOFactory().getColumnIO(projection)
-      recordReader = columnIO.getRecordReader(pages, slots)
-      rowsLeft = pages.getRowCount
-      true
-    }
-  }
-
-  /** `CAST(column AS STRING)` replay for delete matching (string/long/int —
-    * gated at planning). A null key column never matches (anti-join keeps
-    * the row).
-    */
-  private def deleted(): Boolean = delSets.exists { case (idx, keys) =>
-    !slots.nulls(idx) && {
-      val prim = projection.getType(idx).asPrimitiveType()
-      val s = prim.getPrimitiveTypeName match {
-        case PrimitiveType.PrimitiveTypeName.BINARY =>
-          UTF8String.fromBytes(slots.refs(idx).asInstanceOf[Array[Byte]]).toString
-        case PrimitiveType.PrimitiveTypeName.INT64 => slots.longs(idx).toString
-        case PrimitiveType.PrimitiveTypeName.INT32 => slots.longs(idx).toString
-        case other => throw new IllegalStateException(s"undeletable primitive $other")
-      }
-      keys.contains(s)
+      val ids = new Array[Int](n)
+      var k = 0
+      var r = 0
+      while (r < n) { if (!dead(r)) { ids(k) = r; k += 1 }; r += 1 }
+      java.util.Arrays.copyOf(ids, k)
     }
   }
 
   override def next(): Boolean = {
-    while (true) {
-      if (rowsLeft == 0L && !nextRowGroup()) return false
-      while (rowsLeft > 0L) {
-        val g = recordReader.read()
-        rowsLeft -= 1
-        ordinal += 1
-        if (g != null && !posSet.contains(ordinal) && !dvDeleted(ordinal) && !deleted()) return true
+    while (reader.nextBatch()) {
+      val raw = reader.resultBatch()
+      val n = raw.numRows
+      val keep = survivors(raw, n)
+      if (pos != null) {
+        var r = 0
+        while (r < n) { pos.putLong(r, first + r); r += 1 }
+      }
+      first += n
+      if (keep == null || keep.nonEmpty) {
+        val cols = Array.tabulate[ColumnVector](required.length) { i =>
+          val v = if (slotOf(i) >= 0) raw.column(slotOf(i)) else made(i)
+          if (keep == null) v else new RowIdRemap(v, keep)
+        }
+        batch = new ColumnarBatch(cols, if (keep == null) n else keep.length)
+        return true
       }
     }
     false
   }
 
-  private val JULIAN_EPOCH_DAY = 2440588L // 1970-01-01 as a julian day
+  override def get(): ColumnarBatch = batch
 
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < outFields.length) {
-      if (metaKind(i) == 1) { row.update(i, fileUtf8); i += 1 }
-      else if (metaKind(i) == 2) { row.setLong(i, ordinal); i += 1 }
-      else if (outFields(i).isEmpty) { row.setNullAt(i); i += 1 }
-      else {
-      val (idx, prim, dt) = outFields(i).get
-      if (slots.nulls(idx)) row.setNullAt(i)
-      else {
-        import PrimitiveType.PrimitiveTypeName._
-        (dt, prim.getPrimitiveTypeName) match {
-          case (StringType, BINARY) => // wrap, never copy — slot bytes are per-row or immutable dict entries
-            row.update(i, UTF8String.fromBytes(slots.refs(idx).asInstanceOf[Array[Byte]]))
-          case (BinaryType, BINARY | FIXED_LEN_BYTE_ARRAY) =>
-            row.update(i, slots.refs(idx))
-          case (LongType, INT64) => row.setLong(i, slots.longs(idx))
-          case (IntegerType | DateType, INT32) => row.setInt(i, slots.longs(idx).toInt)
-          case (LongType, INT32) => row.setLong(i, slots.longs(idx))
-          case (DoubleType, DOUBLE) =>
-            row.setDouble(i, java.lang.Double.longBitsToDouble(slots.longs(idx)))
-          case (FloatType, FLOAT) =>
-            row.setFloat(i, java.lang.Float.intBitsToFloat(slots.longs(idx).toInt))
-          case (BooleanType, BOOLEAN) => row.setBoolean(i, slots.longs(idx) != 0L)
-          case (TimestampType, INT96) =>
-            // spark's default parquet timestamp: 8B little-endian nanos-of-
-            // day + 4B little-endian julian day
-            val buf = java.nio.ByteBuffer.wrap(slots.refs(idx).asInstanceOf[Array[Byte]])
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            val nanos = buf.getLong; val jday = buf.getInt
-            row.setLong(i, (jday - JULIAN_EPOCH_DAY) * 86400000000L + nanos / 1000L)
-          case (TimestampType, INT64) =>
-            val micros = prim.getLogicalTypeAnnotation match {
-              case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-                  if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                slots.longs(idx) * 1000L
-              case _ => slots.longs(idx) // micros (spark's INT64 output)
-            }
-            row.setLong(i, micros)
-          case (d, p) => throw new IllegalStateException(
-            s"graft-catalog reader: unsupported column type $d / parquet $p " +
-            s"for field '${required.fields(i).name}' in $file")
-        }
-      }
-      i += 1
-      }
-    }
-    row
+  override def close(): Unit = {
+    reader.close()
+    made.foreach(v => if (v != null) v.close())
   }
+}
 
-  override def close(): Unit = reader.close()
+/** The rows `rowIds` of `child`, in order: a batch's surviving rows once
+  * its deletes apply (the pattern of Iceberg's `ColumnVectorWithFilter`).
+  * Children are remapped too, so a struct's fields stay aligned with its
+  * rows; arrays and maps index the child's own element storage.
+  */
+private[sources] final class RowIdRemap(child: ColumnVector, rowIds: Array[Int])
+    extends ColumnVector(child.dataType) {
+  private val kids: Array[ColumnVector] = child.dataType match {
+    case s: StructType => Array.tabulate(s.length)(i => new RowIdRemap(child.getChild(i), rowIds))
+    case _ => Array.empty
+  }
+  override def getChild(i: Int): ColumnVector =
+    if (i < kids.length) kids(i) else new RowIdRemap(child.getChild(i), rowIds)
+  override def close(): Unit = () // the child belongs to its file reader
+  override def hasNull(): Boolean = child.hasNull
+  override def numNulls(): Int = rowIds.count(child.isNullAt)
+  override def isNullAt(r: Int): Boolean = child.isNullAt(rowIds(r))
+  override def getBoolean(r: Int): Boolean = child.getBoolean(rowIds(r))
+  override def getByte(r: Int): Byte = child.getByte(rowIds(r))
+  override def getShort(r: Int): Short = child.getShort(rowIds(r))
+  override def getInt(r: Int): Int = child.getInt(rowIds(r))
+  override def getLong(r: Int): Long = child.getLong(rowIds(r))
+  override def getFloat(r: Int): Float = child.getFloat(rowIds(r))
+  override def getDouble(r: Int): Double = child.getDouble(rowIds(r))
+  override def getArray(r: Int): ColumnarArray = child.getArray(rowIds(r))
+  override def getMap(r: Int): ColumnarMap = child.getMap(rowIds(r))
+  override def getDecimal(r: Int, precision: Int, scale: Int): Decimal =
+    child.getDecimal(rowIds(r), precision, scale)
+  override def getUTF8String(r: Int): UTF8String = child.getUTF8String(rowIds(r))
+  override def getBinary(r: Int): Array[Byte] = child.getBinary(rowIds(r))
 }

@@ -53,7 +53,7 @@ object GraftCatalog {
 class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCatalog {
   private var catName: String = _
   private var root: String = _
-  private def cat = new ParquetSnapshotCatalog(root)
+  private lazy val cat = new ParquetSnapshotCatalog(root) // root is set by initialize
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catName = name
@@ -87,8 +87,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     def recorded = cat.getMeta(t, "sql.schema")
       .map(DataType.fromJson(_).asInstanceOf[StructType])
     cat.currentSnapshot(t) match {
-      case Some(_) =>
-        scala.util.Try(cat.read(SparkSession.active, t).schema).toOption
+      case Some(snap) =>
+        scala.util.Try(cat.schemaAt(SparkSession.active, t, snap)).toOption
           .orElse(recorded)
           .getOrElse(throw new IllegalStateException(
             s"graft catalog: cannot derive schema of '$t' (unreadable data files, " +
@@ -333,7 +333,7 @@ final class GraftSqlTable(tableSchema: StructType, root: String, table: String,
                           asOf: Option[Long])
     extends CatalogTable(tableSchema, root, table, Int.MaxValue, 0L, asOf)
     with SupportsDeleteV2 with SupportsRowLevelOperations {
-  private def cat = new ParquetSnapshotCatalog(root)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
   override def name(): String = table
 
   /** User TBLPROPERTIES (SET/UNSET TBLPROPERTIES, CREATE ... TBLPROPERTIES)
@@ -425,7 +425,7 @@ final class GraftRowLevelOperation(
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
     tableSchema: StructType, root: String, table: String)
     extends org.apache.spark.sql.connector.write.SupportsDelta {
-  private def cat = new ParquetSnapshotCatalog(root)
+  private lazy val cat = new ParquetSnapshotCatalog(root)
   override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
   override def description(): String = s"GraftRowLevelOperation($cmd, $table)"
   override def rowId(): Array[NamedReference] = Array(
@@ -459,8 +459,9 @@ private[sources] final class GraftEmptyScanBuilder(schema: StructType)
     override def readSchema(): StructType = required
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] = Array.empty
+    // no partitions: the factory never opens a file, so no conf rides it
     override def createReaderFactory(): PartitionReaderFactory =
-      new CatalogReaderFactory(required)
+      new CatalogReaderFactory(required, required, Nil, null)
     override def description(): String = "GraftCatalogScan(empty table)"
   }
 }

@@ -489,9 +489,9 @@ object Warc {
   private def writeFiles[T](ds: Dataset[T], dir: String, gzip: Boolean, zstd: Boolean)(
       ser: T => Array[Byte]): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = ds.sparkSession
+    val conf = SessionHadoopConf.broadcast(ds.sparkSession)
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dirPath.getFileSystem(conf.value.value)
     fs.mkdirs(dirPath)
     val stale = fs.listStatus(dirPath).filter { st =>
       val n = st.getPath.getName
@@ -504,10 +504,10 @@ object Warc {
     ds.foreachPartition { (it: Iterator[T]) =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
-      // executor side: default Configuration picks up the cluster's Hadoop
-      // conf from the classpath (core-site.xml), which is where object-store
+      // executor side: the session's Hadoop conf (core-site.xml from the
+      // classpath plus its spark.hadoop.* settings), where object-store
       // credentials/impl classes live on a real deployment
-      val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val efs = new Path(dir).getFileSystem(conf.value.value)
       val tmp = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.$ext")
       val dst = new Path(dir, f"part-$pid%05d.$ext")
       val os = new java.io.BufferedOutputStream(efs.create(tmp, true), 1 << 16)
@@ -797,9 +797,9 @@ object Warc {
     */
   def writeWithCdx(recs: Dataset[WarcRec], dir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = recs.sparkSession
+    val conf = SessionHadoopConf.broadcast(recs.sparkSession)
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dirPath.getFileSystem(conf.value.value)
     fs.mkdirs(dirPath)
     fs.listStatus(dirPath).filter { st =>
       val n = st.getPath.getName
@@ -809,7 +809,7 @@ object Warc {
     recs.foreachPartition { (it: Iterator[WarcRec]) =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
-      val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val efs = new Path(dir).getFileSystem(conf.value.value)
       val name = f"part-$pid%05d.warc.gz"
       val tmpW = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-$name")
       val tmpC = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.cdx")
@@ -850,9 +850,9 @@ object Warc {
     */
   def writeRevisitCdx(recs: Dataset[WarcRec], dir: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = recs.sparkSession
+    val conf = SessionHadoopConf.broadcast(recs.sparkSession)
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = dirPath.getFileSystem(conf.value.value)
     fs.mkdirs(dirPath)
     fs.listStatus(dirPath).filter { st =>
       val n = st.getPath.getName
@@ -863,7 +863,7 @@ object Warc {
       (it: Iterator[(String, Long, Array[Byte], String, Boolean)]) =>
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
-      val efs = new Path(dir).getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val efs = new Path(dir).getFileSystem(conf.value.value)
       val name = f"part-$pid%05d.warc.gz"
       val tmpW = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-$name")
       val tmpC = new Path(dir, f".tmp-$nonce-${tc.taskAttemptId()}%d-part-$pid%05d.cdx")
@@ -985,7 +985,7 @@ object Warc {
                    verifyDigest: String = null): PageRow = {
     import org.apache.hadoop.fs.Path
     val p = new Path(dir, filename)
-    val in = p.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(p)
+    val in = p.getFileSystem(SessionHadoopConf(SparkSession.active)).open(p)
     val slice = new Array[Byte](length.toInt)
     try { in.seek(offset); in.readFully(slice) } finally in.close()
     if (verifyDigest != null) {

@@ -58,15 +58,6 @@ object WarcSource {
     StructField("html", BinaryType, nullable = false)
   ))
 
-  /** The session's Hadoop configuration with `options` applied, broadcast
-    * once per scan to the file listing and the readers.
-    */
-  def hadoopConf(options: CaseInsensitiveStringMap): Broadcast[SerializableConfiguration] = {
-    val spark = SparkSession.active
-    val conf = spark.sessionState.newHadoopConfWithOptions(options.asCaseSensitiveMap.asScala.toMap)
-    spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-  }
-
   /** The .warc / .warc.gz files under `dir` (sorted — deterministic
     * partition order).
     */
@@ -92,7 +83,8 @@ final class WarcTable(pathOpt: Option[String]) extends Table with SupportsRead {
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val dir = Option(options.get("path")).orElse(pathOpt)
       .getOrElse(throw new IllegalArgumentException("warc source needs a path"))
-    new WarcScanBuilder(dir, WarcSource.hadoopConf(options))
+    new WarcScanBuilder(dir,
+      SessionHadoopConf.broadcast(SparkSession.active, options.asCaseSensitiveMap.asScala.toMap))
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SaveMode}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -342,8 +343,9 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * written over it push down to [[graft.sources.CatalogScan]], which
     * opens only the files that zone maps, bloom sidecars and every
     * partition-spec era on the column cannot rule out; Spark re-applies
-    * the filter row-level and pending deletes of both kinds apply. Atomic
-    * column types only (the DSv2 row reader refuses nested columns).
+    * the filter row-level and pending deletes of both kinds apply. Every
+    * file decodes through Spark's vectorized parquet reader, nested
+    * columns (arrays, structs) included.
     */
   def scan(spark: SparkSession, table: String): DataFrame =
     spark.read.format("graft-catalog").option("root", root).option("table", table).load()
@@ -869,7 +871,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   def positionalDeletes(table: String, snap: Long): Seq[(String, Long)] =
     positionalTsvPairs(table, snap) ++
       deletionVectorIndex(table, snap).flatMap { e =>
-        val bm = DeletionVectors.load(e.dvPath, e.offset, e.length)
+        val bm = DeletionVectors.load(e.dvPath, e.offset, e.length, conf)
         val out = new Array[(String, Long)](bm.getCardinality)
         var i = 0
         val it = bm.iterator()
@@ -1168,7 +1170,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       .flatMap(_.split('\n')).filter(_.nonEmpty)
 
   /** A historical column name's CURRENT name (follows the rename chain). */
-  private def currentName(renames: Seq[(String, String)])(n: String): String =
+  private[graft] def currentName(renames: Seq[(String, String)])(n: String): String =
     renames.foldLeft(n) { case (c, (o, nw)) => if (c == o) nw else c }
 
   /** Map one file group's columns forward through the rename history. When
@@ -1196,9 +1198,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       case Some(keep) => addSnap.filter(p => keep(p._1))
       case None => addSnap
     }
-    // ref = d<snap>.<col>.tsv (delete columns cannot contain '.')
-    val deletes = deleteRefsOf(table, snap).filter(_.startsWith("d"))
-      .map(ref => (ref.stripPrefix("d").split('.')(0).toLong, ref)).sortBy(_._1)
+    val deletes = equalityDeleteRefs(table, snap)
     // positional tombstones (p<snap>.tsv): (normalized file path, row
     // ordinal). They name their files explicitly, so no add-order grouping
     // is needed — the sequence rule holds by construction (a file added
@@ -1247,20 +1247,82 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
           .drop("__pd_nf", "__pd_pos")
       }
     }
-    val unioned = wanted.groupBy { case (_, k) => deletes.count(_._1 <= k) }
-      .toSeq.sortBy(_._1)
-      .map { case (idx, fs) =>
-        val df = scanGroup(fs.map(_._1))
-        deletes.drop(idx).foldLeft(df) { (d, del) => antiJoin(d, del._2) }
-      }
-      // allowMissingColumns: with ADD-column evolution an older file group
-      // may lack the new column — same null semantics parquet mergeSchema
-      // applies within one group
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    unionGroups(deleteGroups(wanted, deletes.map(_._1)).map { case (idx, fs) =>
+      val df = scanGroup(fs)
+      deletes.drop(idx).foldLeft(df) { (d, del) => antiJoin(d, del._2) }
+    }, renames, drops)
+  }
+
+  /** The snapshot's equality-delete files as (delete snapshot, ref),
+    * ascending; ref = d<snap>.<col>.tsv (delete columns cannot contain '.'). */
+  private def equalityDeleteRefs(table: String, snap: Long): Seq[(Long, String)] =
+    deleteRefsOf(table, snap).filter(_.startsWith("d"))
+      .map(ref => (ref.stripPrefix("d").split('.')(0).toLong, ref)).sortBy(_._1)
+
+  /** The files grouped by how many equality deletes precede them, in add
+    * order: [[readWithDeletes]] scans each group as one relation. */
+  private def deleteGroups(files: Seq[(String, Long)],
+                           deleteSnaps: Seq[Long]): Seq[(Int, Seq[String])] =
+    files.groupBy { case (_, k) => deleteSnaps.count(_ <= k) }.toSeq.sortBy(_._1)
+      .map { case (idx, fs) => (idx, fs.map(_._1)) }
+
+  private def unionGroups(groups: Seq[DataFrame], renames: Seq[(String, String)],
+                          drops: Seq[String]): DataFrame = {
+    // allowMissingColumns: with ADD-column evolution an older file group
+    // may lack the new column — same null semantics parquet mergeSchema
+    // applies within one group
+    val unioned = groups.reduce(_.unionByName(_, allowMissingColumns = true))
     // drops project away LAST — an equality delete keyed on a dropped
     // column has already applied above
     drops.map(currentName(renames)).distinct
       .foldLeft(unioned)((d, c) => if (d.columns.contains(c)) d.drop(c) else d)
+  }
+
+  /** The schema [[read]] yields at `snap`, from the data files' footers
+    * alone — no scan is planned. Each of [[readWithDeletes]]'s file groups
+    * merges its footers by name as `mergeSchema` does, and the groups then
+    * take the read's own rename, union and drop steps as empty frames, so
+    * column order and nullability are the read's.
+    */
+  def schemaAt(spark: SparkSession, table: String, snap: Long): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    // a file source reads every level nullable
+    def nullable(dt: DataType): DataType = dt match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    // `mergeSchema`'s merge: by name, left order first, nested structs merged
+    def merge(l: DataType, r: DataType): DataType = (l, r) match {
+      case (a: StructType, b: StructType) =>
+        StructType(a.fields.map(f => b.find(_.name == f.name)
+          .fold(f)(g => f.copy(dataType = merge(f.dataType, g.dataType)))) ++
+          b.fields.filterNot(g => a.fieldNames.contains(g.name)))
+      case (a: ArrayType, b: ArrayType) => ArrayType(merge(a.elementType, b.elementType))
+      case (a: MapType, b: MapType) => MapType(merge(a.keyType, b.keyType), merge(a.valueType, b.valueType))
+      case _ if l == r => l
+      case _ => throw new IllegalStateException(s"$table: incompatible column types $l and $r")
+    }
+    val renames = renameHistory(table)
+    val hconf = spark.sessionState.newHadoopConf()
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    val deleteSnaps = equalityDeleteRefs(table, snap).map(_._1)
+    val groups = deleteGroups(filesWithAddOrder(table, snap), deleteSnaps).map { case (_, fs) =>
+      val merged = fs.map { f =>
+        val p = new HPath(f)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(p, ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, hconf), NO_FILTER)),
+          converter)
+      }.reduce(merge)
+      applyRenames(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        nullable(merged).asInstanceOf[StructType]), renames)
+    }
+    unionGroups(groups, renames, droppedColumns(table)).schema
   }
 
   /** Iceberg-style rewrite_data_files (bin-packing compaction): coalesce
@@ -2893,9 +2955,10 @@ object ParquetSnapshotCatalog {
   * driver round-trip involved.
   */
 object DeletionVectors {
-  def load(dvPath: String, offset: Long, length: Int): org.roaringbitmap.RoaringBitmap = {
+  def load(dvPath: String, offset: Long, length: Int,
+           conf: Configuration): org.roaringbitmap.RoaringBitmap = {
     val p = new HPath(dvPath)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = p.getFileSystem(conf)
     val in = fs.open(p)
     try {
       in.seek(offset)

@@ -7,12 +7,12 @@ import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
 
-/** The COLUMNAR fast path: clean snapshots read through Spark's own
+/** Every scan reads COLUMNAR through Spark's own
   * `VectorizedParquetRecordReader` (batched ColumnarBatch decoding — the
-  * engine's production parquet machinery), with automatic fallback to the
-  * delete-applying row reader whenever row-level semantics must apply.
-  * The Iceberg rule: vectorize clean scans, never let the fast path change
-  * an answer.
+  * engine's production parquet machinery): clean snapshots, and also
+  * pending deletes, `_file`/`_pos` and renames, which the reader applies to
+  * each decoded batch. The Iceberg rule: one vectorized decoder, never a
+  * changed answer.
   */
 class VectorizedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -60,12 +60,12 @@ class VectorizedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want)
   }
 
-  test("a pending equality delete forces the ROW path and the tombstone applies") {
+  test("a pending equality delete stays columnar and the tombstone applies") {
     val ss = spark; import ss.implicits._
     cat.commit((0 until 100).map(i => (i.toLong, s"v$i")).toDF("id", "v"), "del")
     cat.deleteWhere("del", "id", Seq("7", "42"))
     val df = read("del")
-    assert(!ranColumnar(df), "delete-carrying snapshot must NOT vectorize")
+    assert(ranColumnar(df), "a delete-carrying snapshot reads columnar")
     assert(df.collect().map(_.getLong(0)).toSet == (0 until 100).map(_.toLong).toSet - 7L - 42L)
   }
 
@@ -76,9 +76,9 @@ class VectorizedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().map(_.getLong(0)).toSet == (0 until 100).map(_.toLong).toSet - 7L - 42L)
   }
 
-  test("_file/_pos metadata projection rides the row path with correct ordinals") {
+  test("_file/_pos metadata projection reads columnar with correct ordinals") {
     val df = read("clean").selectExpr("l", "_pos")
-    assert(!ranColumnar(df), "metadata columns are reader-synthesized — row path only")
+    assert(ranColumnar(df), "metadata columns are reader-made vectors")
     // per-file ordinals are dense from 0
     val byFile = read("clean").selectExpr("_file", "_pos").collect()
       .groupBy(_.getString(0)).values
@@ -97,12 +97,12 @@ class VectorizedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       Set(("u1", None), ("u2", None), ("u3", Some("en"))))
   }
 
-  test("a RENAME forces the row path (per-file physical resolution) and still answers right") {
+  test("a RENAME reads columnar (per-file physical resolution) and still answers right") {
     val ss = spark; import ss.implicits._
     cat.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "olds"), "ren")
     cat.renameColumn("ren", "olds", "news")
     val df = read("ren").select("id", "news")
-    assert(!ranColumnar(df), "rename history must disable the columnar path")
+    assert(ranColumnar(df), "rename history resolves per file, columnar")
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "a"), (2L, "b")))
   }

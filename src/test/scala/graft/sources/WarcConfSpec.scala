@@ -2,25 +2,38 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 
-/** A local file system that records every path it opens. */
+import graft.spark.ParquetSnapshotCatalog
+import scala.jdk.CollectionConverters._
+
+/** A local file system that records every path it opens or creates. */
 class OpenRecordingLocalFs extends LocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     OpenRecordingLocalFs.opened.add(f.getName)
     super.open(f, bufferSize)
   }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    OpenRecordingLocalFs.created.add(f.getName)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
 }
 
 object OpenRecordingLocalFs {
   val opened: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val created: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
-/** The warc source opens archives through the session's Hadoop
+/** Archives and catalog data files open through the session's Hadoop
   * configuration: with `spark.hadoop.fs.file.impl` naming a recording file
   * system (and its cache off, so every `getFileSystem` builds one from the
-  * configuration), the listing and every reader go through that class.
+  * configuration), the warc listing and readers, the CDX archive writer,
+  * the CDX random-access fetch and the catalog scan's readers all go
+  * through that class.
   */
 class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -49,5 +62,33 @@ class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     OpenRecordingLocalFs.opened.clear()
     assert(spark.read.format("warc").load(dir.toString).count() == 6L)
     names.foreach(n => assert(OpenRecordingLocalFs.opened.contains(n), s"$n not opened through the session's file system"))
+  }
+
+  test("the CDX archive writer and the random-access fetch use the session's file system") {
+    val ss = spark; import ss.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("warccdxconf").toString
+    val recs = (0 until 4).map(i => Warc.WarcRec(s"https://c/$i", 1000L + i, s"<p>$i</p>".getBytes("UTF-8")))
+    OpenRecordingLocalFs.created.clear()
+    Warc.writeWithCdx(recs.toDS().repartition(1), dir)
+    assert(OpenRecordingLocalFs.created.asScala.exists(_.endsWith("part-00000.warc.gz")) &&
+      OpenRecordingLocalFs.created.asScala.exists(_.endsWith("part-00000.cdx")),
+      s"archive writer bypassed the session's file system: ${OpenRecordingLocalFs.created}")
+    val hit = Warc.readCdx(spark, dir).where("url = 'https://c/2'").collect().head
+    OpenRecordingLocalFs.opened.clear()
+    val row = Warc.readRecordAt(dir, hit.getString(5), hit.getLong(3), hit.getLong(4))
+    assert(row.url == "https://c/2")
+    assert(OpenRecordingLocalFs.opened.contains(hit.getString(5)))
+  }
+
+  test("the catalog scan opens every data file through the session's file system") {
+    val cat = new ParquetSnapshotCatalog(
+      java.nio.file.Files.createTempDirectory("catconf").toFile.getAbsolutePath)
+    cat.commit(spark.range(100).selectExpr("id", "CAST(id AS STRING) AS s").repartition(3), "t")
+    cat.deleteWhere("t", "id", Seq("7"))
+    val files = cat.filesWithAddOrder("t", cat.currentSnapshot("t").get).map(f => new Path(f._1).getName)
+    val df = cat.scan(spark, "t")
+    OpenRecordingLocalFs.opened.clear()
+    assert(df.count() == 99L)
+    files.foreach(f => assert(OpenRecordingLocalFs.opened.contains(f), s"$f not opened through the session's file system"))
   }
 }
