@@ -62,33 +62,28 @@ import graft.spark.ParquetSnapshotCatalog
   * each decoded batch with the file's positional tombstones and deletion
   * vector ([[CatalogPartitionReader]]).
   *
-  * The same scan doubles as a batch read (`spark.read.format(...)`) of the
-  * current snapshot through the identical reader, which is what the parity
-  * specs pin against `catalog.read`.
+  * The same scan is the catalog's one batch read
+  * (`ParquetSnapshotCatalog.scan`): the current snapshot, a `snapshot`
+  * option pinning a retained one (time travel), and with `startSnapshot`
+  * the files added after it (the incremental read), all through the
+  * identical reader.
   */
 class CatalogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-catalog"
   override def supportsExternalMetadata(): Boolean = false
 
+  /** The snapshot's schema (`ParquetSnapshotCatalog.schemaAt`): rename
+    * history applied and ADD-column evolution unioned by name, folded from
+    * the data files' footers, no scan planned. A snapshot whose schema
+    * cannot be derived fails the read.
+    */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val (root, table) = CatalogSource.rootTable(options)
     val cat = new ParquetSnapshotCatalog(root)
-    val snap = cat.currentSnapshot(table).getOrElse(throw new IllegalArgumentException(
-      s"graft-catalog source: table '$table' under '$root' has no committed snapshot"))
-    // the authoritative read path's schema — rename history applied and
-    // ADD-column evolution unioned by name (a first-footer-only inference
-    // would miss columns the first file predates) — folded from the data
-    // files' footers, no scan planned
-    scala.util.Try(cat.schemaAt(SparkSession.active, table, snap)).getOrElse {
-      val files = cat.filesWithAddOrder(table, snap).map(_._1).sorted
-      // fallback: one footer, driver-side — walk the list so a missing
-      // first file (mid-maintenance) degrades gracefully
-      files.iterator
-        .map(f => scala.util.Try(SparkSession.active.read.parquet(f).schema))
-        .collectFirst { case scala.util.Success(s) => s }
-        .getOrElse(throw new IllegalArgumentException(
-          s"graft-catalog source: snapshot $snap of '$table' has no readable data files"))
-    }
+    val snap = CatalogSource.pinnedSnapshot(options).orElse(cat.currentSnapshot(table))
+      .getOrElse(throw new IllegalArgumentException(
+        s"graft-catalog source: table '$table' under '$root' has no committed snapshot"))
+    cat.schemaAt(SparkSession.active, table, snap)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -96,7 +91,8 @@ class CatalogSource extends TableProvider with DataSourceRegister {
     val opts = new CaseInsensitiveStringMap(properties)
     new CatalogTable(schema, opts.get("root"), opts.get("table"),
       Option(opts.get("maxSnapshotsPerBatch")).map(_.toInt).getOrElse(Int.MaxValue),
-      Option(opts.get("startSnapshot")).map(_.toLong).getOrElse(0L))
+      Option(opts.get("startSnapshot")).map(_.toLong).getOrElse(0L),
+      CatalogSource.pinnedSnapshot(opts))
   }
 }
 
@@ -119,11 +115,16 @@ object CatalogSource {
     (root, table)
   }
 
+  /** The `snapshot` reader option: the retained snapshot a batch read pins. */
+  private[sources] def pinnedSnapshot(options: CaseInsensitiveStringMap): Option[Long] =
+    Option(options.get("snapshot")).map(_.toLong)
+
   /** Delete keys match `CAST(column AS STRING)`; the scan's reader replays
     * that cast faithfully only for these types (they are what
-    * takedown/upsert key on: urls, digests, ids).
+    * takedown/upsert key on: urls, digests, ids), so equality deletes may
+    * key on no other.
     */
-  private[sources] def deletableType(dt: DataType): Boolean = dt match {
+  private[graft] def deletableType(dt: DataType): Boolean = dt match {
     case StringType | LongType | IntegerType => true
     case _ => false
   }
@@ -177,17 +178,17 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
     * files opened (Iceberg's metadata-aggregate optimization). Pushable
     * only when the answer is PROVABLY exact: no WHERE residue (we return
     * every filter as residual, so any filter blocks this), no GROUP BY, no
-    * time travel, every file of the snapshot counted, no delete tombstone
-    * pending ([[ParquetSnapshotCatalog.statsAgg]]'s refusal rule), and the
-    * column's stat string round-trips its type exactly (long/int/string —
-    * doubles are deliberately excluded: a formatted bound may not be the
-    * exact stored double).
+    * time travel or incremental window, every file of the snapshot counted,
+    * no delete tombstone pending ([[ParquetSnapshotCatalog.statsAgg]]'s
+    * refusal rule), and the column's stat string round-trips its type
+    * exactly (long/int/string — doubles are deliberately excluded: a
+    * formatted bound may not be the exact stored double).
     */
   private def tryPushAgg(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[(StructType, Array[Array[Any]])] = {
     import org.apache.spark.sql.connector.expressions.aggregate._
     import org.apache.spark.sql.connector.expressions.NamedReference
-    if (asOf.nonEmpty || pushed.nonEmpty) return None
+    if (asOf.nonEmpty || startSnap > 0 || pushed.nonEmpty) return None
     if (agg.groupByExpressions().nonEmpty) return tryPushGroupAgg(agg)
     if (cat.currentSnapshot(table).isEmpty) return None
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
@@ -310,8 +311,10 @@ final class CatalogScanBuilder(tableSchema: StructType, root: String, table: Str
       case LessThanOrEqual(_, v) => v != null && CatalogScan.literalOk(v)
       // LIKE 'prefix%' — the url-slice access pattern on a url-sorted table
       case StringStartsWith(_, p) => p != null && p.nonEmpty
-      // planning-time IN: union of per-value equality prunes, capped
-      case In(_, vs) => vs != null && vs.nonEmpty && vs.length <= CatalogScan.MaxInValues &&
+      // planning-time IN: union of per-value equality prunes, capped; an
+      // IN on `_file` is a plain set intersection, so any size prunes
+      case In(c, vs) => vs != null && vs.nonEmpty &&
+        (vs.length <= CatalogScan.MaxInValues || CatalogScan.isFileCol(c, tableSchema)) &&
         vs.forall(v => v != null && CatalogScan.literalOk(v))
       // boolean composition: Or prunes iff BOTH branches do (union);
       // And prunes if EITHER does (intersection / one-sided)
@@ -360,12 +363,12 @@ final class CatalogAggScan(table: String, out: StructType, rows: Array[Array[Any
 }
 
 /** One data file + the deletes that apply to it, both kinds resolved at
-  * planning: equality tombstones as (column, keys) pairs in commit order
-  * (sequence rule already applied), positional tombstones as the file's
-  * sorted row ordinals.
+  * planning: equality tombstones as (key column, keys) pairs in commit
+  * order (sequence rule already applied), positional tombstones as the
+  * file's sorted row ordinals.
   */
 final case class CatalogFilePartition(file: String,
-                                      deletes: Seq[(String, Seq[String])],
+                                      deletes: Seq[(StructField, Seq[String])],
                                       posDeletes: Seq[Long] = Nil,
                                       dv: Option[(String, Long, Int)] = None)
     extends InputPartition
@@ -400,6 +403,11 @@ object CatalogScan {
     * scans every file — never a wrong answer.
     */
   private[sources] val MaxInValues = 1024
+
+  /** A filter on `_file` names data files outright (unless a data column
+    * of that name shadows the metadata column). */
+  private[sources] def isFileCol(c: String, tableSchema: StructType): Boolean =
+    c == "_file" && !tableSchema.fieldNames.contains("_file")
 
   private[sources] def literalOk(v: Any): Boolean = v match {
     case _: String | _: Long | _: Int | _: java.lang.Long | _: java.lang.Integer |
@@ -582,21 +590,28 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
   // ------------------------------------------------------------------
   private lazy val batchSnap: Long = effSnap
   private lazy val batchFiles: Seq[(String, Long)] =
-    pruneByFilters(cat.filesWithAddOrder(table, batchSnap), batchSnap)
+    pruneByFilters(windowFiles(startSnap, batchSnap), batchSnap)
+
+  /** The (file, add order) pairs of `to`, or with `from` > 0 those added in
+    * (from, to] — the incremental window, refused when it crosses a
+    * rewrite. Shared by the batch read and the micro-batch stream. */
+  private[sources] def windowFiles(from: Long, to: Long): Seq[(String, Long)] =
+    if (from <= 0) cat.filesWithAddOrder(table, to)
+    else cat.incrementalFilesWithAddOrder(table, from, to)
 
   /** One keyed file-group per partition value, or None when the layout
     * cannot guarantee it (no spec, a file with unpinned value, unsupported
-    * key type, time travel). Identity groups key on the raw column value;
-    * BUCKET groups key on the bucket id, reported as the `bucket(n, col)`
-    * transform that Spark resolves through the catalog's FunctionCatalog
-    * ([[GraftBucketFunction]]) — which is what lets two same-bucketed
-    * tables compare partitionings and join with zero exchange. Days stays
-    * out (session-tz rendering); truncate stays out (ranges, not pins, is
-    * its usual write shape — and its SQL path pins too, but a truncate
-    * prefix is rarely a join key).
+    * key type, time travel, an incremental window). Identity groups key on
+    * the raw column value; BUCKET groups key on the bucket id, reported as
+    * the `bucket(n, col)` transform that Spark resolves through the
+    * catalog's FunctionCatalog ([[GraftBucketFunction]]) — which is what
+    * lets two same-bucketed tables compare partitionings and join with zero
+    * exchange. Days stays out (session-tz rendering); truncate stays out
+    * (ranges, not pins, is its usual write shape — and its SQL path pins
+    * too, but a truncate prefix is rarely a join key).
     */
   private lazy val keyGroups: Option[(graft.spark.PartTransform, Array[InputPartition])] = {
-    if (asOf.nonEmpty) None
+    if (asOf.nonEmpty || startSnap > 0) None
     else cat.partitionSpec(table) match {
       case Some(spec @ (_: graft.spark.IdentityTransform | _: graft.spark.BucketTransform)) =>
         tableSchema.fields.find(_.name == spec.col).flatMap { field =>
@@ -662,33 +677,23 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
   }
 
   /** Planner statistics from METADATA only: bytes = the pruned file set's
-    * on-disk sizes, rows = the stats sidecar's __count when complete — what
-    * lets Catalyst broadcast a small catalog table in a join without
-    * scanning it first. O(files) driver work, zero data opened.
+    * on-disk sizes, rows = the scan snapshot's `__count` sidecar lines when
+    * every planned file has one (rows written; pending deletes are not
+    * subtracted) — what lets Catalyst broadcast a small catalog table in a
+    * join without scanning it first. O(files) driver work, zero data opened.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private val (bytes, rows) = {
       import org.apache.hadoop.fs.Path
-      val snapO = asOf.orElse(cat.currentSnapshot(table))
-      snapO match {
-        case None => (0L, None)
-        case Some(_) =>
-          val files = batchFiles.map(_._1) // pruned once, pinned with the batch
-          val conf = hadoopConf.value.value
-          val sz = files.map { f =>
-            val p = new Path(f)
-            scala.util.Try(p.getFileSystem(conf).getFileStatus(p).getLen).getOrElse(0L)
-          }.sum
-          val nRows = scala.util.Try {
-            val fdf = cat.filesDF(SparkSession.active, table)
-              .where(org.apache.spark.sql.functions.col("file").isin(files: _*))
-            val counted = fdf.collect()
-            if (counted.nonEmpty && counted.forall(!_.isNullAt(3)))
-              Some(counted.map(_.getLong(3)).sum)
-            else None
-          }.toOption.flatten
-          (sz, nRows)
+      val conf = hadoopConf.value.value
+      val counts = cat.fileRowCounts(table, batchSnap)
+      // pruned once, pinned with the batch
+      val (sz, n) = batchFiles.foldLeft((0L, Option(0L))) { case ((sz, n), (f, _)) =>
+        val p = new Path(f)
+        (sz + scala.util.Try(p.getFileSystem(conf).getFileStatus(p).getLen).getOrElse(0L),
+          for (a <- n; c <- counts.get(f)) yield a + c)
       }
+      (sz, n.filter(_ => batchFiles.nonEmpty))
     }
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong =
@@ -707,7 +712,9 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     * sidecars (equality), and the partition transform of every spec era on
     * the column (equality always; range only for order-preserving eras). A
     * file without stats is conservatively kept by each pruner, and Spark
-    * re-applies the row-level filter on top.
+    * re-applies the row-level filter on top. Equality or `IN` on `_file`
+    * keeps exactly the named files (what compaction reads its rewrite set
+    * with).
     */
   private[sources] def pruneByFilters(files: Seq[(String, Long)], snap: Long): Seq[(String, Long)] = {
     import org.apache.spark.sql.sources._
@@ -717,6 +724,8 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     // serve an Or iff it can serve SOME branch — both branches must be
     // answerable, else the whole Or is conservatively unanswerable)
     def cand(f: Filter): Option[Set[String]] = f match {
+      case EqualTo(c, v) if CatalogScan.isFileCol(c, tableSchema) => Some(Set(v.toString))
+      case In(c, vs) if CatalogScan.isFileCol(c, tableSchema) => Some(vs.map(_.toString).toSet)
       case EqualTo(c, v) => Some(eqCandidates(snap, c, Seq(lit(v))))
       case In(c, vs) => Some(eqCandidates(snap, c, vs.toSeq.map(lit)))
       case StringStartsWith(c, p) =>
@@ -759,8 +768,9 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
 
   /** Attach the sequence-rule-applicable deletes to each planned file and
     * validate that every delete column is readable by this scan (present in
-    * the table schema at a CAST-replayable type). A tombstone names its
-    * column as of the delete; it is resolved to the current name here.
+    * the data files at a CAST-replayable type). A tombstone names its
+    * column as of the delete; it is resolved to the current name here, and
+    * a column dropped since is typed by the snapshot's footers.
     */
   private[sources] def withDeletes(files: Seq[(String, Long)],
                                    snap: Long): Array[InputPartition] = {
@@ -771,9 +781,8 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     // grouping needed (tombstones name files; the sequence rule holds by
     // construction). A tombstoned path naming NO file of the snapshot has
     // nowhere to apply — refuse loudly rather than silently resurrect
-    // (readWithDeletes' hand-to-every-group fallback has no per-file
-    // equivalent here; both sides normalize identically, so this fires only
-    // on genuine metadata corruption).
+    // (both sides normalize identically, so this fires only on genuine
+    // metadata corruption).
     // TSV tombstones expand at planning (takedown-sized by the commit
     // contract); deletion VECTORS stay coordinates — each file's partition
     // carries (dvPath, offset, length) and the TASK range-reads its bitmap,
@@ -788,7 +797,7 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
       if (posAll.isEmpty && dvIdx.isEmpty) Map.empty
       else {
         val snapNorm = cat.filesWithAddOrder(table, snap)
-          .map(p => cat.normFile(p._1)).toSet
+          .map(p => ParquetSnapshotCatalog.normFile(p._1)).toSet
         val orphans = (posAll.collect { case (f, _) if !snapNorm(f) => f } ++
           dvIdx.collect { case e if !snapNorm(e.file) => e.file }).distinct
         require(orphans.isEmpty,
@@ -801,17 +810,20 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     val renames = cat.renameHistory(table)
     val deletes = cat.equalityDeletes(table, snap)
       .map { case (s, c, keys) => (s, cat.currentName(renames)(c), keys) }
-    deletes.map(_._2).distinct.foreach { c =>
-      val f = tableSchema.fields.find(_.name == c).getOrElse(throw new IllegalStateException(
-        s"graft-catalog source: delete column '$c' not in table schema"))
+    lazy val withDropped = cat.schemaAt(SparkSession.active, table, snap, withDropped = true)
+    val keyField: Map[String, StructField] = deletes.map(_._2).distinct.map { c =>
+      val f = tableSchema.find(_.name == c).orElse(withDropped.find(_.name == c))
+        .getOrElse(throw new IllegalStateException(
+          s"graft-catalog source: delete column '$c' is in no data file of snapshot $snap"))
       require(CatalogSource.deletableType(f.dataType),
         s"graft-catalog source: delete column '$c' has type ${f.dataType.simpleString}; " +
         "only string/long/int delete keys are replayable by the scan's reader")
-    }
+      c -> f
+    }.toMap
     files.sortBy(_._1).map { case (f, addSnap) =>
-      val norm = cat.normFile(f)
+      val norm = ParquetSnapshotCatalog.normFile(f)
       CatalogFilePartition(f,
-        deletes.filter(_._1 > addSnap).map(d => (d._2, d._3)),
+        deletes.filter(_._1 > addSnap).map(d => (keyField(d._2), d._3)),
         posByFile.getOrElse(norm, Nil),
         dvByFile.get(norm))
     }.toArray[InputPartition]
@@ -824,7 +836,8 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
     // the relation after column pruning) only needs the row cardinality —
     // when every file is __count-ed and no tombstone is pending, emit the
     // rows synthetically and never open a data file
-    if (required.isEmpty && pushed.isEmpty && asOf.isEmpty && runtimeKeep.isEmpty) {
+    if (required.isEmpty && pushed.isEmpty && asOf.isEmpty && startSnap <= 0 &&
+        runtimeKeep.isEmpty) {
       cat.countStar(table) match {
         case Some(n) => return Array(CatalogRowCountPartition(n))
         case None => ()
@@ -874,7 +887,7 @@ final class CatalogScan(tableSchema: StructType, required: StructType,
   override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CatalogReaderFactory(required, tableSchema, cat.renameHistory(table), hadoopConf)
+    new CatalogReaderFactory(required, cat.renameHistory(table), hadoopConf)
 
   /** Planned files with their deletes, bin-packed — shared by the batch
     * read and the micro-batch stream. */
@@ -923,12 +936,10 @@ final class CatalogMicroBatchStream(scan: CatalogScan, root: String, table: Stri
     val s = start.asInstanceOf[CatalogOffset].snap
     val e = end.asInstanceOf[CatalogOffset].snap
     if (e <= s || e <= 0) return Array.empty
-    val files =
-      if (s <= 0) cat.filesWithAddOrder(table, e)             // bootstrap: full snapshot
-      else cat.incrementalFilesWithAddOrder(table, s, e)       // O(delta) window
-    // pushed filters prune the window's files too (sidecars permitting);
-    // small streamed drops bin-pack like batch partitions
-    scan.planFiles(scan.pruneByFilters(files, e), e)
+    // offset 0 bootstraps with the full snapshot; pushed filters prune the
+    // window's files too (sidecars permitting); small streamed drops
+    // bin-pack like batch partitions
+    scan.planFiles(scan.pruneByFilters(scan.windowFiles(s, e), e), e)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
@@ -1077,6 +1088,9 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
   private lazy val cat = new ParquetSnapshotCatalog(root)
+  // the session's Hadoop conf, captured once: every task's data-file
+  // writes and every cleanup go through it
+  private lazy val hadoopConf = SessionHadoopConf.broadcast(SparkSession.active)
 
   // ------------------------------------------------------------------
   // Write DISTRIBUTION + ORDERING (Iceberg's write-clustered shape): a
@@ -1135,7 +1149,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new CatalogWriterFactory(schema, root, table, stagingId, spec,
+      new CatalogWriterFactory(schema, root, table, stagingId, hadoopConf, spec,
         org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, sortOrderCols,
         cat.getMeta(table, "prop.write.target-file-size")
           .flatMap(_.toLongOption))
@@ -1180,7 +1194,7 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
       }
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      CatalogWrite.deleteAll(messages)
+      CatalogWrite.deleteAll(messages, hadoopConf.value.value)
   }
 
   override def toStreaming: wstreaming.StreamingWrite = {
@@ -1189,38 +1203,40 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
       "per epoch would rewrite the table every micro-batch)")
     new wstreaming.StreamingWrite {
     override def createStreamingWriterFactory(info: PhysicalWriteInfo): wstreaming.StreamingDataWriterFactory =
-      new CatalogStreamingWriterFactory(schema, root, table, stagingId)
+      new CatalogStreamingWriterFactory(schema, root, table, stagingId, hadoopConf)
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
       val files = messages.map(_.asInstanceOf[CatalogCommitMessage].file).toSeq.sorted
       if (files.nonEmpty &&
           !cat.appendFilesAsBatch(files, table, epochId))
-        CatalogWrite.deleteAll(messages) // replayed epoch: drop the duplicate outputs
+        CatalogWrite.deleteAll(messages, hadoopConf.value.value) // replayed epoch: drop the duplicate outputs
     }
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      CatalogWrite.deleteAll(messages)
+      CatalogWrite.deleteAll(messages, hadoopConf.value.value)
     }
   }
 }
 
 object CatalogWrite {
-  private[sources] def deleteAll(messages: Array[WriterCommitMessage]): Unit = {
-    import org.apache.hadoop.fs.Path
-    def del(f: String): Unit = {
-      val p = new Path(f)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+  /** Delete the files a writer wrote, where they exist. */
+  private[sources] def deleteFiles(files: Iterable[String], conf: Configuration): Unit =
+    files.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, false)
     }
-    messages.foreach {
-      case CatalogCommitMessage(f, _, _) => del(f)
-      case RolledCommitMessage(es) => es.foreach { case (f, _, _) => del(f) }
-      case PartitionedCommitMessage(fs) => fs.foreach { case (f, _, _) => del(f) }
-      case _ =>
-    }
-  }
+
+  private[sources] def deleteAll(messages: Array[WriterCommitMessage], conf: Configuration): Unit =
+    deleteFiles(messages.toSeq.flatMap {
+      case CatalogCommitMessage(f, _, _) => Seq(f)
+      case RolledCommitMessage(es) => es.map(_._1)
+      case PartitionedCommitMessage(fs) => fs.map(_._1)
+      case _ => Nil
+    }, conf)
 }
 
 final class CatalogWriterFactory(schema: StructType, root: String, table: String,
                                  stagingId: String,
+                                 conf: Broadcast[SerializableConfiguration],
                                  spec: Option[graft.spark.PartTransform] = None,
                                  sessionTz: String = "UTC",
                                  statCols: Seq[String] = Nil,
@@ -1230,18 +1246,20 @@ final class CatalogWriterFactory(schema: StructType, root: String, table: String
     spec match {
       case Some(s) =>
         new CatalogPartitionedDataWriter(schema, root, table, stagingId, partitionId, taskId,
-          s, sessionTz, targetBytes)
+          conf.value.value, s, sessionTz, targetBytes)
       case None =>
-        new CatalogDataWriter(schema, root, table, stagingId, partitionId, taskId, statCols,
-          targetBytes)
+        new CatalogDataWriter(schema, root, table, stagingId, partitionId, taskId,
+          conf.value.value, statCols, targetBytes)
     }
 }
 
 final class CatalogStreamingWriterFactory(schema: StructType, root: String, table: String,
-                                          stagingId: String)
+                                          stagingId: String,
+                                          conf: Broadcast[SerializableConfiguration])
     extends wstreaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new CatalogDataWriter(schema, root, table, s"$stagingId-e$epochId", partitionId, taskId)
+    new CatalogDataWriter(schema, root, table, s"$stagingId-e$epochId", partitionId, taskId,
+      conf.value.value)
 }
 
 /** The shared parquet-hadoop row writer: schema mapping + record
@@ -1316,15 +1334,17 @@ private[sources] object PqRow {
       new RowWriteSupport(schema)
   }
 
-  private[sources] def open(schema: StructType, file: Path): ParquetWriter[InternalRow] =
+  private[sources] def open(schema: StructType, file: Path,
+                            conf: Configuration): ParquetWriter[InternalRow] =
     new B(file, schema)
-      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withConf(conf)
       .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
 }
 
 final class CatalogDataWriter(schema: StructType, root: String, table: String,
                               stagingId: String, partitionId: Int, taskId: Long,
+                              conf: Configuration,
                               statCols: Seq[String] = Nil,
                               targetBytes: Option[Long] = None)
     extends DataWriter[InternalRow] {
@@ -1342,7 +1362,7 @@ final class CatalogDataWriter(schema: StructType, root: String, table: String,
     p
   }
   private var file = nextFile()
-  private var writer = PqRow.open(schema, file)
+  private var writer = PqRow.open(schema, file, conf)
   private var rows = 0L
   private val done =
     scala.collection.mutable.ArrayBuffer[(String, Long, Seq[(String, String, String)])]()
@@ -1374,10 +1394,8 @@ final class CatalogDataWriter(schema: StructType, root: String, table: String,
     // file in the manifest (opened forever, prunable never) — drop it;
     // a genuinely empty TASK still commits its one empty file (the
     // pre-rolling contract, and what overwrite-to-empty relies on)
-    if (rows == 0L && done.nonEmpty) {
-      val fs = file.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      if (fs.exists(file)) fs.delete(file, false)
-    } else done += ((file.toUri.getPath, rows, fileStats))
+    if (rows == 0L && done.nonEmpty) CatalogWrite.deleteFiles(Seq(file.toString), conf)
+    else done += ((file.toUri.getPath, rows, fileStats))
     java.util.Arrays.fill(mins.asInstanceOf[Array[AnyRef]], null)
     java.util.Arrays.fill(maxs.asInstanceOf[Array[AnyRef]], null)
     rows = 0L
@@ -1409,7 +1427,7 @@ final class CatalogDataWriter(schema: StructType, root: String, table: String,
     if (targetBytes.exists(t => writer.getDataSize >= t)) {
       finishFile()
       file = nextFile()
-      writer = PqRow.open(schema, file)
+      writer = PqRow.open(schema, file, conf)
     }
   }
   override def commit(): WriterCommitMessage = {
@@ -1423,12 +1441,7 @@ final class CatalogDataWriter(schema: StructType, root: String, table: String,
   }
   override def abort(): Unit = {
     writer.close()
-    val conf = new org.apache.hadoop.conf.Configuration()
-    (done.map(_._1) :+ file.toUri.getPath).foreach { f =>
-      val p = new Path(f)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
+    CatalogWrite.deleteFiles(done.map(_._1) :+ file.toUri.getPath, conf)
   }
   override def close(): Unit = ()
 }
@@ -1444,6 +1457,7 @@ final class CatalogDataWriter(schema: StructType, root: String, table: String,
   */
 final class CatalogPartitionedDataWriter(schema: StructType, root: String, table: String,
                                          stagingId: String, partitionId: Int, taskId: Long,
+                                         conf: Configuration,
                                          spec: graft.spark.PartTransform,
                                          sessionTz: String = "UTC",
                                          targetBytes: Option[Long] = None)
@@ -1491,7 +1505,7 @@ final class CatalogPartitionedDataWriter(schema: StructType, root: String, table
     curFile = new Path(root,
       f"$table/data/dsv2-$stagingId/part-$partitionId%05d-$taskId-$fileNo%04d.parquet")
     fileNo += 1
-    curWriter = PqRow.open(schema, curFile)
+    curWriter = PqRow.open(schema, curFile, conf)
     curRows = 0L
   }
 
@@ -1499,10 +1513,8 @@ final class CatalogPartitionedDataWriter(schema: StructType, root: String, table
     curWriter.close()
     // a byte-roll can leave a fresh zero-row writer at task end / value
     // change — drop it rather than pin an empty file into the manifest
-    if (curRows == 0L) {
-      val fs = curFile.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      if (fs.exists(curFile)) fs.delete(curFile, false)
-    } else done += ((curFile.toUri.getPath, curRows, curVal))
+    if (curRows == 0L) CatalogWrite.deleteFiles(Seq(curFile.toString), conf)
+    else done += ((curFile.toUri.getPath, curRows, curVal))
     curWriter = null
   }
 
@@ -1524,12 +1536,7 @@ final class CatalogPartitionedDataWriter(schema: StructType, root: String, table
 
   override def abort(): Unit = {
     if (curWriter != null) { curWriter.close(); done += ((curFile.toUri.getPath, 0L, "")) }
-    val conf = new org.apache.hadoop.conf.Configuration()
-    done.foreach { case (f, _, _) =>
-      val p = new Path(f)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
+    CatalogWrite.deleteFiles(done.map(_._1), conf)
   }
   override def close(): Unit = ()
 }
@@ -1555,13 +1562,14 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
   private lazy val cat = new ParquetSnapshotCatalog(root)
+  private lazy val hadoopConf = SessionHadoopConf.broadcast(SparkSession.active)
   override def description(): String = s"GraftCatalogDeltaWrite(table=$table)"
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite =
     new org.apache.spark.sql.connector.write.DeltaBatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-        new GraftDeltaWriterFactory(dataSchema, rowId, root, table, stagingId)
+        new GraftDeltaWriterFactory(dataSchema, rowId, root, table, stagingId, hadoopConf)
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         val ms = messages.collect { case m: DeltaCommitMessage => m }.toSeq
         val dels = ms.flatMap(_.deleteFile).sorted
@@ -1571,26 +1579,20 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
         if (dels.nonEmpty || datas.nonEmpty)
           cat.commitRowDelta(table, dels, touched, datas)
       }
-      override def abort(messages: Array[WriterCommitMessage]): Unit = {
-        import org.apache.hadoop.fs.Path
-        val conf = new org.apache.hadoop.conf.Configuration()
-        messages.collect { case m: DeltaCommitMessage => m }
-          .flatMap(m => m.dataFile.map(_._1) ++ m.deleteFile)
-          .foreach { f =>
-            val p = new Path(f)
-            val fs = p.getFileSystem(conf)
-            if (fs.exists(p)) fs.delete(p, false)
-          }
-      }
+      override def abort(messages: Array[WriterCommitMessage]): Unit =
+        CatalogWrite.deleteFiles(messages.toSeq.collect { case m: DeltaCommitMessage => m }
+          .flatMap(m => m.dataFile.map(_._1) ++ m.deleteFile), hadoopConf.value.value)
     }
 }
 
 final class GraftDeltaWriterFactory(dataSchema: StructType, rowId: StructType,
-                                    root: String, table: String, stagingId: String)
+                                    root: String, table: String, stagingId: String,
+                                    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(dataSchema, rowId, root, table, stagingId, partitionId, taskId)
+    new GraftDeltaWriter(dataSchema, rowId, root, table, stagingId, partitionId, taskId,
+      conf.value.value)
 }
 
 /** Per-task delta writer: deletes stream straight to a staged tombstone tsv
@@ -1604,14 +1606,12 @@ final class GraftDeltaWriterFactory(dataSchema: StructType, rowId: StructType,
   */
 final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
                              root: String, table: String, stagingId: String,
-                             partitionId: Int, taskId: Long)
+                             partitionId: Int, taskId: Long, conf: Configuration)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   import org.apache.hadoop.fs.Path
 
-  private val cat = new ParquetSnapshotCatalog(root)
   private val fileIdx = rowId.fieldIndex("_file")
   private val posIdx = rowId.fieldIndex("_pos")
-  private val conf = new org.apache.hadoop.conf.Configuration()
 
   private val dataPath = new Path(root,
     f"$table/data/dsv2-$stagingId/part-$partitionId%05d-$taskId.parquet")
@@ -1629,7 +1629,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
         delPath.getFileSystem(conf).create(delPath, true),
         java.nio.charset.StandardCharsets.UTF_8))
     val f = id.getUTF8String(fileIdx).toString
-    delOut.write(cat.posTombstoneLine(f, id.getLong(posIdx)))
+    delOut.write(ParquetSnapshotCatalog.posTombstoneLine(f, id.getLong(posIdx)))
     delOut.write('\n')
     touched += f
   }
@@ -1639,7 +1639,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    if (dataWriter == null) dataWriter = PqRow.open(dataSchema, dataPath)
+    if (dataWriter == null) dataWriter = PqRow.open(dataSchema, dataPath, conf)
     dataWriter.write(row)
     rows += 1
   }
@@ -1656,8 +1656,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
   override def abort(): Unit = {
     if (dataWriter != null) dataWriter.close()
     if (delOut != null) delOut.close()
-    val fs = dataPath.getFileSystem(conf)
-    Seq(dataPath, delPath).foreach(p => if (fs.exists(p)) fs.delete(p, false))
+    CatalogWrite.deleteFiles(Seq(dataPath.toString, delPath.toString), conf)
   }
 
   override def close(): Unit = ()
@@ -1682,8 +1681,7 @@ final case class CatalogKeyGroupPartition(files: Seq[CatalogFilePartition], keyV
   * [[CatalogPartitionReader]] per file; a row-count partition emits
   * zero-column batches.
   */
-final class CatalogReaderFactory(required: StructType, tableSchema: StructType,
-                                 renames: Seq[(String, String)],
+final class CatalogReaderFactory(required: StructType, renames: Seq[(String, String)],
                                  conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -1721,8 +1719,7 @@ final class CatalogReaderFactory(required: StructType, tableSchema: StructType,
         while (true) {
           if (cur == null) {
             if (!it.hasNext) return false
-            cur = new CatalogPartitionReader(it.next(), required, tableSchema, renames,
-              conf.value.value)
+            cur = new CatalogPartitionReader(it.next(), required, renames, conf.value.value)
           }
           if (cur.next()) return true
           cur.close(); cur = null
@@ -1763,8 +1760,7 @@ object CatalogPartitionReader {
   *     file has a physical column of that name (a data column wins).
   */
 final class CatalogPartitionReader(p: CatalogFilePartition, required: StructType,
-                                   tableSchema: StructType, renames: Seq[(String, String)],
-                                   baseConf: Configuration)
+                                   renames: Seq[(String, String)], baseConf: Configuration)
     extends PartitionReader[ColumnarBatch] {
   CatalogPartitionReader.opened.incrementAndGet()
   import CatalogPartitionReader.BatchRows
@@ -1796,11 +1792,12 @@ final class CatalogPartitionReader(p: CatalogFilePartition, required: StructType
     cur.map(_.swap)
   }
 
-  private val keys: Map[String, Set[String]] = p.deletes.groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
+  private val keys: Map[StructField, Set[String]] =
+    p.deletes.groupMapReduce(_._1)(_._2.toSet)(_ ++ _)
   // the decoded columns, by current name: required ∪ delete keys, those
   // this file has
   private val decoded: Seq[StructField] =
-    (required.fields.toSeq ++ keys.keys.toSeq.sorted.flatMap(c => tableSchema.find(_.name == c)))
+    (required.fields.toSeq ++ keys.keys.toSeq.sortBy(_.name))
       .filter(f => physicalOf.contains(f.name)).distinctBy(_.name)
   private val slot: Map[String, Int] = decoded.map(_.name).zipWithIndex.toMap
 
@@ -1852,10 +1849,10 @@ final class CatalogPartitionReader(p: CatalogFilePartition, required: StructType
     * (string/long/int, gated at planning). A key column the file predates
     * is NULL in every row and never matches (anti-join semantics).
     */
-  private val keyTests: Seq[(ColumnarBatch, Int) => Boolean] = keys.toSeq.flatMap { case (c, ks) =>
-    slot.get(c).map { i =>
+  private val keyTests: Seq[(ColumnarBatch, Int) => Boolean] = keys.toSeq.flatMap { case (key, ks) =>
+    slot.get(key.name).map { i =>
       def canonical(k: String): Option[Long] = k.toLongOption.filter(_.toString == k)
-      tableSchema(c).dataType match {
+      key.dataType match {
         case StringType =>
           val s = ks.map(UTF8String.fromString)
           (b: ColumnarBatch, r: Int) => !b.column(i).isNullAt(r) && s(b.column(i).getUTF8String(r))

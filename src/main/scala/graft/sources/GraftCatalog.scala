@@ -154,7 +154,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       .orElse(cat.branches(t).get(version))
       .getOrElse(throw new IllegalArgumentException(
         s"graft catalog: '$version' is not a snapshot id, tag, or branch of '$t'"))
-    new GraftSqlTable(cat.readSnapshot(SparkSession.active, t, snap).schema, root, t, Some(snap))
+    new GraftSqlTable(cat.schemaAt(SparkSession.active, t, snap), root, t, Some(snap))
   }
 
   /** `TIMESTAMP AS OF x`: Spark hands MICROseconds; resolved against the
@@ -166,7 +166,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     val snap = cat.snapshotAsOfTimestamp(t, timestamp / 1000L).getOrElse(
       throw new IllegalArgumentException(
         s"graft catalog: no snapshot of '$t' at or before timestamp $timestamp"))
-    new GraftSqlTable(cat.readSnapshot(SparkSession.active, t, snap).schema, root, t, Some(snap))
+    new GraftSqlTable(cat.schemaAt(SparkSession.active, t, snap), root, t, Some(snap))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -461,7 +461,7 @@ private[sources] final class GraftEmptyScanBuilder(schema: StructType)
     override def planInputPartitions(): Array[InputPartition] = Array.empty
     // no partitions: the factory never opens a file, so no conf rides it
     override def createReaderFactory(): PartitionReaderFactory =
-      new CatalogReaderFactory(required, required, Nil, null)
+      new CatalogReaderFactory(required, Nil, null)
     override def description(): String = "GraftCatalogScan(empty table)"
   }
 }

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -27,7 +27,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * old flat-manifest shape was O(n²) metadata bytes and is gone. Manifest-
   * list entries are one of:
   *   `@m<N>.json`        delta-manifest ref (expanded to its file list)
-  *   `!d<N>.<col>.tsv`   equality-delete ref (applied as an anti-join)
+  *   `!d<N>.<col>.tsv`   equality-delete ref (the scan drops its keys)
   *   anything else       a raw data-file path (legacy flat manifests keep
   *                       reading — migration is implicit)
   *
@@ -51,6 +51,7 @@ trait PageCatalog {
 }
 
 class ParquetSnapshotCatalog(root: String) extends PageCatalog {
+  import ParquetSnapshotCatalog.{escStat, normFile, posTombstoneLine}
 
   // ------------------------------------------------------------------
   // Hadoop-FS I/O layer. One private FileSystem instance per scheme
@@ -228,9 +229,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   /** The snapshot's (data file, add order) pairs — a file's add order is its
     * delta manifest's snapshot id (m<K>.json → K); legacy raw-path entries
     * predate ordering and get 0, so every delete applies to them. This is
-    * the planning surface the DSv2 streaming source shares with
-    * [[readWithDeletes]]: add order is what decides which equality deletes
-    * apply to which file (the Iceberg sequence-number rule).
+    * the scan's planning surface: add order is what decides which equality
+    * deletes apply to which file (the Iceberg sequence-number rule).
     */
   def filesWithAddOrder(table: String, snap: Long): Seq[(String, Long)] =
     entriesOf(table, snap).flatMap { e =>
@@ -332,23 +332,33 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     atomicSwap(tmp, new HPath(dir, "CURRENT"))
   }
 
+  /** The current snapshot, pinned: the relation keeps reading the snapshot
+    * that was CURRENT when `read` was called, whatever commits follow. */
   override def read(spark: SparkSession, table: String): DataFrame = {
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
     readSnapshot(spark, table, snap)
   }
 
-  /** The table's current snapshot as the `graft-catalog` DSv2 relation —
-    * the one pruned-read path. Equality, `IN`, range and prefix filters
-    * written over it push down to [[graft.sources.CatalogScan]], which
-    * opens only the files that zone maps, bloom sidecars and every
-    * partition-spec era on the column cannot rule out; Spark re-applies
-    * the filter row-level and pending deletes of both kinds apply. Every
-    * file decodes through Spark's vectorized parquet reader, nested
-    * columns (arrays, structs) included.
+  /** The table as the `graft-catalog` DSv2 relation — the one read path:
+    * every catalog read ([[read]], time travel, incremental, changelog,
+    * compaction) is this relation. `snapshot` pins a retained snapshot
+    * (default: CURRENT at planning, which also lets metadata answer
+    * `COUNT(*)`/`MIN`/`MAX` and storage-partitioned joins), and `after` > 0
+    * keeps only the files added in (after, snapshot]. Equality, `IN`,
+    * range and prefix filters written over it push down to
+    * [[graft.sources.CatalogScan]], which opens only the files that zone
+    * maps, bloom sidecars and every partition-spec era on the column cannot
+    * rule out; Spark re-applies the filter row-level and pending deletes of
+    * every kind apply. Every file decodes through Spark's vectorized
+    * parquet reader, nested columns (arrays, structs) included.
     */
-  def scan(spark: SparkSession, table: String): DataFrame =
-    spark.read.format("graft-catalog").option("root", root).option("table", table).load()
+  def scan(spark: SparkSession, table: String, snapshot: Long = -1L,
+           after: Long = 0L): DataFrame = {
+    val r = spark.read.format("graft-catalog").option("root", root).option("table", table)
+    val pinned = if (snapshot > 0) r.option("snapshot", snapshot) else r
+    (if (after > 0) pinned.option("startSnapshot", after) else pinned).load()
+  }
 
   /** Write `df` into `dataDir` and return the sorted parquet file list —
     * the shared first half of every data-writing commit path.
@@ -437,11 +447,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * `snap` are applied, later ones are not — a pre-takedown snapshot still
     * reads complete.
     */
-  def readSnapshot(spark: SparkSession, table: String, snap: Long): DataFrame = {
-    require(fsExists(new HPath(manifestDir(table), s"v$snap.json")),
-      s"no snapshot $snap for $table")
-    readWithDeletes(spark, table, snap)
-  }
+  def readSnapshot(spark: SparkSession, table: String, snap: Long): DataFrame =
+    scan(spark, table, snapshot = snap)
 
   /** Iceberg-style INCREMENTAL (changelog) scan: the rows ADDED strictly
     * after `fromSnap`, up to and including `toSnap` (default CURRENT) — the
@@ -457,19 +464,17 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * and refused loudly. Equality deletes committed at or before `toSnap`
     * are applied with the same sequence rule as a full read, so a takedown
     * never resurfaces through the changelog; a delete-only window yields 0
-    * rows. `fromSnap <= 0` bootstraps with the full snapshot.
+    * rows. `fromSnap <= 0` bootstraps with the full snapshot. The rows have
+    * `toSnap`'s schema.
     */
   def readIncremental(spark: SparkSession, table: String, fromSnap: Long,
                       toSnap: Long = -1L): DataFrame = {
     val to = if (toSnap > 0) toSnap else currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
-    if (fromSnap <= 0) return readSnapshot(spark, table, to)
-    require(fsExists(new HPath(manifestDir(table), s"v$fromSnap.json")),
-      s"no snapshot $fromSnap for $table")
-    require(fsExists(new HPath(manifestDir(table), s"v$to.json")),
-      s"no snapshot $to for $table")
-    val newFiles = incrementalFilesWithAddOrder(table, fromSnap, to).map(_._1)
-    readWithDeletes(spark, table, to, Some(newFiles.toSet))
+    // planned here as well as in the scan, so a rewrite-crossing window is
+    // refused by this call, not by the first action on its result
+    if (fromSnap > 0) incrementalFilesWithAddOrder(table, fromSnap, to)
+    scan(spark, table, snapshot = to, after = fromSnap)
   }
 
   /** The DELETE side of the changelog, completing [[readIncremental]]'s
@@ -532,15 +537,18 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * pre-image.
     *
     * Cost shape at 100 TB: the insert side is O(delta) planning + O(drop)
-    * data; the delete side reads ONLY fromSnap files whose zone maps overlap
-    * the tombstone key range (when the stats sidecar exists — else all of
-    * fromSnap, keys re-filtered either way via the broadcast semi-join, so
-    * pruning is never load-bearing). The window's own appends are never
-    * read for pre-images.
+    * data; the delete side is a scan of fromSnap filtered on the tombstone
+    * key range, which the scan prunes to the files whose zone maps overlap
+    * it (when the stats sidecar exists — else all of fromSnap, keys
+    * re-filtered either way via the broadcast semi-join, so pruning is
+    * never load-bearing). The window's own appends are never read for
+    * pre-images.
     */
   def readChangelog(spark: SparkSession, table: String, fromSnap: Long,
                     toSnap: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit, col}
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    import org.apache.spark.unsafe.types.UTF8String
     val to = if (toSnap > 0) toSnap else currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
     val inserts = readIncremental(spark, table, fromSnap, to)
@@ -549,17 +557,23 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val delKeys = deletedInWindow(spark, table, fromSnap, to)
       .collect().map(r => (r.getString(0), r.getString(1)))
     if (delKeys.isEmpty) return inserts
+    val renames = renameHistory(table)
     val preImages = delKeys.groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (column, pairs) =>
         val keys = pairs.map(_._2).toSeq
-        val cmp = statCmp(keys)
-        val (lo, hi) = (keys.min(Ordering.fromLessThan[String](cmp(_, _) < 0)),
-                        keys.max(Ordering.fromLessThan[String](cmp(_, _) < 0)))
-        val base = readWithDeletes(spark, table, fromSnap,
-          Some(pruneFilesAt(table, fromSnap, column, lo, hi).toSet))
+        val c = currentName(renames)(column)
+        val base = scan(spark, table, snapshot = fromSnap)
+        // the keys as the column's values, in its order: a numeric column
+        // holds only the keys that are its own CAST-to-string spelling
+        val sorted: Seq[Any] = base.schema(c).dataType match {
+          case LongType => keys.flatMap(k => k.toLongOption.filter(_.toString == k)).sorted
+          case IntegerType => keys.flatMap(k => k.toIntOption.filter(_.toString == k)).sorted
+          case _ => keys.sortBy(UTF8String.fromString)
+        }
+        val inRange = if (sorted.isEmpty) lit(false) else col(c).between(sorted.head, sorted.last)
         val keyDf = spark.createDataFrame(keys.map(Tuple1(_))).toDF("__cdc_key")
-        base.join(broadcast(keyDf),
-            base(column).cast("string") === col("__cdc_key"), "left_semi")
+        base.where(inRange).join(broadcast(keyDf),
+            base(c).cast("string") === col("__cdc_key"), "left_semi")
           .withColumn("op", lit("delete"))
       }
     preImages.foldLeft(inserts)(_.unionByName(_, allowMissingColumns = true))
@@ -583,7 +597,9 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   def upsertByKey(df: DataFrame, table: String, keyCol: String): Long = {
     require(!keyCol.contains('.') && !keyCol.contains('/') && !keyCol.contains('\t'),
       s"unsupported upsert key column name: $keyCol")
-    if (currentSnapshot(table).isEmpty) return commit(df, table)
+    val cur = currentSnapshot(table)
+    if (cur.isEmpty) return commit(df, table)
+    requireDeletable(table, cur.get, keyCol)
     val keys = df.select(keyCol).distinct().collect().map { r =>
       val v = r.get(0)
       require(v != null, s"null $keyCol in upsert batch")
@@ -765,12 +781,17 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     if (deleteRefsOf(table, snap).nonEmpty) None
     else {
       val all = manifestFiles(table, snap)
-      val counts = statsLinesAt(table, snap)
-        .collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
+      val counts = fileRowCounts(table, snap)
       if (all.nonEmpty && all.forall(counts.contains)) Some(all.map(counts(_)).sum)
       else None
     }
   }
+
+  /** The `__count` sidecar lines visible at `snap`: data file → rows
+    * written (pending deletes not subtracted). Files without a line are
+    * absent. */
+  def fileRowCounts(table: String, snap: Long): Map[String, Long] =
+    statsLinesAt(table, snap).collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
 
   /** [[appendFiles]] under the exactly-once batch-marker contract — the
     * DSv2 STREAMING writer's epoch commit: a replayed epoch is skipped (and
@@ -796,19 +817,23 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   /** Iceberg-style equality delete (row-level takedown — DMCA/GDPR "remove
     * these urls everywhere"): commits a tombstone file of `column` values as
     * a NEW snapshot whose manifest list carries the same data files plus a
-    * `!` delete ref — ZERO data rewritten at 100 TB. Readers apply the
-    * tombstones as a broadcast anti-join; [[compact]] materializes them
-    * (its rewrite reads through the delete-applying path, and the rewritten
-    * snapshot carries no tombstones). Time travel to a pre-delete snapshot
-    * still reads complete — takedowns are snapshots, not mutations.
+    * `!` delete ref — ZERO data rewritten at 100 TB. The scan drops the
+    * matching rows from each decoded batch; [[compact]] materializes them
+    * (its rewrite reads through the scan, and the rewritten snapshot
+    * carries no tombstones). Time travel to a pre-delete snapshot still
+    * reads complete — takedowns are snapshots, not mutations.
     *
-    * Values are matched against `CAST(column AS STRING)`; the per-snapshot
-    * HLL sidecar chain is intentionally NOT carried forward (HLL cannot
-    * unlearn — the chain-integrity gate refuses rather than overcounting).
+    * Values are matched against `CAST(column AS STRING)`, so the column
+    * must be a string, long or int column of the current schema (the casts
+    * the scan's reader replays); the per-snapshot HLL sidecar chain is
+    * intentionally NOT carried forward (HLL cannot unlearn — the
+    * chain-integrity gate refuses rather than overcounting).
     */
   def deleteWhere(table: String, column: String, values: Seq[String]): Long = {
     require(!column.contains('.') && !column.contains('/') && !column.contains('\t'),
       s"unsupported delete column name: $column")
+    requireDeletable(table, currentSnapshot(table).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot for $table")), column)
     withCommitLock(table) {
       val cur = currentSnapshot(table).getOrElse(
         throw new IllegalStateException(s"no committed snapshot for $table"))
@@ -822,27 +847,29 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     }
   }
 
+  /** Refuse an equality delete keyed on `column` unless the scan can apply
+    * it: the column is in the schema at `snap`, typed string, long or int.
+    * A key of any other type would leave a snapshot no read can open. */
+  private def requireDeletable(table: String, snap: Long, column: String): Unit = {
+    val f = schemaAt(SparkSession.active, table, snap).find(_.name == column).getOrElse(
+      throw new IllegalArgumentException(s"delete column '$column' is not in the schema of '$table'"))
+    require(graft.sources.CatalogSource.deletableType(f.dataType),
+      s"delete column '$column' of '$table' has type ${f.dataType.simpleString}; " +
+      "equality deletes key on string, long or int columns")
+  }
+
   // ------------------------------------------------------------------
   // POSITIONAL deletes (Iceberg v2's second delete-file type): tombstones
   // of (data file, row ordinal) pairs — the row-level delete for
   // predicates that do NOT reduce to key values. Metadata-only like
-  // equality deletes (zero data rewritten at 100 TB); readers apply them
-  // as a broadcast anti-join on (_metadata.file_path, _metadata.row_index);
-  // compaction materializes them. A positional tombstone names its files
+  // equality deletes (zero data rewritten at 100 TB); the scan drops the
+  // named ordinals from each file's decoded batches; compaction
+  // materializes them. A positional tombstone names its files
   // explicitly, so the sequence rule holds by construction: rows appended
   // AFTER the delete live in new files the tombstone cannot name —
   // re-adding a deleted row survives, exactly like equality deletes'
   // add-order rule.
   // ------------------------------------------------------------------
-
-  /** Scheme/authority-normalization for tombstoned file paths: the manifest
-    * stores `/root/x` (local) or `s3a://b/x` (remote) while the scan reports
-    * qualified URIs (`file:///root/x`) — both sides reduce to the bare path,
-    * with the SAME Java-regex semantics driver-side and in the codegen'd
-    * `regexp_replace` on the scan.
-    */
-  private[graft] val posNormRx = "^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"
-  private[graft] def normFile(s: String): String = s.replaceFirst(posNormRx, "")
 
   /** The snapshot's positional-delete (normalized file path, row ordinal)
     * pairs from the TSV tombstones only (`p*.tsv` — takedown-sized by the
@@ -864,9 +891,9 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
 
   /** ALL of the snapshot's positional deletes as (normalized file path, row
     * ordinal) pairs — TSV tombstones plus fully-EXPANDED deletion vectors.
-    * The compatibility/validation surface (emptiness checks, the library
-    * read path's per-group anti-join); the DSv2 scan never calls this for
-    * vectors — it ships each file's bitmap coordinates to the task instead.
+    * The validation and rewrite surface (emptiness checks,
+    * [[rewritePositionDeletes]]); the scan never calls this for vectors —
+    * it ships each file's bitmap coordinates to the task instead.
     */
   def positionalDeletes(table: String, snap: Long): Seq[(String, Long)] =
     positionalTsvPairs(table, snap) ++
@@ -895,7 +922,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       val del = s"p$snap.tsv"
       writeStr(new HPath(manifestDir(table), del),
         positions.map { case (f, p) => (normFile(f), p) }.distinct.sorted
-          .map { case (f, p) => s"${escStat(f)}\t$p" }.mkString("", "\n", "\n"))
+          .map { case (f, p) => posTombstoneLine(f, p) }.mkString("", "\n", "\n"))
       commitSnapshot(table, snap, prev :+ ("!" + del))
       snap
     }
@@ -903,30 +930,22 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
 
   /** Row-level delete by ARBITRARY predicate — the takedown shape equality
     * keys cannot express ("remove every row whose text matches this
-    * pattern"): one scan of the current snapshot with the `_metadata`
-    * columns finds the matching rows' (file, position) pairs, committed as
-    * a positional tombstone. Zero data rewritten; the scan reads only the
-    * predicate's columns (+ _metadata) thanks to parquet column pruning.
-    * Matched positions collect to the driver — takedown-sized, the same
-    * economics as [[upsertByKey]]'s key collect (the tombstone file stores
-    * exactly these pairs). Returns (snapshotId, physical rows tombstoned);
-    * rows an earlier tombstone already removed may be re-tombstoned —
-    * harmless, the subtraction is idempotent.
+    * pattern"): one scan of the current snapshot finds the matching rows'
+    * `_file`/`_pos` coordinates, committed as a positional tombstone. Zero
+    * data rewritten; the scan decodes only the predicate's columns and
+    * prunes files on its pushable parts. Matched positions collect to the
+    * driver — takedown-sized, the same economics as [[upsertByKey]]'s key
+    * collect (the tombstone file stores exactly these pairs). Returns
+    * (snapshotId, rows tombstoned); rows an earlier delete already removed
+    * do not match, so they are not tombstoned again.
     */
   def deleteMatching(spark: SparkSession, table: String,
                      predicate: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     val cur = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
-    val renames = renameHistory(table)
-    val files = filesWithAddOrder(table, cur).map(_._1)
-    val scan = spark.read.option("mergeSchema", "true").parquet(files: _*)
-      .select(col("*"),
-        col("_metadata.file_path").as("__pd_nf"),
-        col("_metadata.row_index").as("__pd_pos"))
-    val matched = applyRenames(scan, renames) // predicate sees the CURRENT schema
-      .where(expr(predicate))
-      .select("__pd_nf", "__pd_pos")
+    val matched = scan(spark, table, snapshot = cur).where(expr(predicate))
+      .select("_file", "_pos")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     if (matched.isEmpty) (cur, 0L)
     else (deleteAtPositions(table, matched), matched.size.toLong)
@@ -987,12 +1006,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       snap
     }
   }
-
-  /** One positional-tombstone line as the task-staged delete files store it
-    * — shared between [[commitRowDelta]]'s writers and the tombstone commit
-    * paths so the escape/normalization rules can never diverge. */
-  private[graft] def posTombstoneLine(file: String, pos: Long): String =
-    s"${escStat(normFile(file))}\t$pos"
 
   // ------------------------------------------------------------------
   // DELETION VECTORS (the Iceberg-v3 / Delta form of positional deletes):
@@ -1107,24 +1120,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     snap
   }
 
-  /** Apply a snapshot's equality-delete files: one broadcast anti-join per
-    * tombstone (the delete sets are takedown-sized — thousands of keys, not
-    * table-sized — so the join never shuffles the data side).
-    */
-  /** SEQUENCE-AWARE delete application (Iceberg's sequence-number rule): an
-    * equality delete committed at snapshot D applies only to data files
-    * ADDED at snapshots BEFORE D — rows appended after a takedown are new
-    * facts, never resurrections of deleted ones, which is what makes
-    * [[upsertByKey]]'s delete-then-append correct. A file's add order is
-    * its delta manifest's snapshot id (m<K>.json); legacy raw-path entries
-    * predate the delete feature and get every delete (the old behavior).
-    *
-    * Plan shape: files group by HOW MANY deletes precede them — the
-    * applicable deletes are always a suffix of the snapshot's delete list,
-    * so the union is bounded by the DELETE count (small; compaction
-    * materializes them away), never the manifest count. `only` restricts to
-    * a pruned file subset (readIncremental, the changelog's pre-images).
-    */
   // ------------------------------------------------------------------
   // Schema evolution beyond ADD: RENAME and DROP as metadata-only ops
   // (Iceberg does this with field ids; the parquet-name emulation keeps a
@@ -1151,8 +1146,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
 
   /** Drop a column — metadata-only; reads project it away for files old
     * and new. Equality deletes keyed on a dropped column STILL APPLY (the
-    * anti-join runs before the projection), so a takedown is never undone
-    * by schema cleanup.
+    * scan decodes the key from the data files, typed by their footers), so
+    * a takedown is never undone by schema cleanup.
     */
   def dropColumn(table: String, name: String): Unit = {
     require(name.nonEmpty && !name.contains('\t') && !name.contains('\n'))
@@ -1173,123 +1168,26 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   private[graft] def currentName(renames: Seq[(String, String)])(n: String): String =
     renames.foldLeft(n) { case (c, (o, nw)) => if (c == o) nw else c }
 
-  /** Map one file group's columns forward through the rename history. When
-    * mergeSchema surfaced BOTH generations in one group (pre- and post-
-    * rename files), the generations fold with coalesce — each row carries
-    * its value under exactly one of the names.
+  /** The table's schema at `snap`, from the data files' footers alone — no
+    * scan is planned; the one schema rule every read of the snapshot uses.
+    * Files group by how many equality deletes precede them (the order the
+    * table's columns have always had). Within a group the footers merge by
+    * name as `mergeSchema` does; the group's columns then map forward
+    * through the rename history (a group holding both generations of a
+    * renamed column keeps the new one's position); the groups merge in add
+    * order, and dropped columns leave last — unless `withDropped`, which is
+    * how the scan types an equality delete keyed on a dropped column.
+    * Every level reads nullable, as from any file source; columns of
+    * incompatible types fail the schema, and with it every read.
     */
-  private def applyRenames(df: DataFrame, renames: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col}
-    renames.foldLeft(df) { case (d, (o, n)) =>
-      val has = d.columns.toSet
-      if (has(o) && has(n)) d.withColumn(n, coalesce(col(n), col(o))).drop(o)
-      else if (has(o)) d.withColumnRenamed(o, n)
-      else d
-    }
-  }
-
-  private def readWithDeletes(spark: SparkSession, table: String, snap: Long,
-                              only: Option[Set[String]] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
-    val renames = renameHistory(table)
-    val drops = droppedColumns(table)
-    val addSnap: Seq[(String, Long)] = filesWithAddOrder(table, snap)
-    val wanted = only match {
-      case Some(keep) => addSnap.filter(p => keep(p._1))
-      case None => addSnap
-    }
-    val deletes = equalityDeleteRefs(table, snap)
-    // positional tombstones (p<snap>.tsv): (normalized file path, row
-    // ordinal). They name their files explicitly, so no add-order grouping
-    // is needed — the sequence rule holds by construction (a file added
-    // after the delete is a NEW path the tombstone cannot name).
-    val posDels = positionalDeletes(table, snap)
-    // a tombstoned path matching NO snapshot file would silently not apply
-    // if the path normalization ever disagreed with the scan's reported
-    // form — the conservative direction is to hand such entries to EVERY
-    // file group (the row-level join no-ops when the file truly is absent)
-    val allNorm = addSnap.map(p => normFile(p._1)).toSet
-    val posUnmatched = posDels.filterNot(pd => allNorm(pd._1))
-    if (wanted.isEmpty) {
-      // only reachable through a pruned subset (every snapshot owns >= 1
-      // data file): schema from the unpruned snapshot, zero rows
-      require(only.isDefined, s"snapshot $snap of $table has no data files")
-      return readWithDeletes(spark, table, snap, None).limit(0)
-    }
-    def antiJoin(d: DataFrame, ref: String): DataFrame = {
-      // tombstone files store the column name AS OF the delete; resolve it
-      // through any later renames so takedowns survive schema evolution
-      val column = currentName(renames)(ref.stripPrefix("d").split('.')(1))
-      val vals = readStr(new HPath(manifestDir(table), ref))
-        .split('\n').filter(_.nonEmpty).flatMap(unescStat).toSeq
-      val delDf = spark.createDataFrame(vals.map(Tuple1(_))).toDF("__del_key")
-      d.join(broadcast(delDf), d(column).cast("string") === delDf("__del_key"), "left_anti")
-    }
-    // positional anti-join per file group: the _metadata columns ride the
-    // scan ONLY when a tombstone touches the group (zero cost otherwise);
-    // row ordinals are physical (_metadata.row_index), so projections and
-    // renames never shift them
-    def scanGroup(files: Seq[String]): DataFrame = {
-      val raw = spark.read.option("mergeSchema", "true").parquet(files: _*)
-      val groupNorm = files.map(normFile).toSet
-      val rel = (posDels.filter(pd => groupNorm(pd._1)) ++ posUnmatched).distinct
-      if (rel.isEmpty) applyRenames(raw, renames)
-      else {
-        val withMeta = raw.select(col("*"),
-          regexp_replace(col("_metadata.file_path"), lit(posNormRx), lit(""))
-            .as("__pd_nf"),
-          col("_metadata.row_index").as("__pd_pos"))
-        val pdDf = spark.createDataFrame(rel).toDF("__pd_f", "__pd_p")
-        applyRenames(withMeta, renames)
-          .join(broadcast(pdDf),
-            col("__pd_nf") === col("__pd_f") && col("__pd_pos") === col("__pd_p"),
-            "left_anti")
-          .drop("__pd_nf", "__pd_pos")
-      }
-    }
-    unionGroups(deleteGroups(wanted, deletes.map(_._1)).map { case (idx, fs) =>
-      val df = scanGroup(fs)
-      deletes.drop(idx).foldLeft(df) { (d, del) => antiJoin(d, del._2) }
-    }, renames, drops)
-  }
-
-  /** The snapshot's equality-delete files as (delete snapshot, ref),
-    * ascending; ref = d<snap>.<col>.tsv (delete columns cannot contain '.'). */
-  private def equalityDeleteRefs(table: String, snap: Long): Seq[(Long, String)] =
-    deleteRefsOf(table, snap).filter(_.startsWith("d"))
-      .map(ref => (ref.stripPrefix("d").split('.')(0).toLong, ref)).sortBy(_._1)
-
-  /** The files grouped by how many equality deletes precede them, in add
-    * order: [[readWithDeletes]] scans each group as one relation. */
-  private def deleteGroups(files: Seq[(String, Long)],
-                           deleteSnaps: Seq[Long]): Seq[(Int, Seq[String])] =
-    files.groupBy { case (_, k) => deleteSnaps.count(_ <= k) }.toSeq.sortBy(_._1)
-      .map { case (idx, fs) => (idx, fs.map(_._1)) }
-
-  private def unionGroups(groups: Seq[DataFrame], renames: Seq[(String, String)],
-                          drops: Seq[String]): DataFrame = {
-    // allowMissingColumns: with ADD-column evolution an older file group
-    // may lack the new column — same null semantics parquet mergeSchema
-    // applies within one group
-    val unioned = groups.reduce(_.unionByName(_, allowMissingColumns = true))
-    // drops project away LAST — an equality delete keyed on a dropped
-    // column has already applied above
-    drops.map(currentName(renames)).distinct
-      .foldLeft(unioned)((d, c) => if (d.columns.contains(c)) d.drop(c) else d)
-  }
-
-  /** The schema [[read]] yields at `snap`, from the data files' footers
-    * alone — no scan is planned. Each of [[readWithDeletes]]'s file groups
-    * merges its footers by name as `mergeSchema` does, and the groups then
-    * take the read's own rename, union and drop steps as empty frames, so
-    * column order and nullability are the read's.
-    */
-  def schemaAt(spark: SparkSession, table: String, snap: Long): StructType = {
+  def schemaAt(spark: SparkSession, table: String, snap: Long,
+               withDropped: Boolean = false): StructType = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
     import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-    // a file source reads every level nullable
+    require(fsExists(new HPath(manifestDir(table), s"v$snap.json")),
+      s"no snapshot $snap for $table")
     def nullable(dt: DataType): DataType = dt match {
       case s: StructType =>
         StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
@@ -1309,20 +1207,39 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       case _ => throw new IllegalStateException(s"$table: incompatible column types $l and $r")
     }
     val renames = renameHistory(table)
+    def renamed(s: StructType): StructType = renames.foldLeft(s) { case (st, (o, n)) =>
+      st.find(_.name == o) match {
+        case None => st
+        case Some(old) if st.fieldNames.contains(n) =>
+          StructType(st.fields.collect {
+            case f if f.name == n => f.copy(dataType = merge(f.dataType, old.dataType))
+            case f if f.name != o => f
+          })
+        case Some(_) => StructType(st.fields.map(f => if (f.name == o) f.copy(name = n) else f))
+      }
+    }
     val hconf = spark.sessionState.newHadoopConf()
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    val deleteSnaps = equalityDeleteRefs(table, snap).map(_._1)
-    val groups = deleteGroups(filesWithAddOrder(table, snap), deleteSnaps).map { case (_, fs) =>
-      val merged = fs.map { f =>
-        val p = new HPath(f)
-        ParquetFileFormat.readSchemaFromFooter(
-          new Footer(p, ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, hconf), NO_FILTER)),
-          converter)
-      }.reduce(merge)
-      applyRenames(spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        nullable(merged).asInstanceOf[StructType]), renames)
+    val deleteSnaps = deleteRefsOf(table, snap).filter(_.startsWith("d"))
+      .map(_.stripPrefix("d").split('.')(0).toLong)
+    // a data file that no longer exists is left out: a read that needs it
+    // fails when it opens it, and one its filters prune never does
+    def footer(f: String): Option[DataType] = {
+      val p = new HPath(f)
+      try Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(p, ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, hconf), NO_FILTER)),
+        converter))
+      catch { case _: java.io.FileNotFoundException => None }
     }
-    unionGroups(groups, renames, droppedColumns(table)).schema
+    val merged = filesWithAddOrder(table, snap)
+      .groupBy { case (_, k) => deleteSnaps.count(_ <= k) }.toSeq.sortBy(_._1)
+      .flatMap { case (_, group) =>
+        group.flatMap(g => footer(g._1)).reduceOption(merge)
+          .map(s => renamed(s.asInstanceOf[StructType]))
+      }.reduceOption(merge(_, _).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(s"snapshot $snap of $table has no readable data file"))
+    val drops = if (withDropped) Set.empty[String] else droppedColumns(table).map(currentName(renames)).toSet
+    nullable(StructType(merged.fields.filterNot(f => drops(f.name)))).asInstanceOf[StructType]
   }
 
   /** Iceberg-style rewrite_data_files (bin-packing compaction): coalesce
@@ -1401,8 +1318,10 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val rewriteSet = rewriteBins.flatMap(_._1).toSet
     val newSnap = claimSnapshotId(table)
     try {
-      // merged rows carry their applied deletes; one output file per bin
-      val merged = readWithDeletes(spark, table, snap, Some(rewriteSet))
+      // merged rows carry their applied deletes; one output file per bin.
+      // The `_file` filter reaches the scan, which opens only the rewrite set
+      val merged = scan(spark, table, snapshot = snap)
+        .where(org.apache.spark.sql.functions.col("_file").isin(rewriteSet.toSeq: _*))
         .coalesce(rewriteBins.size)
       val newFiles = writeSnapshotData(merged, new HPath(root, s"$table/data/snap-$newSnap"))
       withCommitLock(table) {
@@ -1689,8 +1608,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   def filesDF(spark: SparkSession, table: String): DataFrame = {
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
-    val counts: Map[String, Long] = statsLinesAt(table, snap)
-      .collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
+    val counts = fileRowCounts(table, snap)
     val rows = filesWithAddOrder(table, snap).map { case (f, add) =>
       val p = new HPath(f)
       (f, add, fsOf(p).getFileStatus(p).getLen,
@@ -1736,8 +1654,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       snap <- currentSnapshot(table)
       if deleteRefsOf(table, snap).isEmpty
       vals <- partitionValuesAt(table, snap).map(_.toMap)
-      counts = statsLinesAt(table, snap)
-        .collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
+      counts = fileRowCounts(table, snap)
       all = manifestFiles(table, snap)
       if all.forall(f => counts.contains(f) && vals.contains(f))
     } yield all.groupBy(vals).toSeq.map { case (v, fs) =>
@@ -2478,8 +2395,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     if (!partitionSpec(table).exists(_.isInstanceOf[IdentityTransform])) return None
     val vals = partitionValuesAt(table, snap).getOrElse(return None).toMap
     val all = manifestFiles(table, snap)
-    val counts = statsLinesAt(table, snap)
-      .collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
+    val counts = fileRowCounts(table, snap)
     if (!all.forall(f => counts.contains(f) && vals.contains(f))) return None
     Some(all.groupBy(vals).view.mapValues(_.map(counts).sum).toSeq
       .sortBy(_._1.getOrElse("")))
@@ -2918,10 +2834,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * string "null"), and backslash/tab/newline/CR escaped so the TSV parse
     * can never be corrupted by data values.
     */
-  private def escStat(v: String): String =
-    if (v == null) "\\N"
-    else v.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n").replace("\r", "\\r")
-
   private def unescStat(v: String): Option[String] = {
     if (v == "\\N") return None
     val sb = new StringBuilder
@@ -2947,6 +2859,26 @@ object ParquetSnapshotCatalog {
   /** Bounded metadata-log depth carried in the CURRENT pointer (Iceberg's
     * `write.metadata.previous-versions-max` shape). */
   val HistoryMax = 100
+
+  /** A sidecar/tombstone value, escaped for one TSV field (`\N` = null). */
+  private[spark] def escStat(v: String): String =
+    if (v == null) "\\N"
+    else v.replace("\\", "\\\\").replace("\t", "\\t").replace("\n", "\\n").replace("\r", "\\r")
+
+  /** Scheme/authority-normalization for tombstoned file paths: the manifest
+    * stores `/data/x` (local) or `s3a://b/x` (remote) while a caller may
+    * hold qualified URIs (`file:///data/x`) — both sides reduce to the bare
+    * path.
+    */
+  private[graft] def normFile(s: String): String =
+    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?", "")
+
+  /** One positional-tombstone line as the task-staged delete files store it
+    * — shared between [[ParquetSnapshotCatalog.commitRowDelta]]'s writers
+    * and the tombstone commit paths so the escape/normalization rules can
+    * never diverge. */
+  private[graft] def posTombstoneLine(file: String, pos: Long): String =
+    s"${escStat(normFile(file))}\t$pos"
 }
 
 /** Task-side deletion-vector access: a scan task range-reads ONLY its data

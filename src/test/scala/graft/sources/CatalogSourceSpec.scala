@@ -177,4 +177,17 @@ class CatalogSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (!g.isNullAt(3)) assert(g.getString(3) == w.getString(3))
     }
   }
+
+  test("a time-travel scan reports its own snapshot's row count to the planner") {
+    val cat = new ParquetSnapshotCatalog(tmp())
+    val a = cat.commitWithStats(spark.range(30).repartition(3).selectExpr("id"), "t", Seq("id"))
+    cat.append(spark.range(30, 34).repartition(2).selectExpr("id"), "t")
+    // the compaction rewrites every file of `a`: CURRENT shares none of them
+    cat.compactSmallFiles(spark, "t", targetBytes = 64L << 20)
+    assert(cat.filesWithAddOrder("t", a).map(_._1).toSet
+      .intersect(cat.filesWithAddOrder("t", cat.currentSnapshot("t").get).map(_._1).toSet).isEmpty)
+    val old = cat.readSnapshot(spark, "t", a)
+    assert(old.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(30)))
+    assert(old.count() == 30L)
+  }
 }

@@ -190,7 +190,7 @@ class GraftDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     val snap = cat.currentSnapshot("l1").get
     val tomb = cat.positionalDeletes("l1", snap).toSet
     val expected = meta.filter(_._1 % 3 == 2).values
-      .map { case (f, p) => (cat.normFile(f), p) }.toSet
+      .map { case (f, p) => (ParquetSnapshotCatalog.normFile(f), p) }.toSet
     assert(tomb == expected)
   }
 }

@@ -32,8 +32,8 @@ object OpenRecordingLocalFs {
   * configuration: with `spark.hadoop.fs.file.impl` naming a recording file
   * system (and its cache off, so every `getFileSystem` builds one from the
   * configuration), the warc listing and readers, the CDX archive writer,
-  * the CDX random-access fetch and the catalog scan's readers all go
-  * through that class.
+  * the CDX random-access fetch, the catalog scan's readers and the
+  * catalog's DSv2 writers all go through that class.
   */
 class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -90,5 +90,33 @@ class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     OpenRecordingLocalFs.opened.clear()
     assert(df.count() == 99L)
     files.foreach(f => assert(OpenRecordingLocalFs.opened.contains(f), s"$f not opened through the session's file system"))
+  }
+
+  test("the catalog's DSv2 writers create every data file through the session's file system") {
+    val root = java.nio.file.Files.createTempDirectory("catwconf").toFile.getAbsolutePath
+    val cat = new ParquetSnapshotCatalog(root)
+    cat.commit(spark.range(10).selectExpr("id", "CAST(id AS STRING) AS s"), "t")
+    spark.conf.set("spark.sql.catalog.wconf", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.wconf.root", root)
+    def newFiles(before: Long): Seq[String] =
+      cat.filesWithAddOrder("t", cat.currentSnapshot("t").get).collect {
+        case (f, k) if k > before => new Path(f).getName
+      }
+    OpenRecordingLocalFs.created.clear()
+    val s0 = cat.currentSnapshot("t").get
+    spark.range(10, 20).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2)
+      .writeTo("wconf.t").append()
+    val appended = newFiles(s0)
+    assert(appended.nonEmpty)
+    appended.foreach(f => assert(OpenRecordingLocalFs.created.contains(f), s"$f not created through the session's file system"))
+    // the row-level (delta) writer: replacement rows and staged tombstones
+    val s1 = cat.currentSnapshot("t").get
+    OpenRecordingLocalFs.created.clear()
+    spark.sql("UPDATE wconf.t SET s = 'u' WHERE id % 3 = 0")
+    val updated = newFiles(s1)
+    assert(updated.nonEmpty)
+    updated.foreach(f => assert(OpenRecordingLocalFs.created.contains(f), s"$f not created through the session's file system"))
+    assert(OpenRecordingLocalFs.created.asScala.exists(_.startsWith("del-")))
+    assert(cat.read(spark, "t").where("s = 'u'").count() == 7L)
   }
 }

@@ -28,6 +28,10 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** The data files snapshot `snap` of table `t` reads. */
+  private def filesAt(cat: ParquetSnapshotCatalog, snap: Long): Seq[String] =
+    cat.filesWithAddOrder("t", snap).map(_._1)
+
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftcat4").toFile
     d.deleteOnExit()
@@ -126,7 +130,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     val cat = new ParquetSnapshotCatalog(root)
     val ss = spark; import ss.implicits._
     cat.commit(Seq((1, "x"), (2, "y")).toDF("id", "s"), "t")
-    val files = cat.read(spark, "t").inputFiles.map(f => "/" + f.stripPrefix("file:").dropWhile(_ == '/')).toSeq
+    val files = filesAt(cat, cat.currentSnapshot("t").get).map(f => "/" + f.stripPrefix("file:").dropWhile(_ == '/')).toSeq
     // zombie-writer shape: the same files committed twice in one manifest
     cat.commitFiles(files ++ files, "t")
     assert(cat.read(spark, "t").count() === 2, "duplicated file refs must scan once")
@@ -219,11 +223,11 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = spark; import ss.implicits._
     val docs = (1 to 100).map(i => (s"https://example.com/d$i", s"text$i")).toDF("url", "text")
     val s1 = cat.commit(docs, "t")
-    val dataFiles = cat.read(spark, "t").inputFiles.toSet
+    val dataFiles = filesAt(cat, cat.currentSnapshot("t").get).toSet
     val sDel = cat.deleteWhere("t", "url",
       Seq("https://example.com/d7", "https://example.com/d42"))
     // zero data rewritten: same physical files, tombstone applied at read
-    assert(cat.read(spark, "t").inputFiles.toSet === dataFiles)
+    assert(filesAt(cat, cat.currentSnapshot("t").get).toSet === dataFiles)
     val after = cat.read(spark, "t").select("url").as[String].collect().toSet
     assert(after.size === 98)
     assert(!after.contains("https://example.com/d7") && !after.contains("https://example.com/d42"))
@@ -276,7 +280,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = spark; import ss.implicits._
     val base = (1 to 50).map(i => (s"https://example.com/d$i", s"v0-$i")).toDF("url", "text")
     val s1 = cat.commit(base, "t")
-    val baseFiles = cat.readSnapshot(spark, "t", s1).inputFiles.toSet
+    val baseFiles = filesAt(cat, s1).toSet
     val fresh = (1 to 50 by 5).map(i => (s"https://example.com/d$i", s"v1-$i")).toDF("url", "text")
     val preSnaps = cat.snapshots("t").size
     cat.upsertByKey(fresh, "t", "url")
@@ -292,7 +296,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // zero rewrite: every base file is still referenced (the old captures
     // are masked by the tombstone, not rewritten away)
-    assert(baseFiles.subsetOf(cat.read(spark, "t").inputFiles.toSet))
+    assert(baseFiles.subsetOf(filesAt(cat, cat.currentSnapshot("t").get).toSet))
     // pre-upsert snapshot still time-travels to the old captures
     assert(cat.readSnapshot(spark, "t", s1).as[(String, String)].collect()
       .toMap.forall(_._2.startsWith("v0-")))
@@ -364,7 +368,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got === Seq(want(500), want(900), want(990)))
     // the answer needs ZERO data files: delete them all and ask again
-    cat.read(spark, "t").inputFiles.foreach(f =>
+    filesAt(cat, cat.currentSnapshot("t").get).foreach(f =>
       Files.delete(Paths.get(new java.net.URI(f).getPath)))
     assert(cat.ddQuantileStat("t", "v", Seq(500)).get === Seq(want(500)))
     // chain poison: a plain append bypassing the histogram path makes every
@@ -411,7 +415,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     val root = tmp()
     val cat = new ParquetSnapshotCatalog(root)
     val ss = spark; import ss.implicits._
-    import org.apache.spark.sql.functions.{col, input_file_name, max => fmax}
+    import org.apache.spark.sql.functions.{col, max => fmax}
     // 4 range-partitioned files over u01..u16 with a url stats sidecar, so
     // the pre-image side has zone maps to prune against
     val base = (1 to 16).map(i => (f"u$i%02d", s"v0-$i")).toDF("url", "text")
@@ -441,7 +445,7 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     // entirely below the deleted-key range [u05, u99] can never hold a
     // pre-image — remove its bytes and the changelog must still answer
     val outOfRange = cat.readSnapshot(spark, "t", s1)
-      .groupBy(input_file_name().as("f")).agg(fmax("url").as("mx"))
+      .groupBy(col("_file").as("f")).agg(fmax("url").as("mx"))
       .where("mx < 'u05'").select("f").as[String].collect()
     assert(outOfRange.nonEmpty, "the range layout must give a prunable file")
     outOfRange.foreach(f => Files.delete(Paths.get(new java.net.URI(f).getPath)))

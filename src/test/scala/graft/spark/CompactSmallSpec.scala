@@ -71,6 +71,17 @@ class CompactSmallSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids(cat, "t") == (0L until 20000L).toSet ++ (0 until 6).map(100000L + _))
   }
 
+  test("the rewrite reads only its rewrite set: the large file is never opened") {
+    val cat = freshCat()
+    cat.commit(df((0L until 20000L).map(i => (i, blob(i, 10)))), "t")
+    (0 until 5).foreach(k => cat.append(df(Seq((100000L + k, "tiny"))), "t"))
+    cat.deleteWhere("t", "id", Seq("100002"))
+    val before = graft.sources.CatalogPartitionReader.opened.get()
+    cat.compactSmallFiles(spark, "t", targetBytes = 1L << 20)
+    assert(graft.sources.CatalogPartitionReader.opened.get() - before == 5L)
+    assert(ids(cat, "t") == (0L until 20000L).toSet ++ Seq(100000L, 100001L, 100003L, 100004L))
+  }
+
   test("pre-compaction equality deletes stay applied; post-compaction deletes hit kept AND merged rows") {
     val cat = freshCat()
     cat.append(df(Seq((1L, "a"), (2L, "b"))), "t")

@@ -91,4 +91,33 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     cat.append(Seq(("u3", 3L)).toDF("url", "v"), "t")
     assert(cat.read(spark, "t").count() == 2)
   }
+
+  test("an equality delete keyed on a later-dropped column applies through the scan") {
+    val cat = new ParquetSnapshotCatalog(tmp())
+    cat.commit(spark.range(100).selectExpr("id", "concat('s', id % 7) AS s").repartition(3), "t")
+    cat.deleteWhere("t", "s", Seq("s3"))
+    cat.dropColumn("t", "s")
+    val scan = cat.scan(spark, "t")
+    assert(scan.schema.fieldNames.toSeq == Seq("id"))
+    assert(scan.count() == 86L && cat.read(spark, "t").count() == 86L)
+    assert(scan.where("id % 7 = 3").count() == 0L)
+    // the key column is decoded for the delete even when only `id` is read
+    assert(scan.selectExpr("sum(id)").head().getLong(0) == (0 until 100).filter(_ % 7 != 3).sum)
+    // the delete applies only to the files added before it
+    cat.append(spark.range(100, 107).selectExpr("id", "concat('s', id % 7) AS s"), "t")
+    assert(cat.scan(spark, "t").count() == 93L)
+  }
+
+  test("an equality delete on a key type the scan cannot replay is refused at commit") {
+    val cat = new ParquetSnapshotCatalog(tmp())
+    val ss = spark; import ss.implicits._
+    val snap = cat.commit(Seq((1L, 1.5), (2L, 2.5)).toDF("id", "score"), "t")
+    val e = intercept[IllegalArgumentException](cat.deleteWhere("t", "score", Seq("1.5")))
+    assert(e.getMessage.contains("string, long or int"), e.getMessage)
+    intercept[IllegalArgumentException](
+      cat.upsertByKey(Seq((3L, 1.5)).toDF("id", "score"), "t", "score"))
+    intercept[IllegalArgumentException](cat.deleteWhere("t", "nope", Seq("1")))
+    assert(cat.currentSnapshot("t").contains(snap))
+    assert(cat.read(spark, "t").count() == 2L && cat.scan(spark, "t").count() == 2L)
+  }
 }

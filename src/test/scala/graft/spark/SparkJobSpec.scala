@@ -27,6 +27,10 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  /** The data files snapshot `snap` of table `t` reads. */
+  private def filesAt(cat: ParquetSnapshotCatalog, snap: Long): Seq[String] =
+    cat.filesWithAddOrder("t", snap).map(_._1)
+
   private def tmp(): String = {
     val d = java.nio.file.Files.createTempDirectory("graftspec").toFile
     d.deleteOnExit()
@@ -130,17 +134,17 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     import ss.implicits._
     // a many-small-files snapshot (8 writer tasks for 100 rows)
     val s1 = cat.commit((1 to 100).map(i => (i, s"v$i")).toDF("id", "v").repartition(8), "t")
-    val filesBefore = cat.read(spark, "t").inputFiles.length
+    val filesBefore = filesAt(cat, cat.currentSnapshot("t").get).length
     assert(filesBefore >= 8)
     // compaction: new snapshot, fewer files, identical rows; old snapshot
     // stays time-travelable
     val s2 = cat.compact(spark, "t", targetBytes = 1L << 30)
     assert(cat.currentSnapshot("t").contains(s2))
-    assert(cat.read(spark, "t").inputFiles.length === 1)
+    assert(filesAt(cat, cat.currentSnapshot("t").get).length === 1)
     assert(cat.read(spark, "t").collect().map(_.getInt(0)).sorted.toSeq === (1 to 100))
     assert(cat.readSnapshot(spark, "t", s1).count() === 100)
     // a metadata-only snapshot SHARING the compacted files (commitFiles)
-    val sharedFiles = cat.read(spark, "t").inputFiles.map(f => f.stripPrefix("file:")).toSeq
+    val sharedFiles = filesAt(cat, cat.currentSnapshot("t").get).map(f => f.stripPrefix("file:")).toSeq
     val s3 = cat.commitFiles(sharedFiles, "t")
     // expire all but the last 2 (s2, s3): s1's private files die, but the
     // compacted files survive because live snapshots still reference them
@@ -193,7 +197,7 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cat.statsAgg("t", "v") === Some((Some("125"), Some("999"), 1000L)))
     // the proof the path is metadata-only: delete every data file — the
     // sidecar must still answer, because it never opens them
-    val dataFiles = cat.read(spark, "t").inputFiles.map(_.stripPrefix("file:"))
+    val dataFiles = filesAt(cat, cat.currentSnapshot("t").get).map(_.stripPrefix("file:"))
     dataFiles.foreach(f => Files.delete(Paths.get(f)))
     assert(cat.statsAgg("t", "doc_id") === Some((Some("5"), Some("1004"), 1000L)))
     // a stats-less append advances CURRENT without a sidecar → the catalog
@@ -211,8 +215,8 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     import ss.implicits._
     val s1 = cat.commit(Seq((1, "a"), (2, "b")).toDF("id", "v"), "t")
     val s2 = cat.commit(Seq((3, "c", 9L)).toDF("id", "v", "extra"), "t")
-    val f1 = cat.readSnapshot(spark, "t", s1).inputFiles.map(_.stripPrefix("file:"))
-    val f2 = cat.readSnapshot(spark, "t", s2).inputFiles.map(_.stripPrefix("file:"))
+    val f1 = filesAt(cat, s1).map(_.stripPrefix("file:"))
+    val f2 = filesAt(cat, s2).map(_.stripPrefix("file:"))
     cat.commitFiles((f1 ++ f2).toSeq, "t")
     val merged = cat.read(spark, "t")
     assert(merged.columns.sorted.toSeq === Seq("extra", "id", "v"))
@@ -1094,7 +1098,7 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ~1000 true distinct: estimate in the raw regime, within 10%
     assert(math.abs(direct._1 - 1000.0) / 1000.0 < 0.10, s"est=${direct._1}")
     // zero data files opened: delete everything, the sidecar still answers
-    cat.read(spark, "t").inputFiles.map(_.stripPrefix("file:"))
+    filesAt(cat, cat.currentSnapshot("t").get).map(_.stripPrefix("file:"))
       .foreach(f => Files.delete(Paths.get(f)))
     assert(cat.hllDistinctStat("t", "v") === Some(direct))
     // an append that bypasses the HLL path poisons the chain: later
