@@ -181,6 +181,13 @@ object Sketch {
     if (tail == 0L) 33 else 33 - (64 - java.lang.Long.numberOfLeadingZeros(tail))
   }
 
+  /** Fold one value into HLL registers `regs` (element-wise max of rho). */
+  def hllAdd(regs: Array[Long], v: String): Unit = {
+    val d = md5Of(v)
+    val rho = hllRho(d).toLong
+    if (rho > regs(hllJ(d))) regs(hllJ(d)) = rho
+  }
+
   private[operators] def md5Of(v: String): Array[Byte] = {
     val md = mdLocal.get()
     md.reset()
@@ -456,12 +463,7 @@ case class HllAgg(
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) {
-      val d = Sketch.md5Of(v.asInstanceOf[UTF8String].toString)
-      val j = Sketch.hllJ(d)
-      val rho = Sketch.hllRho(d).toLong
-      if (rho > buf(j)) buf(j) = rho
-    }
+    if (v != null) Sketch.hllAdd(buf, v.asInstanceOf[UTF8String].toString)
     buf
   }
 

@@ -952,17 +952,17 @@ final class CatalogMicroBatchStream(scan: CatalogScan, root: String, table: Stri
 //   df.write.format("graft-catalog").mode("append")… and
 //   ds.writeStream.format("graft-catalog")… (exactly-once via epoch
 // markers). Tasks write parquet part files under a job-scoped staging
-// directory; the JOB-level commit is one metadata-only fast-append
-// (appendFiles / appendFilesAsBatch), so a failed job leaves only
+// directory through [[CatalogFileWriter]], the catalog's one data-file
+// writer, and return each file's row count, stats and schema in their
+// commit messages; the JOB-level commit is one metadata-only
+// `ParquetSnapshotCatalog.commitFiles`, so a failed job leaves only
 // unreferenced staging files (orphan-GC'd) and a committed job is the same
 // atomic snapshot every other write path produces. The table must already
 // exist (first commit via the catalog API) — DSv2 writes are appends.
 // ----------------------------------------------------------------------
 import org.apache.spark.sql.connector.write.{Write, WriteBuilder, BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.{streaming => wstreaming}
-import org.apache.parquet.schema.{MessageType => PMessageType, Types => PTypes,
-  PrimitiveType => PPrimitiveType, LogicalTypeAnnotation => PLogical}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import graft.spark.{WriteMode, WriteSpec}
 
 /** How the job-level commit lands: fast-append, whole-table replace, or an
   * Iceberg-shape partition overwrite (dynamic = replace the partitions the
@@ -985,9 +985,9 @@ final class CatalogWriteBuilder(schema: StructType, root: String, table: String)
 
   /** `INSERT OVERWRITE` (static, no partition clause) /
     * `df.write.mode("overwrite")`: the job commit becomes a REPLACE
-    * snapshot (commitFiles) instead of a fast-append — still one atomic
-    * metadata swap, and time travel to the overwritten snapshot stays
-    * complete (overwrites are snapshots, not mutations).
+    * snapshot instead of a fast-append — still one atomic metadata swap,
+    * and time travel to the overwritten snapshot stays complete
+    * (overwrites are snapshots, not mutations).
     */
   override def truncate(): WriteBuilder = { mode = CatalogWriteMode.Truncate; this }
 
@@ -1068,18 +1068,18 @@ final class CatalogWriteBuilder(schema: StructType, root: String, table: String)
     cat.partitionSpec(table))
 }
 
-final case class CatalogCommitMessage(file: String, rows: Long,
-    stats: Seq[(String, String, String)] = Nil) extends WriterCommitMessage
+/** One data file as its writer saw it: the rows it holds, each stat's
+  * (name, min, max) cast to string (None = no non-null value), each bloom
+  * column's (name, bits, bitset), the HLL registers and DD histogram of the
+  * sketch column, and the schema it was written with. */
+final case class WrittenFile(path: String, schema: StructType, rows: Long = 0L,
+    bounds: Seq[(String, Option[String], Option[String])] = Nil,
+    blooms: Seq[(String, Int, Array[Byte])] = Nil,
+    hll: Option[Array[Long]] = None,
+    dd: Seq[(Long, Long)] = Nil)
 
-/** A task that ROLLED files at write.target-file-size: every rolled file
-  * with its rows and writer-tracked stats. */
-final case class RolledCommitMessage(
-    entries: Seq[(String, Long, Seq[(String, String, String)])]) extends WriterCommitMessage
-
-/** A partitioned batch writer's output: several files, each pinned to ONE
-  * transform value (the writer rolls at value boundaries). */
-final case class PartitionedCommitMessage(files: Seq[(String, Long, String)])
-    extends WriterCommitMessage
+/** A writer task's output: every file it wrote, with what it recorded. */
+final case class CatalogCommitMessage(files: Seq[WrittenFile]) extends WriterCommitMessage
 
 final class CatalogWrite(schema: StructType, root: String, table: String,
                          mode: CatalogWriteMode = CatalogWriteMode.Append,
@@ -1088,9 +1088,6 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
   private lazy val cat = new ParquetSnapshotCatalog(root)
-  // the session's Hadoop conf, captured once: every task's data-file
-  // writes and every cleanup go through it
-  private lazy val hadoopConf = SessionHadoopConf.broadcast(SparkSession.active)
 
   // ------------------------------------------------------------------
   // Write DISTRIBUTION + ORDERING (Iceberg's write-clustered shape): a
@@ -1147,32 +1144,35 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
       case None => sortOrderSorts
     }
 
+  /** What the job commit records: every file's row count, the sort-order
+    * columns' zone maps, and a partitioned table's per-file transform pin
+    * (its stats bounds, lo == hi) — exactly what partition pruning, SPJ key
+    * grouping and metadata-only `COUNT(*)` consume. */
+  private def writeSpec(m: WriteMode): WriteSpec =
+    WriteSpec(m, stats = Some(sortOrderCols.map(c => (c, s"`$c`"))), part = spec)
+
+  private def dataDir: String =
+    new org.apache.hadoop.fs.Path(root, s"$table/data/dsv2-$stagingId").toString
+
+  private lazy val fileWrite = CatalogFileWrite(SparkSession.active, schema,
+    dataDir, writeSpec(WriteMode.Append).statExprs,
+    rollOn = spec.isDefined,
+    targetBytes = cat.getMeta(table, "prop.write.target-file-size").flatMap(_.toLongOption),
+    emptyFilePerTask = true)
+
   override def toBatch: BatchWrite = new BatchWrite {
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new CatalogWriterFactory(schema, root, table, stagingId, hadoopConf, spec,
-        org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, sortOrderCols,
-        cat.getMeta(table, "prop.write.target-file-size")
-          .flatMap(_.toLongOption))
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = fileWrite
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      // per-file row counts ride the commit messages for free — recorded as
-      // __count sidecar lines so COUNT(*) over SQL-written tables stays a
-      // metadata-only answer; a partitioned write additionally records each
-      // file's pinned transform value as its stats bounds (lo == hi), which
-      // is exactly what partition pruning and SPJ key grouping consume
-      val all: Seq[(String, Long, Option[String])] = messages.toSeq.flatMap {
-        case CatalogCommitMessage(f, n, _) => Seq((f, n, None))
-        case RolledCommitMessage(es) => es.map { case (f, n, _) => (f, n, None) }
-        case PartitionedCommitMessage(fs) => fs.map { case (f, n, v) => (f, n, Some(v)) }
-      }.sortBy(_._1)
-      val files = all.map(t => (t._1, t._2))
-      val statLines = spec.toSeq.flatMap(s =>
-        all.collect { case (f, _, Some(v)) => (f, s.statName, v, v) }) ++
-        messages.toSeq.flatMap {
-          case CatalogCommitMessage(f, _, st) => st.map { case (c, lo, hi) => (f, c, lo, hi) }
-          case RolledCommitMessage(es) =>
-            es.flatMap { case (f, _, st) => st.map { case (c, lo, hi) => (f, c, lo, hi) } }
-          case _ => Nil
-        }
+      val files = CatalogWrite.filesOf(messages)
+      // hidden partitioning needs a non-null key on every row: a file
+      // pinned to NULL fails the job, and abort drops its files
+      spec.foreach { s =>
+        val nullPinned = files.filter(f =>
+          f.rows > 0 && !f.bounds.exists(b => b._1 == s.statName && b._2.isDefined))
+        require(nullPinned.isEmpty,
+          s"graft-catalog: NULL partition value in '${s.col}' of table '$table' — " +
+          "hidden partitioning needs a non-null key on every row")
+      }
       mode match {
         case CatalogWriteMode.Truncate =>
           // every snapshot owns >= 1 data file — an empty overwrite would
@@ -1180,38 +1180,39 @@ final class CatalogWrite(schema: StructType, root: String, table: String,
           // empty-the-table operation)
           require(files.nonEmpty,
             s"graft-catalog: refusing empty INSERT OVERWRITE of '$table'")
-          cat.commitFilesWithCounts(files, table, statLines)
+          cat.commitFiles(files, table, writeSpec(WriteMode.Overwrite))
         case CatalogWriteMode.DynamicPartitions =>
           // zero new rows touch zero partitions: dynamic overwrite of
           // nothing is a no-op, not a truncate
-          if (files.nonEmpty) cat.overwritePartitionValues(files, table, statLines, None)
+          if (files.nonEmpty) cat.overwritePartitionValues(files, table, None)
         case CatalogWriteMode.Partitions(values) =>
           // empty files still CLEAR the named partitions (static contract)
-          cat.overwritePartitionValues(files, table, statLines, Some(values))
+          cat.overwritePartitionValues(files, table, Some(values))
         case CatalogWriteMode.Append =>
-          if (files.nonEmpty)
-            cat.appendFilesWithCounts(files, table, statLines)
+          if (files.nonEmpty) cat.commitFiles(files, table, writeSpec(WriteMode.Append))
       }
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      CatalogWrite.deleteAll(messages, hadoopConf.value.value)
+      CatalogWrite.deleteAll(messages, fileWrite.output.hadoopConf)
   }
 
   override def toStreaming: wstreaming.StreamingWrite = {
     require(mode == CatalogWriteMode.Append,
       "graft-catalog sink: only append output mode is supported (truncate " +
       "per epoch would rewrite the table every micro-batch)")
+    val write = CatalogFileWrite(SparkSession.active, schema, dataDir, Nil,
+      emptyFilePerTask = true)
     new wstreaming.StreamingWrite {
     override def createStreamingWriterFactory(info: PhysicalWriteInfo): wstreaming.StreamingDataWriterFactory =
-      new CatalogStreamingWriterFactory(schema, root, table, stagingId, hadoopConf)
+      write
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-      val files = messages.map(_.asInstanceOf[CatalogCommitMessage].file).toSeq.sorted
+      val files = CatalogWrite.filesOf(messages)
       if (files.nonEmpty &&
-          !cat.appendFilesAsBatch(files, table, epochId))
-        CatalogWrite.deleteAll(messages, hadoopConf.value.value) // replayed epoch: drop the duplicate outputs
+          cat.commitFiles(files, table, WriteSpec(WriteMode.Batch(epochId))).isEmpty)
+        CatalogWrite.deleteAll(messages, write.output.hadoopConf) // replayed epoch: drop the duplicate outputs
     }
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-      CatalogWrite.deleteAll(messages, hadoopConf.value.value)
+      CatalogWrite.deleteAll(messages, write.output.hadoopConf)
     }
   }
 }
@@ -1225,319 +1226,248 @@ object CatalogWrite {
       if (fs.exists(p)) fs.delete(p, false)
     }
 
-  private[sources] def deleteAll(messages: Array[WriterCommitMessage], conf: Configuration): Unit =
-    deleteFiles(messages.toSeq.flatMap {
-      case CatalogCommitMessage(f, _, _) => Seq(f)
-      case RolledCommitMessage(es) => es.map(_._1)
-      case PartitionedCommitMessage(fs) => fs.map(_._1)
+  private[sources] def filesOf(messages: Array[WriterCommitMessage]): Seq[WrittenFile] =
+    messages.toSeq.flatMap {
+      case CatalogCommitMessage(fs) => fs
       case _ => Nil
-    }, conf)
+    }.sortBy(_.path)
+
+  private[sources] def deleteAll(messages: Array[WriterCommitMessage], conf: Configuration): Unit =
+    deleteFiles(filesOf(messages).map(_.path), conf)
 }
 
-final class CatalogWriterFactory(schema: StructType, root: String, table: String,
-                                 stagingId: String,
-                                 conf: Broadcast[SerializableConfiguration],
-                                 spec: Option[graft.spark.PartTransform] = None,
-                                 sessionTz: String = "UTC",
-                                 statCols: Seq[String] = Nil,
-                                 targetBytes: Option[Long] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    spec match {
-      case Some(s) =>
-        new CatalogPartitionedDataWriter(schema, root, table, stagingId, partitionId, taskId,
-          conf.value.value, s, sessionTz, targetBytes)
-      case None =>
-        new CatalogDataWriter(schema, root, table, stagingId, partitionId, taskId,
-          conf.value.value, statCols, targetBytes)
-    }
-}
-
-final class CatalogStreamingWriterFactory(schema: StructType, root: String, table: String,
-                                          stagingId: String,
-                                          conf: Broadcast[SerializableConfiguration])
-    extends wstreaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new CatalogDataWriter(schema, root, table, s"$stagingId-e$epochId", partitionId, taskId,
-      conf.value.value)
-}
-
-/** The shared parquet-hadoop row writer: schema mapping + record
-  * serialization for one part file (atomic column types, timestamps as
-  * INT64 micros, which Spark's parquet reader — the connector's too —
-  * reads), used by the append/overwrite writer and the row-level
-  * (delta) writer alike.
+/** Spark's own parquet writer for one schema: `ParquetFileFormat.prepareWrite`
+  * runs once on the driver against the session's Hadoop conf, and every
+  * task opens its files from the resulting `OutputWriterFactory` — nested
+  * types, timestamps and the session's parquet settings exactly as
+  * `df.write.parquet` writes them.
   */
-private[sources] object PqRow {
-  import org.apache.hadoop.fs.Path
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.api.WriteSupport
-  import org.apache.parquet.io.api.{Binary, RecordConsumer}
-
-  private[sources] def message(schema: StructType): PMessageType = {
-    val b = PTypes.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case StringType =>
-          PTypes.optional(BINARY).as(PLogical.stringType())
-        case BinaryType => PTypes.optional(BINARY)
-        case LongType => PTypes.optional(INT64)
-        case IntegerType => PTypes.optional(INT32)
-        case DoubleType => PTypes.optional(DOUBLE)
-        case FloatType => PTypes.optional(FLOAT)
-        case BooleanType => PTypes.optional(BOOLEAN)
-        case TimestampType =>
-          PTypes.optional(INT64).as(PLogical.timestampType(true, PLogical.TimeUnit.MICROS))
-        case DateType => PTypes.optional(INT32).as(PLogical.dateType())
-        case other => throw new IllegalArgumentException(
-          s"graft-catalog writer: unsupported column type $other for '${f.name}'")
-      }
-      b.addField(t.named(f.name))
-    }
-    b.named("spark_schema")
-  }
-
-  private final class RowWriteSupport(schema: StructType) extends WriteSupport[InternalRow] {
-    private var rc: RecordConsumer = _
-    override def init(conf: org.apache.hadoop.conf.Configuration): WriteSupport.WriteContext =
-      new WriteSupport.WriteContext(message(schema), java.util.Collections.emptyMap[String, String]())
-    override def prepareForWrite(consumer: RecordConsumer): Unit = rc = consumer
-    override def write(row: InternalRow): Unit = {
-      rc.startMessage()
-      var i = 0
-      while (i < schema.length) {
-        if (!row.isNullAt(i)) {
-          val name = schema.fields(i).name
-          rc.startField(name, i)
-          schema.fields(i).dataType match {
-            case StringType => rc.addBinary(Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-            case BinaryType => rc.addBinary(Binary.fromConstantByteArray(row.getBinary(i)))
-            case LongType | TimestampType => rc.addLong(row.getLong(i))
-            case IntegerType | DateType => rc.addInteger(row.getInt(i))
-            case DoubleType => rc.addDouble(row.getDouble(i))
-            case FloatType => rc.addFloat(row.getFloat(i))
-            case BooleanType => rc.addBoolean(row.getBoolean(i))
-            case other => throw new IllegalStateException(s"unreachable: $other")
-          }
-          rc.endField(name, i)
-        }
-        i += 1
-      }
-      rc.endMessage()
-    }
-  }
-
-  private final class B(p: Path, schema: StructType)
-      extends ParquetWriter.Builder[InternalRow, B](p) {
-    override def self(): B = this
-    override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration): WriteSupport[InternalRow] =
-      new RowWriteSupport(schema)
-  }
-
-  private[sources] def open(schema: StructType, file: Path,
-                            conf: Configuration): ParquetWriter[InternalRow] =
-    new B(file, schema)
-      .withConf(conf)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
+final class ParquetOutput private (val schema: StructType,
+    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+    conf: Broadcast[SerializableConfiguration]) extends Serializable {
+  def hadoopConf: Configuration = conf.value.value
+  def open(path: String): org.apache.spark.sql.execution.datasources.OutputWriter =
+    factory.newInstance(path, schema, new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      hadoopConf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
 }
 
-final class CatalogDataWriter(schema: StructType, root: String, table: String,
-                              stagingId: String, partitionId: Int, taskId: Long,
-                              conf: Configuration,
-                              statCols: Seq[String] = Nil,
-                              targetBytes: Option[Long] = None)
-    extends DataWriter[InternalRow] {
-  import org.apache.hadoop.fs.Path
-
-  // write.target-file-size: roll a fresh data file when the in-progress
-  // one reaches the target (ParquetWriter.getDataSize = flushed + buffered
-  // estimate) — the 100 TB write-side sizing knob, so one task writing a
-  // huge partition emits right-sized files instead of one monolith
-  private var fileNo = 0
-  private def nextFile(): Path = {
-    val p = new Path(root,
-      f"$table/data/dsv2-$stagingId/part-$partitionId%05d-$taskId-$fileNo%04d.parquet")
-    fileNo += 1
-    p
+object ParquetOutput {
+  def apply(spark: SparkSession, schema: StructType): ParquetOutput = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(SessionHadoopConf(spark))
+    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    new ParquetOutput(schema, factory,
+      spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
   }
-  private var file = nextFile()
-  private var writer = PqRow.open(schema, file, conf)
-  private var rows = 0L
-  private val done =
-    scala.collection.mutable.ArrayBuffer[(String, Long, Seq[(String, String, String)])]()
 
-  // per-file min/max of the write.sort-order columns (string/long/int
-  // only), tracked inline so SQL-written tables get zone-map sidecars for
-  // free; nulls are skipped per SQL min/max semantics — an all-null file
-  // simply carries no stats row for the column (pruning keeps it, the
-  // metadata aggregate refuses: conservative both ways)
-  private val tracked: Array[(Int, org.apache.spark.sql.types.DataType)] =
-    statCols.flatMap { c =>
-      schema.fields.zipWithIndex.collectFirst {
-        case (f, i) if f.name == c && (f.dataType == StringType ||
-            f.dataType == LongType || f.dataType == IntegerType) => (i, f.dataType)
+  // Spark's OutputWriter reports no size; parquet's in-progress data size
+  // (flushed row groups + the buffered estimate, what ParquetWriter
+  // .getDataSize reports) sits on its record writer
+  private lazy val recordWriterField = {
+    val f = classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetOutputWriter]
+      .getDeclaredField("recordWriter")
+    f.setAccessible(true); f
+  }
+  private lazy val internalWriterField = {
+    val f = classOf[org.apache.parquet.hadoop.ParquetRecordWriter[_]].getDeclaredField("internalWriter")
+    f.setAccessible(true); f
+  }
+  private lazy val dataSizeMethod = {
+    val m = Class.forName("org.apache.parquet.hadoop.InternalParquetRecordWriter").getMethod("getDataSize")
+    m.setAccessible(true); m
+  }
+
+  private[sources] def dataSize(w: org.apache.spark.sql.execution.datasources.OutputWriter): Long =
+    dataSizeMethod.invoke(internalWriterField.get(recordWriterField.get(w))).asInstanceOf[Long]
+}
+
+/** The catalog's one data-file writer, configured once on the driver: the
+  * parquet output, the data directory, and the per-row expressions whose
+  * values every file folds — each stats expression's min/max (`statExprs`,
+  * (sidecar name, SQL) pairs evaluated as the Catalyst expressions the
+  * session resolves, bounds cast to string in the session time zone), the
+  * bloom bit indices of each bloom column, and the HLL value and DD bucket
+  * of the sketch columns. With `rollOn` the writer starts a new file
+  * whenever the first stat's value changes (the partition transform's pin),
+  * and with `targetBytes` whenever the file reaches that size.
+  *
+  * A task that writes no row writes no file — except with
+  * `emptyFilePerTask` (the DSv2 contract: every task commits one file), or
+  * for partition 0 of an unrolled write (the `df.write.parquet` contract,
+  * so an empty frame still commits a readable snapshot).
+  */
+final case class CatalogFileWrite(output: ParquetOutput, dir: String,
+    exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    statNames: Seq[String], blooms: Seq[(String, Int)], hll: Boolean, dd: Boolean,
+    rollOn: Boolean, targetBytes: Option[Long], emptyFilePerTask: Boolean, timeZone: String)
+    extends DataWriterFactory with wstreaming.StreamingDataWriterFactory {
+  def statTypes: Seq[DataType] = exprs.take(statNames.length).map(_.dataType)
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new CatalogFileWriter(this, dir, f"part-$partitionId%05d-$taskId",
+      !rollOn && (emptyFilePerTask || partitionId == 0))
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
+    new CatalogFileWriter(this, s"$dir-e$epochId", f"part-$partitionId%05d-$taskId", true)
+
+  /** Write one partition's rows — the catalog's own (non-DSv2) write task. */
+  def run(partitionId: Int, rows: Iterator[InternalRow]): CatalogCommitMessage = {
+    val w = createWriter(partitionId,
+      Option(org.apache.spark.TaskContext.get()).map(_.taskAttemptId()).getOrElse(0L))
+    try {
+      rows.foreach(w.write)
+      w.commit().asInstanceOf[CatalogCommitMessage]
+    } catch { case t: Throwable => w.abort(); throw t }
+  }
+}
+
+object CatalogFileWrite {
+  /** Resolve the writer's expressions against `schema` with the session's
+    * analyzer (so `days`' date_format renders in the session time zone) and
+    * bind them to the written row's ordinals. */
+  def apply(spark: SparkSession, schema: StructType, dir: String,
+            statExprs: Seq[(String, String)], blooms: Seq[(String, Int)] = Nil,
+            hll: Option[String] = None, dd: Option[String] = None,
+            rollOn: Boolean = false, targetBytes: Option[Long] = None,
+            emptyFilePerTask: Boolean = false): CatalogFileWrite = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val sqls = statExprs.map(_._2) ++
+      blooms.flatMap { case (c, bits) => ParquetSnapshotCatalog.bloomIdxSql(c, bits) } ++
+      hll.map(c => s"CAST($c AS STRING)") ++ dd.map(ParquetSnapshotCatalog.ddRepSql)
+    val base = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    val exprs =
+      if (sqls.isEmpty) Nil
+      else {
+        val Project(list, _) = base.selectExpr(sqls: _*).queryExecution.analyzed
+        BindReferences.bindReferences(list.map { case a: Alias => a.child; case e => e },
+          AttributeSeq(base.queryExecution.analyzed.output))
       }
-    }.toArray
-  private val mins = new Array[Any](tracked.length)
-  private val maxs = new Array[Any](tracked.length)
+    // bloom indices and DD buckets are read as longs
+    require(exprs.drop(statExprs.length).zipWithIndex.forall { case (e, i) =>
+        e.dataType == LongType || (hll.isDefined && i == 4 * blooms.length) },
+      s"graft-catalog writer: bloom/dd expressions must be BIGINT: ${sqls.drop(statExprs.length)}")
+    CatalogFileWrite(ParquetOutput(spark, schema), dir, exprs, statExprs.map(_._1), blooms,
+      hll.isDefined, dd.isDefined, rollOn, targetBytes, emptyFilePerTask,
+      spark.sessionState.conf.sessionLocalTimeZone)
+  }
+}
 
-  private def fileStats: Seq[(String, String, String)] =
-    tracked.indices.collect {
-      case j if mins(j) != null =>
-        (schema.fields(tracked(j)._1).name, mins(j).toString, maxs(j).toString)
-    }.toSeq
+/** One task's writer (see [[CatalogFileWrite]]): rows go straight to the
+  * parquet output while one projection evaluates every stats, bloom and
+  * sketch expression; each finished file becomes one [[WrittenFile]] of the
+  * task's [[CatalogCommitMessage]]. A NULL transform value is a pin like
+  * any other — the DSv2 job commit refuses it.
+  */
+final class CatalogFileWriter(w: CatalogFileWrite, dir: String, tag: String, keepEmpty: Boolean)
+    extends DataWriter[InternalRow] {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
 
-  private def finishFile(): Unit = {
-    writer.close()
-    // a trailing roll that never received a row would register an empty
-    // file in the manifest (opened forever, prunable never) — drop it;
-    // a genuinely empty TASK still commits its one empty file (the
-    // pre-rolling contract, and what overwrite-to-empty relies on)
-    if (rows == 0L && done.nonEmpty) CatalogWrite.deleteFiles(Seq(file.toString), conf)
-    else done += ((file.toUri.getPath, rows, fileStats))
+  private val proj = if (w.exprs.isEmpty) null else UnsafeProjection.create(w.exprs)
+  private val statTypes = w.statTypes.toArray
+  private val nStats = statTypes.length
+  private val ords = statTypes.map(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering)
+  private val toStr = statTypes.map(dt =>
+    Cast(BoundReference(0, dt, nullable = true), StringType, Some(w.timeZone)))
+  private val bloomAt = nStats
+  private val hllAt = bloomAt + 4 * w.blooms.length
+  private val ddAt = hllAt + (if (w.hll) 1 else 0)
+
+  private var out: org.apache.spark.sql.execution.datasources.OutputWriter = _
+  private var path: String = _
+  private var fileNo = 0
+  private var rows = 0L
+  private var pin: UTF8String = _
+  private val mins = new Array[Any](nStats)
+  private val maxs = new Array[Any](nStats)
+  private var bits: Array[Array[Byte]] = _
+  private var regs: Array[Long] = _
+  private val hist = scala.collection.mutable.HashMap.empty[Long, Long]
+  private val done = scala.collection.mutable.ArrayBuffer.empty[WrittenFile]
+
+  private def open(): Unit = {
+    path = f"$dir/$tag-$fileNo%04d.parquet"
+    fileNo += 1
+    out = w.output.open(path)
+    rows = 0L
     java.util.Arrays.fill(mins.asInstanceOf[Array[AnyRef]], null)
     java.util.Arrays.fill(maxs.asInstanceOf[Array[AnyRef]], null)
-    rows = 0L
+    bits = w.blooms.map(b => new Array[Byte](b._2 / 8)).toArray
+    regs = if (w.hll) new Array[Long](graft.operators.Sketch.hllM) else null
+    hist.clear()
+  }
+
+  private def bound(i: Int, v: Any): Option[String] =
+    Option(v).map(x => toStr(i).eval(new GenericInternalRow(Array[Any](x))).toString)
+
+  private def finish(): Unit = if (out != null) {
+    out.close()
+    out = null
+    done += WrittenFile(ParquetSnapshotCatalog.pathOf(path), w.output.schema, rows,
+      (0 until nStats).map(i => (w.statNames(i), bound(i, mins(i)), bound(i, maxs(i)))),
+      w.blooms.zip(bits).map { case ((c, n), b) => (c, n, b) },
+      Option(regs), hist.toSeq.sorted)
   }
 
   override def write(record: InternalRow): Unit = {
-    writer.write(record)
+    val p = if (proj == null) null else proj(record)
+    if (w.rollOn && out != null) {
+      val v = if (p.isNullAt(0)) null else p.getUTF8String(0)
+      if (v != pin) finish()
+    }
+    if (out == null) {
+      open()
+      if (w.rollOn) pin = if (p.isNullAt(0)) null else p.getUTF8String(0).clone()
+    }
+    out.write(record)
     rows += 1
-    var j = 0
-    while (j < tracked.length) {
-      val (i, dt) = tracked(j)
-      if (!record.isNullAt(i)) dt match {
-        case StringType =>
-          val v = record.getUTF8String(i).clone()
-          if (mins(j) == null || v.compareTo(mins(j).asInstanceOf[UTF8String]) < 0) mins(j) = v
-          if (maxs(j) == null || v.compareTo(maxs(j).asInstanceOf[UTF8String]) > 0) maxs(j) = v
-        case LongType =>
-          val v = record.getLong(i)
-          if (mins(j) == null || v < mins(j).asInstanceOf[Long]) mins(j) = v
-          if (maxs(j) == null || v > maxs(j).asInstanceOf[Long]) maxs(j) = v
-        case IntegerType =>
-          val v = record.getInt(i)
-          if (mins(j) == null || v < mins(j).asInstanceOf[Int]) mins(j) = v
-          if (maxs(j) == null || v > maxs(j).asInstanceOf[Int]) maxs(j) = v
-        case _ => ()
+    var i = 0
+    while (i < nStats) {
+      if (!p.isNullAt(i)) {
+        val v = p.get(i, statTypes(i))
+        if (mins(i) == null || ords(i).lt(v, mins(i))) mins(i) = copyOf(v)
+        if (maxs(i) == null || ords(i).gt(v, maxs(i))) maxs(i) = copyOf(v)
       }
-      j += 1
+      i += 1
     }
-    if (targetBytes.exists(t => writer.getDataSize >= t)) {
-      finishFile()
-      file = nextFile()
-      writer = PqRow.open(schema, file, conf)
+    var b = 0
+    while (b < bits.length) {
+      var k = 0
+      while (k < 4) {
+        val at = bloomAt + 4 * b + k
+        if (!p.isNullAt(at)) {
+          val ix = p.getLong(at).toInt
+          bits(b)(ix >> 3) = (bits(b)(ix >> 3) | (1 << (ix & 7))).toByte
+        }
+        k += 1
+      }
+      b += 1
     }
-  }
-  override def commit(): WriterCommitMessage = {
-    finishFile()
-    // a task that never rolled keeps the single-file message shape (the
-    // streaming epoch path and batch-marker bookkeeping key on it)
-    if (done.length == 1) {
-      val (f, n, st) = done(0)
-      CatalogCommitMessage(f, n, st)
-    } else RolledCommitMessage(done.toSeq)
-  }
-  override def abort(): Unit = {
-    writer.close()
-    CatalogWrite.deleteFiles(done.map(_._1) :+ file.toUri.getPath, conf)
-  }
-  override def close(): Unit = ()
-}
-
-/** The VALUE-ROLLING writer for `PARTITIONED BY` tables: rows arrive
-  * clustered + sorted by the source column ([[CatalogWrite]]'s required
-  * distribution/ordering), and the writer starts a new data file whenever
-  * the TRANSFORM value changes — so every emitted file is pinned to exactly
-  * one transform value, the layout storage-partitioned joins and partition
-  * pruning key on. Rolling is exact regardless of input order (an unsorted
-  * run just fragments into more files, never a mixed one). NULL partition
-  * values are refused loudly — a null key can't be pruned or join-grouped.
-  */
-final class CatalogPartitionedDataWriter(schema: StructType, root: String, table: String,
-                                         stagingId: String, partitionId: Int, taskId: Long,
-                                         conf: Configuration,
-                                         spec: graft.spark.PartTransform,
-                                         sessionTz: String = "UTC",
-                                         targetBytes: Option[Long] = None)
-    extends DataWriter[InternalRow] {
-  import org.apache.hadoop.fs.Path
-
-  private val colIdx = schema.fieldIndex(spec.col)
-  private val colType = schema.fields(colIdx).dataType
-  // days(ts): render internal micros in the WRITE SESSION's time zone —
-  // the same zone the stats pass's date_format uses, so the pin, the
-  // sidecar bounds, and the read path's literal replay all agree
-  private lazy val tzFmt = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneId.of(sessionTz))
-
-  /** The row's raw column value in the SAME string form the stats sidecar
-    * and the read path's literal replay use (CAST AS STRING semantics for
-    * the supported key types; session-tz rendering for timestamps). */
-  private def rawOf(r: InternalRow): String = {
-    require(!r.isNullAt(colIdx),
-      s"graft-catalog: NULL partition value in '${spec.col}' of table '$table' — " +
-      "hidden partitioning needs a non-null key on every row")
-    colType match {
-      case StringType => r.getUTF8String(colIdx).toString
-      case LongType => r.getLong(colIdx).toString
-      case IntegerType => r.getInt(colIdx).toString
-      case TimestampType =>
-        val micros = r.getLong(colIdx)
-        tzFmt.format(java.time.Instant.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L), Math.floorMod(micros, 1000000L) * 1000L))
-      case other => throw new IllegalStateException(
-        s"graft-catalog: unsupported partition column type $other")
+    if (regs != null && !p.isNullAt(hllAt))
+      graft.operators.Sketch.hllAdd(regs, p.getUTF8String(hllAt).toString)
+    if (w.dd && !p.isNullAt(ddAt)) {
+      val rep = p.getLong(ddAt)
+      hist(rep) = hist.getOrElse(rep, 0L) + 1L
     }
+    if (w.targetBytes.exists(t => ParquetOutput.dataSize(out) >= t)) finish()
   }
 
-  private var curVal: String = _
-  private var curFile: Path = _
-  private var curWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var curRows = 0L
-  private var fileNo = 0
-  private val done = scala.collection.mutable.ArrayBuffer[(String, Long, String)]()
-
-  private def roll(v: String): Unit = {
-    closeCurrent()
-    curVal = v
-    curFile = new Path(root,
-      f"$table/data/dsv2-$stagingId/part-$partitionId%05d-$taskId-$fileNo%04d.parquet")
-    fileNo += 1
-    curWriter = PqRow.open(schema, curFile, conf)
-    curRows = 0L
-  }
-
-  private def closeCurrent(): Unit = if (curWriter != null) {
-    curWriter.close()
-    // a byte-roll can leave a fresh zero-row writer at task end / value
-    // change — drop it rather than pin an empty file into the manifest
-    if (curRows == 0L) CatalogWrite.deleteFiles(Seq(curFile.toString), conf)
-    else done += ((curFile.toUri.getPath, curRows, curVal))
-    curWriter = null
-  }
-
-  override def write(record: InternalRow): Unit = {
-    val v = spec.literal(rawOf(record))
-    if (curWriter == null || v != curVal) roll(v)
-    curWriter.write(record)
-    curRows += 1
-    // write.target-file-size inside a value pin: a 10⁹-row partition value
-    // rolls into right-sized files that all carry the SAME pin — the
-    // key-group scan's groupBy(pin) keeps SPJ intact across the roll
-    if (targetBytes.exists(t => curWriter.getDataSize >= t)) roll(v)
+  private def copyOf(v: Any): Any = v match {
+    case s: UTF8String => s.clone()
+    case o => o
   }
 
   override def commit(): WriterCommitMessage = {
-    closeCurrent()
-    PartitionedCommitMessage(done.toSeq)
+    if (done.isEmpty && out == null && keepEmpty) open()
+    finish()
+    CatalogCommitMessage(done.toSeq)
   }
 
   override def abort(): Unit = {
-    if (curWriter != null) { curWriter.close(); done += ((curFile.toUri.getPath, 0L, "")) }
-    CatalogWrite.deleteFiles(done.map(_._1), conf)
+    if (out != null) { out.close(); out = null; done += WrittenFile(path, w.output.schema) }
+    CatalogWrite.deleteFiles(done.map(_.path), w.output.hadoopConf)
   }
+
   override def close(): Unit = ()
 }
 
@@ -1553,7 +1483,7 @@ final class CatalogPartitionedDataWriter(schema: StructType, root: String, table
 // at any UPDATE/MERGE size.
 // ----------------------------------------------------------------------
 
-final case class DeltaCommitMessage(dataFile: Option[(String, Long)],
+final case class DeltaCommitMessage(dataFile: Option[WrittenFile],
                                     deleteFile: Option[String],
                                     touched: Seq[String]) extends WriterCommitMessage
 
@@ -1562,18 +1492,18 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   private val stagingId = java.util.UUID.randomUUID().toString.take(8)
   private lazy val cat = new ParquetSnapshotCatalog(root)
-  private lazy val hadoopConf = SessionHadoopConf.broadcast(SparkSession.active)
+  private lazy val output = ParquetOutput(SparkSession.active, dataSchema)
   override def description(): String = s"GraftCatalogDeltaWrite(table=$table)"
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite =
     new org.apache.spark.sql.connector.write.DeltaBatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo)
           : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-        new GraftDeltaWriterFactory(dataSchema, rowId, root, table, stagingId, hadoopConf)
+        new GraftDeltaWriterFactory(rowId, root, table, stagingId, output)
       override def commit(messages: Array[WriterCommitMessage]): Unit = {
         val ms = messages.collect { case m: DeltaCommitMessage => m }.toSeq
         val dels = ms.flatMap(_.deleteFile).sorted
-        val datas = ms.flatMap(_.dataFile).sortBy(_._1)
+        val datas = ms.flatMap(_.dataFile).sortBy(_.path)
         val touched = ms.flatMap(_.touched).distinct
         // a statement matching zero rows commits nothing (no empty snapshot)
         if (dels.nonEmpty || datas.nonEmpty)
@@ -1581,32 +1511,30 @@ final class GraftDeltaWrite(dataSchema: StructType, rowId: StructType,
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         CatalogWrite.deleteFiles(messages.toSeq.collect { case m: DeltaCommitMessage => m }
-          .flatMap(m => m.dataFile.map(_._1) ++ m.deleteFile), hadoopConf.value.value)
+          .flatMap(m => m.dataFile.map(_.path) ++ m.deleteFile), output.hadoopConf)
     }
 }
 
-final class GraftDeltaWriterFactory(dataSchema: StructType, rowId: StructType,
-                                    root: String, table: String, stagingId: String,
-                                    conf: Broadcast[SerializableConfiguration])
+final class GraftDeltaWriterFactory(rowId: StructType, root: String, table: String,
+                                    stagingId: String, output: ParquetOutput)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(dataSchema, rowId, root, table, stagingId, partitionId, taskId,
-      conf.value.value)
+    new GraftDeltaWriter(rowId, root, table, stagingId, partitionId, taskId, output)
 }
 
 /** Per-task delta writer: deletes stream straight to a staged tombstone tsv
   * (normalized + escaped exactly as the tombstone commit paths write them),
-  * inserts to a staged parquet part file — both lazily created, so a task
-  * that only deletes stages no parquet and vice versa. `touched` collects
-  * the DISTINCT files this task tombstoned (O(files), not O(rows)) for the
-  * commit-time conflict validation. With `representUpdateAsDeleteAndInsert`
-  * the update path is split upstream; the direct `update` is kept correct
-  * anyway (delete + insert).
+  * inserts to a staged parquet part file opened from the same parquet
+  * output every catalog data file comes from — both lazily created, so a
+  * task that only deletes stages no parquet and vice versa. `touched`
+  * collects the DISTINCT files this task tombstoned (O(files), not
+  * O(rows)) for the commit-time conflict validation. With
+  * `representUpdateAsDeleteAndInsert` the update path is split upstream;
+  * the direct `update` is kept correct anyway (delete + insert).
   */
-final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
-                             root: String, table: String, stagingId: String,
-                             partitionId: Int, taskId: Long, conf: Configuration)
+final class GraftDeltaWriter(rowId: StructType, root: String, table: String, stagingId: String,
+                             partitionId: Int, taskId: Long, output: ParquetOutput)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   import org.apache.hadoop.fs.Path
 
@@ -1615,7 +1543,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
 
   private val dataPath = new Path(root,
     f"$table/data/dsv2-$stagingId/part-$partitionId%05d-$taskId.parquet")
-  private var dataWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+  private var dataWriter: org.apache.spark.sql.execution.datasources.OutputWriter = _
   private var rows = 0L
 
   private val delPath = new Path(root,
@@ -1626,7 +1554,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
     if (delOut == null)
       delOut = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        delPath.getFileSystem(conf).create(delPath, true),
+        delPath.getFileSystem(output.hadoopConf).create(delPath, true),
         java.nio.charset.StandardCharsets.UTF_8))
     val f = id.getUTF8String(fileIdx).toString
     delOut.write(ParquetSnapshotCatalog.posTombstoneLine(f, id.getLong(posIdx)))
@@ -1639,7 +1567,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
   }
 
   override def insert(row: InternalRow): Unit = {
-    if (dataWriter == null) dataWriter = PqRow.open(dataSchema, dataPath, conf)
+    if (dataWriter == null) dataWriter = output.open(dataPath.toString)
     dataWriter.write(row)
     rows += 1
   }
@@ -1648,7 +1576,9 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
     if (dataWriter != null) dataWriter.close()
     if (delOut != null) delOut.close()
     DeltaCommitMessage(
-      if (dataWriter != null) Some((dataPath.toUri.getPath, rows)) else None,
+      if (dataWriter != null)
+        Some(WrittenFile(ParquetSnapshotCatalog.pathOf(dataPath.toString), output.schema, rows))
+      else None,
       if (delOut != null) Some(delPath.toUri.getPath) else None,
       touched.toSeq)
   }
@@ -1656,7 +1586,7 @@ final class GraftDeltaWriter(dataSchema: StructType, rowId: StructType,
   override def abort(): Unit = {
     if (dataWriter != null) dataWriter.close()
     if (delOut != null) delOut.close()
-    CatalogWrite.deleteFiles(Seq(dataPath.toString, delPath.toString), conf)
+    CatalogWrite.deleteFiles(Seq(dataPath.toString, delPath.toString), output.hadoopConf)
   }
 
   override def close(): Unit = ()

@@ -77,24 +77,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   private def existing(t: String): Boolean =
     cat.currentSnapshot(t).isDefined || cat.getMeta(t, "sql.schema").isDefined
 
-  /** The table's CURRENT logical schema, from the authoritative read path
-    * (parquet footers + rename/drop history); for a CREATEd table with no
-    * data yet — or one whose data files are unreachable but whose metadata
-    * can still answer (the stats-sidecar aggregate path) — the schema
-    * recorded at CREATE time.
+  /** The table's CURRENT logical schema: the snapshot's schema as every
+    * read sees it (`schemaAt` — the schemas recorded at commit plus the
+    * rename/drop history), or for a CREATEd table with no snapshot yet the
+    * schema recorded at CREATE time.
     */
-  private def schemaOf(t: String): StructType = {
-    def recorded = cat.getMeta(t, "sql.schema")
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-    cat.currentSnapshot(t) match {
-      case Some(snap) =>
-        scala.util.Try(cat.schemaAt(SparkSession.active, t, snap)).toOption
-          .orElse(recorded)
-          .getOrElse(throw new IllegalStateException(
-            s"graft catalog: cannot derive schema of '$t' (unreadable data files, " +
-            "no recorded schema)"))
-      case None => recorded.get
-    }
+  private def schemaOf(t: String): StructType = cat.currentSnapshot(t) match {
+    case Some(snap) => cat.schemaAt(SparkSession.active, t, snap)
+    case None => DataType.fromJson(cat.getMeta(t, "sql.schema").get).asInstanceOf[StructType]
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {

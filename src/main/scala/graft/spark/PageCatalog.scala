@@ -1,10 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.sources.{CatalogFileWrite, SessionHadoopConf, WrittenFile}
 
 /** Iceberg-semantics table emulation over parquet: immutable snapshots, each
   * committed by an atomic pointer swap. No Iceberg runtime jar ships in this
@@ -50,15 +53,52 @@ trait PageCatalog {
   def currentSnapshot(table: String): Option[Long]
 }
 
+/** Where a commit's delta lands: a replace snapshot, a fast-append to
+  * CURRENT, an exactly-once streaming batch, or a fast-append to a branch
+  * head. */
+sealed trait WriteMode
+object WriteMode {
+  case object Overwrite extends WriteMode
+  case object Append extends WriteMode
+  final case class Batch(id: Long) extends WriteMode
+  final case class Branch(name: String) extends WriteMode
+}
+
+/** What one commit records beside its data files
+  * ([[ParquetSnapshotCatalog.commitFiles]]):
+  *   - `stats`: zone-map stats as (sidecar name, SQL) pairs, each file's
+  *     `__count` with them — `Some(Nil)` records counts only, `None` writes
+  *     no stats sidecar;
+  *   - `blooms`: the (column, bits) bloom sidecars;
+  *   - `hll` / `dd`: the column whose cumulative sketch rolls forward;
+  *   - `part`: the partition transform — its per-file bounds lead the
+  *     stats and an overwrite declares it; with `nFiles` > 0 the write
+  *     clusters rows into that many tasks by it (range-clustered, or with
+  *     `exact` hash-clustered and sorted, one transform value per file);
+  *   - `upsertKey`: an equality delete (column, keys) in the same snapshot.
+  */
+final case class WriteSpec(mode: WriteMode = WriteMode.Overwrite,
+    stats: Option[Seq[(String, String)]] = None, blooms: Seq[(String, Int)] = Nil,
+    hll: Option[String] = None, dd: Option[String] = None,
+    part: Option[PartTransform] = None, nFiles: Int = 0, exact: Boolean = false,
+    upsertKey: Option[(String, Seq[String])] = None) {
+  def statExprs: Seq[(String, String)] =
+    part.map(p => (p.statName, p.sparkExprSql)).toSeq ++ stats.getOrElse(Nil)
+}
+
 class ParquetSnapshotCatalog(root: String) extends PageCatalog {
-  import ParquetSnapshotCatalog.{escStat, normFile, posTombstoneLine}
+  import ParquetSnapshotCatalog.{escStat, normFile, pathOf, posTombstoneLine}
 
   // ------------------------------------------------------------------
-  // Hadoop-FS I/O layer. One private FileSystem instance per scheme
+  // Hadoop-FS I/O layer, over the active session's Hadoop conf (its
+  // `spark.hadoop.*` settings; the default configuration only when no
+  // session exists). One private FileSystem instance per scheme
   // (FileSystem.newInstance, NOT the process-wide cache) so disabling
   // checksum sidecars here cannot leak into other components' fs handles.
   // ------------------------------------------------------------------
-  private val conf = new Configuration()
+  private lazy val conf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(SessionHadoopConf(_)).getOrElse(new Configuration())
   private val fsCache = scala.collection.mutable.Map.empty[String, FileSystem]
 
   private def fsOf(p: HPath): FileSystem = synchronized {
@@ -75,19 +115,18 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val s = p.toUri.getScheme; s == null || s == "file"
   }
 
-  /** Manifests store plain absolute paths for local roots (byte-compatible
-    * with pre-round-4 tables) and full URIs for remote schemes. */
-  private def pathStr(p: HPath): String =
-    if (isLocal(p)) p.toUri.getPath else p.toString
+  private def pathStr(p: HPath): String = pathOf(p.toString)
 
   private def readStr(p: HPath): String = {
     val in = fsOf(p).open(p)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
-  private def writeStr(p: HPath, s: String): Unit = {
+  private def writeStr(p: HPath, s: String): Unit = writeBytes(p, s.getBytes(UTF_8))
+
+  private def writeBytes(p: HPath, b: Array[Byte]): Unit = {
     val out = fsOf(p).create(p, true)
-    try out.write(s.getBytes(UTF_8)) finally out.close()
+    try out.write(b) finally out.close()
   }
 
   private def fsExists(p: HPath): Boolean = fsOf(p).exists(p)
@@ -297,12 +336,52 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
           .split('\n').filter(_.nonEmpty).flatMap(unescStat).toSeq)
     }.sortBy(_._1)
 
-  /** Write snapshot `snap`'s delta manifest (its own new files only) and
+  /** Write delta `id`'s manifest (its own new files only) and
     * return the manifest-list entry referencing it. */
-  private def writeDeltaManifest(table: String, snap: Long, files: Seq[String]): String = {
+  private def writeDeltaManifest(table: String, id: String, files: Seq[String]): String = {
     val body = files.distinct.sorted.map(f => "\"" + f + "\"").mkString("[\n", ",\n", "\n]")
-    writeStr(new HPath(manifestDir(table), s"m$snap.json"), body)
-    s"@m$snap.json"
+    writeStr(new HPath(manifestDir(table), s"m$id.json"), body)
+    s"@m$id.json"
+  }
+
+  /** Write delta `id`'s manifest with its sidecars — the stats and bloom
+    * lines of `spec` and the schema its files were written with — and
+    * return the manifest-list entry. Every sidecar lands before a pointer
+    * can reference the delta. */
+  private def writeDelta(table: String, id: String, files: Seq[WrittenFile],
+                         spec: WriteSpec): String = {
+    val dir = manifestDir(table)
+    if (spec.stats.isDefined || spec.part.isDefined)
+      writeStr(new HPath(dir, s"m$id.stats.tsv"), statsBody(files))
+    spec.blooms.foreach { case (c, _) =>
+      writeStr(new HPath(dir, s"m$id.bloom.$c.tsv"), bloomBody(files, c))
+    }
+    files.map(_.schema).distinct.reduceOption(mergeTypes(table)(_, _).asInstanceOf[StructType])
+      .foreach(sc => writeStr(new HPath(dir, s"m$id.schema"), sc.json))
+    writeDeltaManifest(table, id, files.map(_.path))
+  }
+
+  /** The sidecar files delta `m<id>.json` owns: its stats, bloom and
+    * schema files, among the manifest directory's `names`. */
+  private def deltaSidecars(names: Seq[String], id: String): Seq[String] =
+    names.filter(n => n == s"m$id.stats.tsv" || n == s"m$id.schema" ||
+      (n.startsWith(s"m$id.bloom.") && n.endsWith(".tsv")))
+
+  /** The stats sidecar lines of `files`: each stat's bounds for a file
+    * with rows (`\N` for a stat with no non-null value), then its
+    * `__count` — what makes `COUNT(*)` a metadata-only answer. */
+  private def statsBody(files: Seq[WrittenFile]): String =
+    files.flatMap { f =>
+      (if (f.rows > 0) f.bounds.map { case (c, lo, hi) =>
+        s"${f.path}\t$c\t${escStat(lo.orNull)}\t${escStat(hi.orNull)}" } else Nil) :+
+        s"${f.path}\t__count\t${f.rows}\t${f.rows}"
+    }.mkString("", "\n", "\n")
+
+  /** The bloom sidecar lines of `files` for `col`: base64-packed bitsets. */
+  private def bloomBody(files: Seq[WrittenFile], col: String): String = {
+    val enc = java.util.Base64.getEncoder
+    files.flatMap(f => f.blooms.collect { case (c, bits, bs) if c == col =>
+      s"${f.path}\t$bits\t${enc.encodeToString(bs)}" }).mkString("", "\n", "\n")
   }
 
   /** Commit snapshot `snap` with the given manifest-list entries: write the
@@ -360,15 +439,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     (if (after > 0) pinned.option("startSnapshot", after) else pinned).load()
   }
 
-  /** Write `df` into `dataDir` and return the sorted parquet file list —
-    * the shared first half of every data-writing commit path.
-    */
-  private def writeSnapshotData(df: DataFrame, dataDir: HPath): Seq[String] = {
-    df.write.mode(SaveMode.Overwrite).parquet(pathStr(dataDir))
-    fsOf(dataDir).listStatus(dataDir).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).map(pathStr).sorted
-  }
-
   /** Concurrent-writer commit mutex. Every snapshot-producing operation
     * that BUILDS ON the previous manifest list (append, appendBatch,
     * deleteWhere, upsertByKey, the sidecar appends) reads prev entries and
@@ -403,25 +473,124 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     try body finally fsDelete(lock)
   }
 
-  override def commit(df: DataFrame, table: String): Long = {
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    withCommitLock(table) {
-      commitSnapshot(table, snap, Seq(writeDeltaManifest(table, snap, files)))
+  override def commit(df: DataFrame, table: String): Long = write(df, table, WriteSpec()).get
+
+  override def append(df: DataFrame, table: String): Long =
+    write(df, table, WriteSpec(WriteMode.Append)).get
+
+  /** The one data-writing commit: run the catalog's writer over `df`, then
+    * [[commitFiles]] what its tasks recorded. Data files land BEFORE the
+    * commit lock, under a directory keyed by the claimed snapshot id (or by
+    * the batch id, so a replayed batch overwrites its orphaned data). None
+    * when the batch was already committed.
+    */
+  private def write(df: DataFrame, table: String, spec: WriteSpec): Option[Long] = {
+    val (claimed, dir) = spec.mode match {
+      case WriteMode.Batch(id) if batchReplay(table, id) => return None
+      case WriteMode.Batch(id) => (0L, s"batch-$id")
+      case _ => val snap = claimSnapshotId(table); (snap, s"snap-$snap")
     }
-    snap
+    val files = writeFiles(df, new HPath(root, s"$table/data/$dir"), spec)
+    require(files.nonEmpty, s"write to '$table': empty input")
+    commitFiles(files, table, spec, claimed)
   }
 
-  override def append(df: DataFrame, table: String): Long = {
-    // data writes BEFORE the lock under a provisional directory name keyed
-    // by the claim; the metadata section (read prev → commit) serializes
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    withCommitLock(table) {
-      val prev = currentSnapshot(table).map(entriesOf(table, _)).getOrElse(Seq.empty)
-      commitSnapshot(table, snap, prev :+ writeDeltaManifest(table, snap, files))
+  /** Run [[CatalogFileWrite]] over `df` into `dir` — one writer task per
+    * partition of `df`, after clustering by the spec's partition transform —
+    * and return what each written file recorded. As with `df.write.parquet`,
+    * a task without rows writes no file, except partition 0 of an unrolled
+    * write, so an empty frame still commits one readable file.
+    */
+  private def writeFiles(df: DataFrame, dir: HPath, spec: WriteSpec): Seq[WrittenFile] = {
+    import org.apache.spark.sql.functions.{col, expr}
+    val spark = df.sparkSession
+    // hidden means hidden: the clustering survives the narrow projection
+    // that drops the key, the schema never carries the partition value
+    val data = spec.part.filter(_ => spec.nFiles > 0).fold(df) { p =>
+      val keyed = df.withColumn("__graft_part", expr(p.sparkExprSql))
+      (if (spec.exact)
+        keyed.repartition(spec.nFiles, col("__graft_part")).sortWithinPartitions("__graft_part")
+      else keyed.repartitionByRange(spec.nFiles, col("__graft_part"))).drop("__graft_part")
     }
-    snap
+    fsOf(dir).delete(dir, true)
+    val w = CatalogFileWrite(spark, data.schema, pathStr(dir), spec.statExprs, spec.blooms,
+      spec.hll, spec.dd, rollOn = spec.exact)
+    val rdd = data.queryExecution.toRdd
+    val parts = if (rdd.getNumPartitions > 0) rdd
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+    parts.mapPartitionsWithIndex((i, rows) => Iterator(w.run(i, rows))).collect()
+      .toSeq.flatMap(_.files).sortBy(_.path)
+  }
+
+  /** The one commit: turn written files into a snapshot under the commit
+    * lock. Before any pointer moves it writes the delta manifest with its
+    * stats, bloom and schema sidecars, the upsert's equality delete, the
+    * rolled-forward HLL/DD sketches and (for an overwrite) the declared
+    * partition spec; then the manifest list and CURRENT — or the branch
+    * head — and last the batch marker. `claimed` is a snapshot id the
+    * caller already claimed (0: claim one here). None when the batch was
+    * already committed (a replay).
+    */
+  private[graft] def commitFiles(files: Seq[WrittenFile], table: String, spec: WriteSpec,
+                                 claimed: Long = 0L): Option[Long] = withCommitLock(table) {
+    val replay = spec.mode match {
+      case WriteMode.Batch(id) => batchReplay(table, id)
+      case _ => false
+    }
+    if (replay) None
+    else {
+      val snap = if (claimed > 0) claimed else claimSnapshotId(table)
+      val dir = manifestDir(table)
+      val base = spec.mode match {
+        case WriteMode.Overwrite => None
+        case WriteMode.Branch(name) => Some(branchHead(table, name).getOrElse(
+          throw new IllegalArgumentException(s"no branch '$name' on $table")))
+        case _ => currentSnapshot(table)
+      }
+      val del = spec.upsertKey.map { case (c, keys) =>
+        writeStr(new HPath(dir, s"d$snap.$c.tsv"), keys.map(escStat).mkString("", "\n", "\n"))
+        s"!d$snap.$c.tsv"
+      }
+      val delta = writeDelta(table, snap.toString, files, spec)
+      // a cumulative sketch rolls forward only along an unbroken chain: no
+      // base snapshot, or one that carries the sidecar
+      spec.hll.foreach { c =>
+        val prev = base.map(readHllSidecar(table, _, c))
+        if (!prev.contains(None)) {
+          val regs = (prev.flatten.toSeq ++ files.flatMap(_.hll))
+            .reduceOption((a, b) => a.zip(b).map { case (x, y) => math.max(x, y) })
+            .getOrElse(new Array[Long](graft.operators.Sketch.hllM))
+          val bb = java.nio.ByteBuffer.allocate(regs.length * 8)
+          bb.asLongBuffer().put(regs)
+          writeBytes(new HPath(dir, s"v$snap.hll.$c.bin"), bb.array())
+        }
+      }
+      spec.dd.foreach { c =>
+        val prev = base.map(readDdSidecar(table, _, c))
+        if (!prev.contains(None)) {
+          val hist = (prev.flatten.toSeq.flatten ++ files.flatMap(_.dd))
+            .groupMapReduce(_._1)(_._2)(_ + _)
+          writeStr(new HPath(dir, s"v$snap.dd.$c.tsv"),
+            hist.toSeq.sorted.map { case (k, n) => s"$k\t$n" }.mkString("", "\n", "\n"))
+        }
+      }
+      if (spec.mode == WriteMode.Overwrite)
+        spec.part.foreach(p => putMeta(table, "partition.spec", p.render))
+      val entries = base.map(entriesOf(table, _)).getOrElse(Nil) ++ del :+ delta
+      spec.mode match {
+        case WriteMode.Branch(name) =>
+          writeManifestList(table, snap, entries)
+          putMeta(table, s"branch.$name", snap.toString)
+        case _ => commitSnapshot(table, snap, entries)
+      }
+      // the marker LAST: it asserts "committed", so it must never exist
+      // without the manifest (the reverse self-heals in batchCommitted)
+      spec.mode match {
+        case WriteMode.Batch(id) => writeStr(batchMarker(table, id), "")
+        case _ => ()
+      }
+      Some(snap)
+    }
   }
 
   /** Optimistic snapshot-id claim: atomically create a claim marker so two
@@ -529,6 +698,11 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     *     downstream index removal, embedding-store eviction) gets them here;
     *     one that only needs keys keeps the cheaper [[deletedInWindow]].
     *
+    * A delete keyed on a column dropped since has no values left to match;
+    * its pre-images are the fromSnap rows the window removed (by file and
+    * ordinal) that no visible key column's delete already emits, without
+    * the dropped column.
+    *
     * Replay contract: a mirror holding snapshot fromSnap that applies the
     * delete rows (by their key) then the insert rows converges to toSnap —
     * an upsert window emits its old captures as deletes and its fresh ones
@@ -546,7 +720,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     */
   def readChangelog(spark: SparkSession, table: String, fromSnap: Long,
                     toSnap: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit, col}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, lit, col}
     import org.apache.spark.sql.types.{IntegerType, LongType}
     import org.apache.spark.unsafe.types.UTF8String
     val to = if (toSnap > 0) toSnap else currentSnapshot(table).getOrElse(
@@ -558,25 +732,40 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       .collect().map(r => (r.getString(0), r.getString(1)))
     if (delKeys.isEmpty) return inserts
     val renames = renameHistory(table)
-    val preImages = delKeys.groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (column, pairs) =>
-        val keys = pairs.map(_._2).toSeq
-        val c = currentName(renames)(column)
-        val base = scan(spark, table, snapshot = fromSnap)
-        // the keys as the column's values, in its order: a numeric column
-        // holds only the keys that are its own CAST-to-string spelling
-        val sorted: Seq[Any] = base.schema(c).dataType match {
-          case LongType => keys.flatMap(k => k.toLongOption.filter(_.toString == k)).sorted
-          case IntegerType => keys.flatMap(k => k.toIntOption.filter(_.toString == k)).sorted
-          case _ => keys.sortBy(UTF8String.fromString)
-        }
-        val inRange = if (sorted.isEmpty) lit(false) else col(c).between(sorted.head, sorted.last)
-        val keyDf = spark.createDataFrame(keys.map(Tuple1(_))).toDF("__cdc_key")
-        base.where(inRange).join(broadcast(keyDf),
-            base(c).cast("string") === col("__cdc_key"), "left_semi")
-          .withColumn("op", lit("delete"))
+    val base = scan(spark, table, snapshot = fromSnap)
+    val types = schemaAt(spark, table, fromSnap, withDropped = true)
+    val (shown, hidden) = delKeys.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (column, pairs) => (currentName(renames)(column), pairs.map(_._2).toSeq) }
+      .partition { case (c, _) => base.columns.contains(c) }
+    val preImages = shown.map { case (c, keys) =>
+      // the keys as the column's values, in its order: a numeric column
+      // holds only the keys that are its own CAST-to-string spelling
+      val sorted: Seq[Any] = types(c).dataType match {
+        case LongType => keys.flatMap(k => k.toLongOption.filter(_.toString == k)).sorted
+        case IntegerType => keys.flatMap(k => k.toIntOption.filter(_.toString == k)).sorted
+        case _ => keys.sortBy(UTF8String.fromString)
       }
-    preImages.foldLeft(inserts)(_.unionByName(_, allowMissingColumns = true))
+      val inRange = if (sorted.isEmpty) lit(false) else col(c).between(sorted.head, sorted.last)
+      val keyDf = spark.createDataFrame(keys.map(Tuple1(_))).toDF("__cdc_key")
+      base.where(inRange).join(broadcast(keyDf),
+          base(c).cast("string") === col("__cdc_key"), "left_semi")
+        .withColumn("op", lit("delete"))
+    }
+    // a key column dropped since has no values left to match: its
+    // pre-images are the fromSnap rows gone at `to` (by file and ordinal —
+    // the window holds only appends and equality deletes), less the rows a
+    // visible key column already emits
+    val dropped = if (hidden.isEmpty) Nil else {
+      val at = Seq(col("_file"), col("_pos"))
+      val gone = base.select(base.columns.map(col) ++ at: _*)
+        .join(scan(spark, table, snapshot = to).select(at: _*), Seq("_file", "_pos"), "left_anti")
+        .drop("_file", "_pos")
+      val shownHit = shown.map { case (c, keys) => col(c).cast("string").isin(keys: _*) }
+        .reduceOption(_ || _)
+      Seq(shownHit.fold(gone)(h => gone.where(!coalesce(h, lit(false))))
+        .withColumn("op", lit("delete")))
+    }
+    (preImages ++ dropped).foldLeft(inserts)(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** MERGE-shaped upsert by key (the re-crawl write path): incoming rows
@@ -605,17 +794,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       require(v != null, s"null $keyCol in upsert batch")
       v.toString
     }
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    withCommitLock(table) {
-      val prev = entriesOf(table, currentSnapshot(table).get)
-      val del = s"d$snap.$keyCol.tsv"
-      writeStr(new HPath(manifestDir(table), del),
-        keys.map(escStat).mkString("", "\n", "\n"))
-      commitSnapshot(table, snap,
-        prev :+ ("!" + del) :+ writeDeltaManifest(table, snap, files))
-    }
-    snap
+    write(df, table, WriteSpec(WriteMode.Append, upsertKey = Some(keyCol -> keys.toSeq))).get
   }
 
   /** All committed snapshot ids, ascending. */
@@ -654,26 +833,18 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * skipped (loudly, on stderr), never silently merged. Returns true iff
     * this call committed the batch.
     */
-  def appendBatch(df: DataFrame, table: String, batchId: Long): Boolean = {
-    if (batchCommitted(table, batchId)) {
-      System.err.println(s"[catalog] appendBatch skip: batch $batchId already committed " +
-        s"to '$table' (replay). Batch ids must come from one checkpoint lineage per table; " +
-        "a new checkpoint reusing ids against an existing table is skipped here, not merged.")
-      return false
-    }
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/batch-$batchId"))
-    withCommitLock(table) {
-      val prev = currentSnapshot(table).map(entriesOf(table, _)).getOrElse(Seq.empty)
-      val snap = claimSnapshotId(table)
-      commitSnapshot(table, snap, prev :+ writeDeltaManifest(table, snap, files))
-    }
-    // marker LAST: it asserts "committed", so it must never exist without
-    // the manifest (the reverse — manifest without marker — self-heals in
-    // batchCommitted). Two racing duplicate deliveries are also harmless at
-    // the data level: the batch-addressed dir gives both the same paths and
-    // manifestFiles dedups, so rows can never be read twice.
-    writeStr(batchMarker(table, batchId), "")
-    true
+  def appendBatch(df: DataFrame, table: String, batchId: Long): Boolean =
+    write(df, table, WriteSpec(WriteMode.Batch(batchId))).isDefined
+
+  /** True — and said on stderr — when `batchId` is already committed to
+    * `table`: a replay, which is skipped. */
+  private def batchReplay(table: String, batchId: Long): Boolean = {
+    val done = batchCommitted(table, batchId)
+    if (done)
+      System.err.println(s"[catalog] batch $batchId already committed to '$table' (replay), " +
+        "skipped. Batch ids must come from one checkpoint lineage per table; a new " +
+        "checkpoint reusing ids against an existing table is skipped here, not merged.")
+    done
   }
 
   private def batchMarker(table: String, batchId: Long): HPath =
@@ -711,66 +882,21 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
 
   /** Metadata-only commit: a new snapshot whose manifest references data
     * files already on storage (e.g. the chunk outputs of a resumable run) —
-    * the Iceberg-style O(files) commit, no data copy.
+    * the Iceberg-style O(files) commit, no data copy. Their footers are
+    * read once, here, for the schema the snapshot records.
     */
-  def commitFiles(files: Seq[String], table: String): Long = {
-    val snap = claimSnapshotId(table)
-    commitSnapshot(table, snap, Seq(writeDeltaManifest(table, snap, files)))
-    snap
-  }
+  def commitFiles(files: Seq[String], table: String): Long =
+    commitFiles(files.map(written), table, WriteSpec()).get
 
-  /** Metadata-only fast-APPEND of files already on storage — what the DSv2
-    * batch writer's job-level commit calls after its tasks landed their
-    * parquet outputs: one delta manifest, previous entries carried forward,
-    * same commit lock as every other append path.
-    */
-  def appendFiles(files: Seq[String], table: String): Long = {
-    val snap = claimSnapshotId(table)
-    withCommitLock(table) {
-      val prev = currentSnapshot(table).map(entriesOf(table, _)).getOrElse(Seq.empty)
-      commitSnapshot(table, snap, prev :+ writeDeltaManifest(table, snap, files))
-    }
-    snap
-  }
+  /** [[commitFiles]] as an exactly-once batch append: false (nothing
+    * committed) when `batchId` already is. */
+  def appendFilesAsBatch(files: Seq[String], table: String, batchId: Long): Boolean =
+    !batchReplay(table, batchId) &&
+      commitFiles(files.map(written), table, WriteSpec(WriteMode.Batch(batchId))).isDefined
 
-  /** [[appendFiles]] that also records each file's row count in the delta's
-    * stats sidecar (`__count` lines) — what the DSv2 batch writer calls with
-    * the per-task row counts it already has, so `COUNT(*)` over a purely
-    * SQL-written table stays a METADATA-ONLY answer ([[countStar]]).
-    */
-  def appendFilesWithCounts(files: Seq[(String, Long)], table: String,
-                            statLines: Seq[(String, String, String, String)] = Nil): Long = {
-    val snap = claimSnapshotId(table)
-    withCommitLock(table) {
-      val prev = currentSnapshot(table).map(entriesOf(table, _)).getOrElse(Seq.empty)
-      writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-        countAndStatTsv(files, statLines))
-      commitSnapshot(table, snap, prev :+ writeDeltaManifest(table, snap, files.map(_._1)))
-    }
-    snap
-  }
-
-  /** [[commitFiles]] (replace snapshot) with `__count` sidecar lines — the
-    * DSv2 `INSERT OVERWRITE` commit. */
-  def commitFilesWithCounts(files: Seq[(String, Long)], table: String,
-                            statLines: Seq[(String, String, String, String)] = Nil): Long = {
-    val snap = claimSnapshotId(table)
-    writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-      countAndStatTsv(files, statLines))
-    commitSnapshot(table, snap, Seq(writeDeltaManifest(table, snap, files.map(_._1))))
-    snap
-  }
-
-  /** `__count` lines plus caller-supplied extra stat lines (file, stat
-    * column, lo, hi) — e.g. the partitioned DSv2 writer's per-file transform
-    * bounds — escaped like every sidecar value.
-    */
-  private def countAndStatTsv(files: Seq[(String, Long)],
-                              statLines: Seq[(String, String, String, String)]): String =
-    (files.map { case (f, n) => s"$f\t__count\t$n\t$n" } ++
-      statLines.map { case (f, c, lo, hi) =>
-        s"$f\t$c\t${escStat(lo)}\t${escStat(hi)}" })
-      .mkString("", "\n", "\n")
+  /** A data file written outside the catalog, as its footer records it. */
+  private def written(f: String): WrittenFile =
+    WrittenFile(f, footerSchema(f).getOrElse(throw new java.io.FileNotFoundException(f)))
 
   /** Metadata-only `COUNT(*)`: the sum of per-file `__count` sidecar lines,
     * answerable only when EVERY file of the current snapshot is counted and
@@ -792,27 +918,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * absent. */
   def fileRowCounts(table: String, snap: Long): Map[String, Long] =
     statsLinesAt(table, snap).collect { case Array(f, "__count", n, _) => f -> n.toLong }.toMap
-
-  /** [[appendFiles]] under the exactly-once batch-marker contract — the
-    * DSv2 STREAMING writer's epoch commit: a replayed epoch is skipped (and
-    * reports false so the caller can GC its duplicate task outputs), the
-    * marker lands only after the manifest, mid-commit crashes self-heal
-    * through the same fallback as [[appendBatch]].
-    */
-  def appendFilesAsBatch(files: Seq[String], table: String, batchId: Long): Boolean = {
-    if (batchCommitted(table, batchId)) {
-      System.err.println(s"[catalog] appendFilesAsBatch skip: batch $batchId already " +
-        s"committed to '$table' (replay)")
-      return false
-    }
-    val snap = claimSnapshotId(table)
-    withCommitLock(table) {
-      val prev = currentSnapshot(table).map(entriesOf(table, _)).getOrElse(Seq.empty)
-      commitSnapshot(table, snap, prev :+ writeDeltaManifest(table, snap, files))
-    }
-    writeStr(batchMarker(table, batchId), "")
-    true
-  }
 
   /** Iceberg-style equality delete (row-level takedown — DMCA/GDPR "remove
     * these urls everywhere"): commits a tombstone file of `column` values as
@@ -958,7 +1063,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * writers with O(1) task memory); they are RENAMED into the manifest dir
     * as this snapshot's `p<snap>-<k>.tsv` refs — the pairs never pass
     * through the driver, unlike [[deleteMatching]]'s collect. `dataFiles`
-    * (replacement/inserted rows, with row counts for the `__count` sidecar)
+    * (replacement/inserted rows, with their `__count`s and schema)
     * ride the same snapshot as one delta manifest, so no reader can observe
     * rows deleted-but-not-yet-replaced ([[upsertByKey]]'s atomicity, the
     * positional edition). The sequence rule holds by construction: the
@@ -974,7 +1079,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * nothing and which every reader would refuse as corruption.
     */
   def commitRowDelta(table: String, deleteFiles: Seq[String],
-                     touchedFiles: Seq[String], dataFiles: Seq[(String, Long)]): Long = {
+                     touchedFiles: Seq[String], dataFiles: Seq[WrittenFile]): Long = {
     require(deleteFiles.nonEmpty || dataFiles.nonEmpty, "empty row-level delta commit")
     withCommitLock(table) {
       val curO = currentSnapshot(table)
@@ -997,11 +1102,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       }
       val dataEntry =
         if (dataFiles.isEmpty) Nil
-        else {
-          writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-            dataFiles.map { case (f, n) => s"$f\t__count\t$n\t$n" }.mkString("", "\n", "\n"))
-          Seq(writeDeltaManifest(table, snap, dataFiles.map(_._1)))
-        }
+        else Seq(writeDelta(table, snap.toString, dataFiles, WriteSpec(stats = Some(Nil))))
       commitSnapshot(table, snap, prev ++ delRefs ++ dataEntry)
       snap
     }
@@ -1168,24 +1269,22 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   private[graft] def currentName(renames: Seq[(String, String)])(n: String): String =
     renames.foldLeft(n) { case (c, (o, nw)) => if (c == o) nw else c }
 
-  /** The table's schema at `snap`, from the data files' footers alone — no
-    * scan is planned; the one schema rule every read of the snapshot uses.
-    * Files group by how many equality deletes precede them (the order the
-    * table's columns have always had). Within a group the footers merge by
-    * name as `mergeSchema` does; the group's columns then map forward
-    * through the rename history (a group holding both generations of a
-    * renamed column keeps the new one's position); the groups merge in add
-    * order, and dropped columns leave last — unless `withDropped`, which is
-    * how the scan types an equality delete keyed on a dropped column.
-    * Every level reads nullable, as from any file source; columns of
-    * incompatible types fail the schema, and with it every read.
+  /** The table's schema at `snap`, from the schemas its deltas recorded at
+    * commit — no scan is planned and no data file is opened; the one schema
+    * rule every read of the snapshot uses. Deltas group by how many
+    * equality deletes precede them (the order the table's columns have
+    * always had). Within a group the schemas merge by name as `mergeSchema`
+    * does; the group's columns then map forward through the rename history
+    * (a group holding both generations of a renamed column keeps the new
+    * one's position); the groups merge in add order, and dropped columns
+    * leave last — unless `withDropped`, which is how the scan types an
+    * equality delete keyed on a dropped column. Every level reads
+    * nullable, as from any file source; columns of incompatible types fail
+    * the schema, and with it every read. A delta committed before schemas
+    * were recorded folds its files' footers instead.
     */
   def schemaAt(spark: SparkSession, table: String, snap: Long,
                withDropped: Boolean = false): StructType = {
-    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
     require(fsExists(new HPath(manifestDir(table), s"v$snap.json")),
       s"no snapshot $snap for $table")
     def nullable(dt: DataType): DataType = dt match {
@@ -1195,17 +1294,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
       case other => other
     }
-    // `mergeSchema`'s merge: by name, left order first, nested structs merged
-    def merge(l: DataType, r: DataType): DataType = (l, r) match {
-      case (a: StructType, b: StructType) =>
-        StructType(a.fields.map(f => b.find(_.name == f.name)
-          .fold(f)(g => f.copy(dataType = merge(f.dataType, g.dataType)))) ++
-          b.fields.filterNot(g => a.fieldNames.contains(g.name)))
-      case (a: ArrayType, b: ArrayType) => ArrayType(merge(a.elementType, b.elementType))
-      case (a: MapType, b: MapType) => MapType(merge(a.keyType, b.keyType), merge(a.valueType, b.valueType))
-      case _ if l == r => l
-      case _ => throw new IllegalStateException(s"$table: incompatible column types $l and $r")
-    }
+    val merge = mergeTypes(table) _
     val renames = renameHistory(table)
     def renamed(s: StructType): StructType = renames.foldLeft(s) { case (st, (o, n)) =>
       st.find(_.name == o) match {
@@ -1218,28 +1307,59 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
         case Some(_) => StructType(st.fields.map(f => if (f.name == o) f.copy(name = n) else f))
       }
     }
-    val hconf = spark.sessionState.newHadoopConf()
-    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
     val deleteSnaps = deleteRefsOf(table, snap).filter(_.startsWith("d"))
       .map(_.stripPrefix("d").split('.')(0).toLong)
-    // a data file that no longer exists is left out: a read that needs it
-    // fails when it opens it, and one its filters prune never does
-    def footer(f: String): Option[DataType] = {
-      val p = new HPath(f)
-      try Some(ParquetFileFormat.readSchemaFromFooter(
-        new Footer(p, ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, hconf), NO_FILTER)),
-        converter))
-      catch { case _: java.io.FileNotFoundException => None }
+    val perEntry: Seq[(Long, Option[DataType])] = entriesOf(table, snap).collect {
+      case e if e.startsWith("@") =>
+        val id = e.stripPrefix("@m").stripSuffix(".json")
+        addOrderOfId(id) -> recordedSchema(table, id).orElse(
+          parseJsonArray(readStr(new HPath(manifestDir(table), e.stripPrefix("@"))))
+            .flatMap(footerSchema).reduceOption(merge))
+      case e if !e.startsWith("!") => 0L -> footerSchema(e) // legacy raw-path entry
     }
-    val merged = filesWithAddOrder(table, snap)
-      .groupBy { case (_, k) => deleteSnaps.count(_ <= k) }.toSeq.sortBy(_._1)
+    val merged = perEntry
+      .groupBy { case (k, _) => deleteSnaps.count(_ <= k) }.toSeq.sortBy(_._1)
       .flatMap { case (_, group) =>
-        group.flatMap(g => footer(g._1)).reduceOption(merge)
-          .map(s => renamed(s.asInstanceOf[StructType]))
+        group.flatMap(_._2).reduceOption(merge).map(s => renamed(s.asInstanceOf[StructType]))
       }.reduceOption(merge(_, _).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(s"snapshot $snap of $table has no readable data file"))
     val drops = if (withDropped) Set.empty[String] else droppedColumns(table).map(currentName(renames)).toSet
     nullable(StructType(merged.fields.filterNot(f => drops(f.name)))).asInstanceOf[StructType]
+  }
+
+  /** `mergeSchema`'s merge: by name, left order first, nested structs
+    * merged; columns of incompatible types fail. */
+  private def mergeTypes(table: String)(l: DataType, r: DataType): DataType = (l, r) match {
+    case (a: StructType, b: StructType) =>
+      StructType(a.fields.map(f => b.find(_.name == f.name)
+        .fold(f)(g => f.copy(dataType = mergeTypes(table)(f.dataType, g.dataType)))) ++
+        b.fields.filterNot(g => a.fieldNames.contains(g.name)))
+    case (a: ArrayType, b: ArrayType) => ArrayType(mergeTypes(table)(a.elementType, b.elementType))
+    case (a: MapType, b: MapType) =>
+      MapType(mergeTypes(table)(a.keyType, b.keyType), mergeTypes(table)(a.valueType, b.valueType))
+    case _ if l == r => l
+    case _ => throw new IllegalStateException(s"$table: incompatible column types $l and $r")
+  }
+
+  /** The schema delta manifest `m<id>.json` recorded at commit, if any. */
+  private def recordedSchema(table: String, id: String): Option[DataType] = {
+    val p = new HPath(manifestDir(table), s"m$id.schema")
+    if (fsExists(p)) Some(DataType.fromJson(readStr(p))) else None
+  }
+
+  /** A data file's schema from its parquet footer. A file that no longer
+    * exists has none: a read that needs it fails when it opens it, and one
+    * its filters prune never does. */
+  private def footerSchema(f: String): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new HPath(f)
+    try Some(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(p, ParquetFileReader.readFooter(HadoopInputFile.fromPath(p, conf), NO_FILTER)),
+      new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)))
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Iceberg-style rewrite_data_files (bin-packing compaction): coalesce
@@ -1323,7 +1443,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       val merged = scan(spark, table, snapshot = snap)
         .where(org.apache.spark.sql.functions.col("_file").isin(rewriteSet.toSeq: _*))
         .coalesce(rewriteBins.size)
-      val newFiles = writeSnapshotData(merged, new HPath(root, s"$table/data/snap-$newSnap"))
+      val newFiles = writeFiles(merged, new HPath(root, s"$table/data/snap-$newSnap"), WriteSpec())
       withCommitLock(table) {
         if (!currentSnapshot(table).contains(snap))
           throw new IllegalStateException(
@@ -1344,22 +1464,21 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
               writeStr(new HPath(dir, s"m$newId.json"),
                 kept.map(f => "\"" + f + "\"").mkString("[\n", ",\n", "\n]"))
               // sidecars follow the manifest id; only kept files' lines ride
-              listNames(dir)
-                .filter(n => n == s"m$id.stats.tsv" ||
-                  (n.startsWith(s"m$id.bloom.") && n.endsWith(".tsv")))
-                .foreach { n =>
+              deltaSidecars(listNames(dir), id).foreach { n =>
+                val to = new HPath(dir, n.replaceFirst(s"^m$id\\.", s"m$newId."))
+                if (n.endsWith(".schema")) writeStr(to, readStr(new HPath(dir, n)))
+                else {
                   val filtered = readStr(new HPath(dir, n)).split('\n')
                     .filter(l => l.nonEmpty && kept.contains(l.split('\t')(0)))
-                  if (filtered.nonEmpty)
-                    writeStr(new HPath(dir, n.replaceFirst(s"^m$id\\.", s"m$newId.")),
-                      filtered.mkString("", "\n", "\n"))
+                  if (filtered.nonEmpty) writeStr(to, filtered.mkString("", "\n", "\n"))
                 }
+              }
               Some(s"@m$newId.json")
             }
           }
         }
         commitSnapshot(table, newSnap,
-          newEntries :+ writeDeltaManifest(table, newSnap, newFiles))
+          newEntries :+ writeDelta(table, newSnap.toString, newFiles, WriteSpec()))
       }
       newSnap
     } catch {
@@ -1404,19 +1523,11 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       "and no write.sort-order property")
     val clustered = cur.repartitionByRange(n, clusterExprs.map(expr): _*)
       .sortWithinPartitions(clusterExprs.map(expr): _*)
-    val newSnap = commit(clustered, table)
-    val files = manifestFiles(table, newSnap)
     val statNamed: Seq[(String, String)] =
       specO.map(s => (s.statName, s.sparkExprSql)).toSeq ++
         effCols.map(c => (c, s"`$c`"))
-    if (statNamed.nonEmpty)
-      writeStr(new HPath(manifestDir(table), s"m$newSnap.stats.tsv"),
-        statsTsv(spark, files, statNamed))
-    bloomCols.foreach { c =>
-      writeStr(new HPath(manifestDir(table), s"m$newSnap.bloom.$c.tsv"),
-        bloomTsv(spark, files, c, bloomBits(c)))
-    }
-    newSnap
+    write(clustered, table, WriteSpec(stats = Some(statNamed),
+      blooms = bloomCols.map(c => c -> bloomBits(c)))).get
   }
 
   /** Z-ORDER clustering rewrite (the Delta `OPTIMIZE ZORDER BY` / Iceberg
@@ -1455,11 +1566,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       s"compactZOrder on '$table': need 2..4 columns, got ${cols.size}")
     require(bitsPerCol >= 1 && bitsPerCol * cols.size <= 60,
       s"compactZOrder on '$table': ${bitsPerCol * cols.size} interleaved bits exceed a long")
-    def zdbg[A](l: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("GRAFT_ZDBG")) println(f"ZDBG $l ${(System.nanoTime()-t0)/1e9}%.2f s")
-      r
-    }
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
     val bloomCols = bloomColumnsAt(table, snap)
@@ -1474,7 +1580,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     // boundaries are MBs at most and ride into the bucket expression as
     // literals (driver state, not a shuffle)
     val bounds: Seq[Array[Double]] =
-      zdbg("quantiles")(cur.stat.approxQuantile(cols.toArray, probs, 0.001)).toSeq
+      cur.stat.approxQuantile(cols.toArray, probs, 0.001).toSeq
     cols.zip(bounds).foreach { case (c, b) =>
       require(b.nonEmpty, s"compactZOrder: no quantiles for '$c' (all null?)")
     }
@@ -1534,16 +1640,15 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val shift =
       if (shift0 == 0) 0
       else if (totalBits <= 20) {
-        val zv = zdbg("distinct-zv")(
-          withZv.select(col("_zv")).distinct().collect().map(_.getLong(0)))
+        val zv = withZv.select(col("_zv")).distinct().collect().map(_.getLong(0))
         candShifts.collectFirst {
           case s if zv.iterator.map(_ >> s).toSet.size >= n => s
         }.getOrElse(0)
       } else {
-        val row = zdbg("acd")(withZv.agg(
+        val row = withZv.agg(
           approx_count_distinct(expr(s"shiftright(_zv, ${candShifts.head})")).as("d0"),
           candShifts.tail.map(s =>
-            approx_count_distinct(expr(s"shiftright(_zv, $s)")).as(s"d$s")): _*).head())
+            approx_count_distinct(expr(s"shiftright(_zv, $s)")).as(s"d$s")): _*).head()
         candShifts.zipWithIndex.collectFirst {
           case (s, i) if row.getLong(i) >= n => s
         }.getOrElse(0)
@@ -1553,14 +1658,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     val clustered = withZ.repartitionByRange(n, col("_zf"))
       .sortWithinPartitions("_zv")
       .drop(helper: _*)
-    val newSnap = zdbg("commit")(commit(clustered, table))
-    val files = manifestFiles(table, newSnap)
-    zdbg("stats")(writeStr(new HPath(manifestDir(table), s"m$newSnap.stats.tsv"),
-      statsTsv(spark, files, cols.map(c => (c, s"`$c`")))))
-    bloomCols.foreach { c =>
-      writeStr(new HPath(manifestDir(table), s"m$newSnap.bloom.$c.tsv"),
-        bloomTsv(spark, files, c, bloomBits(c)))
-    }
+    val newSnap = write(clustered, table, WriteSpec(stats = Some(cols.map(c => (c, s"`$c`"))),
+      blooms = bloomCols.map(c => c -> bloomBits(c)))).get
     putMeta(table, "zorder.cols", cols.mkString(","))
     newSnap
   }
@@ -1743,16 +1842,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * production readers cannot observe staged data.
     */
   def appendToBranch(df: DataFrame, table: String, name: String): Long = {
-    val head = branchHead(table, name).getOrElse(
-      throw new IllegalArgumentException(s"no branch '$name' on $table"))
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    withCommitLock(table) {
-      val prev = entriesOf(table, branchHead(table, name).getOrElse(head))
-      writeManifestList(table, snap, prev :+ writeDeltaManifest(table, snap, files))
-      putMeta(table, s"branch.$name", snap.toString)
-    }
-    snap
+    require(branchHead(table, name).isDefined, s"no branch '$name' on $table")
+    write(df, table, WriteSpec(WriteMode.Branch(name))).get
   }
 
   /** PUBLISH: fast-forward CURRENT to the branch head — allowed only when
@@ -1827,9 +1918,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       // the delta + sidecars under the NEW id (new add order in the
       // sequence rule); content is copied verbatim — sidecar lines are
       // keyed by file path, not by snapshot
-      val entry = writeDeltaManifest(table, newSnap, files)
-      listNames(dir).filter(n => n == s"m$snap.stats.tsv" ||
-          (n.startsWith(s"m$snap.bloom.") && n.endsWith(".tsv")))
+      val entry = writeDeltaManifest(table, newSnap.toString, files)
+      deltaSidecars(listNames(dir), snap.toString)
         .foreach { n =>
           writeStr(new HPath(dir, s"m$newSnap" + n.stripPrefix(s"m$snap")),
             readStr(new HPath(dir, n)))
@@ -1904,6 +1994,12 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
                 parts.map(_.stripSuffix("\n")).mkString("", "\n", "\n"))
           }
           mergeSidecar(".stats.tsv")
+          // the consolidated delta records its members' merged schema —
+          // when every member recorded one
+          val schemas = ids.map(recordedSchema(table, _))
+          if (schemas.forall(_.isDefined))
+            writeStr(new HPath(dir, s"m$newId.schema"),
+              schemas.flatten.reduce(mergeTypes(table)(_, _)).json)
           ids.flatMap { i =>
             names.filter(n => n.startsWith(s"m$i.bloom.") && n.endsWith(".tsv"))
               .map(_.stripPrefix(s"m$i.bloom.").stripSuffix(".tsv"))
@@ -1945,13 +2041,10 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       .filterNot(liveRefs)
       .foreach { e =>
         fsDelete(new HPath(manifestDir(table), e.drop(1)))
-        // a dead delta manifest takes its stats/bloom sidecars with it
-        if (e.startsWith("@")) {
-          val id = e.stripPrefix("@m").stripSuffix(".json")
-          allNames.filter(n => n == s"m$id.stats.tsv" ||
-              (n.startsWith(s"m$id.bloom.") && n.endsWith(".tsv")))
+        // a dead delta manifest takes its sidecars with it
+        if (e.startsWith("@"))
+          deltaSidecars(allNames, e.stripPrefix("@m").stripSuffix(".json"))
             .foreach(n => fsDelete(new HPath(manifestDir(table), n)))
-        }
       }
     expired.foreach { s =>
       fsDelete(new HPath(manifestDir(table), s"v$s.json"))
@@ -1963,22 +2056,17 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     expired
   }
 
-  /** Commit + per-FILE column stats (Iceberg manifest zone maps): after the
-    * data lands, one aggregation pass keyed by `input_file_name()` records
-    * (min, max) per stats column per file into a `v<N>.stats.tsv` sidecar.
-    * O(files) rows reach the driver — never data. At 100 TB these zone maps
+  /** Commit + per-FILE column stats (Iceberg manifest zone maps): the
+    * writer folds each file's (min, max) per stats column as it writes the
+    * rows, and the commit records them in the delta's `m<N>.stats.tsv`
+    * sidecar beside each file's row count — the bounds of exactly the rows
+    * written, with no second pass over the data. At 100 TB these zone maps
     * are what lets a warc_ts- or doc_id-ranged query open 0.1% of the
     * files instead of all of them (the writer-side stats Iceberg collects
-    * in its manifests; the emulation pays one extra scan instead of
-    * hooking the parquet writer).
+    * in its manifests).
     */
-  def commitWithStats(df: DataFrame, table: String, statsCols: Seq[String]): Long = {
-    val snap = commit(df, table)
-    val files = manifestFiles(table, snap)
-    writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-      statsTsv(df.sparkSession, files, statsCols.map(c => (c, s"`$c`"))))
-    snap
-  }
+  def commitWithStats(df: DataFrame, table: String, statsCols: Seq[String]): Long =
+    write(df, table, WriteSpec(stats = Some(statsCols.map(c => (c, s"`$c`"))))).get
 
   /** All per-file stats lines visible at `snap`: the snapshot's legacy
     * whole-table `v<N>.stats.tsv` (pre-two-level tables keep reading) plus
@@ -2048,48 +2136,6 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     (legacy ++ deltas).distinct
   }
 
-  /** Per-file (min, max) stats TSV body for `files` — one aggregation pass
-    * keyed by `input_file_name()`; each named stat is (sidecar name, SQL
-    * expr), so a stats "column" can be a partition TRANSFORM of a real
-    * column, not just the column itself. O(files) rows reach the driver —
-    * never data.
-    */
-  private def statsTsv(spark: SparkSession, files: Seq[String],
-                       named: Seq[(String, String)]): String = {
-    import org.apache.spark.sql.functions.{input_file_name, min => fmin, max => fmax, count => fcount, expr, lit}
-    val aggs = named.zipWithIndex.flatMap { case ((_, e), i) =>
-      Seq(fmin(expr(e)).cast("string").as(s"min_$i"),
-          fmax(expr(e)).cast("string").as(s"max_$i")) } :+ fcount(lit(1)).as("n_rows")
-    val rows = spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val sb = new StringBuilder
-    val seen = scala.collection.mutable.Set.empty[String]
-    rows.foreach { r =>
-      // input_file_name returns a URI (file:/... or file:///...); normalize
-      // to the plain absolute path the manifest stores
-      val f = "/" + r.getString(0).stripPrefix("file:").dropWhile(_ == '/')
-      seen += f
-      named.zipWithIndex.foreach { case ((name, _), i) =>
-        sb.append(f).append('\t').append(name).append('\t')
-          .append(escStat(r.getString(1 + 2 * i))).append('\t')
-          .append(escStat(r.getString(2 + 2 * i))).append('\n')
-      }
-      // per-file row count under the reserved __count pseudo-column — what
-      // makes count(*) a metadata-only query (statsAgg below)
-      val n = r.getLong(1 + 2 * named.length)
-      sb.append(f).append('\t').append("__count").append('\t')
-        .append(n).append('\t').append(n).append('\n')
-    }
-    // an empty writer partition still lands a 0-row parquet file the
-    // input_file_name agg never sees; record it so completeness checks pass
-    files.filterNot(seen).foreach { f =>
-      sb.append(f).append('\t').append("__count").append('\t').append(0L).append('\t').append(0L).append('\n')
-    }
-    sb.toString
-  }
-
   // ------------------------------------------------------------------
   // Hidden partitioning (Iceberg partition transforms — see
   // [[PartTransform]]). The table declares one transform; writers cluster
@@ -2148,70 +2194,33 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * shuffle parallelism.
     */
   def commitPartitioned(df: DataFrame, table: String, spec: PartTransform,
-                        statsCols: Seq[String] = Nil, nFiles: Int = 0): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val n = if (nFiles > 0) nFiles else spec match {
-      case BucketTransform(b, _) => b
-      case _ => df.sparkSession.sessionState.conf.numShufflePartitions
-    }
-    // cluster by the transform, then DROP it before the write — hidden
-    // means hidden: repartitionByRange's clustering survives the narrow
-    // projection, the schema never carries the partition value
-    val clustered = df.withColumn("__graft_part", expr(spec.sparkExprSql))
-      .repartitionByRange(n, col("__graft_part"))
-      .drop("__graft_part")
-    val snap = commit(clustered, table)
-    val files = manifestFiles(table, snap)
-    writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-      statsTsv(df.sparkSession, files,
-        (spec.statName, spec.sparkExprSql) +: statsCols.map(c => (c, s"`$c`"))))
-    putMeta(table, "partition.spec", spec.render)
-    snap
-  }
+                        statsCols: Seq[String] = Nil, nFiles: Int = 0): Long =
+    write(df, table, partitioned(df, spec, statsCols, nFiles)).get
+
+  /** The spec of a partitioned write: `nFiles` (default: the bucket count
+    * for bucket transforms, else the session's shuffle parallelism) tasks
+    * clustered by the transform, its bounds leading the stats. */
+  private def partitioned(df: DataFrame, spec: PartTransform, statsCols: Seq[String],
+                          nFiles: Int, mode: WriteMode = WriteMode.Overwrite): WriteSpec =
+    WriteSpec(mode, stats = Some(statsCols.map(c => (c, s"`$c`"))), part = Some(spec),
+      nFiles = if (nFiles > 0) nFiles else spec match {
+        case BucketTransform(b, _) => b
+        case _ => df.sparkSession.sessionState.conf.numShufflePartitions
+      })
 
   /** EXACT-clustered partitioned commit: ONE transform value per data file —
     * the layout storage-partitioned joins need ([[partitionValuesAt]] /
     * the DSv2 scan's `SupportsReportPartitioning`). [[commitPartitioned]]'s
     * range clustering BOUNDS each file's values but does not pin them; this
-    * path stages the write with dynamic `partitionBy` (a writer task emits
-    * one file per transform value it holds), then flattens the value
-    * directories away so the layout stays hidden — the value lives ONLY in
-    * the stats sidecar, recomputed from the file contents like every other
-    * stat. Same pruning metadata, same hidden-partitioning contract.
+    * path hash-clusters the rows into `nTasks` tasks and sorts each by the
+    * transform, and the writer starts a new file at every value change —
+    * so a task emits one file per transform value it holds. The value
+    * lives ONLY in the stats sidecar (the writer's bounds, lo == hi); the
+    * layout stays hidden.
     */
   def commitPartitionedExact(df: DataFrame, table: String, spec: PartTransform,
-                             statsCols: Seq[String] = Nil, nTasks: Int = 0): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val spark = df.sparkSession
-    val n = if (nTasks > 0) nTasks else spec match {
-      case BucketTransform(b, _) => b
-      case _ => spark.sessionState.conf.numShufflePartitions
-    }
-    val staging = new HPath(root,
-      s"$table/data/exact-${java.util.UUID.randomUUID().toString.take(8)}")
-    df.withColumn("__graft_part", expr(spec.sparkExprSql))
-      .repartition(n, col("__graft_part"))
-      .write.partitionBy("__graft_part").parquet(staging.toString)
-    val fs = fsOf(staging)
-    // flatten <staging>/__graft_part=v/part-x.parquet -> <staging>/i-part-x
-    // (pure renames, O(files) driver metadata) so no reader can ever
-    // resurrect the value as a discovered partition column
-    val files = fs.globStatus(new HPath(staging, "__graft_part=*/part-*"))
-      .toSeq.sortBy(_.getPath.toString).zipWithIndex.map { case (st, i) =>
-        val dst = new HPath(staging, f"$i%05d-${st.getPath.getName}")
-        require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
-        pathStr(dst)
-      }.sorted
-    fs.globStatus(new HPath(staging, "__graft_part=*"))
-      .foreach(d => fs.delete(d.getPath, true))
-    require(files.nonEmpty, "commitPartitionedExact: empty input")
-    val snap = commitFiles(files, table)
-    writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-      statsTsv(spark, files,
-        (spec.statName, spec.sparkExprSql) +: statsCols.map(c => (c, s"`$c`"))))
-    putMeta(table, "partition.spec", spec.render)
-    snap
-  }
+                             statsCols: Seq[String] = Nil, nTasks: Int = 0): Long =
+    write(df, table, partitioned(df, spec, statsCols, nTasks).copy(exact = true)).get
 
   /** Per-file SINGLE transform values at `snap` — Some only when EVERY data
     * file's transform bounds satisfy lo == hi (the exact-clustered layout).
@@ -2239,24 +2248,11 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     */
   def appendPartitioned(df: DataFrame, table: String,
                         statsCols: Seq[String] = Nil, nFiles: Int = 0): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
     val spec = partitionSpec(table).getOrElse(throw new IllegalStateException(
       s"table '$table' has no partition spec — commitPartitioned first"))
-    val prevSnap = currentSnapshot(table).getOrElse(throw new IllegalStateException(
+    currentSnapshot(table).getOrElse(throw new IllegalStateException(
       s"table '$table' has no committed snapshot — commitPartitioned first"))
-    val n = if (nFiles > 0) nFiles else spec match {
-      case BucketTransform(b, _) => b
-      case _ => df.sparkSession.sessionState.conf.numShufflePartitions
-    }
-    val clustered = df.withColumn("__graft_part", expr(spec.sparkExprSql))
-      .repartitionByRange(n, col("__graft_part"))
-      .drop("__graft_part")
-    val snap = append(clustered, table)
-    val delta = manifestFiles(table, snap).toSet -- manifestFiles(table, prevSnap).toSet
-    writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-      statsTsv(df.sparkSession, delta.toSeq.sorted,
-        (spec.statName, spec.sparkExprSql) +: statsCols.map(c => (c, s"`$c`"))))
-    snap
+    write(df, table, partitioned(df, spec, statsCols, nFiles, WriteMode.Append)).get
   }
 
   /** Iceberg's partition overwrite (`INSERT OVERWRITE` under
@@ -2284,29 +2280,28 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * incremental reads across it refuse as a rewrite, exactly like
     * `compact`; time travel to the pre-overwrite snapshot stays complete.
     */
-  def overwritePartitionValues(files: Seq[(String, Long)], table: String,
-      statLines: Seq[(String, String, String, String)],
+  def overwritePartitionValues(files: Seq[WrittenFile], table: String,
       explicit: Option[Set[String]] = None): Long = {
     val spec = partitionSpec(table).getOrElse(throw new IllegalStateException(
       s"partition overwrite of '$table': table declares no partition transform " +
       "(plain INSERT OVERWRITE replaces the whole table)"))
-    val newPins: Map[String, String] = statLines.collect {
-      case (f, c, lo, hi) if c == spec.statName && lo == hi => f -> lo
-    }.toMap
-    files.foreach { case (f, _) => require(newPins.contains(f),
-      s"partition overwrite of '$table': new file $f is not pinned to one " +
+    val newPins: Map[String, String] = files.flatMap(f => f.bounds.collect {
+      case (c, Some(lo), hi) if c == spec.statName && hi.contains(lo) => f.path -> lo
+    }).toMap
+    files.foreach { f => require(newPins.contains(f.path),
+      s"partition overwrite of '$table': new file ${f.path} is not pinned to one " +
       s"${spec.statName} value") }
     explicit.foreach { allowed =>
-      val stray = files.flatMap(f => newPins.get(f._1)).filterNot(allowed).distinct
+      val stray = files.flatMap(f => newPins.get(f.path)).filterNot(allowed).distinct
       require(stray.isEmpty,
         s"overwrite of '$table' PARTITION (${spec.col}=...): rows fall outside the " +
         s"named partition(s): ${stray.mkString(", ")}")
     }
-    val touched: Set[String] = explicit.getOrElse(files.map(f => newPins(f._1)).toSet)
+    val touched: Set[String] = explicit.getOrElse(files.map(f => newPins(f.path)).toSet)
     val snap = claimSnapshotId(table)
     withCommitLock(table) {
-      val (kept, keptStats, keptBlooms) = currentSnapshot(table) match {
-        case None => (Seq.empty[String], Seq.empty[String], Map.empty[String, Seq[String]])
+      val (kept, keptStats, keptBlooms, keptSchemas) = currentSnapshot(table) match {
+        case None => (Seq.empty[String], Seq.empty[String], Map.empty[String, Seq[String]], Nil)
         case Some(cur) =>
           require(deleteRefsOf(table, cur).isEmpty,
             s"partition overwrite of '$table': pending delete tombstones — compact() " +
@@ -2324,19 +2319,30 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
             c -> bloomLinesAt(table, cur, c)
               .collect { case l if keptSet(l(0)) => l.mkString("\t") }
           }.toMap.filter(_._2.nonEmpty)
-          (kept, keptStats, blooms)
+          // the schemas of the deltas the kept files come from
+          val schemas = entriesOf(table, cur).filter(_.startsWith("@")).flatMap { e =>
+            val id = e.stripPrefix("@m").stripSuffix(".json")
+            val mine = parseJsonArray(readStr(new HPath(manifestDir(table), e.stripPrefix("@"))))
+              .filter(keptSet)
+            if (mine.isEmpty) None
+            else recordedSchema(table, id).orElse(
+              mine.flatMap(footerSchema).reduceOption[DataType](mergeTypes(table)(_, _)))
+          }
+          (kept, keptStats, blooms, schemas)
       }
-      val allFiles = kept ++ files.map(_._1)
+      val allFiles = kept ++ files.map(_.path)
       require(allFiles.nonEmpty,
         s"partition overwrite of '$table': the result would be an empty table — " +
         "every snapshot owns >= 1 data file (DROP TABLE is the empty-the-table op)")
-      writeStr(new HPath(manifestDir(table), s"m$snap.stats.tsv"),
-        countAndStatTsv(files, statLines) + keptStats.mkString("", "\n", "\n"))
+      val dir = manifestDir(table)
+      writeStr(new HPath(dir, s"m$snap.stats.tsv"),
+        statsBody(files) + keptStats.mkString("", "\n", "\n"))
       keptBlooms.foreach { case (c, lines) =>
-        writeStr(new HPath(manifestDir(table), s"m$snap.bloom.$c.tsv"),
-          lines.mkString("", "\n", "\n"))
+        writeStr(new HPath(dir, s"m$snap.bloom.$c.tsv"), lines.mkString("", "\n", "\n"))
       }
-      commitSnapshot(table, snap, Seq(writeDeltaManifest(table, snap, allFiles)))
+      (keptSchemas ++ files.map(_.schema).distinct).reduceOption(mergeTypes(table)(_, _))
+        .foreach(sc => writeStr(new HPath(dir, s"m$snap.schema"), sc.json))
+      commitSnapshot(table, snap, Seq(writeDeltaManifest(table, snap.toString, allFiles)))
     }
     snap
   }
@@ -2506,11 +2512,11 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * becomes a 2 KB sidecar read ([[hllDistinctStat]]) instead of a
     * table-wide COUNT(DISTINCT) shuffle.
     *
-    * The delta registers are computed from the parquet files the append
-    * ACTUALLY WROTE, not from the input plan: a non-deterministic input
-    * (rand()-derived columns, fresh sampling) re-evaluated for the register
-    * pass would silently diverge the sidecar from the data. One extra read
-    * of the delta — same cost shape, no divergence window.
+    * The delta registers are folded by the writer from the rows it ACTUALLY
+    * WRITES, not from a second evaluation of the input plan: a
+    * non-deterministic input (rand()-derived columns, fresh sampling)
+    * re-evaluated for a register pass would silently diverge the sidecar
+    * from the data. No extra pass over the delta, no divergence window.
     *
     * Chain integrity: the cumulative state is only written when the table
     * is empty OR the previous snapshot carries the sidecar — an append
@@ -2536,63 +2542,31 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   // table's file row counts (default 2^17 = 16 KB/file).
   // ------------------------------------------------------------------
 
-  private val bloomK = 4
-  private def bloomIdxSql(col: String, bits: Int): Seq[String] = {
-    val h1 = s"CAST(conv(substr(md5(CAST(`$col` AS STRING)), 1, 8), 16, 10) AS BIGINT)"
-    val h2 = s"(CAST(conv(substr(md5(CAST(`$col` AS STRING)), 9, 8), 16, 10) AS BIGINT) | 1)"
-    (0 until bloomK).map(i => s"pmod($h1 + $i * $h2, $bits)")
-  }
   private def bloomIdxLiteral(value: String, bits: Int): Seq[Int] = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     def hex(from: Int) = java.lang.Long.parseLong(d.slice(from, from + 4).map(b => f"$b%02x").mkString, 16)
     val h1 = hex(0); val h2 = hex(4) | 1L
-    (0 until bloomK).map(i => (((h1 + i * h2) % bits) + bits).toInt % bits)
+    (0 until ParquetSnapshotCatalog.bloomK).map(i => (((h1 + i * h2) % bits) + bits).toInt % bits)
   }
 
-  /** The per-file bloom TSV body for `files`: one distinct (file, index)
-    * shuffle, bits set driver-side, base64-packed bitsets. */
-  private def bloomTsv(spark: SparkSession, files: Seq[String],
-                       col: String, bits: Int): String = {
-    import org.apache.spark.sql.functions.{input_file_name, explode, array, expr}
-    val idxCols = bloomIdxSql(col, bits).map(expr)
-    val pairs = spark.read.parquet(files: _*)
-      .where(s"`$col` IS NOT NULL")
-      .select(input_file_name().as("file"), explode(array(idxCols: _*)).as("idx"))
-      .distinct()
-      .collect().map(r => ("/" + r.getString(0).stripPrefix("file:").dropWhile(_ == '/'),
-        r.getLong(1).toInt))
-    val byFile = pairs.groupBy(_._1)
-    val enc = java.util.Base64.getEncoder
-    files.sorted.map { f =>
-      val bs = new Array[Byte](bits / 8)
-      byFile.getOrElse(f, Array.empty).foreach { case (_, i) => bs(i >> 3) = (bs(i >> 3) | (1 << (i & 7))).toByte }
-      s"$f\t$bits\t${enc.encodeToString(bs)}"
-    }.mkString("", "\n", "\n")
-  }
-
+  /** Commit with a per-file bloom sidecar on `col`: the writer sets each
+    * file's bits from the rows it writes (`bits` per file, a power of two). */
   def commitWithBloom(df: DataFrame, table: String, col: String,
                       bits: Int = 1 << 17): Long = {
     require(bits >= 64 && (bits & (bits - 1)) == 0, s"bloom bits must be a power of two >= 64: $bits")
-    val snap = commit(df, table)
-    writeStr(new HPath(manifestDir(table), s"m$snap.bloom.$col.tsv"),
-      bloomTsv(df.sparkSession, manifestFiles(table, snap), col, bits))
-    snap
+    write(df, table, WriteSpec(blooms = Seq(col -> bits))).get
   }
 
-  /** Fast-append with bloom: the drop pays one bloom pass over ITS files
-    * only, written as the delta's own `m<K>.bloom.<col>.tsv` — O(delta)
-    * sidecar bytes per append (readers merge the chain). */
+  /** Fast-append with bloom: the drop's files carry their own bits, written
+    * as the delta's own `m<K>.bloom.<col>.tsv` — O(delta) sidecar bytes per
+    * append (readers merge the chain). */
   def appendWithBloom(df: DataFrame, table: String, col: String,
                       bits: Int = 1 << 17): Long = {
     require(bits >= 64 && (bits & (bits - 1)) == 0, s"bloom bits must be a power of two >= 64: $bits")
-    val prevSnap = currentSnapshot(table).getOrElse(
+    currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table — commitWithBloom first"))
-    val snap = append(df, table)
-    val delta = manifestFiles(table, snap).toSet -- manifestFiles(table, prevSnap).toSet
-    writeStr(new HPath(manifestDir(table), s"m$snap.bloom.$col.tsv"),
-      bloomTsv(df.sparkSession, delta.toSeq.sorted, col, bits))
-    snap
+    write(df, table, WriteSpec(WriteMode.Append, blooms = Seq(col -> bits))).get
   }
 
   /** Files that MAY contain `value` in `col`: a file is kept iff all k of
@@ -2621,33 +2595,8 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     }
   }
 
-  def appendWithHll(df: DataFrame, table: String, col: String): Long = {
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    // the delta register pass (a Spark job) stays OUTSIDE the commit lock
-    val delta = graft.operators.Sketch.hllRegistersOf(
-      df.sparkSession.read.parquet(files: _*), col)
-    withCommitLock(table) {
-      val prev = currentSnapshot(table)
-      val prevRegs = prev.flatMap(readHllSidecar(table, _, col))
-      val chainOk = prev.isEmpty || prevRegs.isDefined
-      val prevEntries = prev.map(entriesOf(table, _)).getOrElse(Seq.empty)
-      commitSnapshot(table, snap, prevEntries :+ writeDeltaManifest(table, snap, files))
-      if (chainOk) {
-        val merged = prevRegs match {
-          case Some(p) => p.zip(delta).map { case (a, b) => math.max(a, b) }
-          case None => delta
-        }
-        val bb = java.nio.ByteBuffer.allocate(merged.length * 8)
-        bb.asLongBuffer().put(merged)
-        val tmp = new HPath(manifestDir(table), s".hll.$col.tmp$snap")
-        val out = fsOf(tmp).create(tmp, true)
-        try out.write(bb.array()) finally out.close()
-        atomicSwap(tmp, new HPath(manifestDir(table), s"v$snap.hll.$col.bin"))
-      }
-    }
-    snap
-  }
+  def appendWithHll(df: DataFrame, table: String, col: String): Long =
+    write(df, table, WriteSpec(WriteMode.Append, hll = Some(col))).get
 
   private def readHllSidecar(table: String, snap: Long, col: String): Option[Array[Long]] = {
     val p = new HPath(manifestDir(table), s"v$snap.hll.$col.bin")
@@ -2681,42 +2630,14 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * row contributes exactly once), and "p50/p90/p99 across ALL drops"
     * becomes a KB-sized sidecar read with zero data files opened.
     *
-    * The delta histogram is computed from the files the append ACTUALLY
-    * wrote (the appendWithHll non-determinism rule), and the chain-
+    * The delta histogram is folded by the writer from the rows it ACTUALLY
+    * writes (the appendWithHll non-determinism rule), and the chain-
     * integrity contract is identical: an append that bypassed this method
     * poisons the chain and [[ddQuantileStat]] refuses (None) rather than
     * undercounting.
     */
-  def appendWithDd(df: DataFrame, table: String, col: String): Long = {
-    val snap = claimSnapshotId(table)
-    val files = writeSnapshotData(df, new HPath(root, s"$table/data/snap-$snap"))
-    val rep = s"shiftleft(shiftright($col, greatest(length(bin($col)) - 4, 0))," +
-      s" greatest(length(bin($col)) - 4, 0))"
-    // SQL aggregate semantics: NULLs never enter the histogram (a NULL rep
-    // row would otherwise NPE the collect). The delta pass (a Spark job)
-    // stays OUTSIDE the commit lock.
-    val delta = df.sparkSession.read.parquet(files: _*)
-      .where(s"$col IS NOT NULL")
-      .selectExpr(s"$rep AS rep")
-      .groupBy("rep").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    withCommitLock(table) {
-      val prev = currentSnapshot(table)
-      val prevHist = prev.flatMap(readDdSidecar(table, _, col))
-      val chainOk = prev.isEmpty || prevHist.isDefined
-      val prevEntries = prev.map(entriesOf(table, _)).getOrElse(Seq.empty)
-      commitSnapshot(table, snap, prevEntries :+ writeDeltaManifest(table, snap, files))
-      if (chainOk) {
-        val merged = prevHist.map(_.toMap).getOrElse(Map.empty[Long, Long])
-          .foldLeft(delta) { case (m, (k, c)) => m.updated(k, m.getOrElse(k, 0L) + c) }
-        val body = merged.toSeq.sorted.map { case (k, c) => s"$k\t$c" }.mkString("", "\n", "\n")
-        val tmp = new HPath(manifestDir(table), s".dd.$col.tmp$snap")
-        writeStr(tmp, body)
-        atomicSwap(tmp, new HPath(manifestDir(table), s"v$snap.dd.$col.tsv"))
-      }
-    }
-    snap
-  }
+  def appendWithDd(df: DataFrame, table: String, col: String): Long =
+    write(df, table, WriteSpec(WriteMode.Append, dd = Some(col))).get
 
   private def readDdSidecar(table: String, snap: Long, col: String): Option[Seq[(Long, Long)]] = {
     val p = new HPath(manifestDir(table), s"v$snap.dd.$col.tsv")
@@ -2859,6 +2780,32 @@ object ParquetSnapshotCatalog {
   /** Bounded metadata-log depth carried in the CURRENT pointer (Iceberg's
     * `write.metadata.previous-versions-max` shape). */
   val HistoryMax = 100
+
+  /** Bloom hash count and the per-row bit indices of `col` (md5 double
+    * hashing, the SQL the writer evaluates per row and
+    * `bloomIdxLiteral` replays for a lookup value). */
+  private[graft] val bloomK = 4
+  private[graft] def bloomIdxSql(col: String, bits: Int): Seq[String] = {
+    val h1 = s"CAST(conv(substr(md5(CAST(`$col` AS STRING)), 1, 8), 16, 10) AS BIGINT)"
+    val h2 = s"(CAST(conv(substr(md5(CAST(`$col` AS STRING)), 9, 8), 16, 10) AS BIGINT) | 1)"
+    (0 until bloomK).map(i => s"pmod($h1 + $i * $h2, $bits)")
+  }
+
+  /** The DDSketch-style bucket of non-negative BIGINT `col`: the value with
+    * all but its top 4 significant bits cleared (TextOps.ddQuantiles'
+    * collapse). */
+  private[graft] def ddRepSql(col: String): String = {
+    val shift = s"greatest(length(bin($col)) - 4, 0)"
+    s"shiftleft(shiftright($col, $shift), $shift)"
+  }
+
+  /** Manifests store plain absolute paths for local roots (byte-compatible
+    * with pre-round-4 tables) and full URIs for remote schemes. */
+  private[graft] def pathOf(p: String): String = {
+    val u = new HPath(p).toUri
+    val s = u.getScheme
+    if (s == null || s == "file") u.getPath else p
+  }
 
   /** A sidecar/tombstone value, escaped for one TSV field (`\N` = null). */
   private[spark] def escStat(v: String): String =

@@ -5,24 +5,28 @@ import org.scalatest.funsuite.AnyFunSuite
 /** No input shape makes the kernel quadratic: a page four times the size of
   * its twin takes at most 8× as long (linear code gives about 4×, quadratic
   * about 16×). Each time is the minimum of 5 `extractInto` runs after a
-  * warm-up, with one reused sink.
+  * warm-up, with one reused sink, in the test thread's CPU time — so other
+  * threads and processes on a loaded host do not count — and the small and
+  * large runs alternate, so a slower spell of the core (a busy sibling
+  * thread, a cold cache) falls on both sizes alike.
   */
 class KernelLinearitySpec extends AnyFunSuite {
   private val MaxRatio = 8.0
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
 
-  private def minNanos(html: Array[Byte], sink: ExtractSink): Long =
-    (0 until 5).map { _ =>
-      val t0 = System.nanoTime()
-      Extractor.extractInto(html, sink)
-      System.nanoTime() - t0
-    }.min
+  private def cpuNanos(html: Array[Byte], sink: ExtractSink): Long = {
+    val t0 = threads.getCurrentThreadCpuTime
+    Extractor.extractInto(html, sink)
+    threads.getCurrentThreadCpuTime - t0
+  }
 
   private def ratio(small: String, large: String): Double = {
     val sink = new ExtractSink
     val s = small.getBytes("US-ASCII")
     val l = large.getBytes("US-ASCII")
     (0 until 3).foreach { _ => Extractor.extractInto(s, sink); Extractor.extractInto(l, sink) }
-    val r = minNanos(l, sink).toDouble / minNanos(s, sink)
+    val runs = (0 until 5).map(_ => (cpuNanos(s, sink), cpuNanos(l, sink)))
+    val r = runs.map(_._2).min.toDouble / runs.map(_._1).min
     info(f"${l.length} B vs ${s.length} B: time ratio $r%.2f")
     r
   }

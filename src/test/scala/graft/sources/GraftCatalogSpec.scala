@@ -177,6 +177,17 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filterNot(i => i % 4 == 1 || i % 4 == 2).toSet)
   }
 
+  test("SELECT on a table whose files have incompatible column types fails like cat.scan") {
+    val ss = spark; import ss.implicits._
+    spark.sql("CREATE TABLE gsql.tbad (id BIGINT, text STRING)")
+    cat.commit(Seq((1L, "a")).toDF("id", "text"), "tbad")
+    cat.append(Seq(("x", "b")).toDF("id", "text"), "tbad")
+    val viaScan = intercept[IllegalStateException](cat.scan(spark, "tbad").collect())
+    assert(viaScan.getMessage.contains("incompatible column types"), viaScan.getMessage)
+    val viaSql = intercept[Exception](spark.sql("SELECT * FROM gsql.tbad").collect())
+    assert(viaSql.getMessage.contains(viaScan.getMessage), viaSql.getMessage)
+  }
+
   test("pushed filters still prune through the SQL path (pruned read stays correct)") {
     val ss = spark; import ss.implicits._
     (0 until 100).map(i => (i.toLong, s"d$i")).toDF("id", "text")

@@ -10,11 +10,14 @@ import graft.spark.ParquetSnapshotCatalog
 /** Seeded differential check of the catalog's reads against a model: small
   * random tables take random mixes of appends (some with an added column),
   * equality deletes on string, long and int keys, positional deletes,
-  * deletion-vector rewrites, renames and a column drop, and the model — the
-  * live rows, changed by the same operations, each delete removing only
-  * rows added before it — is the expected answer. After every step the
-  * current scan, `read`, `readSnapshot` at a random earlier snapshot and
-  * `readIncremental`/`readChangelog` from it hold exactly the model's rows.
+  * deletion-vector rewrites, renames, a column drop, compactions and
+  * manifest rewrites, and the model — the live rows, changed by the same
+  * operations, each delete removing only rows added before it — is the
+  * expected answer. After every step the current scan, `read`,
+  * `readSnapshot` at a random earlier snapshot and
+  * `readIncremental`/`readChangelog` from it hold exactly the model's rows,
+  * and the schema `schemaAt` folds from the schemas recorded at commit
+  * equals the fold of the data files' own footers.
   */
 class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
   import ScanDifferentialSpec.{EqDel, Rec}
@@ -40,9 +43,11 @@ class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
     var drops = 0
     var incrementals = 0 // incremental windows checked
     var preImages = 0 // changelog checks with a delete feed
+    var compactions = 0
+    var manifestRewrites = 0
     for (t <- 0 until 6 if System.nanoTime() < deadline) {
-      val cat = new ParquetSnapshotCatalog(
-        Files.createTempDirectory("graftdiff").toFile.getAbsolutePath)
+      val root = Files.createTempDirectory("graftdiff").toFile.getAbsolutePath
+      val cat = new ParquetSnapshotCatalog(root)
       // current name of each logical column; `extra` appears on a later append
       var name = Map("id" -> "id", "s" -> "s", "k" -> "k", "extra" -> "extra")
       var hasExtra = false
@@ -81,7 +86,7 @@ class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       append(200 + rnd.nextInt(300), first = true)
       states :+= (cur -> live)
       for (_ <- 0 until 8 if System.nanoTime() < deadline) {
-        rnd.nextInt(8) match {
+        rnd.nextInt(10) match {
           case 0 =>
             if (rnd.nextBoolean()) hasExtra = true
             append(50 + rnd.nextInt(200), first = false)
@@ -101,6 +106,14 @@ class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
             cat.dropColumn("t", name("s"))
             dropped = true
             drops += 1
+          case 8 =>
+            // materializes every delete: the rewritten rows are the live ones
+            rewrites += cat.compact(spark, "t")
+            compactions += 1
+          case 9 =>
+            val before = cur
+            val rw = cat.rewriteManifests("t")
+            if (rw != before) { rewrites += rw; manifestRewrites += 1 }
           case _ =>
             val c = (if (dropped) Seq("k", "id") else Seq("s", "k", "id"))(rnd.nextInt(if (dropped) 2 else 3))
             val fresh = s"${c}_r$steps"
@@ -138,6 +151,16 @@ class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
           (if (dropped) Nil else Seq(name("s") -> "string")) ++
           (if (extraWritten) Seq(name("extra") -> "bigint") else Nil)
         assert(types == wantTypes, s"$at: schema")
+        // the recorded schemas fold to what the footers fold to: a copy of
+        // the metadata without the recorded schemas folds the footers
+        val bare = Files.createTempDirectory("graftdiffbare")
+        Files.createDirectories(bare.resolve("t/_manifests"))
+        Files.list(java.nio.file.Paths.get(root, "t", "_manifests")).forEach { p =>
+          if (!p.getFileName.toString.endsWith(".schema") && Files.isRegularFile(p))
+            Files.copy(p, bare.resolve("t/_manifests").resolve(p.getFileName))
+        }
+        assert(cat.schemaAt(spark, "t", cur) ==
+          new ParquetSnapshotCatalog(bare.toString).schemaAt(spark, "t", cur), s"$at: schemaAt")
         assertRows(scan, live, "scan")
         assertRows(cat.read(spark, "t"), live, "read")
 
@@ -170,8 +193,9 @@ class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     assert(steps >= 12, s"only $steps steps ran before the deadline")
-    assert(drops >= 1 && incrementals >= 4 && preImages >= 1,
-      s"too few checks: $drops drops, $incrementals windows, $preImages pre-image feeds")
+    assert(drops >= 1 && incrementals >= 4 && preImages >= 1 && compactions >= 1 &&
+      manifestRewrites >= 1, s"too few checks: $drops drops, $incrementals windows, " +
+      s"$preImages pre-image feeds, $compactions compactions, $manifestRewrites manifest rewrites")
   }
 }
 

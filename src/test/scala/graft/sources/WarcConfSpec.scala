@@ -32,8 +32,8 @@ object OpenRecordingLocalFs {
   * configuration: with `spark.hadoop.fs.file.impl` naming a recording file
   * system (and its cache off, so every `getFileSystem` builds one from the
   * configuration), the warc listing and readers, the CDX archive writer,
-  * the CDX random-access fetch, the catalog scan's readers and the
-  * catalog's DSv2 writers all go through that class.
+  * the CDX random-access fetch, the catalog scan's readers, the catalog's
+  * data-file writers and its metadata I/O all go through that class.
   */
 class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -90,6 +90,31 @@ class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     OpenRecordingLocalFs.opened.clear()
     assert(df.count() == 99L)
     files.foreach(f => assert(OpenRecordingLocalFs.opened.contains(f), s"$f not opened through the session's file system"))
+  }
+
+  test("a commit's metadata goes through the session's file system; schemaAt opens no data file") {
+    val root = java.nio.file.Files.createTempDirectory("catmconf").toFile.getAbsolutePath
+    val cat = new ParquetSnapshotCatalog(root)
+    OpenRecordingLocalFs.created.clear()
+    val snap = cat.commitWithStats(
+      spark.range(50).selectExpr("id", "CAST(id AS STRING) AS s").repartition(2), "t", Seq("id"))
+    Seq(s"m$snap.json", s"m$snap.stats.tsv", s"m$snap.schema", s"v$snap.json",
+      s".CURRENT.tmp$snap", ".commit.lock").foreach(n =>
+      assert(OpenRecordingLocalFs.created.contains(n), s"$n not written through the session's file system"))
+    val snap2 = cat.append(spark.range(50, 60).selectExpr("id", "CAST(id AS STRING) AS s"), "t")
+    OpenRecordingLocalFs.opened.clear()
+    val schema = cat.schemaAt(spark, "t", snap2)
+    assert(schema.fieldNames.toSeq == Seq("id", "s"))
+    val footers = OpenRecordingLocalFs.opened.asScala.filter(_.endsWith(".parquet"))
+    assert(footers.isEmpty, s"schemaAt opened data files: $footers")
+    assert(OpenRecordingLocalFs.opened.contains(s"m$snap2.schema"))
+    // a delta without a recorded schema (a table written before schemas were
+    // recorded) folds its files' footers instead — the counter sees them
+    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "t", "_manifests", s"m$snap2.schema"))
+    OpenRecordingLocalFs.opened.clear()
+    assert(cat.schemaAt(spark, "t", snap2) == schema)
+    assert(OpenRecordingLocalFs.opened.asScala.count(_.endsWith(".parquet")) ==
+      cat.filesWithAddOrder("t", snap2).count(_._2 == snap2))
   }
 
   test("the catalog's DSv2 writers create every data file through the session's file system") {

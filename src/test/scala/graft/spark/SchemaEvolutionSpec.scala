@@ -108,6 +108,21 @@ class SchemaEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cat.scan(spark, "t").count() == 93L)
   }
 
+  test("the changelog emits pre-images of a delete keyed on a column dropped since") {
+    val cat = new ParquetSnapshotCatalog(tmp())
+    val first = cat.commit(
+      spark.range(100).selectExpr("id", "concat('s', id % 7) AS s").repartition(3), "t")
+    cat.deleteWhere("t", "s", Seq("s3"))
+    cat.dropColumn("t", "s")
+    val log = cat.readChangelog(spark, "t", first)
+    val deletes = log.where("op = 'delete'")
+    assert(!deletes.columns.contains("s"))
+    assert(deletes.count() ==
+      cat.scan(spark, "t", snapshot = first).count() - cat.scan(spark, "t").count())
+    assert(deletes.collect().map(_.getAs[Long]("id")).toSet == (0L until 100L).filter(_ % 7 == 3).toSet)
+    assert(log.where("op = 'insert'").count() == 0L)
+  }
+
   test("an equality delete on a key type the scan cannot replay is refused at commit") {
     val cat = new ParquetSnapshotCatalog(tmp())
     val ss = spark; import ss.implicits._
