@@ -1,7 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.storage.StorageLevel
+
+/** Sums `executorCpuTime` over every finished task. */
+final class CpuListener(sc: SparkContext) extends SparkListener {
+  private val cpuNs = new AtomicLong
+  private val drained = new Semaphore(0)
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    if (e.taskMetrics != null) cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (e.properties != null && e.properties.getProperty(CpuListener.Drain) != null) drained.release()
+
+  /** Executor CPU seconds of every task that ended before this call: a
+    * marked empty job goes through the listener bus behind their events. */
+  def seconds(): Double = {
+    sc.setLocalProperty(CpuListener.Drain, "1")
+    try sc.emptyRDD[Int].count() finally sc.setLocalProperty(CpuListener.Drain, null)
+    if (!drained.tryAcquire(60, TimeUnit.SECONDS)) throw new IllegalStateException("listener bus did not drain")
+    cpuNs.get / 1e9
+  }
+}
+
+object CpuListener {
+  private val Drain = "graft.cpu.drain"
+}
 
 /** Benchmark main (driver contract): runs the headline extraction-throughput
   * measurement plus every SparkEntry query on SPARK_GRAFT_SF_DIR, prints ONE
@@ -11,31 +40,25 @@ import org.apache.spark.storage.StorageLevel
   */
 object Bench {
 
-  def mkSession(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-    .getOrCreate()
-
-  /** Timed extraction pass over pre-materialized pages: (docs, bytes, sec). */
-  def extractOnce(spark: SparkSession, pages: org.apache.spark.sql.Dataset[graft.spark.PageRow], parts: Int): (Long, Double) = {
+  /** Timed extraction pass over pre-materialized pages: (docs, sec, cpu sec). */
+  def extractOnce(cpu: CpuListener, pages: org.apache.spark.sql.Dataset[graft.spark.PageRow], parts: Int): (Long, Double, Double) = {
+    val c0 = cpu.seconds()
     val t0 = System.nanoTime()
     val n = graft.spark.ExtractJob.extract(pages, "bench", parts).toDF().count()
-    (n, (System.nanoTime() - t0) / 1e9)
+    val sec = (System.nanoTime() - t0) / 1e9
+    (n, sec, cpu.seconds() - c0)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val variants = sys.env.getOrElse("SPARK_GRAFT_VARIANTS", "100").toInt
-    val spark = mkSession(cpus)
+    val spark = Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
+    val cpu = new CpuListener(spark.sparkContext)
+    spark.sparkContext.addSparkListener(cpu)
 
     // ---- headline: extraction throughput --------------------------------
-    val parts = cpus.toInt
+    val cpus = spark.sparkContext.defaultParallelism
     val pages = graft.spark.Pages.synthesize(spark, sfDir, variants)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val bytes = pages.toDF().selectExpr("sum(length(html))").collect()(0).getLong(0)
@@ -48,90 +71,47 @@ object Bench {
     // contention_spread = slowest/fastest extraction pass, so a cross-round
     // reader can discount a contended window instead of reading a phantom
     // regression.
-    extractOnce(spark, pages, parts)
-    val extractPasses = (1 to 3).map(_ => extractOnce(spark, pages, parts))
-    val (docs, sec) = extractPasses.minBy(_._2)
+    extractOnce(cpu, pages, cpus)
+    val extractPasses = (1 to 3).map(_ => extractOnce(cpu, pages, cpus))
+    val (docs, sec, extractCpu) = extractPasses.minBy(_._2)
     val spread = extractPasses.map(_._2).max / sec
     pages.unpersist()
 
-    // ---- per-query timings (2 passes each, min reported in `queries` —
-    // same contention rationale; a crashing query is surfaced in `errors`
-    // with value -1, never silently timed as if it ran) -------------------
+    // ---- per-query timings (2 passes each; `queries` holds the faster
+    // pass's wall time and `query_cpu` its executor CPU — same contention
+    // rationale; a crashing query is surfaced in `errors` with value -1,
+    // never silently timed as if it ran) ---------------------------------
     def jesc(s: String): String =
       s.replace("\\", "\\\\").replace("\"", "'").replace("\n", " ").replace("\r", " ")
+    final case class Pass(sec: Double, cpuSec: Double, err: String)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Double, String) = {
+      def once(): Pass = {
+        val c0 = cpu.seconds()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); ((System.nanoTime() - t0) / 1e9, null) }
-        catch {
-          case e: Throwable =>
-            ((System.nanoTime() - t0) / 1e9,
-              e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))
-        }
+        val err = try { fn(spark, sfDir).count(); null }
+        catch { case e: Throwable => e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        Pass(sec, cpu.seconds() - c0, err)
       }
-      (name, once(), once())
+      val passes = Seq(once(), once())
+      (name, passes, passes.filter(_.err == null).minByOption(_.sec))
     }
-    val qs = results.map { case (k, p1, p2) =>
-      val ok = Seq(p1, p2).filter(_._2 == null).map(_._1)
-      "\"" + k + f"""\":${if (ok.nonEmpty) ok.min else -1.0}%.3f"""
+    def perQuery(v: Option[Pass] => Double): String = results.map { case (k, _, best) =>
+      "\"" + k + f"""\":${v(best)}%.3f"""
     }.mkString("{", ",", "}")
-    val qPasses = results.map { case (k, p1, p2) =>
-      "\"" + k + f"""\":[${p1._1}%.3f,${p2._1}%.3f]"""
+    val qs = perQuery(_.fold(-1.0)(_.sec))
+    val qCpu = perQuery(_.fold(-1.0)(_.cpuSec))
+    val qPasses = results.map { case (k, ps, _) =>
+      "\"" + k + "\":" + ps.map(p => f"${p.sec}%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val errs = results.flatMap { case (k, p1, p2) =>
-      val e = if (p1._2 != null) p1._2 else p2._2
-      if (e != null) Some("\"" + k + "\":\"" + jesc(e) + "\"") else None
+    val errs = results.flatMap { case (k, ps, _) =>
+      ps.find(_.err != null).map(p => "\"" + k + "\":\"" + jesc(p.err) + "\"")
     }.mkString("{", ",", "}")
-    val total = results.map { case (_, p1, p2) =>
-      val ok = Seq(p1, p2).filter(_._2 == null).map(_._1)
-      if (ok.nonEmpty) ok.min else 0.0
-    }.sum + sec
+    val total = results.map(_._3.fold(0.0)(_.sec)).sum + sec
     val ep = extractPasses.map(p => f"${p._2}%.3f").mkString("[", ",", "]")
+    spark.sparkContext.removeSparkListener(cpu)
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"query_passes":$qPasses,"errors":$errs,"sf":"$sfDir","extract":{"docs":$docs,"mb":$mb%.1f,"sec":$sec%.3f,"docs_per_sec":${docs / sec}%.1f,"mb_per_sec":${mb / sec}%.2f,"passes":$ep,"contention_spread":$spread%.2f},"cpus":$cpus,"variants":$variants}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"query_cpu":$qCpu,"query_passes":$qPasses,"errors":$errs,"sf":"$sfDir","extract":{"docs":$docs,"mb":$mb%.1f,"sec":$sec%.3f,"cpu_sec":$extractCpu%.3f,"docs_per_sec":${docs / sec}%.1f,"mb_per_sec":${mb / sec}%.2f,"passes":$ep,"contention_spread":$spread%.2f},"cpus":$cpus,"variants":$variants}""")
     spark.stop()
-  }
-}
-
-/** Scaling-evidence main (north rule: throughput at two cluster sizes with
-  * efficiency ≥ 0.8). No real cluster exists in the sandbox, so the same job
-  * runs at local[8] and local[32] on the same input — the driver-sanctioned
-  * stand-in for N vs 4N executors. Prints one JSON line and leaves the
-  * numbers for BASELINE.md.
-  */
-object Scale {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val variants = sys.env.getOrElse("SPARK_GRAFT_VARIANTS", "100").toInt
-
-    def measure(cpus: Int): (Long, Double, Double) = {
-      val spark = Bench.mkSession(cpus.toString)
-      spark.sparkContext.setLogLevel("ERROR")
-      val pages = graft.spark.Pages.synthesize(spark, sfDir, variants)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val bytes = pages.toDF().selectExpr("sum(length(html))").collect()(0).getLong(0)
-      Bench.extractOnce(spark, pages, cpus) // warm-up
-      val sec = (1 to 3).map(_ => Bench.extractOnce(spark, pages, cpus)._2).min
-      val docs = pages.count()
-      pages.unpersist()
-      spark.stop()
-      (docs, bytes / 1048576.0, sec)
-    }
-
-    // Interleaved lo/hi sessions with per-level minima: a transient
-    // host-contention window biases at most one sample, not the ratio.
-
-    val nLo = sys.env.getOrElse("SPARK_GRAFT_NLO", "8").toInt
-    val nHi = sys.env.getOrElse("SPARK_GRAFT_NHI", "32").toInt
-    val ratio = nHi.toDouble / nLo
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "2").toInt
-    val samples = (1 to rounds).flatMap(_ => Seq(nLo -> measure(nLo), nHi -> measure(nHi)))
-    val (docsLo, mbLo, secLo) = samples.filter(_._1 == nLo).map(_._2).minBy(_._3)
-    val (docsHi, mbHi, secHi) = samples.filter(_._1 == nHi).map(_._2).minBy(_._3)
-    val thrLo = mbLo / secLo
-    val thrHi = mbHi / secHi
-    val eff = (thrHi / thrLo) / ratio
-    println(
-      f"""{"metric":"scaling_efficiency","value":$eff%.3f,"unit":"ratio","n_lo":$nLo,"n_hi":$nHi,"lo":{"docs":$docsLo,"mb":$mbLo%.1f,"sec":$secLo%.3f,"mb_per_sec":$thrLo%.2f},"hi":{"docs":$docsHi,"mb":$mbHi%.1f,"sec":$secHi%.3f,"mb_per_sec":$thrHi%.2f},"sf":"$sfDir","variants":$variants}""")
   }
 }

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
 
 /** ANN-INDEX publication as a spark-submit surface — the FAISS
   * train/add/search lifecycle run end to end against the embeddings
@@ -26,13 +25,7 @@ object AnnIndexMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val root = if (args.length > 1) args(1) else "/tmp/graft_annindex"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{Ann, AnnIndex}
 

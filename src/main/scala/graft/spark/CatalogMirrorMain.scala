@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Catalog-to-catalog CDC replication — the spark-submit surface composing
@@ -26,12 +26,7 @@ object CatalogMirrorMain {
     val workDir = args(1)
     val nDrops = if (args.length > 2) args(2).toInt else 3
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
 
     val cat = new ParquetSnapshotCatalog(workDir)

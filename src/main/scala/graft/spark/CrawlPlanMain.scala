@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The CRAWL-PLANNING loop as a spark-submit surface — the composition a
@@ -33,13 +32,7 @@ object CrawlPlanMain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/graft_crawlplan"
     val budgetArg = if (args.length > 2) args(2).toLong else -1L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

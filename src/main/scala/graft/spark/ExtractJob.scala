@@ -78,7 +78,7 @@ final case class PageRowF(
 /** The extraction pipeline: scan → mapPartitions(tokenizer+DOM kernel) →
   * extracted rows ‖ lineage rows.
   *
-  * Scale design (the 100 TB / 10^12-doc story, tested at local[32]):
+  * Scale design (the 100 TB / 10^12-doc story, tested at 32 local slots):
   *   - The kernel is a single typed mapPartitions: O(bytes) per page, zero
   *     driver involvement, no collect anywhere.
   *   - Lineage rows ride a CollectionAccumulator (one tiny row per partition,

@@ -1,7 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
-
 /** The production job entrypoint (spark-submit target):
   *
   *   spark-submit --class graft.spark.ExtractMain app.jar \
@@ -21,13 +19,8 @@ object ExtractMain {
     val chunks = if (args.length > 3) args(3).toInt else 4
     val parts = if (args.length > 4) args(4).toInt else 32
     val variants = if (args.length > 5) args(5).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.currentTimeMillis()
     // Materialize the pages table ONCE, hash-partitioned by chunk, so each

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
 
 /** The continuous-curation composition as a spark-submit surface: crawl
   * drops arrive as micro-batches through the REAL streaming NEAR-DUP
@@ -23,13 +22,7 @@ object IncrementalCurateMain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val root = if (args.length > 1) args(1) else "/tmp/graft_inccur_main"
     val nDrops = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

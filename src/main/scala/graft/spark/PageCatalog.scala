@@ -2048,9 +2048,12 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
       }
     expired.foreach { s =>
       fsDelete(new HPath(manifestDir(table), s"v$s.json"))
-      // legacy whole-table sidecars are snapshot-keyed — expire with it
+      // legacy whole-table sidecars and the cumulative sketch sidecars are
+      // snapshot-keyed — expire with it
       allNames.filter(n => n == s"v$s.stats.tsv" ||
-          (n.startsWith(s"v$s.bloom.") && n.endsWith(".tsv")))
+          (n.startsWith(s"v$s.bloom.") && n.endsWith(".tsv")) ||
+          (n.startsWith(s"v$s.hll.") && n.endsWith(".bin")) ||
+          (n.startsWith(s"v$s.dd.") && n.endsWith(".tsv")))
         .foreach(n => fsDelete(new HPath(manifestDir(table), n)))
     }
     expired
@@ -2652,12 +2655,13 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
     * answer is the first bucket lower bound whose cumulative count reaches
     * rank ceil(q·n) (the ddQuantiles rule: an underestimate by at most one
     * bucket width, integer-exact and oracle-replayable). None when the
-    * chain is broken (see [[appendWithDd]]).
+    * chain is broken (see [[appendWithDd]]) or no drop so far held a
+    * non-NULL value of `col`.
     */
   def ddQuantileStat(table: String, col: String, qMillis: Seq[Int]): Option[Seq[Long]] = {
     val snap = currentSnapshot(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot for $table"))
-    readDdSidecar(table, snap, col).map { hist =>
+    readDdSidecar(table, snap, col).filter(_.nonEmpty).map { hist =>
       val n = hist.map(_._2).sum
       qMillis.map { q =>
         val rank = (q.toLong * n + 999L) / 1000L

@@ -1,6 +1,5 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
 
 /** Common-Crawl-style corpus PUBLICATION as a spark-submit surface: one
   * extraction pass over the page corpus fans out into the full CC artifact
@@ -31,13 +30,7 @@ object PublishMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/graft_publish"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -19,8 +19,7 @@ object GoldenGen {
   /** (url, mainSha, fullSha, fidSha) rows for one sf dir, oracle-only. */
   def rows(sfDir: String): Seq[String] = {
     // read documents.parquet via parquet-hadoop already on the classpath
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang", "source").collect()

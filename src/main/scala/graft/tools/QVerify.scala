@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
 object QVerify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-    val spark = graft.Bench.mkSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = graft.Sessions.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.TextOps
 
@@ -105,12 +105,9 @@ object QualityTrain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outTsv = if (args.length > 1) args(1)
     else "src/main/resources/graft/quality_weights.tsv"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[4], not the host's count: the fit's double sums follow the row
+    // order, and the committed weights were trained at four slots
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val trainDocs = docs.where("doc_id % 2 = 0")

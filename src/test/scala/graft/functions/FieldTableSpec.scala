@@ -2,8 +2,8 @@ package graft.functions
 
 import graft.spark.{ExtractJob, PageRow, Pages}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One answer per kernel output, whatever the entry path: for every row of
@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   * fields and `ExtractJob.extract`'s column agree on synthesized article
   * and media pages and a hand page; a null html gives SQL null.
   */
-class FieldTableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class FieldTableSpec extends AnyFunSuite with SparkSuite {
   private var pages: DataFrame = _
 
   /** ExtractJob's column for each struct field name. */
@@ -36,14 +34,7 @@ class FieldTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       |<body><p>hand page text <a href="/h">link</a></p><p>x</b><?pi></body></html>""".stripMargin
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     HtmlFunctions.register(spark)
     HtmlFunctions.registerRule(spark)
     val ss = spark
@@ -62,8 +53,6 @@ class FieldTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     pages = spark.read.parquet(s"$dir/pages")
     pages.createOrReplaceTempView("ft_pages")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val fields = HtmlFunctions.fields
 

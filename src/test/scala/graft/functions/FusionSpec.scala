@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** CollapseHtmlKernelCalls invariants: k html_* calls on one column become
   * ONE kernel run (the opaque-kernel CSE Catalyst can't do for
@@ -10,18 +9,9 @@ import org.apache.spark.sql.SparkSession
   * unfused plan, single calls and distinct columns stay untouched, and
   * every html_* field (spans included) fuses.
   */
-class FusionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
+class FusionSpec extends AnyFunSuite with SparkSuite {
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     HtmlFunctions.register(spark)
     HtmlFunctions.registerRule(spark)
     val pages = Seq(
@@ -36,8 +26,6 @@ class FusionSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("fusion_pages")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def kernelCalls(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
     val plan = df.queryExecution.optimizedPlan

@@ -1,37 +1,25 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** The config registration path: a session built with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (and no call to
   * `HtmlFunctions.register`) resolves every html_* function and fuses
   * kernel calls.
   */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class GraftExtensionsSpec extends AnyFunSuite with SparkSuite {
+  override protected def rootConf: Seq[(String, String)] =
+    Seq("spark.sql.extensions" -> "graft.functions.GraftExtensions")
 
   override def beforeAll(): Unit = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     val page = "<html lang=\"en\"><head><title>T</title></head><body><p>body text <a href=\"/x\">x</a></p></body></html>"
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ext_pages"
     spark.createDataFrame(Seq(("u1", page.getBytes("UTF-8")))).toDF("url", "html")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).createOrReplaceTempView("ext_pages")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("every html_* name resolves, with the call as its column name") {
     for (name <- HtmlFunctions.fields.map(_.sqlName) :+ "html_extract_all") {

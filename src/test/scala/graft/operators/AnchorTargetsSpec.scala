@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Incoming anchor-text profile: hand-computed argmax, deterministic
   * tie-break, and the two-exchange plan bound.
   */
-class AnchorTargetsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class AnchorTargetsSpec extends AnyFunSuite with SparkSuite {
   private def profile(edges: Seq[(String, String)]): Map[String, (Long, Long, String, Long)] = {
     val df = spark.createDataFrame(edges).toDF("target", "anchor").repartition(3)
     UrlOps.anchorTargets(df).collect()

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** Persisted IVF-PQ index artifacts (the FAISS train/add/search split):
@@ -10,22 +9,8 @@ import java.nio.file.Files
   * (executed k-means census, not a code-reading claim), frozen-model
   * appends, and probe-prune proof by physically deleting unprobed files.
   */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class AnnIndexSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftannidx").toFile

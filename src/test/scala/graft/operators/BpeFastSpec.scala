@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Production-k BPE: the driver-side trainer (bpeTrainDriver /
   * bpeMergesFast / bpeEncodeFast) must be BIT-IDENTICAL to the distributed
@@ -12,22 +11,7 @@ import org.apache.spark.sql.SparkSession
   * tokenizer cross-corpus path (bpeEncodeWith), which must reproduce the
   * same-corpus result exactly when handed the same merges.
   */
-class BpeFastSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class BpeFastSpec extends AnyFunSuite with SparkSuite {
   private def sfDocs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Sliding-window document chunking: word-granular windows with stride,
   * remainder chunk included, every word covered at least once.
   */
-class ChunkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ChunkSpec extends AnyFunSuite with SparkSuite {
   private def chunksOf(text: String, window: Int, stride: Int): Seq[(Long, Long, String)] = {
     val ss = spark; import ss.implicits._
     TextOps.chunkDocs(Seq((1L, text)).toDF("doc_id", "text"), window, stride)

@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Water-filling crawl-budget allocation: hand-computed levels, exact
   * budget conservation, max-min fairness shape, and the distribution
   * invariances the distributed prefix-sum must preserve.
   */
-class CrawlBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CrawlBudgetSpec extends AnyFunSuite with SparkSuite {
   private def alloc(stats: Seq[(String, Long, Long)], budget: Long,
                     parts: Int = 4): Map[String, (Long, Long, Long)] = {
     val df = spark.createDataFrame(stats).toDF("host", "demand", "cap").repartition(parts)

@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Registrable-domain (eTLD+1) extraction: suffix-set hits, the generic
   * ccTLD second-label rule, plain TLDs, degenerate hosts, and the
   * registrant-identity property per-domain capping depends on.
   */
-class DomainSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class DomainSpec extends AnyFunSuite with SparkSuite {
   private def rd(hosts: String*): Seq[String] = {
     val df = spark.createDataFrame(hosts.map(Tuple1(_))).toDF("host")
     UrlOps.registrableDomains(df, "host").orderBy("host")

@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Fixed-point PageRank vectors: hand-computed integer ranks on small
   * graphs, plus the invariants that make the operator trustworthy at scale
   * (partitioning-independence, dangling-node floor, duplicate-edge dedup).
   */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GraphSpec extends AnyFunSuite with SparkSuite {
   private def ranks(edges: Seq[(String, String)], iters: Int, parts: Int = 4): Map[String, Long] = {
     val df = spark.createDataFrame(edges).toDF("src", "dst").repartition(parts)
     Graph.pageRank(df, iters).collect().map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Quality-ranked cluster keepers: argmax semantics, tie-break, and the
   * no-window plan shape.
   */
-class KeepBestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class KeepBestSpec extends AnyFunSuite with SparkSuite {
   private def kb(labels: Seq[(Long, Long)], quality: Seq[(Long, Long)]): Map[Long, (Long, Long, Int)] = {
     val l = spark.createDataFrame(labels).toDF("doc_id", "cluster_id").repartition(3)
     val q = spark.createDataFrame(quality).toDF("doc_id", "quality")

@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Interpolated Kneser-Ney bigram perplexity: bit-equality against an
   * independent BigInt reference implementation, the continuation-diversity
   * property the smoothing exists for, and distribution invariances.
   */
-class KnPerplexitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class KnPerplexitySpec extends AnyFunSuite with SparkSuite {
   /** Reference: the exact formulas, BigInt end to end. */
   private def ref(docs: Seq[(Long, String)], minCount: Long): Map[Long, (Long, Long, Long)] = {
     val b = docs.flatMap { case (id, t) =>

@@ -1,30 +1,14 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Interpolated Kneser-Ney TRIGRAM perplexity: bit-equality against an
   * independent BigInt reference of the full three-level backoff chain,
   * the trigram-context separation a bigram model cannot make, and
   * distribution invariances.
   */
-class KnTrigramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class KnTrigramSpec extends AnyFunSuite with SparkSuite {
   /** Reference: the exact three-level formulas, BigInt end to end. */
   private def ref(docs: Seq[(Long, String)], minCount: Long): Map[Long, (Long, Long, Long)] = {
     val tr = docs.flatMap { case (id, t) =>

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import graft.tools.LangProfileTrain
 
 /** Cavnar–Trenkle n-gram language ID with the shipped trained profiles:
@@ -10,22 +9,7 @@ import graft.tools.LangProfileTrain
   * (different schedule seed than training), resource reproducibility,
   * determinism under partitioning, and the short-text edge.
   */
-class LangNgramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LangNgramSpec extends AnyFunSuite with SparkSuite {
   test("100% accuracy on a held-out corpus (training used seed=1; this is seed=5)") {
     val held = for {
       (lang, _) <- LangProfileTrain.pools

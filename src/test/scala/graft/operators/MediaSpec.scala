@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Real image-header decode: JDK-encoded PNG/JPEG/GIF bytes and spec-exact
   * WebP containers parse to their true dimensions; corrupt/truncated bytes
   * degrade to None, never throw.
   */
-class MediaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MediaSpec extends AnyFunSuite with SparkSuite {
   private def enc(w: Int, h: Int, fmt: String): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -1,29 +1,14 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Row
 
 /** PageMeta hand vectors — source priority and guard semantics pinned on
   * direct rows, independent of the extraction kernel (the q_pub_date /
   * q_soft404 oracles pin the kernel-fed path).
   */
-class PageMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PageMetaSpec extends AnyFunSuite with SparkSuite {
   private def pageDf(rows: Seq[(String, Seq[String], Seq[String], Seq[String])]) = {
     val ss = spark
     import ss.implicits._

@@ -1,30 +1,14 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Batch-perceptron trainer: equality against a sequential reference
   * implementation of the same full-batch update, convergence on a separable
   * task, and partitioning-independence (the property the full-batch variant
   * exists for — a per-example perceptron could never promise it).
   */
-class PerceptronSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PerceptronSpec extends AnyFunSuite with SparkSuite {
   /** docs: (doc_id, lang, text) */
   private def train(docs: Seq[(Long, String, String)], iters: Int, parts: Int = 4): Map[String, Long] = {
     val df = spark.createDataFrame(docs).toDF("doc_id", "lang", "text").repartition(parts)

@@ -1,30 +1,14 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Positional phrase search: exact start positions on hand corpora,
   * overlap/repeated-word handling, and the invariants that matter at scale
   * (partitioning-independence; the pre-shuffle term filter is asserted in
   * PlanSpec conventions via the isin pushdown below).
   */
-class PhraseSearchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PhraseSearchSpec extends AnyFunSuite with SparkSuite {
   private def search(docs: Seq[(Long, String)], phrase: Seq[String], parts: Int = 4): Set[(Long, Long)] = {
     val df = spark.createDataFrame(docs).toDF("doc_id", "text").repartition(parts)
     TextOps.phraseSearch(df, phrase).collect()

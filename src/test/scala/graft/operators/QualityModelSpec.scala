@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** The shipped quality-model weights are a real trained model, not a stub:
@@ -12,22 +11,7 @@ import org.apache.spark.sql.functions._
   * suite loads. The floor here scores the ODD half — rows the trainer never
   * saw — through the production integer scoring path.
   */
-class QualityModelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class QualityModelSpec extends AnyFunSuite with SparkSuite {
   test("held-out accuracy floor: >= 0.9 on the half the trainer never saw") {
     val heldOut = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .where("doc_id % 2 = 1")

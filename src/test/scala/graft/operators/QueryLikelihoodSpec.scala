@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Dirichlet query likelihood: relevance separation, the never-zero
   * smoothing property, and distribution invariance.
   */
-class QueryLikelihoodSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class QueryLikelihoodSpec extends AnyFunSuite with SparkSuite {
   private def top(docs: Seq[(Long, String)], parts: Int = 4): Seq[(Long, Long, Int)] = {
     val df = spark.createDataFrame(docs).toDF("doc_id", "text").repartition(parts)
     TextOps.queryLikelihoodTopDocs(df).collect()

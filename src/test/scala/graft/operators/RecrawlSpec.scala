@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Adaptive recrawl scheduling: change-rate estimation from capture
   * history, integer-exact, clamped to the politeness window.
   */
-class RecrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RecrawlSpec extends AnyFunSuite with SparkSuite {
   private def run(rows: Seq[(String, Long, String)], min: Long, max: Long) = {
     val ss = spark; import ss.implicits._
     Crawl.recrawlSchedule(rows.toDF("url", "ts", "digest"), min, max)

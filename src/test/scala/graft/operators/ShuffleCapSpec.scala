@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Deterministic epoch shuffle (seeded training-order permutation) and
   * per-domain frequency capping (C4/RefinedWeb domain balancing).
   */
-class ShuffleCapSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ShuffleCapSpec extends AnyFunSuite with SparkSuite {
   test("epochShuffle: a permutation — every doc once, pos contiguous per shard") {
     val ss = spark; import ss.implicits._
     val docs = (0L until 1000L).toDF("doc_id")

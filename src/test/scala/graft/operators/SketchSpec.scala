@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Count-Min sketch invariants: hash parity across the three spellings
@@ -12,22 +11,7 @@ import org.apache.spark.sql.functions._
   * plan shape (ObjectHashAggregate partial/final, never per-word rows on
   * the sketch exchange).
   */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SketchSpec extends AnyFunSuite with SparkSuite {
   /** Skewed word stream with known exact counts: two hot words, a warm
     * word, and a long unique tail.
     */

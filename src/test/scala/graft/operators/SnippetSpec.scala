@@ -1,28 +1,12 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Query-biased snippets: window argmax, leftmost tie rule, zero-hit
   * drop, and the zero-shuffle plan.
   */
-class SnippetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SnippetSpec extends AnyFunSuite with SparkSuite {
   private def snip(docs: Seq[(Long, String)], terms: Seq[String], w: Int = 10) = {
     val df = spark.createDataFrame(docs).toDF("doc_id", "text")
     TextOps.snippets(df, terms, w).collect()

@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Exact substring-range dedup vectors: hand-computed maximal ranges on
   * crafted corpora, plus the invariants that matter at scale
   * (partitioning-independence, within-doc repeats, short-doc exclusion).
   */
-class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SubstringDedupSpec extends AnyFunSuite with SparkSuite {
   private def ranges(docs: Seq[(Long, String)], n: Int, parts: Int = 4): Set[(Long, Int, Int, Int)] = {
     val df = spark.createDataFrame(docs).toDF("doc_id", "text").repartition(parts)
     Dedup.substringRanges(df, n).collect()

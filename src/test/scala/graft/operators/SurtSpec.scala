@@ -1,29 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** SURT key hand vectors — every canonicalization rule the expression pins
   * (case fold, www strip, label reversal, query sort/empty-drop, fragment
   * drop, default path), plus the prefix-scan property the key exists for.
   */
-class SurtSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SurtSpec extends AnyFunSuite with SparkSuite {
   private def surt(u: String): String = {
     val ss = spark; import ss.implicits._
     val r = Seq(u).toDF("url")

@@ -1,8 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Unigram-LM tokenizer: the EM trainer's E-step must match hand-computed
   * lattice posteriors exactly; pruning must hit the target size while
@@ -10,22 +9,7 @@ import org.apache.spark.sql.SparkSession
   * lexicographic (cost, ntok) minimization; and the distributed encode
   * must equal a driver-side recompute word for word.
   */
-class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class UnigramSpec extends AnyFunSuite with SparkSuite {
   private def sfDocs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 

@@ -1,30 +1,14 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** WordPiece trainer: likelihood-ratio argmax (exact rationals), hand-
   * pinned against the case where it genuinely disagrees with BPE's count
   * argmax; incremental symbol counts; deterministic; distributed encode
   * equals the driver recompute.
   */
-class WordPieceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WordPieceSpec extends AnyFunSuite with SparkSuite {
   /** ab×10 a×40 b×40 cd×5 d×5: BPE's count argmax picks (a,b) c=10; the
     * likelihood ratio picks (c,d): 5/(5·10)=0.1 ≫ 10/(50·50)=0.004 —
     * rare-but-always-together beats frequent-but-incidental.

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -14,26 +13,16 @@ import graft.spark.ParquetSnapshotCatalog
   * refusal path (WHERE residue, tombstones, missing stats, doubles, time
   * travel) must fall back to a correct row scan, never a wrong answer.
   */
-class AggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class AggPushdownSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftaggpush").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gagg", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gagg.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gagg", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gagg.root", root)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def docs(n: Int) = {
     val ss = spark; import ss.implicits._

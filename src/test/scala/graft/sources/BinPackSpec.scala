@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.Files
 
@@ -13,27 +13,17 @@ import graft.spark.ParquetSnapshotCatalog
   * still opened exactly once and per-file delete state / `_pos` ordinals
   * intact.
   */
-class BinPackSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class BinPackSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftbp").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     val ss = spark; import ss.implicits._
     // 16 tiny files
     cat.commit((0 until 1600).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(16), "t")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def read(t: String): DataFrame =
     spark.read.format("graft-catalog").option("root", root).option("table", t).load()

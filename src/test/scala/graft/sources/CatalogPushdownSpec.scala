@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.Files
 
@@ -14,21 +13,11 @@ import graft.spark.{BucketTransform, ParquetSnapshotCatalog}
   * re-filter — proven by deleting the pruned-away files and getting the
   * same answer.
   */
-class CatalogPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
+class CatalogPushdownSpec extends AnyFunSuite with SparkSuite {
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftpush").toFile

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
 
@@ -15,22 +14,7 @@ import graft.spark.ParquetSnapshotCatalog
   * evolution. A snapshot whose files disagree on a column's type fails the
   * read.
   */
-class CatalogSchemaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CatalogSchemaSpec extends AnyFunSuite with SparkSuite {
   private def catalog(): ParquetSnapshotCatalog =
     new ParquetSnapshotCatalog(Files.createTempDirectory("graftschema").toFile.getAbsolutePath)
 

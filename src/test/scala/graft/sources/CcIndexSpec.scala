@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** Columnar CC-index build: SURT keys over the CDX sidecars, range
@@ -10,19 +9,11 @@ import java.nio.file.Files
   * for. Member-exactness of the underlying offsets is pinned by WarcSpec;
   * here the index TABLE contract is what's under test.
   */
-class CcIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class CcIndexSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     root = Files.createTempDirectory("graftccidx").toFile.getAbsolutePath
     val ss = spark
     import ss.implicits._
@@ -33,8 +24,6 @@ class CcIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     Warc.writeWithCdx(spark.createDataset(recs).repartition(3), root)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("index covers every capture with surt/host/registrable_domain derived") {
     val idx = Warc.cdxIndexTable(spark, root)

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -13,26 +12,16 @@ import graft.spark.ParquetSnapshotCatalog
   * task-staged positional tombstones + one appended delta as ONE atomic
   * snapshot with zero existing data rewritten.
   */
-class GraftDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class GraftDeltaSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftdelta").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gd", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gd.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gd", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gd.root", root)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def docs(n: Int, off: Int = 0) = {
     val ss = spark; import ss.implicits._

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 
 import graft.spark.ParquetSnapshotCatalog
@@ -14,23 +13,15 @@ import graft.spark.ParquetSnapshotCatalog
   * aggregates, unpinned layout) falls back to the row scan, never a wrong
   * answer.
   */
-class GroupAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class GroupAggPushdownSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftgagg").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gg", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gg.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gg", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gg.root", root)
     val ss = spark; import ss.implicits._
     val langs = Seq("en", "de", "fr", "ja")
     (0 until 400).map(i => (i.toLong, langs(i % 4))).toDF("id", "lang")
@@ -38,8 +29,6 @@ class GroupAggPushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("CREATE TABLE gg.d (id BIGINT, lang STRING) PARTITIONED BY (lang)")
     spark.sql("INSERT INTO gg.d SELECT * FROM src")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("GROUP BY lang COUNT(*) answers from metadata: data deleted, SQL still answers") {
     cat.filesWithAddOrder("d", cat.currentSnapshot("d").get)

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -11,23 +10,15 @@ import graft.spark.ParquetSnapshotCatalog
   * Iceberg inspection-table shape. Rows come from the catalog's own
   * metadata APIs at scan planning, zero data files opened.
   */
-class MetaTableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class MetaTableSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftmeta").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gm", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gm.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gm", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gm.root", root)
 
     val ss = spark; import ss.implicits._
     (0 until 30).map(i => (i.toLong, s"t$i")).toDF("id", "text")
@@ -37,8 +28,6 @@ class MetaTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DELETE FROM gm.d WHERE id = 3")
     cat.tagSnapshot("d", "audit", 2L)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("t.files: one row per data file with add_snapshot and sidecar row counts, zero data opened") {
     val before = CatalogPartitionReader.opened.get()

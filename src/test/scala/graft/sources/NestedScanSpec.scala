@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
@@ -16,22 +16,7 @@ import graft.spark.ParquetSnapshotCatalog
   * literal schema and literal row counts; `_file`/`_pos` name each
   * surviving row's physical coordinates.
   */
-class NestedScanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class NestedScanSpec extends AnyFunSuite with SparkSuite {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** Documents `from until to`: some arrays empty or null, some structs null. */

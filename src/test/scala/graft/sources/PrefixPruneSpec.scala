@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions.col
 import graft.spark.ParquetSnapshotCatalog
 import java.nio.file.Files
@@ -13,23 +12,13 @@ import java.nio.file.Files
   * over-pruning string stats, the all-maximal-prefix edge, and the In cap
   * fallback.
   */
-class PrefixPruneSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class PrefixPruneSpec extends AnyFunSuite with SparkSuite {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = Files.createTempDirectory("graft_pfx_spec").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private var n = 0
   private def freshCat(): (ParquetSnapshotCatalog, String) = {

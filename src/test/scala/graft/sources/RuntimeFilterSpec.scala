@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -19,22 +19,14 @@ import graft.spark.{IdentityTransform, ParquetSnapshotCatalog}
   * never opened. Pruning must never be load-bearing: files without stats
   * are kept and Spark re-applies the join row-level.
   */
-class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class RuntimeFilterSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftrtf").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     // fact clustered on id: 8 files, each a disjoint id range, zone-mapped
     val ss = spark; import ss.implicits._
@@ -50,8 +42,6 @@ class RuntimeFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     cat.commitPartitionedExact(byLang, "pl", IdentityTransform("lang"))
     cat.commit(langs.map(l => (l, if (l == "de") 1 else 0)).toDF("lang", "keep"), "langs")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def read(t: String): DataFrame =
     spark.read.format("graft-catalog").option("root", root).option("table", t).load()

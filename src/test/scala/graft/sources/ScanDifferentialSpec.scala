@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -19,22 +19,8 @@ import graft.spark.ParquetSnapshotCatalog
   * and the schema `schemaAt` folds from the schemas recorded at commit
   * equals the fold of the data files' own footers.
   */
-class ScanDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScanDifferentialSpec extends AnyFunSuite with SparkSuite {
   import ScanDifferentialSpec.{EqDel, Rec}
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("catalog reads equal a model under random deletes, renames and a drop (seed 8)") {
     val rnd = new scala.util.Random(8)

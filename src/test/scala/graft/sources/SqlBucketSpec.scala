@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
@@ -14,29 +14,25 @@ import graft.spark.{BucketTransform, ParquetSnapshotCatalog}
   * one bucket id per file, point lookups prune through the transform, and
   * two same-bucketed tables storage-partition-join with ZERO exchange.
   */
-class SqlBucketSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlBucketSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
+  /** `s` with the `gb` catalog over this suite's root. */
+  private def withCatalog(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.catalog.gb", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gb.root", root)
+    s
+  }
+
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftbkt").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gb", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gb.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    withCatalog(spark)
     val ss = spark; import ss.implicits._
     (0 until 400).map(i => (s"u$i", i.toLong)).toDF("url", "score")
       .createOrReplaceTempView("src")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CREATE PARTITIONED BY (bucket(4, url)) + INSERT pins ONE bucket id per file") {
     spark.sql("CREATE TABLE gb.a (url STRING, score BIGINT) PARTITIONED BY (bucket(4, url))")
@@ -67,7 +63,7 @@ class SqlBucketSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("two bucket(4) tables storage-partition-join with ZERO exchange") {
-    val s2 = spark.newSession()
+    val s2 = withCatalog(spark.newSession())
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -85,7 +81,7 @@ class SqlBucketSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucket(8) does NOT zero-exchange-join bucket(4) (incompatible partitionings)") {
-    val s2 = spark.newSession()
+    val s2 = withCatalog(spark.newSession())
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -12,32 +11,21 @@ import graft.spark.ParquetSnapshotCatalog
   * The whole catalog lifecycle — write, delete, compact, tag, time-travel,
   * expire, rollback — drivable from pure SQL.
   */
-class SqlCallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlCallSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftcall").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftSqlExtensions].getName)
-      .config("spark.sql.catalog.gc", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gc.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gc", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gc.root", root)
     val ss = spark; import ss.implicits._
     (0 until 200).map(i => (i.toLong, s"t$i")).toDF("id", "text")
       .createOrReplaceTempView("src")
     spark.sql("CREATE TABLE gc.d AS SELECT /*+ REPARTITION(4) */ * FROM src WHERE id < 100")
     spark.sql("INSERT INTO gc.d SELECT /*+ REPARTITION(4) */ * FROM src WHERE id >= 100")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CALL compact materializes a pending DELETE and shrinks the file count") {
     spark.sql("DELETE FROM gc.d WHERE id = 7")

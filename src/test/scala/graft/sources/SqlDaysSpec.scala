@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 import graft.spark.{DaysTransform, ParquetSnapshotCatalog}
@@ -14,27 +13,16 @@ import graft.spark.{DaysTransform, ParquetSnapshotCatalog}
   * WRITE SESSION's time zone (the same zone the stats pass and the read
   * path's literal replay use).
   */
-class SqlDaysSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlDaysSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftdays").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.catalog.gd", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gd.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gd", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gd.root", root)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CREATE PARTITIONED BY (days(ts)) + INSERT pins one calendar day per file") {
     spark.sql("CREATE TABLE gd.e (ts TIMESTAMP, n BIGINT) PARTITIONED BY (days(ts))")

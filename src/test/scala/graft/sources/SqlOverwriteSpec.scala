@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
@@ -14,33 +14,29 @@ import graft.spark.ParquetSnapshotCatalog
   * data is empty, and every unprovable shape refuses loudly instead of
   * silently truncating the table.
   */
-class SqlOverwriteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlOverwriteSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
+  /** `s` with the `go` catalog over this suite's root. */
+  private def withCatalog(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.catalog.go", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.go.root", root)
+    s
+  }
+
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftsqlow").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.go", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.go.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    withCatalog(spark)
     val ss = spark; import ss.implicits._
     val langs = Seq("en", "de", "fr", "ja")
     (0 until 400).map(i => (i.toLong, langs(i % 4), s"text $i"))
       .toDF("id", "lang", "text").createOrReplaceTempView("src")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
   private def dynSession(): SparkSession = {
-    val s = spark.newSession()
+    val s = withCatalog(spark.newSession())
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val ss = s; import ss.implicits._
     val langs = Seq("en", "de", "fr", "ja")

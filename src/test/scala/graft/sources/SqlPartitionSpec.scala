@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 
@@ -13,30 +13,26 @@ import graft.spark.{IdentityTransform, ParquetSnapshotCatalog, TruncateTransform
   * the layout storage-partitioned joins and partition pruning consume, with
   * zero Scala.
   */
-class SqlPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlPartitionSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
+  /** `s` with the `gp` catalog over this suite's root. */
+  private def withCatalog(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.catalog.gp", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.gp.root", root)
+    s
+  }
+
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftsqlpart").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gp", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gp.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    withCatalog(spark)
     val ss = spark; import ss.implicits._
     val langs = Seq("en", "de", "fr", "ja")
     (0 until 400).map(i => (i.toLong, langs(i % 4), s"text $i"))
       .toDF("id", "lang", "text").createOrReplaceTempView("src")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CREATE PARTITIONED BY (lang) + INSERT pins ONE transform value per data file") {
     spark.sql("CREATE TABLE gp.a (id BIGINT, lang STRING, text STRING) PARTITIONED BY (lang)")
@@ -50,7 +46,7 @@ class SqlPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("two SQL-created partitioned tables join with ZERO exchange (storage-partitioned join)") {
-    val s2 = spark.newSession()
+    val s2 = withCatalog(spark.newSession())
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -97,7 +93,7 @@ class SqlPartitionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("write.target-file-size byte-rolls INSIDE a value pin; SPJ survives the roll") {
-    val s2 = spark.newSession()
+    val s2 = withCatalog(spark.newSession())
     s2.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     s2.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.AnalysisException
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -10,31 +10,20 @@ import graft.spark.ParquetSnapshotCatalog
 /** SQL VIEWS over the graft catalog (Iceberg-views shape: parser-intercepted
   * DDL + injected resolution rule, metadata-only storage under `__views__`).
   */
-class SqlViewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SqlViewSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftview").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftSqlExtensions].getName)
-      .config("spark.sql.catalog.gv", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gv.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gv", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gv.root", root)
     val ss = spark; import ss.implicits._
     (0 until 100).map(i => (i.toLong, s"doc $i", if (i % 2 == 0) "en" else "de"))
       .toDF("id", "text", "lang").createOrReplaceTempView("src")
     spark.sql("CREATE TABLE gv.docs AS SELECT * FROM src")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("CREATE VIEW -> SELECT matches the underlying query; re-analyzed per read (sees new inserts)") {
     spark.sql("CREATE VIEW gv.en_docs AS SELECT id, text FROM gv.docs WHERE lang = 'en' ")

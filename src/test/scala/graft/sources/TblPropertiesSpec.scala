@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -12,26 +11,16 @@ import graft.spark.ParquetSnapshotCatalog
   * metadata keys, and the read.split.target-size property actually
   * governs the scan's bin-packing (a behavior knob, not an inert tag).
   */
-class TblPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class TblPropertiesSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftprop").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.catalog.gp", classOf[GraftCatalog].getName)
-      .config("spark.sql.catalog.gp.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gp", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gp.root", root)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def props(t: String): Map[String, String] =
     spark.sql(s"SHOW TBLPROPERTIES gp.$t").collect()

@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
 import graft.spark.ParquetSnapshotCatalog
@@ -14,24 +14,14 @@ import graft.spark.ParquetSnapshotCatalog
   * each decoded batch. The Iceberg rule: one vectorized decoder, never a
   * changed answer.
   */
-class VectorizedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class VectorizedReadSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftvec").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def read(t: String): DataFrame =
     spark.read.format("graft-catalog").option("root", root).option("table", t).load()

@@ -1,12 +1,11 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.SparkSession
 
+import graft.SparkSuite
 import graft.spark.ParquetSnapshotCatalog
 import scala.jdk.CollectionConverters._
 
@@ -35,21 +34,10 @@ object OpenRecordingLocalFs {
   * the CDX random-access fetch, the catalog scan's readers, the catalog's
   * data-file writers and its metadata I/O all go through that class.
   */
-class WarcConfSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[OpenRecordingLocalFs].getName)
-      .config("spark.hadoop.fs.file.impl.disable.cache", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class WarcConfSpec extends AnyFunSuite with SparkSuite {
+  override protected def rootConf: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[OpenRecordingLocalFs].getName,
+    "spark.hadoop.fs.file.impl.disable.cache" -> "true")
 
   test("every archive is opened through the session's spark.hadoop.fs.file.impl") {
     assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") == classOf[OpenRecordingLocalFs].getName)

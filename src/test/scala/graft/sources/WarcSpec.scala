@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import graft.spark.{Pages, PageRow}
 
@@ -10,22 +9,8 @@ import graft.spark.{Pages, PageRow}
   * and timestamps; extraction over the re-ingested corpus equals the direct
   * path.
   */
-class WarcSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class WarcSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("record serializer round-trips through the parser") {
     val body = "<p>hi</p>".getBytes("UTF-8")

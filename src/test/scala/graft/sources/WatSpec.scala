@@ -1,31 +1,20 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** WAT (CC metadata sidecar) layer: payload determinism + JSON escaping of
   * hostile titles/anchors, write→read→from_json round-trip, metadata-only
   * record filtering on mixed streams, and the empty-links shape.
   */
-class WatSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class WatSpec extends AnyFunSuite with SparkSuite {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = Files.createTempDirectory("graft_wat_spec").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val watSchema = "STRUCT<Envelope: STRUCT<`Payload-Metadata`: STRUCT<" +
     "`HTTP-Response-Metadata`: STRUCT<`HTML-Metadata`: STRUCT<" +

@@ -1,8 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -10,22 +9,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * layout reads back byte-identical; response readers skip conversion
   * records and vice versa.
   */
-class WetSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WetSpec extends AnyFunSuite with SparkSuite {
   test("WET round-trip: text survives byte-identical; type filtering is mutual") {
     val ss = spark; import ss.implicits._
     val dir = Files.createTempDirectory("graftwet").toFile.getAbsolutePath

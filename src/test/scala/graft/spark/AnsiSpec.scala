@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** Every contract query must survive a session with ANSI mode ON (Spark 4's
   * default): an external driver invoking SparkEntry.queries with its own
@@ -10,24 +9,13 @@ import org.apache.spark.sql.SparkSession
   * (Round-1 minhash relied on wrapping 64-bit multiplication and threw here;
   * the xxhash64 permutation family fixed it — this spec keeps it fixed.)
   */
-class AnsiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class AnsiSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "true") // the point of this spec
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.ansi.enabled", "true") // the point of this spec
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("all contract queries complete under spark.sql.ansi.enabled=true") {
     val failures = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

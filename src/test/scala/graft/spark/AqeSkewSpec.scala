@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** AQE runtime skew handling — the other half of the engine's skew story:
@@ -13,30 +12,19 @@ import org.apache.spark.sql.functions._
   * skew=true) and that the split changes no results — the evidence that a
   * 100 TB join with a celebrity key re-plans instead of stalling one task.
   */
-class AqeSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
+class AqeSkewSpec extends AnyFunSuite with SparkSuite {
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // thresholds scaled to test data: a partition is skewed when > 64 KB
-      // and > 2x the median; split targets ~32 KB
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "65536")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32768")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    // thresholds scaled to test data: a partition is skewed when > 64 KB
+    // and > 2x the median; split targets ~32 KB
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "65536")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32768")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("planted hot key: AQE splits the skewed partition (skew=true) with identical results") {
     val ss = spark

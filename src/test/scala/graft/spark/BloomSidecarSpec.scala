@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
@@ -11,21 +11,11 @@ import java.nio.file.Files
   * open ~1 file instead of the table, with prune-proofs by deletion and the
   * absent-key case opening ZERO files.
   */
-class BloomSidecarSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
+class BloomSidecarSpec extends AnyFunSuite with SparkSuite {
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftbloom").toFile

@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.SaveMode
 import java.nio.file.Files
 
 /** Maintenance that preserves the read path: sorted/partitioned compaction
@@ -10,22 +10,7 @@ import java.nio.file.Files
   * file cleanup (crash debris collected, time travel intact), and the
   * files/snapshots/refs metadata tables.
   */
-class CatalogMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CatalogMaintenanceSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftmaint").toFile
     d.deleteOnExit()

@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -12,22 +11,7 @@ import scala.jdk.CollectionConverters._
   * markers with self-heal, claim GC, equality deletes (takedown), the
   * pruneFiles DOUBLE compare tier, and the appendWithHll written-files fix.
   */
-class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CatalogR4Spec extends AnyFunSuite with SparkSuite {
   /** The data files snapshot `snap` of table `t` reads. */
   private def filesAt(cat: ParquetSnapshotCatalog, snap: Long): Seq[String] =
     cat.filesWithAddOrder("t", snap).map(_._1)
@@ -383,6 +367,42 @@ class CatalogR4Spec extends AnyFunSuite with BeforeAndAfterAll {
     cat2.appendWithDd(Seq(Some(1L), Some(2L), None, Some(3L), None)
       .toDF("v"), "t", "v")
     assert(cat2.ddQuantileStat("t", "v", Seq(500)).get === Seq(2L))
+  }
+
+  test("DDSketch sidecar: drops of only NULLs leave an empty histogram, and the quantile refuses (None)") {
+    val cat = new ParquetSnapshotCatalog(tmp())
+    val ss = spark; import ss.implicits._
+    cat.appendWithDd(Seq[Option[Long]](None, None).toDF("v"), "t", "v")
+    assert(cat.ddQuantileStat("t", "v", Seq(500)) === None)
+    cat.appendWithDd(Seq[Option[Long]](None).toDF("v"), "t", "v")
+    assert(cat.ddQuantileStat("t", "v", Seq(500, 990)) === None)
+    cat.appendWithDd(Seq[Option[Long]](Some(7L), None).toDF("v"), "t", "v")
+    assert(cat.ddQuantileStat("t", "v", Seq(500)) === Some(Seq(7L)))
+  }
+
+  test("expiry deletes an expired snapshot's hll and dd sidecars; the current sketches answer the same") {
+    val root = tmp()
+    val cat = new ParquetSnapshotCatalog(root)
+    val ss = spark; import ss.implicits._
+    val all = 1L to 3000L
+    (0 until 3).foreach { r =>
+      cat.appendWithDd(all.filter(_ % 3 == r).toDF("v"), "d", "v")
+      cat.appendWithHll(all.filter(_ % 3 == r).toDF("v"), "h", "v")
+    }
+    val quantiles = cat.ddQuantileStat("d", "v", Seq(500, 900, 990))
+    val distinct = cat.hllDistinctStat("h", "v")
+    assert(quantiles.isDefined && distinct.isDefined)
+    for ((table, kind) <- Seq("d" -> "dd", "h" -> "hll")) {
+      val expired = cat.expireSnapshots(table, keepLast = 1)
+      assert(expired.nonEmpty)
+      val names = manifestNames(root, table)
+      val left = names.filter(n => expired.exists(s => n.startsWith(s"v$s.$kind.")))
+      assert(left.isEmpty, s"expired $kind sidecars survived: $left")
+      val cur = cat.currentSnapshot(table).get
+      assert(names.exists(_.startsWith(s"v$cur.$kind.")), s"the current $kind sidecar went: $names")
+    }
+    assert(cat.ddQuantileStat("d", "v", Seq(500, 900, 990)) === quantiles)
+    assert(cat.hllDistinctStat("h", "v") === distinct)
   }
 
   test("changelog delete feed: a downstream mirror replaying inserts + deletes converges to the table") {

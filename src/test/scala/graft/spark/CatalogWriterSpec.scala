@@ -1,9 +1,9 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, expr, input_file_name}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
@@ -20,25 +20,16 @@ import scala.jdk.CollectionConverters._
   * writes for the same frame, and every sidecar, the schema and the
   * declared spec are on disk before the pointer moves.
   */
-class CatalogWriterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CatalogWriterSpec extends AnyFunSuite with SparkSuite {
   import CatalogWriterSpec.WatchedCatalog
 
-  private var spark: SparkSession = _
   private val Parts = 6
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // days() must render in the session time zone, not UTC
-      .config("spark.sql.session.timeZone", "America/Los_Angeles")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    // days() must render in the session time zone, not UTC
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String = Files.createTempDirectory("graftwriter").toFile.getAbsolutePath
 

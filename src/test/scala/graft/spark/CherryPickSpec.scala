@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** Iceberg-style cherrypick_snapshot: the WAP publish that still works
@@ -11,26 +10,15 @@ import java.nio.file.Files
   * state), with the picked files taking the NEW commit's position in the
   * delete-sequence rule.
   */
-class CherryPickSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class CherryPickSpec extends AnyFunSuite with SparkSuite {
   private var sqlRoot: String = _
 
   override def beforeAll(): Unit = {
     sqlRoot = Files.createTempDirectory("graftpicksql").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.sources.GraftSqlExtensions].getName)
-      .config("spark.sql.catalog.gcp", classOf[graft.sources.GraftCatalog].getName)
-      .config("spark.sql.catalog.gcp.root", sqlRoot)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gcp", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gcp.root", sqlRoot)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String =
     Files.createTempDirectory("graftpick").toFile.getAbsolutePath

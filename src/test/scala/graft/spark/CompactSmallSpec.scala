@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
 /** Incremental bin-pack compaction (compactSmallFiles): only undersized
@@ -11,24 +11,13 @@ import java.nio.file.Files
   * surgery pinned); deletes materialize into the merged files; positional
   * tombstones refuse; sub-threshold inputs no-op; time travel intact.
   */
-class CompactSmallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class CompactSmallSpec extends AnyFunSuite with SparkSuite {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.sources.GraftSqlExtensions].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = Files.createTempDirectory("graft_csml").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private var n = 0
   private def freshCat(): ParquetSnapshotCatalog = {

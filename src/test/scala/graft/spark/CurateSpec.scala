@@ -1,35 +1,23 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation pipeline: WARC ingest → extract → features →
   * quality floor → exact + near-dup dedup → curated parquet. Asserts the
   * invariants a downstream training job relies on.
   */
-class CurateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class CurateSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
   private var outDir: String = _
   private var report: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     outDir = java.nio.file.Files.createTempDirectory("curate").toString
     report = CurateMain.run(spark, sfDir, outDir)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("pipeline runs end-to-end and reports sane stage counts") {
     assert(report.contains("\"metric\":\"curate\""))

@@ -1,29 +1,13 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 
 /** The incremental curation loop: windowed changelog reads, gate
   * composition, companion-backed exactly-once appends, and the
   * crash-replays-are-no-ops watermark contract.
   */
-class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IncrementalCurateSpec extends AnyFunSuite with SparkSuite {
   /** 60 distinct 6-char alpha-ish words — passes every gate. */
   private def goodText(id: Long): String =
     (0 until 60).map(w => f"w${id}%02dax$w%02d").mkString(" ")

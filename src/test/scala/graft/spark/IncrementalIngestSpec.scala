@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 
 /** Incremental-append dedup invariants: cross-drop duplicates never
@@ -12,22 +11,7 @@ import java.nio.file.{Files, Paths}
   * companion can lag, never lead — duplicates are recoverable, lost rows
   * are not).
   */
-class IncrementalIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IncrementalIngestSpec extends AnyFunSuite with SparkSuite {
   private def freshCat(name: String): (ParquetSnapshotCatalog, String) = {
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_ingest_spec_$name"
     val p = Paths.get(root)

@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
 /** Incremental materialized-view maintenance: bit-equality with full
@@ -12,23 +12,13 @@ import java.nio.file.{Files, Paths}
   * fallbacks (compaction-crossing window; lost watermark), and spec
   * pinning.
   */
-class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class MaterializedViewSpec extends AnyFunSuite with SparkSuite {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dir = Files.createTempDirectory("graft_mv_spec").toString
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private var n = 0
   private def freshCat(): (ParquetSnapshotCatalog, String) = {

@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
@@ -14,22 +14,7 @@ import scala.jdk.CollectionConverters._
   * the prune-proof tests delete the non-pruned files to show the lookup
   * genuinely never opens them.
   */
-class PartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PartitioningSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftpart").toFile
     d.deleteOnExit()

@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan regression guards: the properties that make the engine
@@ -11,24 +10,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * extraction hot path) are asserted here so a refactor that silently
   * degrades a plan fails CI, not a 100 TB run.
   */
-class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class PlanSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sources.GraftSqlExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def formatted(name: String): String =
     graft.SparkEntry.queries(name)(spark, sfDir)

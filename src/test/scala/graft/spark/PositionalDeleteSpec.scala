@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -13,22 +12,7 @@ import scala.jdk.CollectionConverters._
   * the statsAgg delete gate (the metadata-only aggregate must refuse, not
   * overcount, while any tombstone is pending).
   */
-class PositionalDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PositionalDeleteSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftpos").toFile
     d.deleteOnExit()

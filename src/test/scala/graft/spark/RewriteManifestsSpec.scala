@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -11,22 +10,7 @@ import scala.jdk.CollectionConverters._
   * O(deletes+1) manifests instead of O(appends) — with the sequence rule,
   * time travel, stats/bloom sidecars and ref-counted expiry all intact.
   */
-class RewriteManifestsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RewriteManifestsSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftrwm").toFile
     d.deleteOnExit()

@@ -1,31 +1,15 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** End-to-end Spark-pipeline checks against the driver testdata at sf0.001:
   * byte-identity per url, partition invariance, chunked resume, snapshot
   * catalog, and the dedup/ANN operators' planted-pair recall.
   */
-class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class SparkJobSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** The data files snapshot `snap` of table `t` reads. */
   private def filesAt(cat: ParquetSnapshotCatalog, snap: Long): Seq[String] =

@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions.col
 import graft.sources.CatalogPartitionReader
 import java.nio.file.Files
@@ -14,9 +13,7 @@ import java.nio.file.Files
   * metadata group census) refuse on the mixed table, and compactSorted
   * re-unifies everything under the current spec.
   */
-class SpecEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class SpecEvolutionSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
@@ -25,16 +22,9 @@ class SpecEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftevo").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[graft.sources.GraftSqlExtensions].getName)
-      .config("spark.sql.catalog.gev", classOf[graft.sources.GraftCatalog].getName)
-      .config("spark.sql.catalog.gev.root", root)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.catalog.gev", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gev.root", root)
     val ss = spark; import ss.implicits._
     val langs = Seq("aa", "ab", "ba", "bb")
     // era 1: exact-pinned under identity(lang)
@@ -47,8 +37,6 @@ class SpecEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
       (200 until 400).map(i => (i.toLong, langs(i % 4))).toDF("id", "lang"),
       "t", nFiles = 4)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("point read prunes EACH era by its own spec; intersection beats current-spec-only") {
     val snap = cat.currentSnapshot("t").get

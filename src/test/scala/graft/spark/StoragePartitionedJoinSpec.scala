@@ -1,8 +1,8 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
 /** Storage-partitioned joins (Iceberg SPJ shape): two catalog tables
@@ -12,28 +12,18 @@ import java.nio.file.Files
   * The shuffle that dominates a 100 TB fact-to-fact join simply never
   * happens.
   */
-class StoragePartitionedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
+class StoragePartitionedJoinSpec extends AnyFunSuite with SparkSuite {
   private var root: String = _
   private def cat = new ParquetSnapshotCatalog(root)
 
   override def beforeAll(): Unit = {
     root = Files.createTempDirectory("graftspj").toFile.getAbsolutePath
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val langs = Seq("en", "de", "fr", "ja")
   private def docsDf(n: Int) = {

@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** Write-audit-publish branches: staged crawl drops land on a writable
@@ -10,22 +9,7 @@ import java.nio.file.Files
   * fast-forwarding (one atomic pointer swap, zero data movement); a
   * diverged main refuses the publish instead of discarding its commits.
   */
-class WapBranchSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WapBranchSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftwap").toFile
     d.deleteOnExit()

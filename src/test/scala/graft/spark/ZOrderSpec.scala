@@ -1,8 +1,7 @@
 package graft.spark
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import java.nio.file.Files
 
 /** Z-order clustering rewrite: multi-dimensional zone-map pruning. The
@@ -18,22 +17,7 @@ import java.nio.file.Files
   *   - rank-based buckets keep the OTHER column prunable under extreme
   *     one-column skew (where linear min/max scaling would collapse).
   */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ZOrderSpec extends AnyFunSuite with SparkSuite {
   private def tmp(): String = {
     val d = Files.createTempDirectory("graftzorder").toFile
     d.deleteOnExit()

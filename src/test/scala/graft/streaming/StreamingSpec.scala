@@ -1,30 +1,14 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Structured-Streaming extraction: landing-dir parquet → kernel → parquet
   * sink, exactly-once via checkpoint; plus the watermarked window agg.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
+class StreamingSpec extends AnyFunSuite with SparkSuite {
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graftstream").toString
