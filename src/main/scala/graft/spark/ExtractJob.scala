@@ -2,8 +2,11 @@ package graft.spark
 
 import graft.core._
 import graft.dom._
+import graft.sources.{CatalogFileWrite, ParquetOutput, SessionHadoopConf}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -80,10 +83,11 @@ final case class PageRowF(
   *
   * Scale design (the 100 TB / 10^12-doc story, tested at 32 local slots):
   *   - The kernel is a single typed mapPartitions: O(bytes) per page, zero
-  *     driver involvement, no collect anywhere.
-  *   - Lineage rows ride a CollectionAccumulator (one tiny row per partition,
-  *     O(partitions) driver memory, not O(rows)) and are appended to a
-  *     parquet metrics table after each chunk commit.
+  *     driver involvement; rows never pass through the driver.
+  *   - Lineage rows (one tiny row per partition, O(partitions) driver
+  *     memory, not O(rows)) come back as the write tasks' results, exactly
+  *     once per partition, and the driver commits them as one parquet file
+  *     per chunk.
   *   - Resume: work is committed in `chunks` (hash-sliced by url); a chunk
   *     whose lineage rows exist for this run_id is skipped on restart —
   *     snapshot-checkpoint semantics per the north rule.
@@ -111,7 +115,7 @@ object ExtractJob {
     val spark = pages.sparkSession
     import spark.implicits._
     pages.mapPartitions(it =>
-      kernelIterator(it, () => "", runId, lineage, chunk, maxTaskBytes, lean))
+      kernelIterator(it, () => "", runId, emitTo(lineage), chunk, maxTaskBytes, lean))
   }
 
   /** File-backed entry: same kernel, but each partition's lineage row records
@@ -128,21 +132,42 @@ object ExtractJob {
   ): Dataset[Extracted] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages
-      .withColumn("input_file", input_file_name())
-      .as[PageRowF]
-      .mapPartitions { it0 =>
-        val files = scala.collection.mutable.LinkedHashSet.empty[String]
-        val it = it0.map { f =>
-          if (f.input_file != null && f.input_file.nonEmpty) files += f.input_file
-          PageRow(f.url, f.warc_ts, f.html, f.text, f.lang)
-        }
-        kernelIterator(it, () => files.mkString(";"), runId, lineage, chunk, maxTaskBytes, lean)
-      }
+    withInputFile(pages).mapPartitions(it =>
+      fileKernel(it, runId, emitTo(lineage), chunk, maxTaskBytes, lean))
   }
 
+  /** `pages` with each row's source file, captured at the scan before any
+    * typed transform. */
+  private def withInputFile(pages: DataFrame): Dataset[PageRowF] = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    pages.withColumn("input_file", input_file_name()).as[PageRowF]
+  }
+
+  /** The kernel over file-backed pages: the lineage row's `input_file` is
+    * the distinct source files the partition read. */
+  private def fileKernel(
+      it0: Iterator[PageRowF],
+      runId: String,
+      emit: LineageRow => Unit,
+      chunk: Int,
+      maxTaskBytes: Long,
+      lean: Boolean
+  ): Iterator[Extracted] = {
+    val files = scala.collection.mutable.LinkedHashSet.empty[String]
+    val it = it0.map { f =>
+      if (f.input_file != null && f.input_file.nonEmpty) files += f.input_file
+      PageRow(f.url, f.warc_ts, f.html, f.text, f.lang)
+    }
+    kernelIterator(it, () => files.mkString(";"), runId, emit, chunk, maxTaskBytes, lean)
+  }
+
+  private def emitTo(acc: CollectionAccumulator[LineageRow]): LineageRow => Unit =
+    if (acc == null) null else acc.add
+
   /** The per-partition kernel: one reused sink, per-row oracle extraction,
-    * O(1) lineage state, a single lineage row emitted after the last page.
+    * O(1) lineage state, a single lineage row handed to `emit` (when not
+    * null) after the last page.
     * `maxTaskBytes` bounds scheduler-visible task work on pathological
     * splits (north star "per-partition size caps"): once a task has pushed
     * that many html bytes through the tokenizer, remaining rows are emitted
@@ -153,7 +178,7 @@ object ExtractJob {
       it: Iterator[PageRow],
       inputFiles: () => String,
       runId: String,
-      lineage: CollectionAccumulator[LineageRow],
+      emit: LineageRow => Unit,
       chunk: Int,
       maxTaskBytes: Long,
       lean: Boolean
@@ -167,14 +192,14 @@ object ExtractJob {
     new Iterator[Extracted] {
       def hasNext: Boolean = {
         val h = it.hasNext
-        if (!h && lineage != null && docs > 0) {
+        if (!h && emit != null && docs > 0) {
           val ms = math.max(System.currentTimeMillis() - t0, 1L)
           val hm = Map.newBuilder[String, Long]
           var i = 0
           while (i < hist.length) { if (hist(i) > 0) hm += St.names(i) -> hist(i); i += 1 }
           val pid = TaskContext.getPartitionId()
           val lo = pid.toLong << 33
-          lineage.add(LineageRow(runId, chunk, pid, inputFiles(),
+          emit(LineageRow(runId, chunk, pid, inputFiles(),
             RowRange(lo, lo + docs - 1), docs, bytes, ms, bytes * 1000.0 / ms,
             capped, hm.result()))
           docs = 0 // emit once
@@ -217,34 +242,33 @@ object ExtractJob {
     Extracted(p.url, p.lang, "", "", "", Nil, Nil, Nil, Nil, Nil, Nil, Nil, "", "", "", "", Nil, Seq(code),
       0, 0L, 0L, 1, truncated, if (p.html == null) 0L else p.html.length.toLong)
 
-  /** Chunked, resumable run: each chunk writes its extracted rows, then its
-    * lineage rows — the lineage append is the commit marker. On restart,
-    * chunks whose lineage exists for `runId` are skipped; a chunk that died
-    * mid-write is re-done (overwrite of its own subdir — idempotent).
-    */
-  def runChunked(
-      pages: Dataset[PageRow],
-      outDir: String,
-      runId: String,
-      chunks: Int,
-      partitionsPerChunk: Int
-  ): Unit = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    runChunkedFrom(spark,
-      c => pages.where(pmod(xxhash64($"url"), lit(chunks)) === c).toDF(),
-      outDir, runId, chunks, partitionsPerChunk)
-  }
+  /** Each executor thread's encoder of [[Extracted]] rows, built on first
+    * use: generating the serializer's projection costs milliseconds of CPU,
+    * paid once per thread instead of once per write task. */
+  private val extractedSerializer = ThreadLocal.withInitial[ExpressionEncoder.Serializer[Extracted]](
+    () => ExpressionEncoder[Extracted]().createSerializer())
 
-  /** Chunk-provider variant: `chunkOf(c)` yields chunk c's pages. Use a
+  /** Chunked, resumable run: `chunkOf(c)` yields chunk c's pages. Use a
     * provider that PRUNES at the source (e.g. a pages table partitioned by
-    * `chunk = pmod(xxhash64(url), chunks)` read with a partition filter) —
-    * the plain-Dataset overload above must rescan the whole input per chunk,
-    * which is only acceptable when the scan itself is cheap.
+    * `chunk = pmod(xxhash64(url), chunks)` read with a partition filter), so
+    * a chunk reads only its own pages.
+    *
+    * Each chunk is one Spark job: every task runs the kernel over its pages
+    * and writes the encoded rows through the catalog's write task
+    * ([[CatalogFileWrite.run]]) into `_staging/chunk=c`, then returns its
+    * commit message and its partition's lineage row. The driver deletes any
+    * staged file no message names (a killed or speculative attempt's),
+    * moves the directory to `data/chunk=c`, and last writes the chunk's
+    * lineage rows as one file in `_staging` and renames it into `lineage/`
+    * — the commit marker. Uncommitted output lives only under `_staging`,
+    * which a finished run deletes. On restart, chunks whose lineage rows
+    * exist for `runId` are skipped; any other chunk is redone from a
+    * cleared staging directory. A lineage directory that cannot be read
+    * fails the run rather than re-doing (and re-counting) committed chunks.
     */
   def runChunkedFrom(
-      spark: org.apache.spark.sql.SparkSession,
-      chunkOf: Int => org.apache.spark.sql.DataFrame,
+      spark: SparkSession,
+      chunkOf: Int => DataFrame,
       outDir: String,
       runId: String,
       chunks: Int,
@@ -253,24 +277,51 @@ object ExtractJob {
       lean: Boolean = false
   ): Unit = {
     import spark.implicits._
-    val lineageDir = s"$outDir/lineage"
+    val lineageDir = new Path(outDir, "lineage")
+    val stagingDir = new Path(outDir, "_staging")
+    val fs = lineageDir.getFileSystem(SessionHadoopConf(spark))
+    val lineageEnc = ExpressionEncoder[LineageRow]()
     val done: Set[Int] =
-      try spark.read.parquet(lineageDir).where($"run_id" === runId)
-        .select("chunk").distinct().as[Int].collect().toSet
-      catch { case _: Exception => Set.empty }
+      if (!fs.exists(lineageDir)) Set.empty
+      else spark.read.schema(lineageEnc.schema).parquet(lineageDir.toString)
+        .where($"run_id" === runId).select("chunk").distinct().as[Int].collect().toSet
+    val dataWrite = CatalogFileWrite(spark, ExpressionEncoder[Extracted]().schema, stagingDir.toString, Nil)
+    val lineageOut = ParquetOutput(spark, lineageEnc.schema)
+    val lineageRow = lineageEnc.createSerializer()
     for (c <- 0 until chunks if !done.contains(c)) {
       val t0 = System.currentTimeMillis()
-      val acc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$runId-$c")
-      extractFiles(chunkOf(c), runId, acc, c, maxTaskBytes, lean)
-        .write.mode("overwrite").parquet(s"$outDir/data/chunk=$c")
+      val staged = new Path(stagingDir, s"chunk=$c")
+      val stagedLineage = new Path(stagingDir, s"lineage-$c.parquet")
+      fs.delete(staged, true)
+      fs.delete(stagedLineage, false)
+      val write = dataWrite.copy(dir = staged.toString)
+      val pages = withInputFile(chunkOf(c)).rdd
+      val results = (if (pages.getNumPartitions > 0) pages
+          else spark.sparkContext.parallelize(Seq.empty[PageRowF], 1))
+        .mapPartitionsWithIndex { (i, it) =>
+          var lineage: LineageRow = null
+          val toRow = extractedSerializer.get()
+          val msg = write.run(i,
+            fileKernel(it, runId, r => lineage = r, c, maxTaskBytes, lean).map(toRow))
+          Iterator((msg, Option(lineage)))
+        }.collect()
       val tW = System.currentTimeMillis()
-      // Accumulator updates inside transformations are at-least-once (task
-      // retries / speculation duplicate them); keep one row per
-      // (run_id, chunk, partition_id) so lineage metrics stay exact.
-      val rows = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-        .groupBy(r => (r.run_id, r.chunk, r.partition_id)).map(_._2.head).toSeq
-      spark.createDataset(rows).write.mode("append").parquet(lineageDir)
+      val named = results.flatMap(_._1.files).map(f => new Path(f.path).getName).toSet
+      fs.listStatus(staged).filterNot(f => named(f.getPath.getName))
+        .foreach(f => fs.delete(f.getPath, true))
+      val target = new Path(outDir, s"data/chunk=$c")
+      fs.delete(target, true)
+      fs.mkdirs(target.getParent)
+      if (!fs.rename(staged, target)) throw new java.io.IOException(s"cannot move $staged to $target")
+      val rows = results.flatMap(_._2)
+      val out = lineageOut.open(stagedLineage.toString)
+      rows.foreach(r => out.write(lineageRow(r)))
+      out.close()
+      fs.mkdirs(lineageDir)
+      if (!fs.rename(stagedLineage, new Path(lineageDir, s"chunk-$c-${java.util.UUID.randomUUID()}.parquet")))
+        throw new java.io.IOException(s"cannot commit lineage file $stagedLineage")
       println(s"CHUNK $c done extract+write_ms=${tW - t0} lineage_ms=${System.currentTimeMillis() - tW} docs=${rows.map(_.docs).sum}")
     }
+    fs.delete(stagingDir, true)
   }
 }

@@ -56,7 +56,8 @@ class SparkJobSpec extends AnyFunSuite with SparkSuite {
   test("chunked resume recomputes only the lost chunk") {
     val out = tmp()
     val pages = Pages.synthesize(spark, sfDir)
-    ExtractJob.runChunked(pages, out, "r1", chunks = 3, partitionsPerChunk = 4)
+    def chunkOf(c: Int) = pages.where(pmod(xxhash64(col("url")), lit(3)) === c).toDF()
+    ExtractJob.runChunkedFrom(spark, chunkOf, out, "r1", chunks = 3, partitionsPerChunk = 4)
     val total = spark.read.parquet(s"$out/data").count()
     assert(total === 500)
     val lin1 = spark.read.parquet(s"$out/lineage").collect()
@@ -72,7 +73,7 @@ class SparkJobSpec extends AnyFunSuite with SparkSuite {
     keep.write.parquet(s"$out/lineage")
     rmrf(s"$out/data/chunk=1")
     assert(spark.read.parquet(s"$out/data").count() < 500)
-    ExtractJob.runChunked(pages, out, "r1", chunks = 3, partitionsPerChunk = 4)
+    ExtractJob.runChunkedFrom(spark, chunkOf, out, "r1", chunks = 3, partitionsPerChunk = 4)
     assert(spark.read.parquet(s"$out/data").count() === 500)
     val lin2 = spark.read.parquet(s"$out/lineage")
     // lineage bytes total unchanged vs the first complete run
@@ -80,8 +81,126 @@ class SparkJobSpec extends AnyFunSuite with SparkSuite {
       lin1.map(_.getAs[Long]("bytes")).sum)
     // second resume is a no-op: no new lineage rows
     val n2 = lin2.count()
-    ExtractJob.runChunked(pages, out, "r1", chunks = 3, partitionsPerChunk = 4)
+    ExtractJob.runChunkedFrom(spark, chunkOf, out, "r1", chunks = 3, partitionsPerChunk = 4)
     assert(spark.read.parquet(s"$out/lineage").count() === n2)
+  }
+
+  /** The pages table `ExtractMain` materializes: sf0.001's pages
+    * partitioned by `chunk = pmod(xxhash64(url), chunks)`. */
+  private def chunkedPages(dir: String, chunks: Int): org.apache.spark.sql.DataFrame = {
+    Pages.synthesize(spark, sfDir).toDF()
+      .withColumn("chunk", pmod(xxhash64(col("url")), lit(chunks)))
+      .write.mode("overwrite").partitionBy("chunk").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def exists(p: String): Boolean = new java.io.File(p).exists()
+
+  /** Data files under `dir`, as (relative path, bytes). */
+  private def filesUnder(dir: String): Seq[(String, Long)] = {
+    val base = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(java.nio.file.Files.walk(base)) { s =>
+      s.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .map(f => (base.relativize(f).toString, java.nio.file.Files.size(f))).sorted
+    }
+  }
+
+  test("chunked write equals extractFiles: one job per chunk, one lineage row per partition") {
+    val dir = tmp()
+    val pages = chunkedPages(s"$dir/pages", 3)
+    val cols = Seq("url", "warc_ts", "html", "text", "lang").map(col)
+    // chunk 3 selects no page: it must still commit a readable empty chunk
+    val byChunk = (0 until 4).map(c => pages.where(col("chunk") === c).select(cols: _*))
+    val out = s"$dir/out"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ExtractJob.runChunkedFrom(spark, byChunk, out, "eq", chunks = 4, partitionsPerChunk = 4)
+      // listener events are async: wait for the expected jobs, then for strays
+      val deadline = System.currentTimeMillis() + 10000
+      while (jobs.get() < 4 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      Thread.sleep(500)
+      assert(jobs.get() === 4, "one Spark job per chunk when lineage/ is absent")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val data = spark.read.parquet(s"$out/data")
+    val got = data.drop("chunk")
+    val want = ExtractJob.extractFiles(pages.select(cols: _*), "eq").toDF()
+    assert(got.count() === 500)
+    assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
+    assert(got.schema.simpleString ===
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Extracted]().schema.simpleString)
+    assert(exists(s"$out/data/chunk=3") && spark.read.parquet(s"$out/data/chunk=3").count() === 0)
+    assert(!exists(s"$out/_staging"), "a committed run leaves no staging directory")
+
+    val lineage = spark.read.parquet(s"$out/lineage").as[LineageRow](
+      org.apache.spark.sql.Encoders.product[LineageRow]).collect()
+    val nonEmpty = byChunk.map(_.rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).sum().toInt)
+    for (c <- 0 until 4)
+      assert(lineage.count(_.chunk == c) === nonEmpty(c), s"chunk $c: one lineage row per non-empty partition")
+    assert(lineage.map(r => (r.chunk, r.partition_id)).distinct.length === lineage.length)
+    assert(lineage.map(_.docs).sum === 500 && lineage.forall(_.docs > 0))
+    assert(lineage.forall(_.input_file.contains("pages")))
+
+    // the commit path runs no second write job and no accumulator
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/spark/ExtractJob.scala")), "UTF-8")
+    assert(!src.contains(".write.") && !src.contains("collectionAccumulator"))
+  }
+
+  test("restart fails loudly on an unreadable lineage file and leaves the data in place") {
+    val dir = tmp()
+    val pages = chunkedPages(s"$dir/pages", 2)
+    def chunkOf(c: Int) = pages.where(col("chunk") === c).select("url", "warc_ts", "html", "text", "lang")
+    val out = s"$dir/out"
+    ExtractJob.runChunkedFrom(spark, chunkOf, out, "r", chunks = 2, partitionsPerChunk = 4)
+    val before = filesUnder(s"$out/data")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/lineage/part-corrupt.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    // read as "nothing done", the broken file would re-run and re-count every chunk
+    intercept[Exception](ExtractJob.runChunkedFrom(spark, chunkOf, out, "r", chunks = 2, partitionsPerChunk = 4))
+    assert(filesUnder(s"$out/data") === before)
+    assert(spark.read.parquet(s"$out/data").count() === 500)
+  }
+
+  test("a failed chunk leaves nothing visible; the rerun clears its staging and completes") {
+    val out = tmp()
+    val pages = Pages.synthesize(spark, sfDir)
+    val faulty = udf((u: String) => { if (PlantedFault.armed) throw new IllegalStateException("planted"); u })
+    def slice(c: Int) = pages.where(pmod(xxhash64(col("url")), lit(3)) === c).toDF()
+    def chunkOf(c: Int) = if (c == 1) slice(c).withColumn("url", faulty(col("url"))) else slice(c)
+    PlantedFault.armed = true
+    try intercept[Exception](ExtractJob.runChunkedFrom(spark, chunkOf, out, "f", chunks = 3, partitionsPerChunk = 4))
+    finally PlantedFault.armed = false
+    assert(!exists(s"$out/data/chunk=1"))
+    assert(spark.read.parquet(s"$out/lineage").where(col("chunk") === 1).count() === 0)
+    val data = spark.read.parquet(s"$out/data")
+    assert(data.select("chunk").distinct().collect().map(_.getInt(0)).toSeq === Seq(0))
+    assert(data.count() === slice(0).count())
+
+    // a stale staged file (a killed attempt's) must not reach the rerun's
+    // output, and a stale staged lineage file (a driver killed before its
+    // rename) must not block the rerun's
+    val stale = java.nio.file.Paths.get(s"$out/_staging/chunk=1/part-stale.parquet")
+    java.nio.file.Files.createDirectories(stale.getParent)
+    val chunk0File = java.nio.file.Paths.get(s"$out/data/chunk=0", filesUnder(s"$out/data/chunk=0")
+      .map(_._1).find(_.endsWith(".parquet")).get)
+    java.nio.file.Files.copy(chunk0File, stale)
+    java.nio.file.Files.copy(chunk0File, java.nio.file.Paths.get(s"$out/_staging/lineage-1.parquet"))
+    ExtractJob.runChunkedFrom(spark, chunkOf, out, "f", chunks = 3, partitionsPerChunk = 4)
+    val all = spark.read.parquet(s"$out/data")
+    assert(all.count() === 500 && all.select("url").distinct().count() === 500)
+    val lineage = spark.read.parquet(s"$out/lineage").as[LineageRow](
+      org.apache.spark.sql.Encoders.product[LineageRow]).collect()
+    val nonEmpty = (0 until 3).map(c => slice(c).rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).sum().toInt)
+    for (c <- 0 until 3) assert(lineage.count(_.chunk == c) === nonEmpty(c))
+    assert(lineage.map(_.docs).sum === 500)
+    assert(!exists(s"$out/_staging"))
   }
 
   test("snapshot catalog: atomic commit, latest-snapshot reads") {
@@ -1297,4 +1416,10 @@ class SparkJobSpec extends AnyFunSuite with SparkSuite {
     assert(enRate > 0.4 && enRate < 0.8, s"en rate off: $enRate")
     assert(zhRate < enRate, s"fallback stratum must keep less than en: $zhRate vs $enRate")
   }
+}
+
+/** Arms the planted task failure of SparkJobSpec's failed-chunk case (tasks
+  * run in the test JVM under `local[4]`). */
+object PlantedFault {
+  @volatile var armed = false
 }
