@@ -1335,10 +1335,10 @@ object CatalogFileWrite {
     val sqls = statExprs.map(_._2) ++
       blooms.flatMap { case (c, bits) => ParquetSnapshotCatalog.bloomIdxSql(c, bits) } ++
       hll.map(c => s"CAST($c AS STRING)") ++ dd.map(ParquetSnapshotCatalog.ddRepSql)
-    val base = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     val exprs =
       if (sqls.isEmpty) Nil
       else {
+        val base = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
         val Project(list, _) = base.selectExpr(sqls: _*).queryExecution.analyzed
         BindReferences.bindReferences(list.map { case a: Alias => a.child; case e => e },
           AttributeSeq(base.queryExecution.analyzed.output))

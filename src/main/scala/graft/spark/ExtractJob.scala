@@ -6,7 +6,9 @@ import graft.sources.{CatalogFileWrite, ParquetOutput, SessionHadoopConf}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -94,6 +96,12 @@ final case class PageRowF(
   */
 object ExtractJob {
 
+  /** The row encoders, derived once per JVM: reflecting over a case class
+    * costs milliseconds, every call. */
+  private lazy val extractedEnc = ExpressionEncoder[Extracted]()
+  private lazy val lineageEnc = ExpressionEncoder[LineageRow]()
+  private lazy val pageFEnc = ExpressionEncoder[PageRowF]()
+
   /** Extraction kernel over the pages Dataset: a NARROW map. Extraction is
     * per-row, so no shuffle of the html corpus is ever justified —
     * parallelism comes from input splits (`spark.sql.files.maxPartitionBytes`
@@ -111,12 +119,9 @@ object ExtractJob {
       chunk: Int = 0,
       maxTaskBytes: Long = Long.MaxValue,
       lean: Boolean = false
-  ): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
+  ): Dataset[Extracted] =
     pages.mapPartitions(it =>
-      kernelIterator(it, () => "", runId, emitTo(lineage), chunk, maxTaskBytes, lean))
-  }
+      kernelIterator(it, () => "", runId, emitTo(lineage), chunk, maxTaskBytes, lean))(extractedEnc)
 
   /** File-backed entry: same kernel, but each partition's lineage row records
     * the distinct source files it read (`input_file_name()` captured at the
@@ -129,20 +134,9 @@ object ExtractJob {
       chunk: Int = 0,
       maxTaskBytes: Long = Long.MaxValue,
       lean: Boolean = false
-  ): Dataset[Extracted] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    withInputFile(pages).mapPartitions(it =>
-      fileKernel(it, runId, emitTo(lineage), chunk, maxTaskBytes, lean))
-  }
-
-  /** `pages` with each row's source file, captured at the scan before any
-    * typed transform. */
-  private def withInputFile(pages: DataFrame): Dataset[PageRowF] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.withColumn("input_file", input_file_name()).as[PageRowF]
-  }
+  ): Dataset[Extracted] =
+    pages.withColumn("input_file", input_file_name()).as[PageRowF](pageFEnc).mapPartitions(it =>
+      fileKernel(it, runId, emitTo(lineage), chunk, maxTaskBytes, lean))(extractedEnc)
 
   /** The kernel over file-backed pages: the lineage row's `input_file` is
     * the distinct source files the partition read. */
@@ -246,16 +240,34 @@ object ExtractJob {
     * use: generating the serializer's projection costs milliseconds of CPU,
     * paid once per thread instead of once per write task. */
   private val extractedSerializer = ThreadLocal.withInitial[ExpressionEncoder.Serializer[Extracted]](
-    () => ExpressionEncoder[Extracted]().createSerializer())
+    () => extractedEnc.createSerializer())
+
+  /** Chunk `pages` as one physical plan of (url, html, lang, source file),
+    * its columns taken by name; the rest of a [[PageRowF]] is unread. */
+  private def chunkRows(pages: DataFrame) = {
+    val sel = pages.select(col("url"), col("html"), col("lang"), input_file_name())
+    require(sel.schema.map(_.dataType) == Seq(StringType, BinaryType, StringType, StringType),
+      s"chunk pages need url: string, html: binary, lang: string, got ${pages.schema.simpleString}")
+    sel.queryExecution.toRdd
+  }
+
+  private def str(r: InternalRow, i: Int): String = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** A chunk row as the kernel's page (the row's buffers are reused: copied out). */
+  private def pageOf(r: InternalRow): PageRowF =
+    PageRowF(str(r, 0), null, if (r.isNullAt(1)) null else r.getBinary(1), null, str(r, 2), str(r, 3))
 
   /** Chunked, resumable run: `chunkOf(c)` yields chunk c's pages. Use a
     * provider that PRUNES at the source (e.g. a pages table partitioned by
     * `chunk = pmod(xxhash64(url), chunks)` read with a partition filter), so
     * a chunk reads only its own pages.
     *
-    * Each chunk is one Spark job: every task runs the kernel over its pages
-    * and writes the encoded rows through the catalog's write task
-    * ([[CatalogFileWrite.run]]) into `_staging/chunk=c`, then returns its
+    * Each chunk is one Spark job over one physical plan: the chunk frame's
+    * `url`, `html` and `lang` (by name; other columns are not read) and its
+    * source file, planned once and read as Catalyst rows, each copied into
+    * a page without a deserializer (a typed Dataset's RDD view would plan
+    * the query a second time). Every task runs the kernel over its pages and writes the
+    * encoded rows through the catalog's write task ([[CatalogFileWrite.run]]) into `_staging/chunk=c`, then returns its
     * commit message and its partition's lineage row. The driver deletes any
     * staged file no message names (a killed or speculative attempt's),
     * moves the directory to `data/chunk=c`, and last writes the chunk's
@@ -276,16 +288,14 @@ object ExtractJob {
       maxTaskBytes: Long = Long.MaxValue,
       lean: Boolean = false
   ): Unit = {
-    import spark.implicits._
     val lineageDir = new Path(outDir, "lineage")
     val stagingDir = new Path(outDir, "_staging")
     val fs = lineageDir.getFileSystem(SessionHadoopConf(spark))
-    val lineageEnc = ExpressionEncoder[LineageRow]()
     val done: Set[Int] =
       if (!fs.exists(lineageDir)) Set.empty
       else spark.read.schema(lineageEnc.schema).parquet(lineageDir.toString)
-        .where($"run_id" === runId).select("chunk").distinct().as[Int].collect().toSet
-    val dataWrite = CatalogFileWrite(spark, ExpressionEncoder[Extracted]().schema, stagingDir.toString, Nil)
+        .where(col("run_id") === runId).select("chunk").distinct().collect().map(_.getInt(0)).toSet
+    val dataWrite = CatalogFileWrite(spark, extractedEnc.schema, stagingDir.toString, Nil)
     val lineageOut = ParquetOutput(spark, lineageEnc.schema)
     val lineageRow = lineageEnc.createSerializer()
     for (c <- 0 until chunks if !done.contains(c)) {
@@ -295,14 +305,14 @@ object ExtractJob {
       fs.delete(staged, true)
       fs.delete(stagedLineage, false)
       val write = dataWrite.copy(dir = staged.toString)
-      val pages = withInputFile(chunkOf(c)).rdd
+      val pages = chunkRows(chunkOf(c))
       val results = (if (pages.getNumPartitions > 0) pages
-          else spark.sparkContext.parallelize(Seq.empty[PageRowF], 1))
+          else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1))
         .mapPartitionsWithIndex { (i, it) =>
           var lineage: LineageRow = null
           val toRow = extractedSerializer.get()
           val msg = write.run(i,
-            fileKernel(it, runId, r => lineage = r, c, maxTaskBytes, lean).map(toRow))
+            fileKernel(it.map(pageOf), runId, r => lineage = r, c, maxTaskBytes, lean).map(toRow))
           Iterator((msg, Option(lineage)))
         }.collect()
       val tW = System.currentTimeMillis()

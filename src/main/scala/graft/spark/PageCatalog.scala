@@ -98,7 +98,7 @@ class ParquetSnapshotCatalog(root: String) extends PageCatalog {
   // ------------------------------------------------------------------
   private lazy val conf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(SessionHadoopConf(_)).getOrElse(new Configuration())
+      .map(SessionHadoopConf(_)).getOrElse(SessionHadoopConf.withLocalFs(new Configuration()))
   private val fsCache = scala.collection.mutable.Map.empty[String, FileSystem]
 
   private def fsOf(p: HPath): FileSystem = synchronized {

@@ -153,6 +153,28 @@ class SparkJobSpec extends AnyFunSuite with SparkSuite {
     assert(!src.contains(".write.") && !src.contains("collectionAccumulator"))
   }
 
+  test("chunked write reads page columns by name: any order, extra columns, lang carried") {
+    val dir = tmp()
+    val pages = chunkedPages(s"$dir/pages", 2)
+    // the partition column rides along, the page columns come reordered
+    val byChunk = (0 until 2).map(c =>
+      pages.where(col("chunk") === c).select("lang", "chunk", "html", "warc_ts", "text", "url"))
+    val out = s"$dir/out"
+    ExtractJob.runChunkedFrom(spark, byChunk, out, "byname", chunks = 2, partitionsPerChunk = 4)
+
+    val got = spark.read.parquet(s"$out/data").drop("chunk")
+    val want = ExtractJob.extractFiles(pages.drop("chunk"), "byname").toDF()
+    assert(got.count() === 500)
+    assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
+    assert(got.where(col("lang").isNull).count() === 0, "lang carried through")
+    assert(got.select("url", "lang").exceptAll(pages.select("url", "lang")).count() === 0)
+
+    val lineage = spark.read.parquet(s"$out/lineage").select("input_file", "docs").collect()
+    assert(lineage.map(_.getLong(1)).sum === 500)
+    assert(lineage.forall(r => r.getString(0).split(";").forall(_.contains(s"$dir/pages/chunk="))),
+      "lineage names the source files")
+  }
+
   test("restart fails loudly on an unreadable lineage file and leaves the data in place") {
     val dir = tmp()
     val pages = chunkedPages(s"$dir/pages", 2)
